@@ -35,7 +35,7 @@ object Bench {
     if (ok) Some(d.getAbsolutePath) else None
   }
 
-  private def session(cores: Int): SparkSession = {
+  private[graft] def session(cores: Int): SparkSession = {
     val b0 = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-bench-$cores")
@@ -56,13 +56,6 @@ object Bench {
   }
 
   private def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
-
-  /** (user, sys) CPU seconds of this process, from /proc/self/stat. */
-  private def cpuSecs(): (Double, Double) = try {
-    val s = java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/self/stat"))
-    val a = s.substring(s.lastIndexOf(')') + 2).split(" ")
-    (a(11).toLong / 100.0, a(12).toLong / 100.0)
-  } catch { case _: Throwable => (0.0, 0.0) }
 
   /** Child-process entry: ONE measurement per JVM. Build and query run in
     * SEPARATE processes — a JVM that has just churned through an index
@@ -98,7 +91,7 @@ object Bench {
             trustedInput = true))
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(warmDir))
         val corpus = graft.corpus.CorpusGen.corpus(spark, nDocs, 42L)
-        val (u0, s0) = cpuSecs()
+        val (u0, s0) = graft.index.IndexBuilder.cpuSecs()
         val t0 = System.nanoTime()
         // 64 shards: smooths shard-keyed stages across ≤16 cores while
         // keeping the per-shard query fan-out cost moderate
@@ -106,20 +99,19 @@ object Bench {
           graft.index.BuildConfig(numShards = 64, commitEvery = 64,
             heavyThreshold = math.max(1000, nDocs / 64), saltBuckets = 8,
             trustedInput = true))
-        val (u1, s1) = cpuSecs()
+        val (u1, s1) = graft.index.IndexBuilder.cpuSecs()
         println(f"""{"phase":"$phase","sec":${secs(t0)}%.3f,"user":${u1 - u0}%.1f,"sys":${s1 - s0}%.1f}""")
       } else {
-        val snap = graft.table.SnapshotCatalog.load(spark, dir).getOrElse(
-          throw new IllegalStateException(s"no index at $dir — build phase missing"))
+        val snap = graft.table.SnapshotCatalog.require(spark, dir)
         val qs = graft.corpus.CorpusGen.queries(nQueries, 42L)
         // cold pass warms code paths; the reported number is the warm pass
         graft.search.Wand.searchSnapshot(spark, snap, qs, 10).count()
-        val (u0, s0) = cpuSecs()
+        val (u0, s0) = graft.index.IndexBuilder.cpuSecs()
         val t1 = System.nanoTime()
         val n = graft.search.Wand.searchSnapshot(spark, snap, qs, 10).count()
         val sec = secs(t1)
         require(n > 0, "engine returned no results")
-        val (u1, s1) = cpuSecs()
+        val (u1, s1) = graft.index.IndexBuilder.cpuSecs()
         println(f"""{"phase":"$phase","sec":$sec%.3f,"user":${u1 - u0}%.1f,"sys":${s1 - s0}%.1f}""")
       }
     } finally spark.stop()
@@ -184,7 +176,7 @@ object Bench {
     * shrink t_lo), so BOTH levels take min-of-2 clean samples; the ~13
     * added minutes buy a ratio whose two sides carry the same estimator. */
   private def phaseBest(kind: String, cores: Int, nDocs: Long, nQueries: Int,
-                        maxAttempts: Int = 5, minClean: Int = 1): Double = {
+                        maxAttempts: Int = 5, minClean: Int): Double = {
     var best = Double.MaxValue
     var attempt = 0
     var nClean = 0

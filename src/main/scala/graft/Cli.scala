@@ -113,8 +113,7 @@ object Cli {
     * shape — shared by every hit-returning command. */
   private def resolveHits(spark: SparkSession, indexDir: String,
                           hits: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val snap = graft.table.SnapshotCatalog.load(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $indexDir"))
+    val snap = graft.table.SnapshotCatalog.require(spark, indexDir)
     val dm = spark.read.parquet(snap.docmapDirs: _*)
       .select(col("doc_id"), col("repo"), col("path"))
     hits.join(dm, "doc_id")
@@ -148,7 +147,6 @@ object Cli {
   def main(args: Array[String]): Unit = args.toList match {
     case "compare" :: in :: out :: Nil =>
       val spark = session()
-      import spark.implicits._
       // cached across the raw count and the parse (two actions over the
       // same files — without the cache the input is read twice)
       val lines = spark.read.textFile(in).persist()

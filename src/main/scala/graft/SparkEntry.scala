@@ -2905,7 +2905,6 @@ object SparkEntry {
     //      query, source excluded; the oracle reproduces the SELECTION
     //      (window over tf×idf) and the BM25 ranking independently ----
     "q62_engine_more_like_this" -> ((s, d) => {
-      import s.implicits._
       val corpus = engineCorpus(s, d)
       val snap = sharedIndex(s, d)
       stageEngineToks(s, d, corpus, "q62", corpusKey = "base")

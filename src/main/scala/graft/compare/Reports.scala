@@ -198,19 +198,8 @@ object Reports {
   private[compare] def lineDiff(a: IndexedSeq[String], b: IndexedSeq[String]): Seq[String] =
     LineDiff.compare(a, b)
 
-  /** K4: performance CSV export (reference: reports.py:190-205). */
-  def exportPerformanceCsv(comparisons: DataFrame, path: String): Unit =
-    comparisons.select(
-      col("request.uri").as("request_uri"),
-      col("request.method").as("request_method"),
-      col("primary.status").as("primary_status"),
-      col("primary.latencyMs").as("primary_latency"),
-      col("shadow.status").as("shadow_status"),
-      col("shadow.latencyMs").as("shadow_latency"),
-      col("identical"))
-      .write.mode("overwrite").option("header", "true").csv(path)
-
-  /** K4 over the flattened (versioned-table) schema — the CLI's
+  /** K4: performance CSV export (reference: reports.py:190-205) over the
+    * flattened (versioned-table) schema — the CLI's
     * `report --export perf=<dir>` path. */
   def exportPerformanceCsvFlat(flat: DataFrame, path: String): Unit =
     flat.select(

@@ -89,8 +89,6 @@ object Triples extends Serializable {
     }
   }
 
-  private def textOrNull(n: JsonNode): String = if (n == null || n.isNull) null else n.asText()
-
   private def residueHeaders(obj: JsonNode, known: Set[String], lowercase: Boolean): Map[String, String] =
     obj.properties().asScala.collect {
       case e if !known.contains(e.getKey) =>

@@ -116,7 +116,6 @@ object CorpusGen {
     * at any parallelism. */
   def corpus(spark: SparkSession, numDocs: Long, seed: Long = 42L,
              numRepos: Int = 100): Dataset[SourceFile] = {
-    import spark.implicits._
     spark.range(numDocs).mapPartitions { it =>
       it.map(r => fileFor(r, seed, numRepos))
     }(org.apache.spark.sql.Encoders.product[SourceFile])

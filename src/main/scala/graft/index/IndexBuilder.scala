@@ -3,7 +3,6 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.analyze.Tokenizer
 import graft.corpus.SourceFile
 import graft.table.{CorpusStats, Snapshot, SnapshotCatalog}
 
@@ -144,22 +143,25 @@ object IndexBuilder {
     * storm-robust way to compare two implementations of a phase. */
   private def timed[T](spark: SparkSession, label: String)(f: => T): T = {
     val on = spark.conf.getOption("spark.graft.timing").contains("true")
-    def cpu(): (Long, Long) = try {
-      val s = java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/self/stat"))
-      val a = s.substring(s.lastIndexOf(')') + 2).split(" ")
-      (a(11).toLong, a(12).toLong) // utime, stime ticks (fields 14,15)
-    } catch { case _: Throwable => (0L, 0L) }
-    val (u0, s0) = if (on) cpu() else (0L, 0L)
+    val (u0, s0) = if (on) cpuSecs() else (0.0, 0.0)
     val t0 = System.nanoTime()
     val r = f
     if (on) {
-      val (u1, s1) = cpu()
-      val hz = 100.0 // USER_HZ
+      val (u1, s1) = cpuSecs()
       System.err.println(f"[graft-timing] $label%-24s ${(System.nanoTime() - t0) / 1e9}%8.1fs " +
-        f"user=${(u1 - u0) / hz}%7.1fs sys=${(s1 - s0) / hz}%7.1fs")
+        f"user=${u1 - u0}%7.1fs sys=${s1 - s0}%7.1fs")
     }
     r
   }
+
+  /** (user, sys) CPU seconds of this process, from /proc/self/stat
+    * (utime, stime: fields 14 and 15, in USER_HZ = 100 ticks per second);
+    * (0, 0) where the file is unreadable. */
+  private[graft] def cpuSecs(): (Double, Double) = try {
+    val s = java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/self/stat"))
+    val a = s.substring(s.lastIndexOf(')') + 2).split(" ")
+    (a(11).toLong / 100.0, a(12).toLong / 100.0)
+  } catch { case _: Throwable => (0.0, 0.0) }
 
   /** The builder's skip-and-log predicate over the raw corpus schema;
     * public so the comparison harness scores golden over the SAME row set
@@ -310,7 +312,6 @@ object IndexBuilder {
           .agg(count(lit(1)), count(lit(1)),
             coalesce(sum(col("dl")), lit(0L))).head()
       }
-    val staged = spark.read.parquet(stagingDir(dir))
     val stats = CorpusStats(statsRow.getLong(0), statsRow.getLong(2))
     // NO stage-time termstats pass: exact global (df, cf) are derived at
     // finalize time from the committed segments' slim (term, count, cf)
@@ -536,7 +537,7 @@ object IndexBuilder {
     * `positions` is set, each posting's pre-encoded position payload rides
     * into the block blob. */
   private def streamRuns(it: Iterator[TfRow], avgdl: Double,
-                         positions: Boolean = false): Iterator[SegRun] = {
+                         positions: Boolean): Iterator[SegRun] = {
     new Iterator[SegRun] {
       private val buf = it.buffered
       def hasNext: Boolean = buf.hasNext
@@ -702,7 +703,7 @@ object IndexBuilder {
         // exactness, and parquet sources answer it from footer metadata
         case _ => autoShards(corpus.count())
       })
-    var snap = loaded match {
+    val snap = loaded match {
       case Some(s) if s.stagingDone =>
         require(s.numShards == cfg1.numShards,
           s"index at $dir has ${s.numShards} shards; asked for ${cfg1.numShards}")
@@ -757,8 +758,7 @@ object IndexBuilder {
   def reindex(spark: SparkSession, srcDir: String, dstDir: String,
               cfg: BuildConfig = BuildConfig()): Snapshot = {
     require(srcDir != dstDir, "reindex needs a fresh destination dir")
-    val src = SnapshotCatalog.load(spark, srcDir).getOrElse(
-      throw new IllegalStateException(s"reindex: no committed snapshot at $srcDir"))
+    val src = SnapshotCatalog.require(spark, srcDir)
     require(src.isComplete,
       s"reindex requires a complete source index (snapshot ${src.id} is not)")
     val loaded = SnapshotCatalog.load(spark, dstDir)
@@ -815,7 +815,7 @@ object IndexBuilder {
   private def stageBatch(spark: SparkSession, corpus: Dataset[SourceFile],
                          dir: String, batchTag: String, parent: Snapshot,
                          cfg: BuildConfig,
-                         liveOnly: Boolean = false): (String, CorpusStats, Seq[String]) = {
+                         liveOnly: Boolean): (String, CorpusStats, Seq[String]) = {
     import spark.implicits._
     val stagingPath = s"$dir/staging_$batchTag"
     // anti-join key set: plain append dedupes against EVERY identity ever
@@ -951,8 +951,7 @@ object IndexBuilder {
   private def appendImpl(spark: SparkSession, batch: Dataset[SourceFile],
                          dir: String, cfgIn: BuildConfig,
                          liveOnly: Boolean): Snapshot = {
-    val parent = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"append: no committed snapshot at $dir"))
+    val parent = SnapshotCatalog.require(spark, dir)
     require(parent.isComplete,
       s"append requires a complete base index (snapshot ${parent.id} is not)")
     val cfg = cfgIn.copy(numShards = parent.numShards)
@@ -1019,8 +1018,7 @@ object IndexBuilder {
     * doc_id; no token arrays move until the append's staging pass. */
   def upsert(spark: SparkSession, batch: Dataset[SourceFile], dir: String,
              cfgIn: BuildConfig = BuildConfig()): Snapshot = {
-    val parent = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"upsert: no committed snapshot at $dir"))
+    val parent = SnapshotCatalog.require(spark, dir)
     require(parent.isComplete,
       s"upsert requires a complete base index (snapshot ${parent.id} is not)")
     val cfg = cfgIn.copy(numShards = parent.numShards)
@@ -1067,8 +1065,7 @@ object IndexBuilder {
   private[graft] def deleteVictims(spark: SparkSession, dir: String,
       selectVictims: (Snapshot, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame,
       cfgIn: BuildConfig = BuildConfig()): Snapshot = {
-    val parent0 = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"delete: no committed snapshot at $dir"))
+    val parent0 = SnapshotCatalog.require(spark, dir)
     require(parent0.isComplete,
       s"delete requires a complete index (snapshot ${parent0.id} is not)")
     val cfg = cfgIn.copy(numShards = parent0.numShards)
@@ -1160,8 +1157,7 @@ object IndexBuilder {
   def mget(spark: SparkSession, dir: String, docIds: Seq[String]): DataFrame = {
     import spark.implicits._
     require(docIds.nonEmpty, "mget needs at least one doc id")
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"mget: no committed snapshot at $dir"))
+    val snap = SnapshotCatalog.require(spark, dir)
     val ids = docIds.distinct
     val dead = deadAddrs(spark, snap, ids)
     val rows = spark.read.parquet(snap.docmapDirs: _*)
@@ -1223,8 +1219,7 @@ object IndexBuilder {
   def updateMetadata(spark: SparkSession, dir: String,
       selectTargets: (Snapshot, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame,
       set: Map[String, org.apache.spark.sql.Column]): Snapshot = {
-    val parent = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"update: no committed snapshot at $dir"))
+    val parent = SnapshotCatalog.require(spark, dir)
     require(parent.isComplete,
       s"update requires a complete index (snapshot ${parent.id} is not)")
     require(set.nonEmpty, "update: empty set clause")
@@ -1285,8 +1280,7 @@ object IndexBuilder {
     *         postings long, avgdl double, positional boolean) */
   def indexStats(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val snap = graft.table.SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
+    val snap = SnapshotCatalog.require(spark, dir)
     require(snap.isComplete, s"snapshot ${snap.id} is not a complete index")
     val docs = spark.read.parquet(snap.docmapDirs: _*).count()
     // tombstone generations are disjoint by construction (deleteVictims
@@ -1338,8 +1332,7 @@ object IndexBuilder {
   def compact(spark: SparkSession, dir: String,
               cfgIn: BuildConfig = BuildConfig()): Snapshot = {
     import spark.implicits._
-    val parent = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"compact: no committed snapshot at $dir"))
+    val parent = SnapshotCatalog.require(spark, dir)
     require(parent.isComplete,
       s"compact requires a complete index (snapshot ${parent.id} is not)")
     val cfg = cfgIn.copy(numShards = parent.numShards)

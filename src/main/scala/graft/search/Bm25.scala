@@ -26,8 +26,4 @@ object Bm25 extends Serializable {
 
   def score(tf: Long, dl: Long, df: Long, n: Long, avgdl: Double): Double =
     idf(df, n) * tfNorm(tf, dl, avgdl)
-
-  /** Upper bound of tfNorm as tf→∞ for a given dl — used for block-max
-    * metadata sanity; actual blocks store the exact max over their docs. */
-  def tfNormUpperBound: Double = K1 + 1.0
 }

@@ -88,7 +88,7 @@ object Golden {
     * the source of truth the paged engine is compared against.
     *
     * @param docmap (doc_id, shard, ord) — the snapshot's committed docmap
-    * @param after per-query (score, shard, ord) cursor, as [[Wand.searchAfter]]
+    * @param after per-query (score, shard, ord) cursor, as [[Wand.searchAfterSnapshot]]
     * @return (query_id int, rank int [page-relative], doc_id string,
     *         score double, shard int, ord long) */
   def topKAfter(spark: SparkSession, docs: DataFrame, queries: Seq[RefQuery],
@@ -135,7 +135,7 @@ object Golden {
   }
 
   /** Exact boosted top-k — the golden counterpart of
-    * [[Wand.boostedSearch]]: per-(query, term) weights multiply the
+    * [[Wand.boostedSearchSnapshot]]: per-(query, term) weights multiply the
     * term's idf before the tf-norm product ((idf × boost) × tfNorm, the
     * shared association order), contributions summed ascending by term.
     * `qBoost` is [[queryTermsBoosted]] output per query. */

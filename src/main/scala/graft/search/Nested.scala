@@ -4,12 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.corpus.RefQuery
-import graft.table.{Snapshot, SnapshotCatalog}
+import graft.table.Snapshot
 
 /** The OpenSearch `nested` query + `inner_hits` — the nested-DOCUMENT
   * model (arrays of objects scored per nested object), the other half
   * of the join story next to has_child/has_parent (the join-FIELD
-  * model, `Wand.hasChildSearch`).
+  * model, `Wand.hasChildSearchSnapshot`).
   *
   * Model: each nested object is indexed as its own row in the SAME
   * index as its parent — exactly Lucene's block-join layout, where
@@ -47,17 +47,6 @@ object Nested {
     *          score double, n_nested long, inner_rank int,
     *          nested_id string, inner_score double) — one row per
     *          inner hit of each top-k parent */
-  def search(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-             k: Int, scoreMode: String,
-             nestedFilter: Column, parentFilter: Column,
-             nestedParentKey: Column, parentKey: Column,
-             innerHitsK: Int = 3, conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    searchSnapshot(spark, snap, queries, k, scoreMode, nestedFilter,
-      parentFilter, nestedParentKey, parentKey, innerHitsK, conjunctive)
-  }
-
   def searchSnapshot(spark: SparkSession, snap: Snapshot,
                      queries: Seq[RefQuery], k: Int, scoreMode: String,
                      nestedFilter: Column, parentFilter: Column,

@@ -2,7 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.table.{Snapshot, SnapshotCatalog}
+import graft.table.Snapshot
 
 /** The OpenSearch URI-search `q=` language (`query_string`-lite): the
   * full [[SimpleQueryString]] text grammar PLUS fielded clauses over
@@ -92,16 +92,6 @@ object QueryString {
     * scan is not a ranked text query; a query whose TEXT parses to
     * nothing scoring contributes no rows (the sqs lenience).
     * @return (query_id int, rank int, doc_id string, score double) */
-  def search(spark: SparkSession, dir: String, queries: Seq[(Int, String)],
-             k: Int, allowedFields: Set[String],
-             defaultAnd: Boolean = false,
-             maxExpansions: Int = 128): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    searchSnapshot(spark, snap, queries, k, allowedFields, defaultAnd,
-      maxExpansions)
-  }
-
   def searchSnapshot(spark: SparkSession, snap: Snapshot,
                      queries: Seq[(Int, String)], k: Int,
                      allowedFields: Set[String],

@@ -342,11 +342,9 @@ object SimpleQueryString {
   def search(spark: SparkSession, dir: String, queries: Seq[(Int, String)],
              k: Int, defaultAnd: Boolean = false,
              maxExpansions: Int = 128,
-             filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    searchSnapshot(spark, snap, queries, k, defaultAnd, maxExpansions, filter)
-  }
+             filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    searchSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, k, defaultAnd,
+      maxExpansions, filter)
 
   def searchSnapshot(spark: SparkSession, snap: Snapshot,
                      queries: Seq[(Int, String)], k: Int,

@@ -89,6 +89,18 @@ object Wand {
     * executor memory in production. */
   private final class DecodeBudget(var remaining: Long)
 
+  /** The per-group decode budget in bytes for a `spark.graft.decodeCacheMb`
+    * setting: 128 MB when unset, 0 turns the shared decode off. A value
+    * that is not a whole, non-negative number of MB (or overflows as
+    * bytes) is rejected, naming the key and the value. */
+  private[search] def decodeCacheMbBytes(setting: Option[String]): Long = {
+    val mb = setting.fold(Option(128L))(_.trim.toLongOption)
+      .filter(m => m >= 0L && m <= (Long.MaxValue >> 20))
+    mb.getOrElse(throw new IllegalArgumentException(
+      s"spark.graft.decodeCacheMb must be a non-negative whole number of MB, " +
+        s"got '${setting.getOrElse("")}'")) << 20
+  }
+
   private final class Cursor(val term: String, val idf: Double,
                              blocks: Array[SegBlock], bounds: Array[Double],
                              avgdl: Double,
@@ -638,11 +650,9 @@ object Wand {
   def search(spark: SparkSession, dir: String, queries: Seq[RefQuery], k: Int,
              conjunctive: Boolean = false,
              filter: Option[org.apache.spark.sql.Column] = None,
-             from: Int = 0): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    searchSnapshot(spark, snap, queries, k, conjunctive, filter, from)
-  }
+             from: Int = 0): DataFrame =
+    searchSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, k, conjunctive,
+      filter, from)
 
   def searchSnapshot(spark: SparkSession, snap: Snapshot, queries: Seq[RefQuery],
                      k: Int, conjunctive: Boolean = false,
@@ -677,15 +687,6 @@ object Wand {
     * cursor's idf is pre-multiplied by the boost, the identical
     * (idf × boost) × tfNorm association both engines use. Composes with
     * `conjunctive`, `filter`, and `from` exactly like [[search]]. */
-  def boostedSearch(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                    k: Int, conjunctive: Boolean = false,
-                    filter: Option[org.apache.spark.sql.Column] = None,
-                    from: Int = 0): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    boostedSearchSnapshot(spark, snap, queries, k, conjunctive, filter, from)
-  }
-
   def boostedSearchSnapshot(spark: SparkSession, snap: Snapshot,
                             queries: Seq[RefQuery], k: Int,
                             conjunctive: Boolean = false,
@@ -720,15 +721,6 @@ object Wand {
     * @return (query_id int, rank int [PAGE-relative 1..k], doc_id string,
     *         score double, shard int, ord long) — feed the last row's
     *         (score, shard, ord) back as the next page's cursor. */
-  def searchAfter(spark: SparkSession, dir: String, queries: Seq[RefQuery], k: Int,
-                  after: Map[Int, (Double, Int, Long)] = Map.empty,
-                  conjunctive: Boolean = false,
-                  filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    searchAfterSnapshot(spark, snap, queries, k, after, conjunctive, filter)
-  }
-
   def searchAfterSnapshot(spark: SparkSession, snap: Snapshot, queries: Seq[RefQuery],
                           k: Int, after: Map[Int, (Double, Int, Long)] = Map.empty,
                           conjunctive: Boolean = false,
@@ -755,14 +747,6 @@ object Wand {
     *
     * @return (query_id int, rank int, doc_id string, sort_key) —
     *         sort_key has the docmap column's own type. */
-  def sortedSearch(spark: SparkSession, dir: String, queries: Seq[RefQuery], k: Int,
-                   sortCol: String, ascending: Boolean = true,
-                   conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    sortedSearchSnapshot(spark, snap, queries, k, sortCol, ascending, conjunctive)
-  }
-
   def sortedSearchSnapshot(spark: SparkSession, snap: Snapshot, queries: Seq[RefQuery],
                            k: Int, sortCol: String, ascending: Boolean = true,
                            conjunctive: Boolean = false): DataFrame = {
@@ -853,11 +837,8 @@ object Wand {
     * [[Golden.booleanTopK]]. `filter` composes (a hit must also satisfy
     * the metadata predicate, scores unchanged). */
   def booleanSearch(spark: SparkSession, dir: String, queries: Seq[BoolQuery], k: Int,
-                    filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    booleanSearchSnapshot(spark, snap, queries, k, filter)
-  }
+                    filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    booleanSearchSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, k, filter)
 
   def booleanSearchSnapshot(spark: SparkSession, snap: Snapshot,
                             queries: Seq[BoolQuery], k: Int,
@@ -877,11 +858,9 @@ object Wand {
     * ([[expandQueries]] is shared by both engines). */
   def prefixSearch(spark: SparkSession, dir: String, queries: Seq[RefQuery], k: Int,
                    maxExpansions: Int = 1024,
-                   filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    prefixSearchSnapshot(spark, snap, queries, k, maxExpansions, filter)
-  }
+                   filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    prefixSearchSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, k,
+      maxExpansions, filter)
 
   def prefixSearchSnapshot(spark: SparkSession, snap: Snapshot,
                            queries: Seq[RefQuery], k: Int,
@@ -904,15 +883,6 @@ object Wand {
     * `qu`, not whichever term sorts last. A text that analyzes to zero
     * tokens is rejected loudly — skip-and-log belongs to the caller's
     * ingest path, not a query API. */
-  def matchBoolPrefixSearch(spark: SparkSession, dir: String,
-                            queries: Seq[RefQuery], k: Int,
-                            maxExpansions: Int = 1024,
-                            filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    matchBoolPrefixSnapshot(spark, snap, queries, k, maxExpansions, filter)
-  }
-
   def matchBoolPrefixSnapshot(spark: SparkSession, snap: Snapshot,
                               queries: Seq[RefQuery], k: Int,
                               maxExpansions: Int = 1024,
@@ -944,14 +914,6 @@ object Wand {
     * the supported dialect is the Java/RE2 common core — alternation,
     * classes, quantifiers, no lookaround — which keeps the expansion
     * reproducible by the SQL oracle's RE2 engine. */
-  def regexpSearch(spark: SparkSession, dir: String, queries: Seq[RefQuery], k: Int,
-                   maxExpansions: Int = 1024,
-                   filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    regexpSearchSnapshot(spark, snap, queries, k, maxExpansions, filter)
-  }
-
   def regexpSearchSnapshot(spark: SparkSession, snap: Snapshot,
                            queries: Seq[RefQuery], k: Int,
                            maxExpansions: Int = 1024,
@@ -960,8 +922,8 @@ object Wand {
       regexpExpandQueries(spark, snap, queries, maxExpansions), k, ModeOr, filter)
 
   /** Per-query anchored-regexp expansion against the snapshot's term
-    * dictionary — the shared engine of [[regexpSearch]] and its golden
-    * twin. See [[regexpSearch]] for the contract. */
+    * dictionary — the shared engine of [[regexpSearchSnapshot]] and its golden
+    * twin. See [[regexpSearchSnapshot]] for the contract. */
   def regexpExpandQueries(spark: SparkSession, snap: Snapshot,
                           queries: Seq[RefQuery],
                           maxExpansions: Int = 1024): Map[Int, Array[String]] = {
@@ -989,18 +951,10 @@ object Wand {
     * WildcardQuery contract; unlike [[prefixSearch]] the `*`/`?` may sit
     * anywhere in the pattern). Implemented as a pure translation to an
     * anchored regexp ([[wildcardToRegex]]) over the shared
-    * MultiTermQuery-rewrite path of [[regexpSearch]], so expansion
+    * MultiTermQuery-rewrite path of [[regexpSearchSnapshot]], so expansion
     * capping, scoring, and golden bit-identity all come for free — and
     * the SQL oracle replays the identical translation because
     * [[wildcardToRegex]] emits the RE2/Java common core only. */
-  def wildcardSearch(spark: SparkSession, dir: String, queries: Seq[RefQuery], k: Int,
-                     maxExpansions: Int = 1024,
-                     filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    wildcardSearchSnapshot(spark, snap, queries, k, maxExpansions, filter)
-  }
-
   def wildcardSearchSnapshot(spark: SparkSession, snap: Snapshot,
                              queries: Seq[RefQuery], k: Int,
                              maxExpansions: Int = 1024,
@@ -1060,12 +1014,9 @@ object Wand {
                   maxEdits: Int = 2, prefixLength: Int = 0,
                   maxExpansions: Int = 50,
                   filter: Option[org.apache.spark.sql.Column] = None,
-                  transpositions: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    fuzzySearchSnapshot(spark, snap, queries, k, maxEdits, prefixLength,
-      maxExpansions, filter, transpositions)
-  }
+                  transpositions: Boolean = false): DataFrame =
+    fuzzySearchSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, k, maxEdits,
+      prefixLength, maxExpansions, filter, transpositions)
 
   def fuzzySearchSnapshot(spark: SparkSession, snap: Snapshot,
                           queries: Seq[RefQuery], k: Int,
@@ -1349,12 +1300,9 @@ object Wand {
     * @return (word string, rank int, suggestion string, dist int, df long) */
   def suggest(spark: SparkSession, dir: String, words: Seq[String],
               maxEdits: Int = 2, prefixLength: Int = 1, topN: Int = 5,
-              transpositions: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    suggestSnapshot(spark, snap, words, maxEdits, prefixLength, topN,
-      transpositions)
-  }
+              transpositions: Boolean = false): DataFrame =
+    suggestSnapshot(spark, SnapshotCatalog.require(spark, dir), words, maxEdits,
+      prefixLength, topN, transpositions)
 
   def suggestSnapshot(spark: SparkSession, snap: Snapshot, words: Seq[String],
                       maxEdits: Int = 2, prefixLength: Int = 1,
@@ -1411,8 +1359,7 @@ object Wand {
     require(pinnedIds.nonEmpty, "pinnedSearch needs at least one pinned id")
     require(pinnedIds.distinct.size == pinnedIds.size,
       s"pinned ids must be distinct: ${pinnedIds.mkString(",")}")
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
+    val snap = SnapshotCatalog.require(spark, dir)
     val dead = graft.index.IndexBuilder.deadAddrs(spark, snap, pinnedIds)
     val live: Set[String] = spark.read.parquet(snap.docmapDirs: _*)
       .filter(col("doc_id").isin(pinnedIds: _*))
@@ -1457,11 +1404,9 @@ object Wand {
     * @return (query_id int, suggestion string, changed int,
     *          collate_match boolean) */
   def phraseSuggest(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                    maxEdits: Int = 2, prefixLength: Int = 1): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    phraseSuggestSnapshot(spark, snap, queries, maxEdits, prefixLength)
-  }
+                    maxEdits: Int = 2, prefixLength: Int = 1): DataFrame =
+    phraseSuggestSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, maxEdits,
+      prefixLength)
 
   def phraseSuggestSnapshot(spark: SparkSession, snap: Snapshot,
                             queries: Seq[RefQuery], maxEdits: Int = 2,
@@ -1512,11 +1457,8 @@ object Wand {
     * kept — unlike [[suggest]], which only proposes corrections).
     * @return (prefix string, rank int, term string, df long) */
   def complete(spark: SparkSession, dir: String, prefixes: Seq[String],
-               topN: Int = 10): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    completeSnapshot(spark, snap, prefixes, topN)
-  }
+               topN: Int = 10): DataFrame =
+    completeSnapshot(spark, SnapshotCatalog.require(spark, dir), prefixes, topN)
 
   def completeSnapshot(spark: SparkSession, snap: Snapshot,
                        prefixes: Seq[String], topN: Int = 10): DataFrame = {
@@ -1548,14 +1490,6 @@ object Wand {
     *                query per row), so the per-source term profile is
     *                driver-collected like the query sets everywhere else
     */
-  def moreLikeThis(spark: SparkSession, dir: String, sources: DataFrame, k: Int,
-                   maxQueryTerms: Int = 25, minTermFreq: Int = 2,
-                   minDocFreq: Int = 5): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    moreLikeThisSnapshot(spark, snap, sources, k, maxQueryTerms, minTermFreq, minDocFreq)
-  }
-
   def moreLikeThisSnapshot(spark: SparkSession, snap: Snapshot, sources: DataFrame,
                            k: Int, maxQueryTerms: Int = 25, minTermFreq: Int = 2,
                            minDocFreq: Int = 5): DataFrame = {
@@ -1635,11 +1569,9 @@ object Wand {
     *
     * @return (query_id int, facet string, doc_count long) */
   def facetCounts(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                  facetCol: String, conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    facetCountsSnapshot(spark, snap, queries, facetCol, conjunctive)
-  }
+                  facetCol: String, conjunctive: Boolean = false): DataFrame =
+    facetCountsSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, facetCol,
+      conjunctive)
 
   def facetCountsSnapshot(spark: SparkSession, snap: Snapshot, queries: Seq[RefQuery],
                           facetCol: String, conjunctive: Boolean = false): DataFrame = {
@@ -1656,13 +1588,6 @@ object Wand {
     * but with no docmap join at all; queries matching nothing are
     * included with doc_count 0 (API totality).
     * @return (query_id int, doc_count long) */
-  def matchCounts(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                  conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    matchCountsSnapshot(spark, snap, queries, conjunctive)
-  }
-
   def matchCountsSnapshot(spark: SparkSession, snap: Snapshot, queries: Seq[RefQuery],
                           conjunctive: Boolean = false): DataFrame = {
     import spark.implicits._
@@ -1681,13 +1606,6 @@ object Wand {
     * Queries matching nothing are included with doc_count 0 and null
     * statistics (API totality).
     * @return (query_id int, doc_count long, min_v/max_v/sum_v/avg_v double) */
-  def statsAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-               valueCol: String, conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    statsAggSnapshot(spark, snap, queries, valueCol, conjunctive)
-  }
-
   def statsAggSnapshot(spark: SparkSession, snap: Snapshot, queries: Seq[RefQuery],
                        valueCol: String, conjunctive: Boolean = false): DataFrame = {
     import spark.implicits._
@@ -1721,13 +1639,6 @@ object Wand {
     * both engines round to the same 4 decimals.
     * @return (query_id int, doc_count long, min_length int,
     *          max_length int, avg_length double, entropy double) */
-  def stringStatsAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                     fieldCol: String, conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    stringStatsAggSnapshot(spark, snap, queries, fieldCol, conjunctive)
-  }
-
   def stringStatsAggSnapshot(spark: SparkSession, snap: Snapshot,
                              queries: Seq[RefQuery], fieldCol: String,
                              conjunctive: Boolean = false): DataFrame = {
@@ -1771,15 +1682,6 @@ object Wand {
     * Scale shape: the match set joins the docmap on (shard, ord) and the
     * quantile is one agg over slim (query_id, v) pairs.
     * @return (query_id int, pct double, doc_count long, value double) */
-  def percentilesAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                     valueCol: String, pcts: Seq[Double],
-                     conjunctive: Boolean = false,
-                     approx: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    percentilesAggSnapshot(spark, snap, queries, valueCol, pcts, conjunctive,
-      approx)
-  }
   def percentilesAggSnapshot(spark: SparkSession, snap: Snapshot,
                              queries: Seq[RefQuery], valueCol: String,
                              pcts: Seq[Double],
@@ -1827,14 +1729,6 @@ object Wand {
     * @return (query_id int, doc_count long, min double, q1 double,
     *          q2 double, q3 double, max double, lower double,
     *          upper double) */
-  def boxplotAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                 valueCol: String, conjunctive: Boolean = false,
-                 approx: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    boxplotAggSnapshot(spark, snap, queries, valueCol, conjunctive, approx)
-  }
-
   def boxplotAggSnapshot(spark: SparkSession, snap: Snapshot,
                          queries: Seq[RefQuery], valueCol: String,
                          conjunctive: Boolean = false,
@@ -1915,17 +1809,6 @@ object Wand {
     * aggregates — no second pass, nothing collects.
     * @return (query_id int, n_a long, n_b long, t_stat double,
     *          df double) */
-  def tTestAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-               valueCol: String, filterA: org.apache.spark.sql.Column,
-               filterB: org.apache.spark.sql.Column,
-               homoscedastic: Boolean = false,
-               conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    tTestAggSnapshot(spark, snap, queries, valueCol, filterA, filterB,
-      homoscedastic, conjunctive)
-  }
-
   def tTestAggSnapshot(spark: SparkSession, snap: Snapshot,
                        queries: Seq[RefQuery], valueCol: String,
                        filterA: org.apache.spark.sql.Column,
@@ -1972,19 +1855,12 @@ object Wand {
   /** Weighted-average aggregation (the OpenSearch `weighted_avg` agg):
     * Σ(value × weight) / Σ(weight) over each query's live match set.
     * `valueCol`/`weightCol` are SQL expressions over docmap columns
-    * (the [[matrixStatsAgg]] convention). Zero-match queries report
+    * (the [[matrixStatsAggSnapshot]] convention). Zero-match queries report
     * doc_count 0 with a null average (API totality); a zero total
     * weight yields null (0/0), OpenSearch's no-data answer.
     * Scale shape: one partial-aggregable groupBy over slim
     * (query_id, v, w) rows after the match set's docmap equi-join.
     * @return (query_id int, doc_count long, weighted_avg double) */
-  def weightedAvgAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                     valueCol: String, weightCol: String,
-                     conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    weightedAvgAggSnapshot(spark, snap, queries, valueCol, weightCol, conjunctive)
-  }
   def weightedAvgAggSnapshot(spark: SparkSession, snap: Snapshot,
                              queries: Seq[RefQuery], valueCol: String,
                              weightCol: String,
@@ -2008,7 +1884,7 @@ object Wand {
     * `median_absolute_deviation` agg): median(|v − median(v)|) over each
     * query's live match set. OpenSearch approximates with a t-digest;
     * the DEFAULT here computes the EXACT linear-interpolation quantile
-    * twice (the [[percentilesAgg]] stance), and `approx = true` is the
+    * twice (the [[percentilesAggSnapshot]] stance), and `approx = true` is the
     * 100-TB configuration: both medians via `percentile_approx`
     * (bounded memory per group regardless of match-set size). Zero-match
     * queries report doc_count 0 with a null deviation.
@@ -2016,13 +1892,6 @@ object Wand {
     * inner median broadcasts back (|queries| rows) for the deviation
     * pass; only the match-set values shuffle, twice.
     * @return (query_id int, doc_count long, mad double) */
-  def madAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-             valueCol: String, conjunctive: Boolean = false,
-             approx: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    madAggSnapshot(spark, snap, queries, valueCol, conjunctive, approx)
-  }
   def madAggSnapshot(spark: SparkSession, snap: Snapshot,
                      queries: Seq[RefQuery], valueCol: String,
                      conjunctive: Boolean = false,
@@ -2067,14 +1936,6 @@ object Wand {
     * already-aggregated bucket rows (|queries| × |distinct facets|).
     * @return (query_id int, rank int, facet, doc_count long,
     *          min_v, max_v, sum_v, avg_v double) */
-  def facetStatsAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                    facetCol: String, valueCol: String, size: Int,
-                    conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    facetStatsAggSnapshot(spark, snap, queries, facetCol, valueCol, size,
-      conjunctive)
-  }
   def facetStatsAggSnapshot(spark: SparkSession, snap: Snapshot,
                             queries: Seq[RefQuery], facetCol: String,
                             valueCol: String, size: Int,
@@ -2105,14 +1966,6 @@ object Wand {
     * postings payloads beyond membership, and the rank window shuffles
     * only (query, doc) rows.
     * @return (query_id int, rank int, doc_id string, score double) */
-  def constantScoreSearch(spark: SparkSession, dir: String,
-                          queries: Seq[RefQuery], k: Int,
-                          boost: Double = 1.0,
-                          conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    constantScoreSearchSnapshot(spark, snap, queries, k, boost, conjunctive)
-  }
   def constantScoreSearchSnapshot(spark: SparkSession, snap: Snapshot,
                                   queries: Seq[RefQuery], k: Int,
                                   boost: Double = 1.0,
@@ -2131,7 +1984,7 @@ object Wand {
   /** The OpenSearch `ids` query: match exactly the requested LIVE doc
     * identities — a term-level query on `_id` with no text and no
     * stats, constant score `boost` in filter context (doc-order rank,
-    * the [[constantScoreSearch]] contract). Unknown or tombstoned ids
+    * the [[constantScoreSearchSnapshot]] contract). Unknown or tombstoned ids
     * simply don't match — never an error, per the API. An upserted
     * identity matches once, as its live generation (the
     * [[liveRows]]/termVectors liveness discipline over the docmap).
@@ -2143,11 +1996,8 @@ object Wand {
     * @return (query_id int, rank int, doc_id string, score double) */
   def idsSearch(spark: SparkSession, dir: String,
                 queries: Seq[(Int, Seq[String])], k: Int,
-                boost: Double = 1.0): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    idsSearchSnapshot(spark, snap, queries, k, boost)
-  }
+                boost: Double = 1.0): DataFrame =
+    idsSearchSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, k, boost)
   def idsSearchSnapshot(spark: SparkSession, snap: Snapshot,
                         queries: Seq[(Int, Seq[String])], k: Int,
                         boost: Double = 1.0): DataFrame = {
@@ -2177,7 +2027,7 @@ object Wand {
     * staging archive at the resolved (shard, ord), content never
     * re-read — become the term set; the filter then matches every live
     * doc containing at least one of them, in filter context
-    * (constant-score, doc-order rank — the [[constantScoreSearch]]
+    * (constant-score, doc-order rank — the [[constantScoreSearchSnapshot]]
     * contract). The lookup doc itself matches too, as in OpenSearch.
     *
     * `maxTerms` mirrors OpenSearch's `index.max_terms_count` (default
@@ -2196,8 +2046,7 @@ object Wand {
     import spark.implicits._
     require(k > 0, s"k must be positive: $k")
     require(maxTerms > 0, s"max_terms_count must be positive: $maxTerms")
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
+    val snap = SnapshotCatalog.require(spark, dir)
     val addrs = liveRows(spark, snap,
       spark.read.parquet(snap.docmapDirs: _*)
         .filter(col("doc_id") === lookupDocId)
@@ -2248,8 +2097,7 @@ object Wand {
       implicit es: org.apache.spark.sql.Encoder[S],
       er: org.apache.spark.sql.Encoder[R]): org.apache.spark.sql.Dataset[(Int, R)] = {
     import org.apache.spark.sql.Encoders
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
+    val snap = SnapshotCatalog.require(spark, dir)
     val matched = matchedOrds(spark, snap, queries, conjunctive)
     val dm = spark.read.parquet(snap.docmapDirs: _*)
     val joined = matched.join(dm, Seq("shard", "ord"))
@@ -2266,20 +2114,13 @@ object Wand {
   }
 
   /** Extended stats aggregation (the OpenSearch `extended_stats` agg):
-    * [[statsAgg]] plus sum-of-squares, population variance, and standard
+    * [[statsAggSnapshot]] plus sum-of-squares, population variance, and standard
     * deviation of a numeric docmap column over each query's live match
     * set. Exact (`var_pop`; OpenSearch computes the same naive population
     * moments). Zero-match queries report doc_count 0 with null moments
     * (API totality). One partial-aggregable pass over slim (query, v).
     * @return (query_id int, doc_count long, sum_v, sum_sq, avg_v,
     *          var_v, std_v double) */
-  def extendedStatsAgg(spark: SparkSession, dir: String,
-                       queries: Seq[RefQuery], valueCol: String,
-                       conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    extendedStatsAggSnapshot(spark, snap, queries, valueCol, conjunctive)
-  }
   def extendedStatsAggSnapshot(spark: SparkSession, snap: Snapshot,
                                queries: Seq[RefQuery], valueCol: String,
                                conjunctive: Boolean = false): DataFrame = {
@@ -2302,19 +2143,10 @@ object Wand {
     * agg): for each probe value, the percentage of match-set docs whose
     * `valueCol` is ≤ that value — the EXACT empirical CDF × 100
     * (OpenSearch interpolates a t-digest; the exact step CDF is this
-    * library's documented stance, like [[percentilesAgg]]). EVERY
+    * library's documented stance, like [[percentilesAggSnapshot]]). EVERY
     * (query, value) pair is present; zero-match queries report
     * doc_count 0 with a null rank (API totality).
     * @return (query_id int, value double, doc_count long, pct_rank double) */
-  def percentileRanksAgg(spark: SparkSession, dir: String,
-                         queries: Seq[RefQuery], valueCol: String,
-                         values: Seq[Double],
-                         conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    percentileRanksAggSnapshot(spark, snap, queries, valueCol, values,
-      conjunctive)
-  }
   def percentileRanksAggSnapshot(spark: SparkSession, snap: Snapshot,
                                  queries: Seq[RefQuery], valueCol: String,
                                  values: Seq[Double],
@@ -2352,12 +2184,6 @@ object Wand {
     * driver-tiny rows. Empty buckets are omitted, as OpenSearch omits
     * zero-doc buckets.
     * @return (key string, doc_count long) */
-  def adjacencyMatrixAgg(spark: SparkSession, dir: String,
-                         filters: Seq[(String, String)]): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    adjacencyMatrixAggSnapshot(spark, snap, filters)
-  }
   def adjacencyMatrixAggSnapshot(spark: SparkSession, snap: Snapshot,
                                  filters: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
@@ -2395,15 +2221,6 @@ object Wand {
     * so Catalyst pushes it below the aggregation (buckets outside the
     * page are never aggregated past the partial stage).
     * @return (query_id int, facet, doc_count long) — ascending facet */
-  def compositeAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                   facetCol: String, size: Int,
-                   afterKey: Option[String] = None,
-                   conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    compositeAggSnapshot(spark, snap, queries, facetCol, size, afterKey,
-      conjunctive)
-  }
   def compositeAggSnapshot(spark: SparkSession, snap: Snapshot,
                            queries: Seq[RefQuery], facetCol: String,
                            size: Int, afterKey: Option[String] = None,
@@ -2425,14 +2242,6 @@ object Wand {
     * this is the exact form (one partial-aggregable groupBy, then a
     * post-aggregation filter on the already-slim bucket rows).
     * @return (query_id int, facet, doc_count long) */
-  def rareTermsAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                   facetCol: String, maxDocCount: Long,
-                   conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    rareTermsAggSnapshot(spark, snap, queries, facetCol, maxDocCount,
-      conjunctive)
-  }
   def rareTermsAggSnapshot(spark: SparkSession, snap: Snapshot,
                            queries: Seq[RefQuery], facetCol: String,
                            maxDocCount: Long,
@@ -2449,16 +2258,9 @@ object Wand {
   /** Multi-terms aggregation (the OpenSearch `multi_terms` agg): buckets
     * keyed by a TUPLE of docmap columns, top `size` per query by
     * doc_count desc with the full key tuple as the ascending tie-break.
-    * Same scale shape as [[facetStatsAgg]] — one partial-aggregable
+    * Same scale shape as [[facetStatsAggSnapshot]] — one partial-aggregable
     * groupBy over slim rows, the rank window over aggregated buckets.
     * @return (query_id int, rank int, <keyCols...>, doc_count long) */
-  def multiTermsAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                    keyCols: Seq[String], size: Int,
-                    conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    multiTermsAggSnapshot(spark, snap, queries, keyCols, size, conjunctive)
-  }
   def multiTermsAggSnapshot(spark: SparkSession, snap: Snapshot,
                             queries: Seq[RefQuery], keyCols: Seq[String],
                             size: Int, conjunctive: Boolean = false): DataFrame = {
@@ -2479,7 +2281,7 @@ object Wand {
 
   /** Derivative + cumulative_sum pipeline aggregations (the OpenSearch
     * `derivative` and `cumulative_sum` pipeline aggs riding a histogram
-    * parent): the gap-filled buckets of [[histogramAgg]], each extended
+    * parent): the gap-filled buckets of [[histogramAggSnapshot]], each extended
     * with the first difference of doc_count vs the previous bucket (null
     * on each query's first bucket — OpenSearch omits the value there)
     * and the running doc_count total in ascending key order.
@@ -2492,15 +2294,6 @@ object Wand {
     * one exchange of the slim bucket rows only.
     * @return (query_id int, key double, doc_count long,
     *          derivative double|null, cumulative long) */
-  def derivativeAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                    valueCol: String, interval: Double,
-                    conjunctive: Boolean = false,
-                    maxBuckets: Int = 65536): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    derivativeAggSnapshot(spark, snap, queries, valueCol, interval,
-      conjunctive, maxBuckets)
-  }
   def derivativeAggSnapshot(spark: SparkSession, snap: Snapshot,
                             queries: Seq[RefQuery], valueCol: String,
                             interval: Double, conjunctive: Boolean = false,
@@ -2524,22 +2317,11 @@ object Wand {
     * doc_count 0 and a null metric sum; whatever the script yields on
     * them (usually null) is returned as-is, OpenSearch's
     * skip-gap behavior.
-    * Scale shape: the [[derivativeAgg]] discipline — one extra SUM in
+    * Scale shape: the [[derivativeAggSnapshot]] discipline — one extra SUM in
     * the same partial-aggregable bucket pass, then driver-free column
     * math over maxBuckets-bounded rows.
     * @return (query_id int, key double, doc_count long, metric double,
     *          script double) */
-  def bucketScriptAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                      valueCol: String, interval: Double, metricCol: String,
-                      script: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column,
-                      conjunctive: Boolean = false,
-                      maxBuckets: Int = 65536): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    bucketScriptAggSnapshot(spark, snap, queries, valueCol, interval,
-      metricCol, script, conjunctive, maxBuckets)
-  }
-
   def bucketScriptAggSnapshot(spark: SparkSession, snap: Snapshot,
                               queries: Seq[RefQuery], valueCol: String,
                               interval: Double, metricCol: String,
@@ -2561,7 +2343,7 @@ object Wand {
       .select("query_id", "key", "doc_count", "metric", "script")
   }
 
-  /** The normalize-method names [[normalizeAgg]] implements (the
+  /** The normalize-method names [[normalizeAggSnapshot]] implements (the
     * OpenSearch `normalize` pipeline agg's method set minus softmax). */
   val NormalizeMethods: Set[String] =
     Set("percent_of_sum", "rescale_0_1", "z_score")
@@ -2571,20 +2353,10 @@ object Wand {
     * bucket series — `percent_of_sum` (x/Σx), `rescale_0_1`
     * ((x−min)/(max−min); a constant series maps to 0, OpenSearch's
     * division guard), `z_score` ((x−μ)/σ with the POPULATION σ, null σ=0).
-    * Scale shape: the [[derivativeAgg]] discipline — the pipeline window
+    * Scale shape: the [[derivativeAggSnapshot]] discipline — the pipeline window
     * runs over already-aggregated maxBuckets-bounded bucket rows.
     * @return (query_id int, key double, doc_count long,
     *          normalized double|null) */
-  def normalizeAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                   valueCol: String, interval: Double, method: String,
-                   conjunctive: Boolean = false,
-                   maxBuckets: Int = 65536): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    normalizeAggSnapshot(spark, snap, queries, valueCol, interval, method,
-      conjunctive, maxBuckets)
-  }
-
   def normalizeAggSnapshot(spark: SparkSession, snap: Snapshot,
                            queries: Seq[RefQuery], valueCol: String,
                            interval: Double, method: String,
@@ -2621,17 +2393,6 @@ object Wand {
     * materialize, no bucket-prefix re-scan.
     * @return (query_id int, key double, doc_count long,
     *          cumulative_cardinality long) */
-  def cumulativeCardinalityAgg(spark: SparkSession, dir: String,
-                               queries: Seq[RefQuery], valueCol: String,
-                               interval: Double, field: String,
-                               conjunctive: Boolean = false,
-                               maxBuckets: Int = 65536): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    cumulativeCardinalityAggSnapshot(spark, snap, queries, valueCol, interval,
-      field, conjunctive, maxBuckets)
-  }
-
   def cumulativeCardinalityAggSnapshot(spark: SparkSession, snap: Snapshot,
                                        queries: Seq[RefQuery], valueCol: String,
                                        interval: Double, field: String,
@@ -2667,20 +2428,11 @@ object Wand {
     * ordinals (the parent histogram densifies gaps to zero-count
     * buckets, so ordinals and key steps agree).
     *
-    * Scale shape: identical to [[derivativeAgg]] — the pipeline window
+    * Scale shape: identical to [[derivativeAggSnapshot]] — the pipeline window
     * runs over already-aggregated slim bucket rows, bounded by
     * maxBuckets; the data-scale cost stays in the parent histogram.
     * @return (query_id int, key double, doc_count long,
     *          moving_avg double|null) */
-  def movingFnAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                  valueCol: String, interval: Double, window: Int,
-                  conjunctive: Boolean = false,
-                  maxBuckets: Int = 65536): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    movingFnAggSnapshot(spark, snap, queries, valueCol, interval, window,
-      conjunctive, maxBuckets)
-  }
   def movingFnAggSnapshot(spark: SparkSession, snap: Snapshot,
                           queries: Seq[RefQuery], valueCol: String,
                           interval: Double, window: Int,
@@ -2740,18 +2492,9 @@ object Wand {
     * `lag`): each histogram bucket reports doc_count minus the doc_count
     * `lag` buckets earlier in key order — null while no bucket sits that
     * far back. Positional over the densified bucket series, like
-    * [[movingFnAgg]].
+    * [[movingFnAggSnapshot]].
     * @return (query_id int, key double, doc_count long,
     *          serial_diff double|null) */
-  def serialDiffAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                    valueCol: String, interval: Double, lagBuckets: Int,
-                    conjunctive: Boolean = false,
-                    maxBuckets: Int = 65536): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    serialDiffAggSnapshot(spark, snap, queries, valueCol, interval,
-      lagBuckets, conjunctive, maxBuckets)
-  }
   def serialDiffAggSnapshot(spark: SparkSession, snap: Snapshot,
                             queries: Seq[RefQuery], valueCol: String,
                             interval: Double, lagBuckets: Int,
@@ -2775,19 +2518,11 @@ object Wand {
     * tie-break — not the terms agg's own doc_count order) and keeps the
     * top `size`.
     *
-    * Scale shape: identical to [[facetStatsAgg]] — one partial-aggregable
+    * Scale shape: identical to [[facetStatsAggSnapshot]] — one partial-aggregable
     * groupBy over slim (query_id, facet, metric) rows; selector and sort
     * are post-aggregation transforms over the already-slim bucket rows.
     * @return (query_id int, rank int, facet string, doc_count long,
     *          avg_v double) */
-  def bucketSortAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                    facetCol: String, metricCol: String, minDocCount: Long,
-                    size: Int, conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    bucketSortAggSnapshot(spark, snap, queries, facetCol, metricCol,
-      minDocCount, size, conjunctive)
-  }
   def bucketSortAggSnapshot(spark: SparkSession, snap: Snapshot,
                             queries: Seq[RefQuery], facetCol: String,
                             metricCol: String, minDocCount: Long, size: Int,
@@ -2822,12 +2557,6 @@ object Wand {
     * negligible by construction.
     * @return (query_id int, bucket_count long, min_bucket long,
     *          max_bucket long, sum_bucket long, avg_bucket double) */
-  def statsBucketAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                     facetCol: String, conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    statsBucketAggSnapshot(spark, snap, queries, facetCol, conjunctive)
-  }
   def statsBucketAggSnapshot(spark: SparkSession, snap: Snapshot,
                              queries: Seq[RefQuery], facetCol: String,
                              conjunctive: Boolean = false): DataFrame = {
@@ -2854,15 +2583,6 @@ object Wand {
     * bucket rows, never documents.
     * @return (query_id int, pct double, bucket_count long,
     *          value double) */
-  def percentilesBucketAgg(spark: SparkSession, dir: String,
-                           queries: Seq[RefQuery], facetCol: String,
-                           pcts: Seq[Double],
-                           conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    percentilesBucketAggSnapshot(spark, snap, queries, facetCol, pcts, conjunctive)
-  }
-
   def percentilesBucketAggSnapshot(spark: SparkSession, snap: Snapshot,
                                    queries: Seq[RefQuery], facetCol: String,
                                    pcts: Seq[Double],
@@ -2893,7 +2613,7 @@ object Wand {
     * on a numeric field): per query, pick the SMALLEST interval from the
     * 1-2-5 decade ladder (1, 2, 5, 10, 20, 50, …) whose densified bucket
     * count `floor(max/i) − floor(min/i) + 1` fits `targetBuckets`, then
-    * bucket like [[histogramAgg]] (gap buckets filled with zero counts).
+    * bucket like [[histogramAggSnapshot]] (gap buckets filled with zero counts).
     * The chosen interval is returned per row — the API's
     * `interval` response field. Zero-match queries report no buckets.
     *
@@ -2901,15 +2621,6 @@ object Wand {
     * collect — driver-trivial), one partial-aggregable groupBy counts
     * buckets; densification happens on ≤ |queries|·targetBuckets rows.
     * @return (query_id int, interval double, key double, doc_count long) */
-  def autoHistogramAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                       valueCol: String, targetBuckets: Int,
-                       conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    autoHistogramAggSnapshot(spark, snap, queries, valueCol, targetBuckets,
-      conjunctive)
-  }
-
   def autoHistogramAggSnapshot(spark: SparkSession, snap: Snapshot,
                                queries: Seq[RefQuery], valueCol: String,
                                targetBuckets: Int,
@@ -2966,16 +2677,6 @@ object Wand {
     * metrics ride the same docmap join.
     * @return (query_id int, rank int, doc_id string, sort_value double,
     *          metric double) */
-  def topMetricsAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                    sortCol: String, metricCol: String, size: Int,
-                    ascending: Boolean = false,
-                    conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    topMetricsAggSnapshot(spark, snap, queries, sortCol, metricCol, size,
-      ascending, conjunctive)
-  }
-
   def topMetricsAggSnapshot(spark: SparkSession, snap: Snapshot,
                             queries: Seq[RefQuery], sortCol: String,
                             metricCol: String, size: Int,
@@ -2988,7 +2689,7 @@ object Wand {
         expr(sortCol).cast("double").as("sort_value"),
         expr(metricCol).cast("double").as("metric"))
     val ord = if (ascending) col("sort_value").asc else col("sort_value").desc
-    // per-shard pre-cut before the global window (the samplerAgg shape):
+    // per-shard pre-cut before the global window (the samplerAggSnapshot shape):
     // the single-partition-per-query final rank sees ≤ S×size rows.
     // Docs whose sort expression is null are SKIPPED (the OpenSearch
     // top_metrics missing-field rule) — without the filter Spark's
@@ -3005,32 +2706,17 @@ object Wand {
       .select("query_id", "rank", "doc_id", "sort_value", "metric")
   }
 
-  /** max_bucket pipeline aggregation (the OpenSearch `max_bucket` sibling
-    * agg over a terms parent): the bucket(s) of `facetCol` whose
-    * doc_count is the series maximum — `keys` is the ascending
-    * comma-join of the tied bucket keys (OpenSearch returns a keys
-    * ARRAY precisely because ties happen), `value` the extreme count.
-    * Zero-match queries report no row (no bucket series has no extreme).
-    * Scale shape: the [[statsBucketAgg]] shuffle — one partial-aggregable
-    * groupBy to bucket counts, then extremes over the slim bucket rows.
+  /** max_bucket / min_bucket pipeline aggregation (the OpenSearch
+    * `max_bucket` and `min_bucket` sibling aggs over a terms parent;
+    * `isMax` picks which): the bucket(s) of `facetCol` whose doc_count is
+    * the series maximum (minimum) — `keys` is the ascending comma-join
+    * of the tied bucket keys (OpenSearch returns a keys ARRAY precisely
+    * because ties happen), `value` the extreme count. Zero-match queries
+    * report no row (no bucket series has no extreme).
+    * Scale shape: the [[statsBucketAggSnapshot]] shuffle — one
+    * partial-aggregable groupBy to bucket counts, then extremes over the
+    * slim bucket rows.
     * @return (query_id int, keys string, value long) */
-  def maxBucketAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                   facetCol: String, conjunctive: Boolean = false): DataFrame =
-    extremeBucketAgg(spark, dir, queries, facetCol, conjunctive, isMax = true)
-
-  /** min_bucket pipeline aggregation — [[maxBucketAgg]]'s minimum twin. */
-  def minBucketAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                   facetCol: String, conjunctive: Boolean = false): DataFrame =
-    extremeBucketAgg(spark, dir, queries, facetCol, conjunctive, isMax = false)
-
-  private def extremeBucketAgg(spark: SparkSession, dir: String,
-                               queries: Seq[RefQuery], facetCol: String,
-                               conjunctive: Boolean, isMax: Boolean): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    extremeBucketAggSnapshot(spark, snap, queries, facetCol, conjunctive, isMax)
-  }
-
   def extremeBucketAggSnapshot(spark: SparkSession, snap: Snapshot,
                                queries: Seq[RefQuery], facetCol: String,
                                conjunctive: Boolean, isMax: Boolean): DataFrame = {
@@ -3063,13 +2749,6 @@ object Wand {
     * sets, the other bucket from a left_anti on the same key — no
     * per-filter scans, no content re-read.
     * @return (query_id int, filter string, doc_count long) */
-  def filtersAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                 filters: Seq[(String, String)],
-                 conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    filtersAggSnapshot(spark, snap, queries, filters, conjunctive)
-  }
   def filtersAggSnapshot(spark: SparkSession, snap: Snapshot,
                          queries: Seq[RefQuery],
                          filters: Seq[(String, String)],
@@ -3126,13 +2805,6 @@ object Wand {
     * OpenSearch runtime-mapping analog), cast to double.
     * @return (query_id int, doc_count long, mean_x, mean_y, var_x,
     *          var_y, covariance, correlation — all double) */
-  def matrixStatsAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                     xCol: String, yCol: String,
-                     conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    matrixStatsAggSnapshot(spark, snap, queries, xCol, yCol, conjunctive)
-  }
   def matrixStatsAggSnapshot(spark: SparkSession, snap: Snapshot,
                              queries: Seq[RefQuery], xCol: String,
                              yCol: String,
@@ -3159,14 +2831,6 @@ object Wand {
     * shuffle with a constant-size sketch per (query, partition). Zero-
     * match queries report 0 (API totality).
     * @return (query_id int, cardinality long) */
-  def cardinalityAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                     colName: String, conjunctive: Boolean = false,
-                     approx: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    cardinalityAggSnapshot(spark, snap, queries, colName, conjunctive, approx)
-  }
-
   def cardinalityAggSnapshot(spark: SparkSession, snap: Snapshot,
                              queries: Seq[RefQuery], colName: String,
                              conjunctive: Boolean = false,
@@ -3195,14 +2859,6 @@ object Wand {
     * pair is present, zero-filled (the cross product is |queries| ×
     * (|bounds|+1) — driver-tiny), with `lo`/`hi` null at the open ends.
     * @return (query_id int, bucket int, lo double, hi double, doc_count long) */
-  def rangeCounts(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                  valueCol: String, bounds: Seq[Double],
-                  conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    rangeCountsSnapshot(spark, snap, queries, valueCol, bounds, conjunctive)
-  }
-
   def rangeCountsSnapshot(spark: SparkSession, snap: Snapshot, queries: Seq[RefQuery],
                           valueCol: String, bounds: Seq[Double],
                           conjunctive: Boolean = false): DataFrame = {
@@ -3243,27 +2899,16 @@ object Wand {
     * breaker (default 65536): a query whose value span would gap-fill
     * past it fails the job rather than exploding the output — the
     * check runs distributed (`raise_error` on the per-query span row),
-    * no extra action. Scale shape is rangeCounts': the match set moves
+    * no extra action. Scale shape is rangeCountsSnapshot's: the match set moves
     * as slim (query_id, shard, ord) triples, the docmap join ships only
     * (shard, ord, bucket-index), the count agg is map-side partial, and
     * the gap-fill explode is bounded by |queries| × maxBuckets.
     * @return (query_id int, key double, doc_count long), key ascending
     *         dense per query */
-  def histogramAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                   valueCol: String, interval: Double,
-                   conjunctive: Boolean = false,
-                   maxBuckets: Int = 65536): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    histogramAggSnapshot(spark, snap, queries, valueCol, interval,
-      conjunctive, maxBuckets)
-  }
-
   def histogramAggSnapshot(spark: SparkSession, snap: Snapshot,
                            queries: Seq[RefQuery], valueCol: String,
                            interval: Double, conjunctive: Boolean = false,
                            maxBuckets: Int = 65536): DataFrame = {
-    import spark.implicits._
     require(interval > 0.0 && !interval.isInfinite,
       s"interval must be a positive finite number: $interval")
     require(maxBuckets > 0, s"maxBuckets must be positive: $maxBuckets")
@@ -3308,14 +2953,6 @@ object Wand {
     * exactly the quantity being ranked.
     * @return (query_id int, facet string, rank int, doc_id string,
     *          score double) */
-  def topHits(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-              bucketCol: String, n: Int,
-              conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    topHitsSnapshot(spark, snap, queries, bucketCol, n, conjunctive)
-  }
-
   def topHitsSnapshot(spark: SparkSession, snap: Snapshot,
                       queries: Seq[RefQuery], bucketCol: String, n: Int,
                       conjunctive: Boolean = false): DataFrame = {
@@ -3341,7 +2978,7 @@ object Wand {
   /** Scroll drain (the OpenSearch `scroll` API, fully consumed): the
     * ENTIRE match set of each query in one distributed job, ranked by
     * the exact BM25 order `(score desc, shard asc, ord asc)` — the
-    * same `_shard_doc` tie key [[searchAfter]] pages by, so this equals
+    * same `_shard_doc` tie key [[searchAfterSnapshot]] pages by, so this equals
     * the concatenation of every `search_after` page (EngineSpec pins
     * the equivalence against a real page loop) — with `page` assigned
     * as `(rank-1) / pageSize + 1`. Draining a scroll is the one
@@ -3357,11 +2994,9 @@ object Wand {
     * @return (query_id int, page int, rank int, doc_id string,
     *          score double) */
   def scrollDrain(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                  pageSize: Int, conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    scrollDrainSnapshot(spark, snap, queries, pageSize, conjunctive)
-  }
+                  pageSize: Int, conjunctive: Boolean = false): DataFrame =
+    scrollDrainSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, pageSize,
+      conjunctive)
 
   def scrollDrainSnapshot(spark: SparkSession, snap: Snapshot,
                           queries: Seq[RefQuery], pageSize: Int,
@@ -3471,21 +3106,13 @@ object Wand {
     * the global top-`sampleSize` under (score desc, doc_id asc) — exactly
     * the cut an ANSI-SQL oracle can replay. Scores are the exact
     * [[Golden.sumSorted]] sums (WAND pruning can't apply: the sample cut
-    * needs the full match-set order, same as [[collapseSearch]]).
+    * needs the full match-set order, same as [[collapseSearchSnapshot]]).
     *
     * Scale shape: the match set moves as slim (query_id, shard, ord,
     * score) rows; ONE broadcast-able docmap equi-join attaches the field;
     * the rank window shuffles the match set once on query_id; the terms
     * agg then runs over ≤ |queries|·sampleSize rows — driver-trivial.
     * @return (query_id int, value string, doc_count long) */
-  def samplerAgg(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                 field: String, sampleSize: Int,
-                 conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    samplerAggSnapshot(spark, snap, queries, field, sampleSize, conjunctive)
-  }
-
   def samplerAggSnapshot(spark: SparkSession, snap: Snapshot,
                          queries: Seq[RefQuery], field: String,
                          sampleSize: Int,
@@ -3494,23 +3121,12 @@ object Wand {
       diversifyField = null, maxDocsPerValue = 0)
 
   /** Diversified sampler (the OpenSearch `diversified_sampler` bucket
-    * agg): like [[samplerAgg]], but before the top-`sampleSize` cut at
+    * agg): like [[samplerAggSnapshot]], but before the top-`sampleSize` cut at
     * most `maxDocsPerValue` docs per distinct `diversifyField` value
     * survive, kept in (score desc, doc_id asc) order — so one dominant
     * repo/author/host can't flood the sample. Null field values form
     * their own de-dup group (the OpenSearch missing-keyword behavior).
     * @return (query_id int, value string, doc_count long) */
-  def diversifiedSamplerAgg(spark: SparkSession, dir: String,
-                            queries: Seq[RefQuery], field: String,
-                            sampleSize: Int, diversifyField: String,
-                            maxDocsPerValue: Int,
-                            conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    diversifiedSamplerAggSnapshot(spark, snap, queries, field, sampleSize,
-      diversifyField, maxDocsPerValue, conjunctive)
-  }
-
   def diversifiedSamplerAggSnapshot(spark: SparkSession, snap: Snapshot,
                                     queries: Seq[RefQuery], field: String,
                                     sampleSize: Int, diversifyField: String,
@@ -3563,7 +3179,7 @@ object Wand {
     * list with duplicates-by-field removed — for each query, each
     * distinct value of `collapseCol` is represented by its single
     * best-scoring live hit, and the survivors are re-ranked globally to
-    * the top `k`. Like [[topHits]] (whose scoring engine this shares),
+    * the top `k`. Like [[topHitsSnapshot]] (whose scoring engine this shares),
     * WAND pruning cannot apply: a field value's best doc can score
     * arbitrarily low globally, so the full match set is scored exactly
     * with [[Golden.sumSorted]] ascending-term sums — bit-identical to
@@ -3578,14 +3194,6 @@ object Wand {
     * OpenSearch behavior for a missing keyword.
     * @return (query_id int, rank int, doc_id string,
     *          collapse_key string, score double) */
-  def collapseSearch(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                     collapseCol: String, k: Int,
-                     conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    collapseSearchSnapshot(spark, snap, queries, collapseCol, k, conjunctive)
-  }
-
   def collapseSearchSnapshot(spark: SparkSession, snap: Snapshot,
                              queries: Seq[RefQuery], collapseCol: String,
                              k: Int, conjunctive: Boolean = false): DataFrame = {
@@ -3620,8 +3228,8 @@ object Wand {
     * field factor varies per document, WAND's relevance-only upper
     * bounds cannot prune for the COMBINED order (a low-BM25 doc with a
     * large field value can win), so the full match set is scored exactly
-    * ([[Golden.sumSorted]] ascending-term sums — the [[topHits]] /
-    * [[collapseSearch]] engine) and combined in one Column expression.
+    * ([[Golden.sumSorted]] ascending-term sums — the [[topHitsSnapshot]] /
+    * [[collapseSearchSnapshot]] engine) and combined in one Column expression.
     * Supported modifiers: `none`, `log1p` (ln(1+v), the OpenSearch
     * log1p), `sqrt`. Ties break (score desc, doc_id asc).
     *
@@ -3631,17 +3239,6 @@ object Wand {
     * by it would restore pruning — left out deliberately: unbounded
     * fields (counters, sizes) are the common case.
     * @return (query_id int, rank int, doc_id string, score double) */
-  def functionScoreSearch(spark: SparkSession, dir: String,
-                          queries: Seq[RefQuery], k: Int, factorCol: String,
-                          factor: Double = 1.0, modifier: String = "log1p",
-                          boostMode: String = "multiply",
-                          conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    functionScoreSearchSnapshot(spark, snap, queries, k, factorCol, factor,
-      modifier, boostMode, conjunctive)
-  }
-
   def functionScoreSearchSnapshot(spark: SparkSession, snap: Snapshot,
                                   queries: Seq[RefQuery], k: Int,
                                   factorCol: String, factor: Double = 1.0,
@@ -3669,7 +3266,7 @@ object Wand {
       .select("query_id", "rank", "doc_id", "score")
   }
 
-  /** The ONE combine expression [[functionScoreSearch]] and its golden
+  /** The ONE combine expression [[functionScoreSearchSnapshot]] and its golden
     * pin share — same Column tree, bit-identical doubles by
     * construction. */
   def functionScoreCombine(score: org.apache.spark.sql.Column,
@@ -3734,7 +3331,7 @@ object Wand {
 
   /** rank_feature riding a text query (the bool-should composition the
     * query exists for): `score = bm25 + rankFeatureExpr(feature)`.
-    * Scale shape = [[functionScoreSearch]]: one exact engine pass, a
+    * Scale shape = [[functionScoreSearchSnapshot]]: one exact engine pass, a
     * docmap metadata join, pure codegen'd column math, per-shard pre-cut
     * before the global rank window.
     * @return (query_id int, rank int, doc_id string, score double) */
@@ -3743,8 +3340,8 @@ object Wand {
                         fn: String, boost: Double = 1.0, pivot: Double = 1.0,
                         exponent: Double = 1.0, scaling: Double = 1.0,
                         conjunctive: Boolean = false): DataFrame =
-    featureBoostSearch(spark, dir, queries, k, featureCol,
-      fv => rankFeatureExpr(fv, fn, boost, pivot, exponent, scaling),
+    featureBoostSearchSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, k,
+      featureCol, fv => rankFeatureExpr(fv, fn, boost, pivot, exponent, scaling),
       conjunctive)
 
   /** distance_feature riding a text query — see [[distanceFeatureExpr]].
@@ -3754,19 +3351,8 @@ object Wand {
                             featureCol: String, origin: Double,
                             pivot: Double, boost: Double = 1.0,
                             conjunctive: Boolean = false): DataFrame =
-    featureBoostSearch(spark, dir, queries, k, featureCol,
-      fv => distanceFeatureExpr(fv, origin, pivot, boost), conjunctive)
-
-  private def featureBoostSearch(spark: SparkSession, dir: String,
-                                 queries: Seq[RefQuery], k: Int,
-                                 featureCol: String,
-                                 featureScore: Column => Column,
-                                 conjunctive: Boolean): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    featureBoostSearchSnapshot(spark, snap, queries, k, featureCol,
-      featureScore, conjunctive)
-  }
+    featureBoostSearchSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, k,
+      featureCol, fv => distanceFeatureExpr(fv, origin, pivot, boost), conjunctive)
 
   def featureBoostSearchSnapshot(spark: SparkSession, snap: Snapshot,
                                  queries: Seq[RefQuery], k: Int,
@@ -3841,20 +3427,13 @@ object Wand {
     * WAND pruning deliberately does not apply: a per-sub relevance bound
     * does not bound the COMBINED order when tieBreaker > 0 (a doc
     * matching many weak subs can outrank one strong sub), so the match
-    * set is scored exactly ([[topHits]]' engine).
+    * set is scored exactly ([[topHitsSnapshot]]' engine).
     *
     * Scale shape: ONE engine pass over the union of all sub terms (one
     * term-pruned segment scan, the same slim (query, shard, ord)
     * shuffle), the sub-combine a bounded-width agg (≤ |subs| rows per
     * doc), and the final rank window shuffles exactly what is ranked.
     * @return (query_id int, rank int, doc_id string, score double) */
-  def disMaxSearch(spark: SparkSession, dir: String, queries: Seq[DisMaxQuery],
-                   k: Int, tieBreaker: Double = 0.0): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    disMaxSearchSnapshot(spark, snap, queries, k, tieBreaker)
-  }
-
   def disMaxSearchSnapshot(spark: SparkSession, snap: Snapshot,
                            queries: Seq[DisMaxQuery], k: Int,
                            tieBreaker: Double = 0.0): DataFrame = {
@@ -3921,14 +3500,6 @@ object Wand {
     * scores stay bit-identical to the golden twin through the shared
     * [[boostingCombine]].
     * @return (query_id int, rank int, doc_id string, score double) */
-  def boostingSearch(spark: SparkSession, dir: String,
-                     queries: Seq[BoostingQuery], k: Int,
-                     negativeBoost: Double = 0.5): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    boostingSearchSnapshot(spark, snap, queries, k, negativeBoost)
-  }
-
   def boostingSearchSnapshot(spark: SparkSession, snap: Snapshot,
                              queries: Seq[BoostingQuery], k: Int,
                              negativeBoost: Double = 0.5): DataFrame = {
@@ -3970,11 +3541,12 @@ object Wand {
     "cross_fields")
 
   /** multi_match (the OpenSearch query of the same name) across
-    * per-FIELD indexes. Each document field is its own index; doc_id —
-    * sha256(repo, path, commit) — is content-independent, so the same
-    * logical document aligns across the field indexes. The one query
-    * text scores against every field index, each field's BM25 scaled by
-    * its boost, and per-doc field scores combine by `mode`:
+    * per-FIELD indexes, one (snapshot, boost) pair per field. Each
+    * document field is its own index; doc_id — sha256(repo, path,
+    * commit) — is content-independent, so the same logical document
+    * aligns across the field indexes. The one query text scores against
+    * every field index, each field's BM25 scaled by its boost, and
+    * per-doc field scores combine by `mode`:
     *  - `best_fields`: max + tieBreaker × (sum − max) — the dis_max
     *    fold, shared with the golden twin via [[disMaxCombined]]
     *  - `most_fields`: the ascending-field [[Golden.sumSorted]] sum
@@ -3983,6 +3555,13 @@ object Wand {
     *    scores, and per-term blends sum per doc
     *    ([[crossFieldsCombined]]; per-field df, not Lucene's blended df
     *    — see its note)
+    *
+    * `fuzziness`: OpenSearch multi_match's per-term fuzzy rewrite for
+    * best_fields / most_fields — each query word expands against EACH
+    * FIELD's own dictionary ([[matchFuzzyExpandQueries]], so a typo can
+    * match different terms in title vs body), then that field's pass
+    * scores the expansion. cross_fields rejects it loudly, as
+    * OpenSearch's term-centric blending does.
     *
     * WAND pruning deliberately does not apply: a per-field relevance
     * bound does not bound the cross-field combined order (the dis_max
@@ -3997,23 +3576,6 @@ object Wand {
     * rows per query — the bucket key is synthetic because the combine
     * erases the per-field shard spaces the other rankers pre-cut on.
     * @return (query_id int, rank int, doc_id string, score double) */
-  def multiMatchSearch(spark: SparkSession, fieldDirs: Seq[(String, Double)],
-                       queries: Seq[RefQuery], k: Int,
-                       mode: String = "best_fields",
-                       tieBreaker: Double = 0.0): DataFrame = {
-    val snaps = fieldDirs.map { case (dir, boost) =>
-      (SnapshotCatalog.load(spark, dir).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot at $dir")),
-        boost) }
-    multiMatchSearchSnapshots(spark, snaps, queries, k, mode, tieBreaker)
-  }
-
-  /** `fuzziness`: OpenSearch multi_match's per-term fuzzy rewrite for
-    * best_fields / most_fields — each query word expands against EACH
-    * FIELD's own dictionary ([[matchFuzzyExpandQueries]], so a typo can
-    * match different terms in title vs body), then that field's pass
-    * scores the expansion. cross_fields rejects it loudly, as
-    * OpenSearch's term-centric blending does. */
   def multiMatchSearchSnapshots(spark: SparkSession,
                                 fields: Seq[(Snapshot, Double)],
                                 queries: Seq[RefQuery], k: Int,
@@ -4129,7 +3691,7 @@ object Wand {
   /** Raw per-document term frequencies for `terms`: the snapshot's
     * committed posting blocks term-pruned and decoded, tombstones
     * subtracted inside the decode task — the building block for
-    * statistics-MERGING queries ([[combinedFieldsSearch]]), which need
+    * statistics-MERGING queries ([[combinedFieldsSearchSnapshots]]), which need
     * (doc, term, tf) rather than a per-field BM25 contribution.
     * @return (shard int, ord long, term string, tf long) */
   private def termTfRows(spark: SparkSession, snap: Snapshot,
@@ -4166,7 +3728,7 @@ object Wand {
     *   score     = Σ_t idf(df, N) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))
     *
     * contributions summed in ascending term order ([[Golden.sumSorted]])
-    * — so unlike [[multiMatchSearch]] (which combines per-field SCORES),
+    * — so unlike [[multiMatchSearchSnapshots]] (which combines per-field SCORES),
     * a term's weight reflects its pooled occurrence count, the behavior
     * that makes combined_fields robust to terms split across fields.
     * Field weights must be ≥ 1 (the OpenSearch constraint; weights < 1
@@ -4177,16 +3739,8 @@ object Wand {
     * and df count are partial-aggregable equi-shuffles on (doc, term);
     * the combined dl is one docmap pass per field (tombstones
     * anti-joined); stats collect exactly two scalars; and the rank
-    * window rides the [[multiMatchSearch]] synthetic-bucket pre-cut.
+    * window rides the [[multiMatchSearchSnapshots]] synthetic-bucket pre-cut.
     * @return (query_id int, rank int, doc_id string, score double) */
-  def combinedFieldsSearch(spark: SparkSession, fieldDirs: Seq[(String, Double)],
-                           queries: Seq[RefQuery], k: Int): DataFrame = {
-    val snaps = fieldDirs.map { case (dir, wf) =>
-      (SnapshotCatalog.load(spark, dir).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot at $dir")), wf) }
-    combinedFieldsSearchSnapshots(spark, snaps, queries, k)
-  }
-
   def combinedFieldsSearchSnapshots(spark: SparkSession,
                                     fields: Seq[(Snapshot, Double)],
                                     queries: Seq[RefQuery], k: Int,
@@ -4340,7 +3894,7 @@ object Wand {
     }
   }
 
-  /** Score modes [[hasChildSearch]] supports (the OpenSearch `has_child`
+  /** Score modes [[hasChildSearchSnapshot]] supports (the OpenSearch `has_child`
     * score_mode values; `none` scores every qualifying parent 1.0). */
   val HasChildScoreModes: Set[String] = Set("none", "min", "max", "sum", "avg")
 
@@ -4373,19 +3927,6 @@ object Wand {
     * window to ≤ 64k rows. No document-sized shuffle anywhere.
     * @return (query_id int, rank int, doc_id string [parent],
     *          score double, n_children long) */
-  def hasChildSearch(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                     k: Int, scoreMode: String,
-                     childFilter: Column, parentFilter: Column,
-                     childParentKey: Column, parentKey: Column,
-                     minChildren: Int = 1, maxChildren: Int = Int.MaxValue,
-                     conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    hasChildSearchSnapshot(spark, snap, queries, k, scoreMode, childFilter,
-      parentFilter, childParentKey, parentKey, minChildren, maxChildren,
-      conjunctive)
-  }
-
   def hasChildSearchSnapshot(spark: SparkSession, snap: Snapshot,
                              queries: Seq[RefQuery], k: Int, scoreMode: String,
                              childFilter: Column, parentFilter: Column,
@@ -4480,7 +4021,7 @@ object Wand {
 
   /** has_parent query (the OpenSearch parent-join `has_parent`): return
     * CHILD documents whose parent matches an inner full-text query.
-    * Role/key columns as in [[hasChildSearch]]. `score = true` gives
+    * Role/key columns as in [[hasChildSearchSnapshot]]. `score = true` gives
     * each child its parent's relevance score (OpenSearch `score`
     * parameter); `false` scores every qualifying child 1.0.
     *
@@ -4492,17 +4033,6 @@ object Wand {
     * pre-cut bounds the global rank window.
     * @return (query_id int, rank int, doc_id string [child],
     *          score double, parent_id string) */
-  def hasParentSearch(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                      k: Int, parentFilter: Column, childFilter: Column,
-                      parentKey: Column, childParentKey: Column,
-                      score: Boolean = true,
-                      conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    hasParentSearchSnapshot(spark, snap, queries, k, parentFilter,
-      childFilter, parentKey, childParentKey, score, conjunctive)
-  }
-
   def hasParentSearchSnapshot(spark: SparkSession, snap: Snapshot,
                               queries: Seq[RefQuery], k: Int,
                               parentFilter: Column, childFilter: Column,
@@ -4570,14 +4100,6 @@ object Wand {
     * window. Blended dfs come from the termstats broadcast, never a
     * data-sized shuffle.
     * @return (query_id int, rank int, doc_id string, score double) */
-  def synonymSearch(spark: SparkSession, dir: String,
-                    queries: Seq[SynonymQuery], k: Int,
-                    conjunctive: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    synonymSearchSnapshot(spark, snap, queries, k, conjunctive)
-  }
-
   def synonymSearchSnapshot(spark: SparkSession, snap: Snapshot,
                             queries: Seq[SynonymQuery], k: Int,
                             conjunctive: Boolean = false): DataFrame = {
@@ -4665,7 +4187,7 @@ object Wand {
 
   /** Exact BM25 scores over each query's FULL live match set as slim
     * (query_id, shard, ord, score) rows — the scoring engine of
-    * [[topHits]]. Every live posting of a query term is decoded and its
+    * [[topHitsSnapshot]]. Every live posting of a query term is decoded and its
     * contribution computed from the CURRENT snapshot's delete-exact
     * (df, N, avgdl) — the same stats [[search]] scores with — then
     * per-doc contributions are summed in ascending term order via the
@@ -4750,20 +4272,13 @@ object Wand {
     * indexed field) — and scores the BM25 sum over its present terms.
     * WAND's fixed `minShould` bound cannot prune a per-document
     * threshold, so the full match set is scored exactly (the
-    * [[collapseSearch]]/[[topHits]] engine) and cut to the top `k` under
+    * [[collapseSearchSnapshot]]/[[topHitsSnapshot]] engine) and cut to the top `k` under
     * (score desc, doc_id asc).
     *
     * Scale shape: slim (query_id, shard, ord, score, nt) rows join the
     * docmap ONCE on its native key to pick up the threshold; only the
     * final rank window shuffles the (threshold-filtered) match set.
     * @return (query_id int, rank int, doc_id string, score double) */
-  def termsSetSearch(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                     minMatchCol: String, k: Int): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    termsSetSearchSnapshot(spark, snap, queries, minMatchCol, k)
-  }
-
   def termsSetSearchSnapshot(spark: SparkSession, snap: Snapshot,
                              queries: Seq[RefQuery], minMatchCol: String,
                              k: Int): DataFrame = {
@@ -4813,8 +4328,7 @@ object Wand {
                conjunctive: Boolean = false): DataFrame = {
     import spark.implicits._
     require(k > 0, s"k must be positive: $k")
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
+    val snap = SnapshotCatalog.require(spark, dir)
     val hits = searchSnapshot(spark, snap, queries, k, conjunctive)
     val r = ratings.select(col("query_id"), col("doc_id"),
       col("rating").cast("long").as("rating"))
@@ -4878,8 +4392,7 @@ object Wand {
   def significantTerms(spark: SparkSession, dir: String, queries: Seq[RefQuery],
                        size: Int, conjunctive: Boolean = false,
                        minDocCount: Long = 3L): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
+    val snap = SnapshotCatalog.require(spark, dir)
     require(size > 0 && minDocCount >= 1, "need size > 0 and minDocCount >= 1")
     val matched = matchedOrds(spark, snap, queries, conjunctive)
     val fgSizes = matched.groupBy("query_id").agg(count(lit(1)).as("fg_n"))
@@ -4934,17 +4447,6 @@ object Wand {
     *                   absent from it simply contribute no terms
     * @return (query_id int, rank int, term string, fg_df long,
     *          bg_df long, score double) */
-  def significantText(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-                      size: Int, textSource: DataFrame,
-                      textCol: String = "text",
-                      conjunctive: Boolean = false, minDocCount: Long = 3L,
-                      filterDuplicateText: Boolean = false): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    significantTextSnapshot(spark, snap, queries, size, textSource, textCol,
-      conjunctive, minDocCount, filterDuplicateText)
-  }
-
   def significantTextSnapshot(spark: SparkSession, snap: Snapshot,
                               queries: Seq[RefQuery], size: Int,
                               textSource: DataFrame, textCol: String = "text",
@@ -5000,13 +4502,6 @@ object Wand {
     * segment scan ships only the query terms' runs.
     * @return (query_id, doc_id, term, tf, dl, df, idf, tf_norm,
     *          contribution) */
-  def explain(spark: SparkSession, dir: String, queries: Seq[RefQuery],
-              docIds: Seq[String]): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    explainSnapshot(spark, snap, queries, docIds)
-  }
-
   def explainSnapshot(spark: SparkSession, snap: Snapshot, queries: Seq[RefQuery],
                       docIds: Seq[String]): DataFrame = {
     import spark.implicits._
@@ -5096,10 +4591,8 @@ object Wand {
                       k: Int, fragSize: Int = 10,
                       preTag: String = "<em>", postTag: String = "</em>",
                       conjunctive: Boolean = false): DataFrame = {
-    import spark.implicits._
     require(fragSize > 0, s"fragSize must be positive: $fragSize")
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
+    val snap = SnapshotCatalog.require(spark, dir)
     val hits = searchSnapshot(spark, snap, queries, k, conjunctive)
     val qTermsB = spark.sparkContext.broadcast(
       queries.map(q => q.query_id -> Golden.queryTerms(q.text, analyzerOf(snap)).toSet).toMap)
@@ -5176,10 +4669,8 @@ object Wand {
                          queries: Seq[RefQuery],
                          named: Map[String, String], k: Int,
                          conjunctive: Boolean = false): DataFrame = {
-    import spark.implicits._
     require(named.nonEmpty, "namedQueriesSearch needs at least one named clause")
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
+    val snap = SnapshotCatalog.require(spark, dir)
     val hits = searchSnapshot(spark, snap, queries, k, conjunctive)
     val clauses: Seq[(String, Set[String])] = named.toSeq.sortBy(_._1)
       .map { case (n, text) => (n, Golden.queryTerms(text, analyzerOf(snap)).toSet) }
@@ -5234,8 +4725,7 @@ object Wand {
                   docIds: Seq[String]): DataFrame = {
     import spark.implicits._
     require(docIds.nonEmpty, "termVectors needs at least one doc id")
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
+    val snap = SnapshotCatalog.require(spark, dir)
     require(snap.isComplete, s"snapshot ${snap.id} is not a complete index")
     val ids = docIds.distinct
     val dead = graft.index.IndexBuilder.deadAddrs(spark, snap, ids)
@@ -5263,7 +4753,7 @@ object Wand {
   }
 
   /** The live match set of each query as slim (query_id, shard, ord)
-    * triples — shared by [[facetCounts]] and [[matchCounts]]. Tombstones
+    * triples — shared by [[facetCounts]] and [[matchCountsSnapshot]]. Tombstones
     * are subtracted during posting decode via the broadcast mask. */
   /** Delete-by-query — the OpenSearch `_delete_by_query` API: tombstone
     * every LIVE document matching the query set (OR = contains any query
@@ -5419,16 +4909,6 @@ object Wand {
     searchSnapshot(spark, SnapshotCatalog.loadId(spark, dir, snapshotId),
       queries, k, conjunctive, filter)
 
-  /** Time travel by commit time (Iceberg `TIMESTAMP AS OF`): query the
-    * latest complete snapshot committed at or before `asOfMs`. */
-  def searchAsOf(spark: SparkSession, dir: String, asOfMs: Long,
-                 queries: Seq[RefQuery], k: Int, conjunctive: Boolean = false,
-                 filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val snap = SnapshotCatalog.resolveAsOf(spark, dir, asOfMs).getOrElse(
-      throw new IllegalStateException(s"no complete snapshot at or before $asOfMs in $dir"))
-    searchSnapshot(spark, snap, queries, k, conjunctive, filter)
-  }
-
   /** Phrase top-k: each query's text is ONE phrase (its tokens, in order,
     * via the same analyzer documents get). A hit must contain the exact
     * consecutive token sequence; hits are BM25-scored over the phrase's
@@ -5450,11 +4930,9 @@ object Wand {
   def phraseSearch(spark: SparkSession, dir: String, queries: Seq[RefQuery],
                    k: Int,
                    filter: Option[org.apache.spark.sql.Column] = None,
-                   slop: Int = 0): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    phraseSearchSnapshot(spark, snap, queries, k, filter, slop)
-  }
+                   slop: Int = 0): DataFrame =
+    phraseSearchSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, k, filter,
+      slop)
 
   def phraseSearchSnapshot(spark: SparkSession, snap: Snapshot,
                            queries: Seq[RefQuery], k: Int,
@@ -5492,11 +4970,9 @@ object Wand {
   def phrasePrefixSearch(spark: SparkSession, dir: String,
                          queries: Seq[RefQuery], k: Int,
                          maxExpansions: Int = 1024, slop: Int = 0,
-                         filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    phrasePrefixSearchSnapshot(spark, snap, queries, k, maxExpansions, slop, filter)
-  }
+                         filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    phrasePrefixSearchSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, k,
+      maxExpansions, slop, filter)
 
   def phrasePrefixSearchSnapshot(spark: SparkSession, snap: Snapshot,
                                  queries: Seq[RefQuery], k: Int,
@@ -5561,11 +5037,8 @@ object Wand {
     * @return (query_id int, rank int, doc_id string, score double) */
   def spanSearch(spark: SparkSession, dir: String,
                  queries: Seq[(Int, SpanQuery)], k: Int,
-                 filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
-    spanSearchSnapshot(spark, snap, queries, k, filter)
-  }
+                 filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    spanSearchSnapshot(spark, SnapshotCatalog.require(spark, dir), queries, k, filter)
 
   def spanSearchSnapshot(spark: SparkSession, snap: Snapshot,
                          queries: Seq[(Int, SpanQuery)], k: Int,
@@ -5644,8 +5117,7 @@ object Wand {
     require(k > 0, s"k must be positive: $k")
     require(window >= k, s"window ($window) must be >= k ($k)")
     require(slop >= 0, s"slop must be >= 0: $slop")
-    val snap = SnapshotCatalog.load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
+    val snap = SnapshotCatalog.require(spark, dir)
     val base = searchSnapshot(spark, snap, queries, window, conjunctive)
       .withColumnRenamed("score", "base_score").drop("rank")
     val qPhrase: Map[Int, Seq[String]] = queries.map(q =>
@@ -5883,8 +5355,7 @@ object Wand {
 
     val filteredLocal = filter.isDefined
     // per-group shared-decode budget (see DecodeBudget)
-    val decodeCacheBytes: Long = spark.conf.getOption("spark.graft.decodeCacheMb")
-      .map(_.toLong).getOrElse(128L) * 1024L * 1024L
+    val decodeCacheBytes = decodeCacheMbBytes(spark.conf.getOption("spark.graft.decodeCacheMb"))
     // The fan-out key is attached NATIVELY (udf-lookup → explode →
     // element_at), never by round-tripping rows through SegRun objects:
     // the old typed flatMap deserialized every pruned run (one SegBlock

@@ -55,7 +55,6 @@ object StreamingCompare {
                     checkpointDir: String,
                     trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
                     onStats: String => Unit = println(_)): StreamingQuery = {
-    import spark.implicits._
     val totals = new java.util.concurrent.atomic.AtomicLongArray(3)
     val lines = spark.readStream.textFile(inputDir)
     lines.writeStream

@@ -89,8 +89,7 @@ object Rollover {
       (dir, true)
     } else {
       val cur = gens.last
-      val curSnap = SnapshotCatalog.load(spark, cur).getOrElse(
-        throw new IllegalStateException(s"rollover write target lost its snapshot: $cur"))
+      val curSnap = SnapshotCatalog.require(spark, cur)
       if (curSnap.stats.numDocs >= maxDocsPerGen) {
         val dir = genDir(root, name, gens.size + 1)
         graft.index.IndexBuilder.build(spark, batch, dir, cfg)

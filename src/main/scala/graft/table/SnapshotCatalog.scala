@@ -3,7 +3,6 @@ package graft.table
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import com.fasterxml.jackson.databind.{ObjectMapper, JsonNode}
-import com.fasterxml.jackson.databind.node.ObjectNode
 import scala.jdk.CollectionConverters._
 
 /** Global corpus statistics pinned at snapshot time so resumed builds and
@@ -136,6 +135,12 @@ object SnapshotCatalog {
     }
   }
 
+  /** [[load]], failing when `dir` holds no committed snapshot — the one way
+    * every `(spark, dir)` entry point opens its index. */
+  def require(spark: SparkSession, dir: String): Snapshot =
+    load(spark, dir).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $dir"))
+
   private val VersionFile = "v(\\d{5,})\\.json".r
 
   def loadId(spark: SparkSession, dir: String, id: Long): Snapshot = {
@@ -204,10 +209,8 @@ object SnapshotCatalog {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val s =
-      if (snapshotId < 0) load(spark, dir).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot at $dir"))
-      else loadId(spark, dir, snapshotId)
-    require(s.isComplete, s"snapshot ${s.id} is not a complete index")
+      if (snapshotId < 0) require(spark, dir) else loadId(spark, dir, snapshotId)
+    Predef.require(s.isComplete, s"snapshot ${s.id} is not a complete index")
     val tsRow = spark.read.parquet(s.termstatsDir)
       .agg(count(lit(1)), coalesce(sum(col("df")), lit(0L)),
         coalesce(sum(col("cf")), lit(0L))).head()
@@ -248,7 +251,7 @@ object SnapshotCatalog {
     val metaCols = Seq("doc_id", "repo", "path", "commit", "lang")
     def live(id: Long): org.apache.spark.sql.DataFrame = {
       val s = loadId(spark, dir, id)
-      require(s.isComplete, s"snapshot $id is not a complete index")
+      Predef.require(s.isComplete, s"snapshot $id is not a complete index")
       val dm = spark.read.parquet(s.docmapDirs: _*)
         .select(Seq(col("shard"), col("ord")) ++ metaCols.map(col): _*)
       val alive =
@@ -271,7 +274,8 @@ object SnapshotCatalog {
   /** Latest COMPLETE snapshot committed at or before `asOfMs` — Iceberg
     * `TIMESTAMP AS OF` time travel. Commit timestamps are monotone along
     * the lineage chain (each child commits after its parent), so the max
-    * qualifying id is the as-of state. */
+    * qualifying id is the as-of state; pass it to
+    * [[graft.search.Wand.searchSnapshot]] to query that state. */
   def resolveAsOf(spark: SparkSession, dir: String, asOfMs: Long): Option[Snapshot] =
     listIds(spark, dir).reverseIterator
       .map(loadId(spark, dir, _))
@@ -288,9 +292,8 @@ object SnapshotCatalog {
     * [[expireSnapshots]] drops them. */
   def rollback(spark: SparkSession, dir: String, toId: Long): Snapshot = {
     val target = loadId(spark, dir, toId)
-    require(target.isComplete, s"rollback target $toId is not a complete snapshot")
-    val cur = load(spark, dir).getOrElse(
-      throw new IllegalStateException(s"rollback: no committed snapshot at $dir"))
+    Predef.require(target.isComplete, s"rollback target $toId is not a complete snapshot")
+    val cur = require(spark, dir)
     if (cur.id == toId) return cur
     val newId = listIds(spark, dir).max + 1
     val snap = target.copy(id = newId, parentId = cur.id,
@@ -326,7 +329,7 @@ object SnapshotCatalog {
     * lists it. Time travel to an expired id fails (its manifest is gone);
     * every retained snapshot remains byte-identically queryable. */
   def expireSnapshots(spark: SparkSession, dir: String, retainLast: Int): ExpireResult = {
-    require(retainLast >= 1, "must retain at least one snapshot")
+    Predef.require(retainLast >= 1, "must retain at least one snapshot")
     val ids = listIds(spark, dir)
     val currentId = load(spark, dir).map(_.id)
     val byId: Map[Long, Snapshot] = ids.map(id => id -> loadId(spark, dir, id)).toMap

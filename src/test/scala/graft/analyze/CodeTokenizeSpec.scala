@@ -1,7 +1,6 @@
 package graft.analyze
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.TestSpark
 
 class CodeTokenizeSpec extends AnyFunSuite {

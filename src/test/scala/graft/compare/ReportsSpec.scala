@@ -136,6 +136,21 @@ class ReportsSpec extends AnyFunSuite {
     assert(Reports.latestVersion(spark, TestSpark.tempDir("graft-empty")).isEmpty)
   }
 
+  test("exportPerformanceCsvFlat: the reference's seven performance CSV columns") {
+    val cmp = mkComparisons(Seq(
+      (200, 200, 10, 20, true), (200, 500, 30, 40, false)))
+    val dir = TestSpark.tempDir("graft-perf-csv")
+    Reports.exportPerformanceCsvFlat(Reports.flatten(cmp), dir)
+    val csv = spark.read.option("header", "true").csv(dir)
+    assert(csv.columns.toSeq == Seq("request_uri", "request_method",
+      "primary_status", "primary_latency", "shadow_status", "shadow_latency",
+      "identical"))
+    val rows = csv.collect().map(_.toSeq.map(String.valueOf)).toSet
+    assert(rows == Set(
+      Seq("/x", "GET", "200", "10", "200", "20", "true"),
+      Seq("/x", "GET", "200", "30", "500", "40", "false")))
+  }
+
   test("lineDiff aligns common prefixes/suffixes like difflib") {
     val d = Reports.lineDiff(
       IndexedSeq("a", "b", "c", "d"), IndexedSeq("a", "x", "c", "d", "e"))

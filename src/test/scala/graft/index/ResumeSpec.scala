@@ -88,6 +88,19 @@ class ResumeSpec extends AnyFunSuite {
     assert(s.id == 0 && s.stagingDone)
   }
 
+  test("require on a directory with no committed snapshot names the directory") {
+    val empty = TestSpark.tempDir("graft-nosnap")
+    for (dir <- Seq(empty, s"$empty/never-built")) {
+      val e = intercept[IllegalStateException](SnapshotCatalog.require(spark, dir))
+      assert(e.getMessage == s"no committed snapshot at $dir")
+    }
+    // the (spark, dir) entry points open through it
+    val e = intercept[IllegalStateException] {
+      graft.search.Wand.search(spark, empty, CorpusGen.queries(1, 1L), 5)
+    }
+    assert(e.getMessage.contains(empty))
+  }
+
   test("a missing CURRENT pointer recovers from the highest committed manifest") {
     val corpus = CorpusGen.corpus(spark, 300L, seed = 11L).cache()
     val dir = TestSpark.tempDir("graft-nocur")

@@ -6,7 +6,6 @@ import graft.TestSpark
 import graft.analyze.AnalyzerConfig
 import graft.corpus.CorpusGen
 import graft.index.{BuildConfig, IndexBuilder}
-import graft.table.SnapshotCatalog
 
 /** Cross-analyzer golden/WAND identity: an index built with a configured
   * analysis chain (stopwords + Porter) must stay rank- AND bit-identical

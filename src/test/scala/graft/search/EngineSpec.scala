@@ -505,8 +505,7 @@ class EngineSpec extends AnyFunSuite {
   test("upsert: changed replaced, unchanged skipped, new added, deleted resurrected") {
     val dirU = TestSpark.tempDir("graft-upsert")
     val all = CorpusGen.corpus(spark, 800L, seed = 31L).cache()
-    val snap0 = IndexBuilder.build(spark, all, dirU,
-      BuildConfig(numShards = 4, commitEvery = 4))
+    IndexBuilder.build(spark, all, dirU, BuildConfig(numShards = 4, commitEvery = 4))
     val bucket = pmod(xxhash64($"path"), lit(10))
     val sf = org.apache.spark.sql.Encoders.product[graft.corpus.SourceFile]
     // 1/10 of the corpus changed (a token no original doc contains),
@@ -3161,8 +3160,8 @@ class EngineSpec extends AnyFunSuite {
     val shared = halfA.limit(1) // definitely in A; unioned into B below
     val halfB = corpus.filter(abs(xxhash64($"path")) % 2 === 1)
       .unionByName(shared).as[graft.corpus.SourceFile]
-    val snapA = IndexBuilder.build(spark, halfA, dirA, BuildConfig(numShards = 4, commitEvery = 4))
-    val snapB = IndexBuilder.build(spark, halfB, dirB, BuildConfig(numShards = 4, commitEvery = 4))
+    IndexBuilder.build(spark, halfA, dirA, BuildConfig(numShards = 4, commitEvery = 4))
+    IndexBuilder.build(spark, halfB, dirB, BuildConfig(numShards = 4, commitEvery = 4))
     val fq = queries.take(4)
     val got = Wand.searchIndexes(spark, Seq(dirA, dirB), fq, k).cache()
     // golden: per-index exact top-k with THAT index's stats, merged the same way

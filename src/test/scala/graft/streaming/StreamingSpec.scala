@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import graft.TestSpark
 import java.sql.Timestamp
 

@@ -273,7 +273,7 @@ class LifecycleSpec extends AnyFunSuite {
     assert(n1 + n2 == 600L)
 
     // search alias spans the family: every ingested doc is reachable
-    // exactly once (matchCounts over a term present everywhere)
+    // exactly once (matchCountsSnapshot over a term present everywhere)
     val hits = Wand.searchAlias(spark, root, Rollover.searchAlias("logs"),
       queries, 600)
     assert(hits.select("query_id", "doc_id").distinct().count() == hits.count())
