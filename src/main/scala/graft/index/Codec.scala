@@ -1,7 +1,7 @@
 package graft.index
 
-/** Delta-gap + variable-byte codec for posting blocks, plus the block
-  * structure carrying block-max metadata (north rule: "delta-gap +
+/** Delta-gap + variable-byte codec for posting blocks; a block and its
+  * block-max metadata is a [[SegBlock]] (north rule: "delta-gap +
   * variable-byte compressed posting blocks with block-max metadata").
   *
   * Layout: docs are sorted ascending per posting list; each block holds up
@@ -79,26 +79,6 @@ object Codec extends Serializable {
 
   // ---- posting blocks ----
 
-  /** One compressed block of a posting list. `first`/`last` are doc ords
-    * (shard-local); `maxNorm` is the exact max BM25 tf-norm over the block
-    * AT THE BUILD-TIME avgdl. `(maxTf, minDl)` are the block's impact
-    * summary: `tfNorm(maxTf, minDl, avgdl')` upper-bounds every in-block
-    * contribution for ANY avgdl' (tfNorm is increasing in tf, decreasing
-    * in dl) — the safe pruning bound after an incremental append shifts
-    * the global stats away from the avgdl `maxNorm` was computed with.
-    * `dls` carries per-posting doc lengths so scoring is self-contained —
-    * no shard-wide norms lookup at query time.
-    *
-    * `pos` is the OPTIONAL positional payload (Lucene's proximity data):
-    * the concatenation, in posting order, of each posting's
-    * delta-varbyte-encoded in-document token positions — the posting's tf
-    * is its position count, so decoding needs no offset table. Empty when
-    * the index was built without positions. */
-  case class Block(first: Long, last: Long, n: Int, maxTf: Int,
-                   maxNorm: Double, minDl: Long, docs: Array[Byte],
-                   tfs: Array[Byte], dls: Array[Byte],
-                   pos: Array[Byte] = Array.emptyByteArray)
-
   /** Encode one posting's ascending in-doc positions (delta + varbyte). */
   def encodePositions(xs: Array[Long]): Array[Byte] = encodeDeltas(xs, 0L)
 
@@ -107,11 +87,11 @@ object Codec extends Serializable {
     * (null → positionless blocks). */
   def buildBlocks(ords: Array[Long], tfs: Array[Long], dls: Array[Long],
                   avgdl: Double,
-                  poss: Array[Array[Byte]] = null): Array[Block] = {
+                  poss: Array[Array[Byte]] = null): Array[SegBlock] = {
     require(ords.length == tfs.length && tfs.length == dls.length)
     require(poss == null || poss.length == ords.length)
     val nBlocks = (ords.length + BlockSize - 1) / BlockSize
-    val out = new Array[Block](nBlocks)
+    val out = new Array[SegBlock](nBlocks)
     var b = 0
     while (b < nBlocks) {
       val from = b * BlockSize
@@ -152,28 +132,28 @@ object Codec extends Serializable {
           }
           blob
         }
-      out(b) = Block(first, last, n, maxTf.toInt, maxNorm, minDl, docBytes,
+      out(b) = SegBlock(first, last, n, maxTf.toInt, maxNorm, minDl, docBytes,
         tfBytes, dlBytes, posBytes)
       b += 1
     }
     out
   }
 
-  def decodeBlockDocs(blk: Block): Array[Long] = decodeDeltas(blk.docs, blk.n, blk.first)
+  def decodeBlockDocs(blk: SegBlock): Array[Long] = decodeDeltas(blk.docs, blk.n, blk.first)
 
-  def decodeBlockTfs(blk: Block): Array[Long] = {
+  def decodeBlockTfs(blk: SegBlock): Array[Long] = {
     val xs = readVarLongs(blk.tfs, blk.n)
     var i = 0
     while (i < xs.length) { xs(i) += 1; i += 1 }
     xs
   }
 
-  def decodeBlockDls(blk: Block): Array[Long] = readVarLongs(blk.dls, blk.n)
+  def decodeBlockDls(blk: SegBlock): Array[Long] = readVarLongs(blk.dls, blk.n)
 
   /** Decode every posting's position list from a positional block; `tfs`
     * are the block's decoded term frequencies (= per-posting position
     * counts, which split the concatenated payload without offsets). */
-  def decodeBlockPositions(blk: Block, tfs: Array[Long]): Array[Array[Long]] = {
+  def decodeBlockPositions(blk: SegBlock, tfs: Array[Long]): Array[Array[Long]] = {
     require(blk.pos.nonEmpty || blk.n == 0,
       "block has no positional payload — index built without positions")
     var total = 0

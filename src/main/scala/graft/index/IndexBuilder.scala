@@ -13,7 +13,22 @@ import graft.table.{CorpusStats, Snapshot, SnapshotCatalog}
 case class TfRow(shard: Int, term: String, salt: Int, ord: Long, dl: Long,
                  tf: Long, pos: Array[Byte] = Array.emptyByteArray)
 
-/** A compressed posting block (see [[Codec.Block]]), encoder-friendly. */
+/** One compressed block of a posting list ([[Codec]] encodes and decodes
+  * it; it is also the block type persisted inside [[SegRun]]).
+  * `first`/`last` are doc ords (shard-local); `maxNorm` is the exact max
+  * BM25 tf-norm over the block AT THE BUILD-TIME avgdl. `(maxTf, minDl)`
+  * are the block's impact summary: `tfNorm(maxTf, minDl, avgdl')`
+  * upper-bounds every in-block contribution for ANY avgdl' (tfNorm is
+  * increasing in tf, decreasing in dl) — the safe pruning bound after an
+  * incremental append shifts the global stats away from the avgdl
+  * `maxNorm` was computed with. `dls` carries per-posting doc lengths so
+  * scoring is self-contained — no shard-wide norms lookup at query time.
+  *
+  * `pos` is the OPTIONAL positional payload (Lucene's proximity data):
+  * the concatenation, in posting order, of each posting's
+  * delta-varbyte-encoded in-document token positions — the posting's tf
+  * is its position count, so decoding needs no offset table. Empty when
+  * the index was built without positions. */
 case class SegBlock(first: Long, last: Long, n: Int, maxTf: Int,
                     maxNorm: Double, minDl: Long, docs: Array[Byte],
                     tfs: Array[Byte], dls: Array[Byte],
@@ -556,8 +571,7 @@ object IndexBuilder {
             java.util.Arrays.copyOf(tfs, n),
             java.util.Arrays.copyOf(dls, n), avgdl,
             if (poss == null) null else java.util.Arrays.copyOf(poss, n))
-          bs.foreach(b => blocks += SegBlock(b.first, b.last, b.n, b.maxTf,
-            b.maxNorm, b.minDl, b.docs, b.tfs, b.dls, b.pos))
+          blocks ++= bs
           n = 0
         }
         while (buf.hasNext && buf.head.shard == shard &&
@@ -1361,15 +1375,13 @@ object IndexBuilder {
           val dels = delMask(r.shard)
           val salted = heavyB.value.contains(r.term)
           r.blocks.iterator.flatMap { b =>
-            val cb = Codec.Block(b.first, b.last, b.n, b.maxTf, b.maxNorm,
-              b.minDl, b.docs, b.tfs, b.dls, b.pos)
-            val ords = Codec.decodeBlockDocs(cb)
-            val tfs = Codec.decodeBlockTfs(cb)
-            val dls = Codec.decodeBlockDls(cb)
+            val ords = Codec.decodeBlockDocs(b)
+            val tfs = Codec.decodeBlockTfs(b)
+            val dls = Codec.decodeBlockDls(b)
             // re-encoded per posting so surviving payloads transfer
             // verbatim into the compacted blocks (positions are doc-local:
             // deletes/ord preservation never change them)
-            val poss = if (keepPositions) Codec.decodeBlockPositions(cb, tfs) else null
+            val poss = if (keepPositions) Codec.decodeBlockPositions(b, tfs) else null
             (0 until b.n).iterator
               .filter(i => dels.isEmpty ||
                 java.util.Arrays.binarySearch(dels, ords(i)) < 0)

@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.index.{Codec, SegBlock, SegRun}
@@ -61,12 +61,6 @@ object Wand {
     * tokenizer can never emit it, so it cannot collide with a real term. */
   private[search] val FilterTerm = "\u0000accept"
 
-  /** Per-term posting cursor with lazy block decoding: advancing across
-    * blocks never decodes skipped blocks (the compression win). Each block
-    * arrives paired with its pruning NORM BOUND — the exact stored maxNorm
-    * when the run was built at the snapshot's current avgdl, or the safe
-    * (maxTf, minDl) impact bound for runs whose build-time avgdl has been
-    * left behind by incremental appends (see [[graft.index.SegRun]]). */
   /** Per-(group, term) shared decode slots: every query in a fan-out group
     * that touches a term re-walks the same compressed blocks, and the
     * Zipf head terms are touched by MOST queries — decoding each block
@@ -76,7 +70,7 @@ object Wand {
     * ([[DecodeBudget]]); once the budget is spent, later blocks decode
     * per-cursor exactly as before — results are identical either way,
     * the cache only removes re-decode work. */
-  private final class TermDecoded(n: Int) {
+  private[search] final class TermDecoded(n: Int) {
     val docs = new Array[Array[Long]](n)
     val tfs = new Array[Array[Long]](n)
     val dls = new Array[Array[Long]](n)
@@ -86,8 +80,9 @@ object Wand {
     * within its task). Default 128 MB per group, `spark.graft.decodeCacheMb`
     * overrides: concurrent groups per executor are bounded by its task
     * slots, so the executor-level ceiling is slots × budget — size it with
-    * executor memory in production. */
-  private final class DecodeBudget(var remaining: Long)
+    * executor memory in production. A block's arrays are cached only while
+    * `remaining` still covers their bytes, so it never goes negative. */
+  private[search] final class DecodeBudget(var remaining: Long)
 
   /** The per-group decode budget in bytes for a `spark.graft.decodeCacheMb`
     * setting: 128 MB when unset, 0 turns the shared decode off. A value
@@ -101,7 +96,13 @@ object Wand {
         s"got '${setting.getOrElse("")}'")) << 20
   }
 
-  private final class Cursor(val term: String, val idf: Double,
+  /** Per-term posting cursor with lazy block decoding: advancing across
+    * blocks never decodes skipped blocks (the compression win). Each block
+    * arrives paired with its pruning NORM BOUND — the exact stored maxNorm
+    * when the run was built at the snapshot's current avgdl, or the safe
+    * (maxTf, minDl) impact bound for runs whose build-time avgdl has been
+    * left behind by incremental appends (see [[graft.index.SegRun]]). */
+  private[search] final class Cursor(val term: String, val idf: Double,
                              blocks: Array[SegBlock], bounds: Array[Double],
                              avgdl: Double,
                              td: TermDecoded = null,
@@ -132,16 +133,14 @@ object Wand {
     }
     advanceInit()
 
-    private def toCodecBlock(b: SegBlock) =
-      Codec.Block(b.first, b.last, b.n, b.maxTf, b.maxNorm, b.minDl, b.docs, b.tfs, b.dls, b.pos)
-
     private def loadBlock(): Unit = {
       var d: Array[Long] = if (td != null) td.docs(bi) else null
       if (d == null) {
-        d = Codec.decodeBlockDocs(toCodecBlock(blocks(bi)))
-        if (td != null && budget.remaining > 0) {
+        d = Codec.decodeBlockDocs(blocks(bi))
+        val bytes = d.length.toLong << 3
+        if (td != null && budget.remaining >= bytes) {
           td.docs(bi) = d
-          budget.remaining -= (d.length.toLong << 3)
+          budget.remaining -= bytes
         }
       }
       docs = d
@@ -161,13 +160,13 @@ object Wand {
       var t: Array[Long] = if (td != null) td.tfs(bi) else null
       var l: Array[Long] = if (td != null) td.dls(bi) else null
       if (t == null || l == null) {
-        val cb = toCodecBlock(blocks(bi))
-        t = Codec.decodeBlockTfs(cb)
-        l = Codec.decodeBlockDls(cb)
-        if (td != null && budget.remaining > 0) {
+        t = Codec.decodeBlockTfs(blocks(bi))
+        l = Codec.decodeBlockDls(blocks(bi))
+        val bytes = t.length.toLong << 4
+        if (td != null && budget.remaining >= bytes) {
           td.tfs(bi) = t
           td.dls(bi) = l
-          budget.remaining -= (t.length.toLong << 4)
+          budget.remaining -= bytes
         }
       }
       tfs = t
@@ -180,7 +179,7 @@ object Wand {
     def positions: Array[Long] = {
       if (posArr == null) {
         ensureTfDl()
-        posArr = Codec.decodeBlockPositions(toCodecBlock(blocks(bi)), tfs)
+        posArr = Codec.decodeBlockPositions(blocks(bi), tfs)
       }
       posArr(i)
     }
@@ -386,109 +385,6 @@ object Wand {
     drain()
   }
 
-  /** Conjunctive (match-ALL-terms) top-k over one shard's cursors —
-    * leapfrog intersection driven by the max cursor position, with a
-    * conjunctive block-max skip: when the heap is full and the SUM of the
-    * aligned cursors' in-block bounds cannot beat the heap floor, the whole
-    * range up to the nearest block boundary is skipped undecoded. The
-    * caller guarantees one cursor per query term (a term absent from the
-    * shard means no doc in the shard matches, so it yields nothing), in
-    * ascending TERM order — contributions are summed in array order, which
-    * keeps conjunctive scores bit-identical to the golden scorer's
-    * ascending-term summation.
-    *
-    * `accept` (optional) is evaluated on each aligned live candidate ord
-    * before scoring — the phrase-adjacency and metadata-filter hook.
-    * Candidates arrive in strictly increasing ord order, so a
-    * forward-only filter cursor can back it. Pruning stays lossless
-    * with any accept: a doc it rejects scores nothing on both engines, and
-    * the block-max bound still dominates every accepted doc's score. */
-  private[search] def conjunctiveTopK(cursors: Array[Cursor], k: Int,
-                                      deleted: Long => Boolean = NotDeleted,
-                                      accept: Long => Boolean = null,
-                                      after: (Double, Long) => Boolean = null): Array[(Long, Double)] = {
-    val heap = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](worstFirst)
-    def drain(): Array[(Long, Double)] =
-      heap.dequeueAll.reverse.map((h: (Double, Long)) => (h._2, h._1)).toArray
-    if (cursors.isEmpty) return drain()
-    def beatsWorst(score: Double, ord: Long): Boolean =
-      heap.size < k || worstFirst.compare((score, ord), heap.head) < 0
-
-    var done = false
-    var target = 0L
-    var i = 0
-    while (i < cursors.length) {
-      if (cursors(i).exhausted) done = true
-      else if (cursors(i).curDoc > target) target = cursors(i).curDoc
-      i += 1
-    }
-    while (!done) {
-      // align every cursor on target (advancing one can overshoot → retry)
-      var aligned = false
-      while (!aligned && !done) {
-        aligned = true
-        var j = 0
-        while (j < cursors.length && !done) {
-          val c = cursors(j)
-          if (c.curDoc < target) c.advanceTo(target)
-          if (c.exhausted) done = true
-          else if (c.curDoc > target) { target = c.curDoc; aligned = false }
-          j += 1
-        }
-      }
-      if (!done) {
-        // all cursors sit on target; try the block-max range skip first
-        var skipped = false
-        if (heap.size == k) {
-          var ub = 0.0
-          var d = Long.MaxValue
-          i = 0
-          while (i < cursors.length) {
-            ub += cursors(i).blockMaxScore
-            if (cursors(i).blockLast < d) d = cursors(i).blockLast
-            i += 1
-          }
-          if (ub < heap.head._1) {
-            skipped = true
-            i = 0
-            while (i < cursors.length && !done) {
-              cursors(i).advanceTo(d + 1)
-              if (cursors(i).exhausted) done = true
-              i += 1
-            }
-          }
-        }
-        if (!skipped) {
-          if (!deleted(target) && (accept == null || accept(target))) {
-            // ascending-term summation (cursor array IS term-ascending)
-            var score = 0.0
-            i = 0
-            while (i < cursors.length) { score += cursors(i).contribution; i += 1 }
-            if ((after == null || after(score, target)) && beatsWorst(score, target)) {
-              if (heap.size == k) heap.dequeue()
-              heap.enqueue((score, target))
-            }
-          }
-          i = 0
-          while (i < cursors.length && !done) {
-            cursors(i).next()
-            if (cursors(i).exhausted) done = true
-            i += 1
-          }
-        }
-        if (!done) {
-          target = 0L
-          i = 0
-          while (i < cursors.length) {
-            if (cursors(i).curDoc > target) target = cursors(i).curDoc
-            i += 1
-          }
-        }
-      }
-    }
-    drain()
-  }
-
   /** Boolean (`must`/`should`/`must_not`) top-k over one shard — the
     * Lucene bool-query scorer. The must cursors drive a leapfrog
     * intersection (every hit contains all of them); should cursors are
@@ -504,7 +400,13 @@ object Wand {
     * to the nearest must-block boundary is skipped undecoded — lossless,
     * because the bound dominates every candidate in the range whatever
     * should terms it contains. The must-empty case is plain [[wandTopK]]
-    * over the should cursors (the caller dispatches). */
+    * over the should cursors (the caller dispatches).
+    *
+    * A should-empty call is the AND / phrase path of [[searchImpl]]: the
+    * must cursors are built from distinct, ascending query terms, so the
+    * rank-buffer summation runs in cursor-array order, and the skip bound
+    * is Σ must in-block bounds alone (`shouldMaxTotal` is 0.0). `accept`
+    * is then the phrase-adjacency and metadata-filter hook. */
   private[search] def booleanTopK(must: Array[Cursor], should: Array[Cursor], k: Int,
                                   deleted: Long => Boolean = NotDeleted,
                                   accept: Long => Boolean = null,
@@ -1536,9 +1438,7 @@ object Wand {
       .as[(Int, String, Long)].collect()
     val n = snap.stats.numDocs
     val terms = tfRows.map(_._2).distinct
-    val dfMap: Map[String, Long] = termPruned(
-        spark.read.parquet(snap.termstatsDir), terms)
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dfMap: Map[String, Long] = dfFor(spark, snap, terms)
     tfRows.groupBy(_._1).map { case (qid, rows) =>
       qid -> rows.iterator
         .filter { case (_, t, _) => dfMap.getOrElse(t, 0L) >= minDocFreq }
@@ -3688,33 +3588,73 @@ object Wand {
         .withColumn("sub", col("term_idx")),
       groupCols)
 
-  /** Raw per-document term frequencies for `terms`: the snapshot's
-    * committed posting blocks term-pruned and decoded, tombstones
-    * subtracted inside the decode task — the building block for
+  /** One posting block of a [[livePostings]] scan: doc ords decode
+    * eagerly, tfs and dls on first use (an emitter that only needs ords
+    * never pays for them). */
+  private final class DecodedBlock(blk: SegBlock) {
+    val ords: Array[Long] = Codec.decodeBlockDocs(blk)
+    lazy val tfs: Array[Long] = Codec.decodeBlockTfs(blk)
+    lazy val dls: Array[Long] = Codec.decodeBlockDls(blk)
+  }
+
+  /** Every LIVE posting of `terms` in the snapshot's committed segments —
+    * the one posting decode of the full-match-set paths ([[termTfRows]],
+    * [[synonymSearchSnapshot]], [[scoredMatchSetTerms]],
+    * [[explainSnapshot]], [[matchedOrdsTerms]]). The segment scan is
+    * term-pruned, tombstones are subtracted inside the decode task via the
+    * shard's [[graft.index.DeleteMask]], and `emitFor(run)` is called once
+    * per run; the function it returns is called once per surviving
+    * posting with the posting's block and its index in that block.
+    *
+    * EXPLICIT decode fan-out (same trap searchImpl documents): the match
+    * set explodes to one row per (query, live posting), but Spark sizes
+    * the pruned scan's partitions by INPUT bytes — a few compressed row
+    * groups — so without this the decode+explode stage (the entire cost of
+    * a full-match-set aggregation) runs in a handful of tasks no matter
+    * how many cores exist (measured flat 1→4 cores on the 1.2M-doc bench
+    * index before the fix). Hash-repartitioning the slim compressed runs
+    * is cheap relative to decode; keying by (term, shard, first ord)
+    * spreads salted/appended runs of one term too. A user repartition
+    * with an explicit count is exempt from AQE coalescing.
+    *
+    * `keepDeleted` skips the mask: [[explainSnapshot]] explains
+    * tombstoned docs too. */
+  private def livePostings[T: Encoder](spark: SparkSession, snap: Snapshot,
+                                       terms: Array[String],
+                                       keepDeleted: Boolean = false)(
+      emitFor: SegRun => (DecodedBlock, Int) => IterableOnce[T]): Dataset[T] = {
+    import spark.implicits._
+    val delMask =
+      if (keepDeleted) graft.index.DeleteMask.EmptyMask
+      else graft.index.DeleteMask.forSnapshot(spark, snap)
+    val fanParts = math.max(1, 2 * math.max(1, spark.sparkContext.defaultParallelism))
+    termPruned(spark.read.parquet(snap.segmentDirs: _*), terms)
+      .repartition(fanParts, col("term"), col("shard"), col("blocks")(0)("first"))
+      .as[SegRun]
+      .flatMap { run =>
+        val emit = emitFor(run)
+        val dels = delMask(run.shard)
+        run.blocks.iterator.flatMap { b =>
+          val blk = new DecodedBlock(b)
+          blk.ords.indices.iterator
+            .filter(i => dels.isEmpty ||
+              java.util.Arrays.binarySearch(dels, blk.ords(i)) < 0)
+            .flatMap(i => emit(blk, i))
+        }
+      }
+  }
+
+  /** Raw per-document term frequencies for `terms`: the snapshot's live
+    * postings ([[livePostings]]) — the building block for
     * statistics-MERGING queries ([[combinedFieldsSearchSnapshots]]), which need
     * (doc, term, tf) rather than a per-field BM25 contribution.
     * @return (shard int, ord long, term string, tf long) */
   private def termTfRows(spark: SparkSession, snap: Snapshot,
                          terms: Array[String]): DataFrame = {
     import spark.implicits._
-    val delMask = graft.index.DeleteMask.forSnapshot(spark, snap)
-    val fanParts = math.max(1, 2 * math.max(1, spark.sparkContext.defaultParallelism))
-    termPruned(spark.read.parquet(snap.segmentDirs: _*), terms)
-      .repartition(fanParts, col("term"), col("shard"), col("blocks")(0)("first"))
-      .as[SegRun]
-      .flatMap { run =>
-        val dels = delMask(run.shard)
-        run.blocks.iterator.flatMap { b =>
-          val cb = Codec.Block(b.first, b.last, b.n, b.maxTf, b.maxNorm,
-            b.minDl, b.docs, b.tfs, b.dls, b.pos)
-          val ords = Codec.decodeBlockDocs(cb)
-          lazy val tfs = Codec.decodeBlockTfs(cb)
-          ords.indices.iterator
-            .filter(i => dels.isEmpty ||
-              java.util.Arrays.binarySearch(dels, ords(i)) < 0)
-            .map(i => (run.shard, ords(i), run.term, tfs(i)))
-        }
-      }.toDF("shard", "ord", "term", "tf")
+    livePostings(spark, snap, terms) { run =>
+      (blk, i) => Iterator.single((run.shard, blk.ords(i), run.term, blk.tfs(i)))
+    }.toDF("shard", "ord", "term", "tf")
   }
 
   /** combined_fields (the OpenSearch query of the same name): the
@@ -3849,14 +3789,9 @@ object Wand {
       }
     readStaged().getOrElse {
       val cdl = fields.map { case (snap, wf) =>
-        val dm0 = spark.read.parquet(snap.docmapDirs: _*)
-          .select(col("shard"), col("ord"), col("doc_id"), col("dl"))
-        val live =
-          if (snap.tombstoneDirs.isEmpty) dm0
-          else dm0.join(
-            spark.read.parquet(snap.tombstoneDirs: _*).select("shard", "ord"),
-            Seq("shard", "ord"), "left_anti")
-        live.select(col("doc_id"), (col("dl") * lit(wf)).as("wdl"))
+        liveRows(spark, snap, spark.read.parquet(snap.docmapDirs: _*)
+          .select(col("shard"), col("ord"), col("doc_id"), col("dl")))
+          .select(col("doc_id"), (col("dl") * lit(wf)).as("wdl"))
       }.reduce(_ unionByName _)
         .groupBy("doc_id").agg(sum(col("wdl")).as("cdl"))
       if (!cache) {
@@ -4119,39 +4054,18 @@ object Wand {
       .groupBy(_._1)
       .map { case (t, xs) => t -> xs.map(_._2).distinct.sorted.toArray }
     val allTerms = termG.keys.toArray
-    val dfMap: Map[String, Long] = termPruned(
-        spark.read.parquet(snap.termstatsDir), allTerms)
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dfMap: Map[String, Long] = dfFor(spark, snap, allTerms)
     val dfg: Map[(Int, Int), Long] = flat.map { case (qid, gi, g) =>
       (qid, gi) -> g.map(t => dfMap.getOrElse(t, 0L)).max }.toMap
     val termGB = spark.sparkContext.broadcast(termG)
     val dfgB = spark.sparkContext.broadcast(dfg)
-    val delMask = graft.index.DeleteMask.forSnapshot(spark, snap)
     val nL = snap.stats.numDocs
     val avgdlL = snap.stats.avgdl
-    val fanParts = math.max(1, 2 * math.max(1, spark.sparkContext.defaultParallelism))
-    val raw = termPruned(spark.read.parquet(snap.segmentDirs: _*), allTerms)
-      .repartition(fanParts, col("term"), col("shard"), col("blocks")(0)("first"))
-      .as[SegRun]
-      .flatMap { run =>
-        val tgs = termGB.value.getOrElse(run.term, Array.empty[(Int, Int)])
-        if (tgs.isEmpty) Iterator.empty
-        else {
-          val dels = delMask(run.shard)
-          run.blocks.iterator.flatMap { b =>
-            val cb = Codec.Block(b.first, b.last, b.n, b.maxTf, b.maxNorm,
-              b.minDl, b.docs, b.tfs, b.dls, b.pos)
-            val ords = Codec.decodeBlockDocs(cb)
-            lazy val tfs = Codec.decodeBlockTfs(cb)
-            lazy val dls = Codec.decodeBlockDls(cb)
-            ords.indices.iterator
-              .filter(i => dels.isEmpty ||
-                java.util.Arrays.binarySearch(dels, ords(i)) < 0)
-              .flatMap { i => tgs.iterator.map { case (qid, gi) =>
-                (qid, gi, run.shard, ords(i), tfs(i), dls(i)) } }
-          }
-        }
-      }.toDF("query_id", "gid", "shard", "ord", "tf", "dl")
+    val raw = livePostings(spark, snap, allTerms) { run =>
+      val tgs = termGB.value.getOrElse(run.term, Array.empty[(Int, Int)])
+      (blk, i) => tgs.iterator.map { case (qid, gi) =>
+        (qid, gi, run.shard, blk.ords(i), blk.tfs(i), blk.dls(i)) }
+    }.toDF("query_id", "gid", "shard", "ord", "tf", "dl")
     // member tfs SUM before saturation; dl is per-doc (max = the value)
     val grouped = raw.groupBy("query_id", "gid", "shard", "ord")
       .agg(sum(col("tf")).as("tfg"), max(col("dl")).as("dl"))
@@ -4218,39 +4132,17 @@ object Wand {
       .flatMap { case (qid, ts) => ts.map(t => (t, qid)) }
       .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).distinct.sorted.toArray }
     val termQB = spark.sparkContext.broadcast(termQ)
-    val delMask = graft.index.DeleteMask.forSnapshot(spark, snap)
-    val dfMap: Map[String, Long] = termPruned(
-        spark.read.parquet(snap.termstatsDir), allTerms)
-      .select("term", "df").as[(String, Long)].collect().toMap
-    val dfB = spark.sparkContext.broadcast(dfMap)
+    val dfB = spark.sparkContext.broadcast(dfFor(spark, snap, allTerms))
     val nL = snap.stats.numDocs
     val avgdlL = snap.stats.avgdl
-    val fanParts = math.max(1, 2 * math.max(1, spark.sparkContext.defaultParallelism))
-    val contribs = termPruned(spark.read.parquet(snap.segmentDirs: _*), allTerms)
-      .repartition(fanParts, col("term"), col("shard"), col("blocks")(0)("first"))
-      .as[SegRun]
-      .flatMap { run =>
-        val qids = termQB.value.getOrElse(run.term, Array.emptyIntArray)
-        if (qids.isEmpty) Iterator.empty
-        else {
-          val dels = delMask(run.shard)
-          val idf = Bm25.idf(dfB.value.getOrElse(run.term, 0L), nL)
-          run.blocks.iterator.flatMap { b =>
-            val cb = Codec.Block(b.first, b.last, b.n, b.maxTf, b.maxNorm,
-              b.minDl, b.docs, b.tfs, b.dls, b.pos)
-            val ords = Codec.decodeBlockDocs(cb)
-            lazy val tfs = Codec.decodeBlockTfs(cb)
-            lazy val dls = Codec.decodeBlockDls(cb)
-            ords.indices.iterator
-              .filter(i => dels.isEmpty ||
-                java.util.Arrays.binarySearch(dels, ords(i)) < 0)
-              .flatMap { i =>
-                val c = idf * Bm25.tfNorm(tfs(i), dls(i), avgdlL)
-                qids.iterator.map(q => (q, run.shard, ords(i), run.term, c))
-              }
-          }
-        }
-      }.toDF("query_id", "shard", "ord", "term", "contribution")
+    val contribs = livePostings(spark, snap, allTerms) { run =>
+      val qids = termQB.value.getOrElse(run.term, Array.emptyIntArray)
+      val idf = Bm25.idf(dfB.value.getOrElse(run.term, 0L), nL)
+      (blk, i) => {
+        val c = idf * Bm25.tfNorm(blk.tfs(i), blk.dls(i), avgdlL)
+        qids.iterator.map(q => (q, run.shard, blk.ords(i), run.term, c))
+      }
+    }.toDF("query_id", "shard", "ord", "term", "contribution")
     val grouped = contribs.groupBy("query_id", "shard", "ord")
       .agg(Golden.sumSorted(
           collect_list(struct(col("term"), col("contribution")))).as("score"),
@@ -4512,11 +4404,7 @@ object Wand {
     val termQ: Map[String, Array[Int]] = qTerms.toSeq
       .flatMap { case (qid, ts) => ts.map(t => (t, qid)) }
       .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).distinct.sorted.toArray }
-    val n = snap.stats.numDocs
-    val avgdl = snap.stats.avgdl
-    val dfMap: Map[String, Long] = termPruned(
-        spark.read.parquet(snap.termstatsDir), allTerms)
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dfMap: Map[String, Long] = dfFor(spark, snap, allTerms)
     // resolve the (query-scale) doc set to broadcast (shard, ord) -> id;
     // tombstoned docs resolve like live ones — explaining a deleted doc
     // is explicitly useful (why DID this match yesterday?)
@@ -4528,38 +4416,22 @@ object Wand {
     val targetB = spark.sparkContext.broadcast(target)
     val termQB = spark.sparkContext.broadcast(termQ)
     val dfB = spark.sparkContext.broadcast(dfMap)
-    val nL = n
-    val avgdlL = avgdl
-    // same decode fan-out as matchedOrds: the scan's byte-sized partition
-    // count caps the block-decode stage otherwise
-    val fanParts = math.max(1, 2 * math.max(1, spark.sparkContext.defaultParallelism))
-    termPruned(spark.read.parquet(snap.segmentDirs: _*), allTerms)
-      .repartition(fanParts, col("term"), col("shard"), col("blocks")(0)("first"))
-      .as[SegRun]
-      .flatMap { run =>
-        val qids = termQB.value.getOrElse(run.term, Array.emptyIntArray)
-        if (qids.isEmpty) Iterator.empty
-        else run.blocks.iterator.flatMap { b =>
-          val cb = Codec.Block(b.first, b.last, b.n, b.maxTf, b.maxNorm,
-            b.minDl, b.docs, b.tfs, b.dls, b.pos)
-          val ords = Codec.decodeBlockDocs(cb)
-          lazy val tfs = Codec.decodeBlockTfs(cb)
-          lazy val dls = Codec.decodeBlockDls(cb)
-          ords.indices.iterator.flatMap { i =>
-            targetB.value.get((run.shard, ords(i))) match {
-              case None => Iterator.empty
-              case Some(id) =>
-                val df = dfB.value.getOrElse(run.term, 0L)
-                val idf = Bm25.idf(df, nL)
-                val norm = Bm25.tfNorm(tfs(i), dls(i), avgdlL)
-                qids.iterator.map(q =>
-                  (q, id, run.term, tfs(i), dls(i), df, idf, norm, idf * norm))
-            }
-          }
-        }
+    val nL = snap.stats.numDocs
+    val avgdlL = snap.stats.avgdl
+    livePostings(spark, snap, allTerms, keepDeleted = true) { run =>
+      val qids = termQB.value.getOrElse(run.term, Array.emptyIntArray)
+      val target = targetB.value
+      val df = dfB.value.getOrElse(run.term, 0L)
+      val idf = Bm25.idf(df, nL)
+      (blk, i) => target.get((run.shard, blk.ords(i))) match {
+        case None => Iterator.empty
+        case Some(id) =>
+          val norm = Bm25.tfNorm(blk.tfs(i), blk.dls(i), avgdlL)
+          qids.iterator.map(q =>
+            (q, id, run.term, blk.tfs(i), blk.dls(i), df, idf, norm, idf * norm))
       }
-      .toDF("query_id", "doc_id", "term", "tf", "dl", "df",
-        "idf", "tf_norm", "contribution")
+    }.toDF("query_id", "doc_id", "term", "tf", "dl", "df",
+      "idf", "tf_norm", "contribution")
   }
 
   /** Highlighting (the OpenSearch `highlight` fetch phase — the unified
@@ -4602,12 +4474,7 @@ object Wand {
     // re-append) a hit doc_id matches the DEAD docmap row too — without
     // the mask each such hit duplicates with a stale-token fragment
     // (the termVectors liveness discipline, as an anti-join)
-    val addr0 = dm.join(broadcast(hits), Seq("doc_id"))
-    val addr =
-      if (snap.tombstoneDirs.isEmpty) addr0
-      else addr0.join(
-        spark.read.parquet(snap.tombstoneDirs: _*).select("shard", "ord"),
-        Seq("shard", "ord"), "left_anti")
+    val addr = liveRows(spark, snap, dm.join(broadcast(hits), Seq("doc_id")))
     val staged = graft.index.IndexBuilder.stagedRows(spark, dir)
       .select(col("shard"), col("ord"), col("tokens"))
     val fragSizeL = fragSize
@@ -4679,12 +4546,7 @@ object Wand {
       .select(col("shard"), col("ord"), col("doc_id"))
     // mask dead docmap rows sharing a hit's doc_id (upsert / delete +
     // re-append) — the highlightSearch discipline
-    val addr0 = dm.join(broadcast(hits), Seq("doc_id"))
-    val addr =
-      if (snap.tombstoneDirs.isEmpty) addr0
-      else addr0.join(
-        spark.read.parquet(snap.tombstoneDirs: _*).select("shard", "ord"),
-        Seq("shard", "ord"), "left_anti")
+    val addr = liveRows(spark, snap, dm.join(broadcast(hits), Seq("doc_id")))
     val staged = graft.index.IndexBuilder.stagedRows(spark, dir)
       .select(col("shard"), col("ord"), col("tokens"))
     val mq = udf((ts: Seq[String]) => {
@@ -4752,9 +4614,6 @@ object Wand {
         coalesce(col("cf"), lit(0L)).as("ttf"))
   }
 
-  /** The live match set of each query as slim (query_id, shard, ord)
-    * triples — shared by [[facetCounts]] and [[matchCountsSnapshot]]. Tombstones
-    * are subtracted during posting decode via the broadcast mask. */
   /** Delete-by-query — the OpenSearch `_delete_by_query` API: tombstone
     * every LIVE document matching the query set (OR = contains any query
     * term, conjunctive = all of them), with the exact termstats
@@ -4762,8 +4621,8 @@ object Wand {
     * [[graft.index.IndexBuilder.delete]] (golden/WAND bit-identity holds
     * across it like any other delete — the lifecycle specs pin that).
     *
-    * Scale shape: the match set moves as slim (shard, ord) pairs (the
-    * same explicit decode fan-out as every full-match-set op here),
+    * Scale shape: the match set moves as slim (shard, ord) pairs (one
+    * [[livePostings]] decode, as for every full-match-set op here),
     * deduplicated, then joined ONCE against the docmap on its native
     * (shard, ord) key to pick up the tombstone row columns. No scores
     * are computed — matching is containment, not ranking. */
@@ -4796,6 +4655,10 @@ object Wand {
       live.join(m, Seq("shard", "ord"))
     }, set)
 
+  /** The live match set of each query as slim (query_id, shard, ord)
+    * triples — backs [[facetCounts]], [[matchCountsSnapshot]] and the
+    * match-set aggregations, and [[deleteByQuery]] / [[updateByQuery]].
+    * Tombstones are subtracted during posting decode ([[livePostings]]). */
   private def matchedOrds(spark: SparkSession, snap: Snapshot, queries: Seq[RefQuery],
                           conjunctive: Boolean): DataFrame =
     matchedOrdsTerms(spark, snap,
@@ -4815,40 +4678,14 @@ object Wand {
       .flatMap { case (qid, ts) => ts.map(t => (t, qid)) }
       .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).distinct.sorted.toArray }
     val termQB = spark.sparkContext.broadcast(termQ)
-    val delMask = graft.index.DeleteMask.forSnapshot(spark, snap)
-    // EXPLICIT decode fan-out (same trap searchImpl documents): the match
-    // set explodes to one row per (query, live posting), but Spark sizes
-    // the pruned scan's partitions by INPUT bytes — a few compressed row
-    // groups — so without this the decode+explode+partial-distinct stage
-    // (the entire cost of a full-match-set aggregation) runs in a handful
-    // of tasks no matter how many cores exist (measured flat 1→4 cores on
-    // the 1.2M-doc bench index before the fix). Hash-repartitioning the
-    // slim compressed runs is cheap relative to decode; keying by (term,
-    // shard, first ord) spreads salted/appended runs of one term too. A
-    // user repartition with an explicit count is exempt from AQE
-    // coalescing.
-    val fanParts = math.max(1, 2 * math.max(1, spark.sparkContext.defaultParallelism))
-    val segs = termPruned(spark.read.parquet(snap.segmentDirs: _*), allTerms)
-      .repartition(fanParts, col("term"), col("shard"), col("blocks")(0)("first"))
-      .as[SegRun]
     // one slim (query_id, shard, ord) row per LIVE posting of a queried
-    // term; (term, shard, ord) is unique across runs (salted runs split
-    // by ord range, append generations own disjoint ord ranges), so in
-    // conjunctive mode the per-(query, doc) row count IS the distinct
-    // matched-term count
-    val matches = segs.flatMap { run =>
+    // term (ords only — tfs/dls never decode); (term, shard, ord) is
+    // unique across runs (salted runs split by ord range, append
+    // generations own disjoint ord ranges), so in conjunctive mode the
+    // per-(query, doc) row count IS the distinct matched-term count
+    val matches = livePostings(spark, snap, allTerms) { run =>
       val qids = termQB.value.getOrElse(run.term, Array.emptyIntArray)
-      if (qids.isEmpty) Iterator.empty
-      else {
-        val dels = delMask(run.shard)
-        run.blocks.iterator.flatMap { b =>
-          val cb = Codec.Block(b.first, b.last, b.n, b.maxTf, b.maxNorm,
-            b.minDl, b.docs, b.tfs, b.dls, b.pos)
-          Codec.decodeBlockDocs(cb).iterator
-            .filter(o => dels.isEmpty || java.util.Arrays.binarySearch(dels, o) < 0)
-            .flatMap(o => qids.iterator.map(q => (q, run.shard, o)))
-        }
-      }
+      (blk, i) => qids.iterator.map(q => (q, run.shard, blk.ords(i)))
     }.toDF("query_id", "shard", "ord")
     if (!conjunctive) matches.distinct()
     else {
@@ -5113,7 +4950,6 @@ object Wand {
                     k: Int, window: Int, slop: Int = 0,
                     queryWeight: Double = 1.0, rescoreWeight: Double = 1.0,
                     conjunctive: Boolean = false): DataFrame = {
-    import spark.implicits._
     require(k > 0, s"k must be positive: $k")
     require(window >= k, s"window ($window) must be >= k ($k)")
     require(slop >= 0, s"slop must be >= 0: $slop")
@@ -5125,9 +4961,7 @@ object Wand {
     val allTerms = qPhrase.values.flatten.toArray.distinct
     val n = snap.stats.numDocs
     val avgdl = snap.stats.avgdl
-    val dfMap: Map[String, Long] = termPruned(
-        spark.read.parquet(snap.termstatsDir), allTerms)
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dfMap: Map[String, Long] = dfFor(spark, snap, allTerms)
     val idfMap: Map[String, Double] =
       allTerms.map(t => t -> Bm25.idf(dfMap.getOrElse(t, 0L), n)).toMap
     val idfB = spark.sparkContext.broadcast(idfMap)
@@ -5136,14 +4970,9 @@ object Wand {
     // construction, but a superseded identity shares its doc_id with the
     // dead version's docmap row — anti-join those out before the token
     // join (slim distributed tombstone scan; nothing driver-resident)
-    val win0 = spark.read.parquet(snap.docmapDirs: _*)
+    val win = liveRows(spark, snap, spark.read.parquet(snap.docmapDirs: _*)
       .select(col("doc_id"), col("shard"), col("ord"))
-      .join(broadcast(base), Seq("doc_id"))
-    val win =
-      if (snap.tombstoneDirs.isEmpty) win0
-      else win0.join(
-        spark.read.parquet(snap.tombstoneDirs: _*).select("shard", "ord"),
-        Seq("shard", "ord"), "left_anti")
+      .join(broadcast(base), Seq("doc_id")))
     val slopL = slop
     val secU = udf((qid: Int, ts: Seq[String]) =>
       Golden.secondaryPhraseScore(ts, qpB.value(qid), idfB.value, avgdl, slopL))
@@ -5197,9 +5026,7 @@ object Wand {
             while (buf.hasNext && buf.head._1 == shard) ords += buf.next()._2
             val o = ords.result()
             val ones = Array.fill(o.length)(1L)
-            val blocks = Codec.buildBlocks(o, ones, ones, avgdl).map(b =>
-              SegBlock(b.first, b.last, b.n, b.maxTf, b.maxNorm, b.minDl,
-                b.docs, b.tfs, b.dls, b.pos)).toSeq
+            val blocks = Codec.buildBlocks(o, ones, ones, avgdl).toSeq
             SegRun(shard, FilterTerm, o.length.toLong, o.length.toLong, avgdl, blocks)
           }
         }
@@ -5488,8 +5315,9 @@ object Wand {
                 val (qid, terms) = qit.next()
                 if (math.floorMod(qid, bLocal) == block) {
                 // terms are distinct+sorted (Golden.queryTerms), so the
-                // cursor array is term-ascending — the summation-order
-                // contract both topK variants rely on
+                // cursor array is term-ascending — the summation order
+                // wandTopK and booleanTopK keep (a should-empty booleanTopK
+                // call is the AND / phrase path)
                 if (modeLocal == ModeBool) {
                   val bq = qBoolB.value(qid)
                   // forward-only exclusion cursors over the must_not
@@ -5666,8 +5494,8 @@ object Wand {
                         if (filterAcc == null) ord => phraseOk(ord)
                         else ord => filterAcc(ord) && phraseOk(ord)
                       }
-                    emit(qid, conjunctiveTopK(cursors, kFetch, deleted, accept,
-                      mkAfter(qid)))
+                    emit(qid, booleanTopK(cursors, Array.empty, kFetch, deleted,
+                      accept, mkAfter(qid)))
                   }
                 } else {
                   val bs = qBoostB.value.getOrElse(qid, null)
