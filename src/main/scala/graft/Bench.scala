@@ -308,7 +308,7 @@ object Bench {
         if (q == null) Map.empty
         else {
           val b = Map.newBuilder[String, Double]
-          val it = q.fields()
+          val it = q.properties().iterator()
           while (it.hasNext) {
             val e = it.next(); b += e.getKey -> e.getValue.asDouble()
           }

@@ -3433,11 +3433,11 @@ object SparkEntry {
       freshIndex(s, d, corpus, "ups")
       val sf = org.apache.spark.sql.Encoders.product[graft.corpus.SourceFile]
       val bucket = pmod(col("path").cast("long"), lit(10))
-      val changed = corpus.toDF.filter(bucket === 0)
+      val changed = corpus.toDF().filter(bucket === 0)
         .withColumn("content", concat(col("content"),
           lit(" upsertmarker shuffle spark"))).as(sf)
       val unchanged = corpus.filter(bucket === 1)
-      val fresh = corpus.toDF.filter(bucket === 2)
+      val fresh = corpus.toDF().filter(bucket === 2)
         .withColumn("path", (col("path").cast("long") + 1000000L).cast("string"))
         .withColumn("content", concat(lit("brand new document about spark shuffle join "),
           col("content"))).as(sf)

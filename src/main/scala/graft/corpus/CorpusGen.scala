@@ -73,7 +73,7 @@ object CorpusGen {
     val ws = Array.fill(parts)(poolWord(zipfIndex(rnd, poolSize)))
     if (rnd.nextBoolean()) {
       // camelCase
-      ws.head + ws.tail.map(w => w.head.toUpper + w.tail).mkString
+      ws.head + ws.tail.map(w => s"${w.head.toUpper}${w.tail}").mkString
     } else ws.mkString("_") // snake_case
   }
 

@@ -61,15 +61,8 @@ case class BuildConfig(
     /** a term is "heavy" in a group when it has more than this many
       * postings; heavy terms get ord-range salting in the assembly shuffle */
     heavyThreshold: Long = 50000,
-    /** heavy-term detection samples 1-in-N staged docs (deterministic,
-      * doc_id-hash based); 1 = exact. Salting is a load-balancing hint, so
-      * a sampled estimate is safe — exact global termstats are derived
-      * from the committed segments at finalize time. */
-    heavySampleOneIn: Int = 50,
     /** number of ord-range salt buckets for heavy terms */
     saltBuckets: Int = 16,
-    /** shuffle parallelism for the assembly stage; 0 = leave to AQE */
-    assemblyPartitions: Int = 0,
     /** skip the dead-letter scan for inputs known to contain no malformed
       * rows (e.g. generated corpora) — drops two jobs from staging */
     trustedInput: Boolean = false,
@@ -125,6 +118,12 @@ case class BuildConfig(
   *    completed shards (see `ResumeSpec`).
   */
 object IndexBuilder {
+
+  /** Heavy-term detection samples 1-in-N staged docs (deterministic,
+    * doc_id-hash based). Salting is a load-balancing hint, so a sampled
+    * estimate is safe — exact global termstats are derived from the
+    * committed segments at finalize time. */
+  private val HeavySampleOneIn = 50
 
   /** Per-term accumulator for the positional tf pass: running tf plus the
     * delta-varbyte position stream (prev tracks the last written position
@@ -399,7 +398,7 @@ object IndexBuilder {
       // scan+agg+collect for a provably empty set otherwise)
       if (groupDocs <= cfg.heavyThreshold) Set.empty[String]
       else {
-        val oneIn = math.max(1, math.min(cfg.heavySampleOneIn,
+        val oneIn = math.max(1, math.min(HeavySampleOneIn,
           (groupDocs / 20000).toInt)) // keep >= ~20k sampled docs
         // sample hash is SALTED apart from the shard hash: both key off
         // doc_id, and pmod(h, oneIn)=0 ∧ pmod(h, numShards)=s is unsolvable
@@ -477,10 +476,9 @@ object IndexBuilder {
     // sorts entirely in memory at any core count; the shuffle-partition
     // floor keeps small builds at full parallelism.
     val groupTokens = parent.stats.totalTokens.toDouble * group.size / cfg.numShards
-    val sizedParts = math.min(32768L, math.max(
+    val parts = math.min(32768L, math.max(
       spark.sessionState.conf.numShufflePartitions.toLong,
       (groupTokens / 3e6).toLong + 1)).toInt
-    val parts = if (cfg.assemblyPartitions > 0) cfg.assemblyPartitions else sizedParts
     // THE SPIMI shuffle: salted term-hash repartition + in-partition sort →
     // streaming block-run build (heavy terms split across reducers by
     // salt). The (shard, term, salt) key space is high-cardinality, so the
@@ -1264,7 +1262,7 @@ object IndexBuilder {
       .map(c => when(col("upd"), set(c)).otherwise(lit(null)).as(c))
     val dmDir = s"$dir/docmap/u$newId"
     timed(spark, "update:docmap") {
-      marked.select(existing ++ added: _*)
+      marked.select((existing ++ added).toIndexedSeq: _*)
         .write.mode(SaveMode.Overwrite).parquet(dmDir)
     }
     // skip-and-log lineage: shard -5 records the update batch size
@@ -1399,10 +1397,9 @@ object IndexBuilder {
     // memory-bounded-sort rule as the build
     val postings = spark.read.parquet(parent.termstatsDir)
       .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0)
-    val parts = if (cfg.assemblyPartitions > 0) cfg.assemblyPartitions
-      else math.min(32768L, math.max(
-        spark.sessionState.conf.numShufflePartitions.toLong,
-        postings / 2000000L + 1)).toInt
+    val parts = math.min(32768L, math.max(
+      spark.sessionState.conf.numShufflePartitions.toLong,
+      postings / 2000000L + 1)).toInt
     val segDir = s"$dir/segments/$tag"
     timed(spark, "compact:segments") {
       tf.repartition(parts, col("shard"), col("term"), col("salt"))

@@ -253,7 +253,7 @@ object Percolator {
     }
     val packed =
       if (fields.isEmpty) array().cast("array<double>")
-      else array(fields.map(f => col(f).cast("double")): _*)
+      else array(fields.toIndexedSeq.map(f => col(f).cast("double")): _*)
     docs.select(col(idCol), explode(matchU(tokensCol, packed)).as("m"))
       .select(col(idCol), col("m._1").as("query_id"),
         col("m._2").as("matched_terms"))

@@ -10,11 +10,11 @@ import graft.table.{Snapshot, SnapshotCatalog}
   *                      become an adjacent [[SpanNear]], the position
   *                      relationship the one identifier had in the doc)
   *  - `pre*`            prefix, expanded against the term dictionary
-  *                      (the [[Wand.expandQueries]] MultiTermQuery
+  *                      (the [[Wand.prefixTerms]] MultiTermQuery
   *                      rewrite, `maxExpansions`-capped ascending)
   *  - `word~N`          fuzzy term (the FUZZY default flag): expanded
   *                      against the term dictionary within N edits
-  *                      ([[Wand.fuzzyExpandQueries]], closest-first,
+  *                      ([[Wand.fuzzyTerms]], closest-first,
   *                      `maxExpansions`-capped; plain Levenshtein).
   *                      Bare `word~` = 2 edits; larger N clamps to 2
   *                      (Lucene's maximum); `~0` = the exact term
@@ -51,8 +51,9 @@ import graft.table.{Snapshot, SnapshotCatalog}
   * golden-vs-WAND by construction, ANSI-SQL-replayable by an oracle.
   *
   * Scale shape: parsing is driver-side over the (tiny) query strings;
-  * prefix expansion is ONE dictionary pass for all queries' prefixes;
-  * then one [[Wand.spanSearchSnapshot]] fan-out evaluates every query.
+  * prefix and fuzzy expansion are ONE dictionary pass each for all
+  * queries' leaves; then one [[Wand.spanSearchSnapshot]] fan-out
+  * evaluates every query.
   */
 object SimpleQueryString {
 
@@ -168,8 +169,8 @@ object SimpleQueryString {
             Some(Clause(Some(SpanOr(exp.toSeq.map(SpanTerm))), false))
           } else {
             val ts = analyze(w)
-            // `word~N` rides the fuzzy MultiTermQuery rewrite (the
-            // [[Wand.fuzzyExpandQueries]] discipline) — each analyzed
+            // `word~N` rides the fuzzy MultiTermQuery rewrite
+            // ([[Wand.fuzzyTerms]]) — each analyzed
             // token becomes the SpanOr of its dictionary expansions
             // (an exact hit rides along at distance 0; an empty
             // expansion matches nothing, the multi-term contract), and
@@ -276,9 +277,9 @@ object SimpleQueryString {
     case SpanTerm(_)          => false
   }
 
-  /** Parse against a snapshot's term dictionary (prefix leaves expand
-    * in one pass per call — queries with several prefixes share it via
-    * [[search]]). */
+  /** Parse against a snapshot's term dictionary (prefix and fuzzy leaves
+    * expand in one dictionary pass each per call — several queries share
+    * them via [[search]]). */
   def parse(spark: SparkSession, snap: Snapshot, text: String,
             defaultAnd: Boolean = false,
             maxExpansions: Int = 128): Option[SpanQuery] = {
@@ -288,11 +289,10 @@ object SimpleQueryString {
     parseWith(text, defaultAnd, pre, fuz, az.analyzeQuery)
   }
 
-  /** All prefixes across `texts` expanded in ONE dictionary pass (the
-    * [[Wand.expandQueries]] discipline — collect bounded by
-    * |prefixes| × maxExpansions), and all fuzzy leaves in one
-    * [[Wand.fuzzyExpandQueries]] pass per distinct edit distance
-    * (there are at most two: 1 and 2). */
+  /** All prefixes across `texts` expanded in ONE [[Wand.prefixTerms]]
+    * pass and all fuzzy leaves in ONE [[Wand.fuzzyTerms]] pass keyed by
+    * (word, edits), so `w~1` and `w~2` in one text each keep their own
+    * cap — collects bounded by |keys| × maxExpansions. */
   private def resolvers(spark: SparkSession, snap: Snapshot,
                         texts: Seq[String], maxExpansions: Int,
                         az: graft.analyze.AnalyzerConfig)
@@ -302,37 +302,16 @@ object SimpleQueryString {
       case TWord(w, f) if f < 0 && w.length > 1 && w.endsWith("*") =>
         w.dropRight(1).toLowerCase(java.util.Locale.ROOT)
     }.distinct
-    val pre: String => Array[String] =
-      if (prefixes.isEmpty) _ => Array.empty[String]
-      else {
-        val expanded: Map[Int, Array[String]] = Wand.expandQueries(spark, snap,
-          prefixes.zipWithIndex.map { case (p, i) => graft.corpus.RefQuery(i, p + "*") },
-          maxExpansions)
-        val byPrefix = prefixes.zipWithIndex.map { case (p, i) =>
-          p -> expanded.getOrElse(i, Array.empty[String])
-        }.toMap
-        p => byPrefix.getOrElse(p, Array.empty[String])
-      }
     val fuzzyKeys: Seq[(String, Int)] = toks.collect {
       case TWord(w, f) if f >= 1 => az.analyzeQuery(w).toSeq.map(_ -> f)
     }.flatten.distinct
-    val fuz: (String, Int) => Array[String] =
-      if (fuzzyKeys.isEmpty) (_, _) => Array.empty[String]
-      else {
-        val byKey: Map[(String, Int), Array[String]] =
-          fuzzyKeys.groupBy(_._2).flatMap { case (edits, ks) =>
-            val words = ks.map(_._1)
-            val expanded = Wand.fuzzyExpandQueries(spark, snap,
-              words.zipWithIndex.map { case (w, i) =>
-                graft.corpus.RefQuery(i, w + "~")
-              }, maxEdits = edits, maxExpansions = maxExpansions)
-            words.zipWithIndex.map { case (w, i) =>
-              (w, edits) -> expanded.getOrElse(i, Array.empty[String])
-            }
-          }
-        (t, e) => byKey.getOrElse((t, e), Array.empty[String])
-      }
-    (pre, fuz)
+    require(maxExpansions > 0 || (prefixes.isEmpty && fuzzyKeys.isEmpty),
+      s"maxExpansions must be positive: $maxExpansions")
+    val byPrefix = Wand.prefixTerms(spark, snap, prefixes, maxExpansions)
+    val byKey = Wand.fuzzyTerms(spark, snap, fuzzyKeys, 0, maxExpansions,
+      transpositions = false)
+    (p => byPrefix.getOrElse(p, Array.empty[String]),
+     (t, e) => byKey.getOrElse((t, e), Array.empty[String]))
   }
 
   /** Run `queries` (query_id → simple_query_string text) as one span

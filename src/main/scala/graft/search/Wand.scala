@@ -807,11 +807,8 @@ object Wand {
     * [[Golden.topKTerms]] over the same expansion. A pattern matching no
     * dictionary term contributes no terms (its query returns no rows).
     *
-    * All patterns expand in ONE distributed pass: a broadcast join of
-    * the (tiny) pattern list against the termstats scan under a
-    * non-foldable RLIKE, with a per-pattern rank window capping the
-    * expansion at `maxExpansions` in ascending term order — the collect
-    * is bounded by |patterns| × maxExpansions at any dictionary size.
+    * All patterns expand in ONE [[rankedTerms]] pass under a non-foldable
+    * RLIKE, capped at `maxExpansions` in ascending term order.
     * Patterns are compiled on the driver first (fail fast on syntax);
     * the supported dialect is the Java/RE2 common core — alternation,
     * classes, quantifiers, no lookaround — which keeps the expansion
@@ -834,14 +831,10 @@ object Wand {
     // driver-side compile: reject bad syntax before any job runs
     queries.foreach(q => java.util.regex.Pattern.compile(q.text.trim))
     val pats = queries.map(q => (q.query_id, "^(?:" + q.text.trim + ")$"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("term"))
-    val expanded: Map[Int, Array[String]] =
-      spark.read.parquet(snap.termstatsDir).select("term")
-        .join(broadcast(pats.toDF("query_id", "pat")), expr("term rlike pat"))
-        .withColumn("r", row_number().over(w))
-        .filter(col("r") <= maxExpansions)
-        .select("query_id", "term").as[(Int, String)].collect()
-        .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).distinct.sorted }
+    val expanded = groupTerms(
+      rankedTerms(spark, snap, pats.toDF("query_id", "pat"), Seq("query_id"),
+        expr("term rlike pat"), Seq(col("term")), maxExpansions)
+        .select("query_id", "term").as[(Int, String)].collect())
     queries.map(q =>
       q.query_id -> expanded.getOrElse(q.query_id, Array.empty[String])).toMap
   }
@@ -1017,21 +1010,6 @@ object Wand {
     if (res > bound) bound + 1 else res
   }
 
-  /** Per-query analyzed terms with `~`-suffix fuzzy expansion against the
-    * snapshot's term dictionary. ALL fuzzy words across the query set
-    * expand in ONE distributed pass — the (tiny) word list broadcast-joins
-    * the termstats scan under a pushed-down length band
-    * (|len(term) − len(word)| ≤ maxEdits) plus the optional shared-prefix
-    * constraint, the bounded-DP distance evaluates only the band
-    * survivors, and a per-word (distance asc, term asc) rank window caps
-    * the result — deterministic first-N, like the prefix rewrite, and the
-    * collect is bounded by |words| × maxExpansions however large the
-    * dictionary is. (Lucene walks a Levenshtein automaton against its
-    * in-memory FST instead and keeps the highest-df expansions; a pruned
-    * distributed scan with a closest-first cap is the Spark-native
-    * equivalent, amortized over the whole query set.) Words are lowercased
-    * (the analyzer lowercases terms); a word matching nothing contributes
-    * no terms; an exact dictionary hit rides along at distance 0. */
   /** Rewrite queries (fuzzy/prefix expansion, simple_query_string /
     * query_string) analyze query WORDS independently, which is
     * undefined over a shingle chain: one word can never form a
@@ -1047,52 +1025,115 @@ object Wand {
         s"('${snap.analyzer}'): word-gram terms have no per-word analysis — " +
         "query the index with match/phrase search instead")
 
+  /** The one MultiTermQuery rewrite (prefix, phrase_prefix, regexp,
+    * fuzzy, match `fuzziness`, both suggesters, simple_query_string): the
+    * query-scale `keys` are BROADCAST against the termstats `(term, df)`
+    * scan under `matches`, `survivors` filters the joined rows, and a
+    * `rank` window per `by` key, ordered by `order` (ending in `term asc`
+    * — deterministic first-N), cuts each key at `cap`: any collect is
+    * bounded by |keys| × cap whatever the dictionary size. */
+  private def rankedTerms(spark: SparkSession, snap: Snapshot, keys: DataFrame,
+                          by: Seq[String], matches: Column, order: Seq[Column], cap: Int,
+                          survivors: DataFrame => DataFrame = identity): DataFrame = {
+    val w = Window.partitionBy(by.map(col): _*).orderBy(order: _*)
+    survivors(spark.read.parquet(snap.termstatsDir).select("term", "df")
+        .join(broadcast(keys), matches))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= cap)
+  }
+
+  /** `(key, term)` rows as key → its distinct terms, ascending. */
+  private def groupTerms[K](rows: Array[(K, String)]): Map[K, Array[String]] =
+    rows.groupBy(_._1).map { case (k, xs) => k -> xs.map(_._2).distinct.sorted }
+
+  /** Prefix → its first `cap` dictionary extensions in term order. */
+  private[search] def prefixTerms(spark: SparkSession, snap: Snapshot,
+                                  prefixes: Seq[String], cap: Int): Map[String, Array[String]] = {
+    import spark.implicits._
+    if (prefixes.isEmpty) Map.empty
+    else groupTerms(
+      rankedTerms(spark, snap, prefixes.distinct.toDF("prefix"), Seq("prefix"),
+        col("term").startsWith(col("prefix")), Seq(col("term")), cap)
+        .select("prefix", "term").as[(String, String)].collect())
+  }
+
+  /** The edit-distance rule over [[rankedTerms]], keyed by `(word, edits)`:
+    * the join keeps the length band |len(term) − len(word)| ≤ edits and
+    * the shared `prefixLength`-char prefix; the bounded distance (Damerau
+    * if `transpositions`) runs on band survivors only, bounded by the
+    * largest budget (exact at or below it), keeping minDist ≤ dist ≤ edits
+    * ranked `dist asc` then `tieBreak`.
+    * @return (term, df, word, edits, dist, rank) */
+  private def editCandidates(spark: SparkSession, snap: Snapshot, keys: Seq[(String, Int)],
+                             prefixLength: Int, transpositions: Boolean, minDist: Int,
+                             cap: Int, tieBreak: Seq[Column]): DataFrame = {
+    import spark.implicits._
+    val bound = keys.map(_._2).max
+    val distU = udf((t: String, w: String) =>
+      if (transpositions) boundedDamerauLevenshtein(t, w, bound)
+      else boundedLevenshtein(t, w, bound))
+    val band = length(col("term"))
+      .between(length(col("word")) - col("edits"), length(col("word")) + col("edits"))
+    val cond =
+      if (prefixLength <= 0) band
+      else band && substring(col("term"), 1, prefixLength) ===
+        substring(col("word"), 1, prefixLength)
+    rankedTerms(spark, snap, keys.distinct.toDF("word", "edits"), Seq("word", "edits"),
+      cond, col("dist").asc +: tieBreak, cap,
+      _.withColumn("dist", distU(col("term"), col("word")))
+        .filter(col("dist") >= minDist && col("dist") <= col("edits")))
+  }
+
+  /** `(word, edits)` → the `cap` closest terms within `edits` (distance
+    * asc, term asc; an exact hit rides along at distance 0). */
+  private[search] def fuzzyTerms(spark: SparkSession, snap: Snapshot, keys: Seq[(String, Int)],
+                                 prefixLength: Int, cap: Int, transpositions: Boolean)
+      : Map[(String, Int), Array[String]] = {
+    import spark.implicits._
+    if (keys.isEmpty) Map.empty
+    else groupTerms(
+      editCandidates(spark, snap, keys, prefixLength, transpositions, 0, cap,
+        Seq(col("term").asc))
+        .select("word", "edits", "term").as[(String, Int, String)].collect()
+        .map { case (w, e, t) => ((w, e), t) })
+  }
+
+  /** Per-query terms of whitespace-split texts: a word ending in `marker`
+    * is a key (lowercased like the analyzer, marker dropped) rewritten by
+    * ONE `expand` call for the whole query set; other words analyze. */
+  private def expandMarked(snap: Snapshot, queries: Seq[RefQuery], marker: String)(
+      expand: Seq[String] => Map[String, Array[String]]): Map[Int, Array[String]] = {
+    val parsed: Seq[(Int, Array[String], Array[String])] = queries.map { q =>
+      val ws = q.text.trim.split("\\s+").filter(_.nonEmpty)
+      val (mw, lw) = ws.partition(w => w.length > 1 && w.endsWith(marker))
+      (q.query_id,
+        lw.flatMap(analyzerOf(snap).analyzeQuery),
+        mw.map(w => w.dropRight(1).toLowerCase(java.util.Locale.ROOT)))
+    }
+    val byKey = expand(parsed.flatMap(_._3).distinct)
+    parsed.map { case (qid, lits, ks) =>
+      qid -> (lits ++ ks.flatMap(k => byKey.getOrElse(k, Array.empty[String])))
+        .distinct.sorted
+    }.toMap
+  }
+
+  /** Per-query analyzed terms with `~`-suffix fuzzy expansion: ALL fuzzy
+    * words of the query set expand in ONE [[fuzzyTerms]] pass at
+    * `maxEdits`. (Lucene walks a Levenshtein automaton over its in-memory
+    * FST and keeps the highest-df expansions; a pruned distributed scan
+    * with a closest-first cap is the Spark-native equivalent.) */
   def fuzzyExpandQueries(spark: SparkSession, snap: Snapshot, queries: Seq[RefQuery],
                          maxEdits: Int = 2, prefixLength: Int = 0,
                          maxExpansions: Int = 50,
                          transpositions: Boolean = false): Map[Int, Array[String]] = {
-    import spark.implicits._
     require(maxEdits >= 0 && maxEdits <= 8, s"maxEdits must be in [0, 8]: $maxEdits")
     require(prefixLength >= 0, s"prefixLength must be >= 0: $prefixLength")
     requireWordChain(snap, "fuzzy expansion")
     require(maxExpansions > 0, s"maxExpansions must be positive: $maxExpansions")
-    val parsed: Seq[(Int, Array[String], Array[String])] = queries.map { q =>
-      val ws = q.text.trim.split("\\s+").filter(_.nonEmpty)
-      val (fw, lw) = ws.partition(w => w.length > 1 && w.endsWith("~"))
-      (q.query_id,
-        lw.flatMap(analyzerOf(snap).analyzeQuery),
-        fw.map(w => w.dropRight(1).toLowerCase(java.util.Locale.ROOT)))
+    expandMarked(snap, queries, "~") { words =>
+      fuzzyTerms(spark, snap, words.map(_ -> maxEdits), prefixLength, maxExpansions,
+        transpositions).map { case ((w, _), ts) => w -> ts }
     }
-    val allWords = parsed.flatMap(_._3).distinct
-    val byWord: Map[String, Array[String]] =
-      if (allWords.isEmpty) Map.empty
-      else {
-        val me = maxEdits
-        val tr = transpositions
-        val distU = udf((t: String, w: String) =>
-          if (tr) boundedDamerauLevenshtein(t, w, me)
-          else boundedLevenshtein(t, w, me))
-        val band = length(col("term"))
-          .between(length(col("word")) - maxEdits, length(col("word")) + maxEdits)
-        val cond =
-          if (prefixLength <= 0) band
-          else band && substring(col("term"), 1, prefixLength) ===
-            substring(col("word"), 1, prefixLength)
-        val w = Window.partitionBy(col("word"))
-          .orderBy(col("dist").asc, col("term").asc)
-        spark.read.parquet(snap.termstatsDir).select("term")
-          .join(broadcast(allWords.toDF("word")), cond)
-          .withColumn("dist", distU(col("term"), col("word")))
-          .filter(col("dist") <= maxEdits)
-          .withColumn("r", row_number().over(w))
-          .filter(col("r") <= maxExpansions)
-          .select("word", "term").as[(String, String)].collect()
-          .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2) }
-      }
-    parsed.map { case (qid, lits, fws) =>
-      qid -> (lits ++ fws.flatMap(f => byWord.getOrElse(f, Array.empty[String])))
-        .distinct.sorted
-    }.toMap
   }
 
   /** Lucene `Fuzziness.AUTO` edit budget: 0 edits under 3 chars, 1 for
@@ -1104,23 +1145,16 @@ object Wand {
     * `match: {query: ..., fuzziness: AUTO}` shape): EVERY analyzed term
     * of each query gets its own per-word edit budget — [[autoFuzzyEdits]]
     * for "AUTO", a flat 0–2 for "0"/"1"/"2" — and all budget>0 words
-    * expand against the committed term dictionary in ONE pass (the
-    * [[fuzzyExpandQueries]] length-band + capped-closest-first
-    * discipline, with the band and the distance cutoff driven by each
-    * word's own budget column). Budget-0 words pass through as exact
+    * expand against the committed term dictionary in ONE [[fuzzyTerms]]
+    * pass keyed by (word, budget). Budget-0 words pass through as exact
     * terms. `transpositions` defaults TRUE here — the Lucene match-query
-    * default metric (Damerau, adjacent swap = 1 edit).
-    *
-    * Scale shape: identical to [[fuzzyExpandQueries]] — the word list is
-    * query-scale and broadcast; the dictionary side streams through the
-    * length-band join; per-word top-`maxExpansions` bounds the result. */
+    * default metric (Damerau, adjacent swap = 1 edit). */
   def matchFuzzyExpandQueries(spark: SparkSession, snap: Snapshot,
                               queries: Seq[RefQuery],
                               fuzziness: String = "AUTO",
                               prefixLength: Int = 0,
                               maxExpansions: Int = 50,
                               transpositions: Boolean = true): Map[Int, Array[String]] = {
-    import spark.implicits._
     require(prefixLength >= 0, s"prefixLength must be >= 0: $prefixLength")
     require(maxExpansions > 0, s"maxExpansions must be positive: $maxExpansions")
     requireWordChain(snap, "match fuzziness")
@@ -1130,40 +1164,13 @@ object Wand {
       case other => throw new IllegalArgumentException(
         s"fuzziness must be AUTO or 0/1/2: '$other'")
     }
-    val parsed: Seq[(Int, Array[(String, Int)])] = queries.map { q =>
-      q.query_id -> analyzerOf(snap).analyzeQuery(q.text).distinct.toArray
-        .map(t => (t, budget(t)))
-    }
-    val fuzzyWords = parsed.flatMap(_._2).filter(_._2 > 0).distinct
-    val byWord: Map[String, Array[String]] =
-      if (fuzzyWords.isEmpty) Map.empty
-      else {
-        val maxBudget = fuzzyWords.map(_._2).max
-        val tr = transpositions
-        val distU = udf((t: String, w: String) =>
-          if (tr) boundedDamerauLevenshtein(t, w, maxBudget)
-          else boundedLevenshtein(t, w, maxBudget))
-        val band = length(col("term"))
-          .between(length(col("word")) - col("edits"),
-            length(col("word")) + col("edits"))
-        val cond =
-          if (prefixLength <= 0) band
-          else band && substring(col("term"), 1, prefixLength) ===
-            substring(col("word"), 1, prefixLength)
-        val w = Window.partitionBy(col("word"))
-          .orderBy(col("dist").asc, col("term").asc)
-        spark.read.parquet(snap.termstatsDir).select("term")
-          .join(broadcast(fuzzyWords.toDF("word", "edits")), cond)
-          .withColumn("dist", distU(col("term"), col("word")))
-          .filter(col("dist") <= col("edits"))
-          .withColumn("r", row_number().over(w))
-          .filter(col("r") <= maxExpansions)
-          .select("word", "term").as[(String, String)].collect()
-          .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2) }
-      }
+    val parsed = queries.map(q =>
+      q.query_id -> analyzerOf(snap).analyzeQuery(q.text).distinct.map(t => (t, budget(t))))
+    val byKey = fuzzyTerms(spark, snap, parsed.flatMap(_._2).filter(_._2 > 0),
+      prefixLength, maxExpansions, transpositions)
     parsed.map { case (qid, ws) =>
       qid -> ws.flatMap { case (t, e) =>
-        if (e == 0) Array(t) else byWord.getOrElse(t, Array.empty[String])
+        if (e == 0) Array(t) else byKey.getOrElse((t, e), Array.empty[String])
       }.distinct.sorted
     }.toMap
   }
@@ -1192,13 +1199,8 @@ object Wand {
     * ANSI-SQL-reproducible metrics [[fuzzySearch]] offers), ranked by
     * (distance asc, df desc, term asc) — closer first, then more popular
     * (the DirectSpellChecker ordering). Identity matches (distance 0) are
-    * excluded: a dictionary word needs no correction.
-    *
-    * Scale shape: ONE distributed pass over termstats for all words — a
-    * broadcast nested-loop join of the tiny word list against the
-    * dictionary scan, length-band + first-`prefixLength`-chars pruned
-    * before any distance is computed.
-    *
+    * excluded: a dictionary word needs no correction. All words share
+    * ONE [[editCandidates]] pass over termstats.
     * @return (word string, rank int, suggestion string, dist int, df long) */
   def suggest(spark: SparkSession, dir: String, words: Seq[String],
               maxEdits: Int = 2, prefixLength: Int = 1, topN: Int = 5,
@@ -1210,31 +1212,13 @@ object Wand {
                       maxEdits: Int = 2, prefixLength: Int = 1,
                       topN: Int = 5,
                       transpositions: Boolean = false): DataFrame = {
-    import spark.implicits._
     require(maxEdits >= 1 && maxEdits <= 8, s"maxEdits must be in [1, 8]: $maxEdits")
     require(prefixLength >= 0, s"prefixLength must be >= 0: $prefixLength")
     require(topN > 0, s"topN must be positive: $topN")
     val lw = words.map(_.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty).distinct
     require(lw.nonEmpty, "need at least one non-empty word")
-    val me = maxEdits
-    val tr = transpositions
-    val distU = udf((t: String, w: String) =>
-      if (tr) boundedDamerauLevenshtein(t, w, me)
-      else boundedLevenshtein(t, w, me))
-    val band = length(col("term"))
-      .between(length(col("word")) - maxEdits, length(col("word")) + maxEdits)
-    val cond =
-      if (prefixLength <= 0) band
-      else band && substring(col("term"), 1, prefixLength) ===
-        substring(col("word"), 1, prefixLength)
-    val w = Window.partitionBy(col("word"))
-      .orderBy(col("dist").asc, col("df").desc, col("term").asc)
-    spark.read.parquet(snap.termstatsDir).select("term", "df")
-      .join(broadcast(lw.toDF("word")), cond)
-      .withColumn("dist", distU(col("term"), col("word")))
-      .filter(col("dist") >= 1 && col("dist") <= me)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topN)
+    editCandidates(spark, snap, lw.map(_ -> maxEdits), prefixLength, transpositions,
+      1, topN, Seq(col("df").desc, col("term").asc))
       .select(col("word"), col("rank"), col("term").as("suggestion"),
         col("dist"), col("df"))
   }
@@ -1352,9 +1336,8 @@ object Wand {
     * dictionary-backed analog — autocomplete): for each input prefix,
     * the top `topN` dictionary terms extending it, ranked by
     * (df desc, term asc) — popularity first, the completion suggester's
-    * default weight ordering. One broadcast pass of the (tiny) prefix
-    * list against the termstats scan with a per-prefix rank window, the
-    * [[suggest]] discipline; prefixes are lowercased like the analyzer.
+    * default weight ordering. One [[rankedTerms]] pass for the whole
+    * prefix list; prefixes are lowercased like the analyzer.
     * An exact dictionary word IS its own completion (distance-0 rows are
     * kept — unlike [[suggest]], which only proposes corrections).
     * @return (prefix string, rank int, term string, df long) */
@@ -1368,12 +1351,8 @@ object Wand {
     require(topN > 0, s"topN must be positive: $topN")
     val lp = prefixes.map(_.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty).distinct
     require(lp.nonEmpty, "need at least one non-empty prefix")
-    val w = Window.partitionBy(col("prefix"))
-      .orderBy(col("df").desc, col("term").asc)
-    spark.read.parquet(snap.termstatsDir).select("term", "df")
-      .join(broadcast(lp.toDF("prefix")), col("term").startsWith(col("prefix")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topN)
+    rankedTerms(spark, snap, lp.toDF("prefix"), Seq("prefix"),
+      col("term").startsWith(col("prefix")), Seq(col("df").desc, col("term").asc), topN)
       .select("prefix", "rank", "term", "df")
   }
 
@@ -4294,10 +4273,17 @@ object Wand {
       .select(col("query_id"), explode(array_distinct(col("tokens"))).as("term"))
       .groupBy("query_id", "term").agg(count(lit(1)).as("fg_df"))
       .filter(col("fg_df") >= lit(minDocCount))
+    jlhRanked(spark, snap, fg, fgSizes, size)
+  }
+
+  /** The JLH ranking of [[significantTerms]] and [[significantTextSnapshot]]:
+    * foreground `(query_id, term, fg_df)` against termstats df and the
+    * per-query foreground sizes `(query_id, fg_n)`. */
+  private def jlhRanked(spark: SparkSession, snap: Snapshot, fg: DataFrame,
+                        fgSizes: DataFrame, size: Int): DataFrame = {
     val bg = spark.read.parquet(snap.termstatsDir).select(col("term"), col("df"))
-    val n = snap.stats.numDocs
     val fgPct = col("fg_df").cast("double") / col("fg_n")
-    val bgPct = col("df").cast("double") / lit(n.toDouble)
+    val bgPct = col("df").cast("double") / lit(snap.stats.numDocs.toDouble)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("term").asc)
     fg.join(bg, Seq("term"))
@@ -4366,20 +4352,7 @@ object Wand {
       .select(col("query_id"), explode(array_distinct(an.tokens(col("text")))).as("term"))
       .groupBy("query_id", "term").agg(count(lit(1)).as("fg_df"))
       .filter(col("fg_df") >= lit(minDocCount))
-    val bg = spark.read.parquet(snap.termstatsDir).select(col("term"), col("df"))
-    val n = snap.stats.numDocs
-    val fgPct = col("fg_df").cast("double") / col("fg_n")
-    val bgPct = col("df").cast("double") / lit(n.toDouble)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("term").asc)
-    fg.join(bg, Seq("term"))
-      .join(broadcast(fgSizes), Seq("query_id"))
-      .withColumn("score", (fgPct - bgPct) * (fgPct / bgPct))
-      .filter(fgPct > bgPct)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= size)
-      .select(col("query_id"), col("rank"), col("term"), col("fg_df"),
-        col("df").as("bg_df"), col("score"))
+    jlhRanked(spark, snap, fg, fgSizes, size)
   }
 
   /** Score explanation (the OpenSearch `_explain` API analog): the
@@ -4699,41 +4672,15 @@ object Wand {
   }
 
   /** Per-query analyzed terms with `*`-prefix expansion against the
-    * snapshot's term dictionary. ALL prefixes across the query set expand
-    * in ONE pass — a broadcast nested-loop join of the (tiny) prefix list
-    * against the termstats scan with a per-prefix rank window, so the
-    * collect is bounded by |prefixes| × maxExpansions however large the
-    * dictionary is. Prefixes are lowercased (the analyzer lowercases
-    * terms); a prefix matching nothing contributes no terms. */
+    * snapshot's term dictionary: ALL prefixes across the query set expand
+    * in ONE [[prefixTerms]] pass, each capped at `maxExpansions` in
+    * ascending term order. Prefixes are lowercased (the analyzer
+    * lowercases terms); a prefix matching nothing contributes no terms. */
   def expandQueries(spark: SparkSession, snap: Snapshot, queries: Seq[RefQuery],
                     maxExpansions: Int = 1024): Map[Int, Array[String]] = {
-    import spark.implicits._
     require(maxExpansions > 0, s"maxExpansions must be positive: $maxExpansions")
     requireWordChain(snap, "prefix expansion")
-    val parsed: Seq[(Int, Array[String], Array[String])] = queries.map { q =>
-      val ws = q.text.trim.split("\\s+").filter(_.nonEmpty)
-      val (pw, lw) = ws.partition(w => w.length > 1 && w.endsWith("*"))
-      (q.query_id,
-        lw.flatMap(analyzerOf(snap).analyzeQuery),
-        pw.map(w => w.dropRight(1).toLowerCase(java.util.Locale.ROOT)))
-    }
-    val allPrefixes = parsed.flatMap(_._3).distinct
-    val byPrefix: Map[String, Array[String]] =
-      if (allPrefixes.isEmpty) Map.empty
-      else {
-        val w = Window.partitionBy(col("prefix")).orderBy(col("term"))
-        spark.read.parquet(snap.termstatsDir).select("term")
-          .join(broadcast(allPrefixes.toDF("prefix")),
-            col("term").startsWith(col("prefix")))
-          .withColumn("r", row_number().over(w))
-          .filter(col("r") <= maxExpansions)
-          .select("prefix", "term").as[(String, String)].collect()
-          .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2) }
-      }
-    parsed.map { case (qid, lits, pfs) =>
-      qid -> (lits ++ pfs.flatMap(p => byPrefix.getOrElse(p, Array.empty[String])))
-        .distinct.sorted
-    }.toMap
+    expandMarked(snap, queries, "*")(prefixTerms(spark, snap, _, maxExpansions))
   }
 
   /** Time travel by snapshot id (Iceberg `VERSION AS OF`): query the index
@@ -4832,13 +4779,12 @@ object Wand {
     * per query, (fixed token sequence, dictionary expansion of the last
     * token). The last ANALYZED token is the prefix — `Tokenizer` runs
     * first, so `"matchPre"` prefixes on `pre`, exactly what gets indexed.
-    * All prefixes expand in ONE broadcast pass with a per-prefix rank
-    * window ([[expandQueries]]'s discipline). Requires every query to
-    * analyze to >= 2 tokens. */
+    * All prefixes expand in ONE [[prefixTerms]] pass, the rewrite
+    * [[expandQueries]] uses. Requires every query to analyze to >= 2
+    * tokens. */
   def phrasePrefixExpand(spark: SparkSession, snap: Snapshot,
                          queries: Seq[RefQuery], maxExpansions: Int = 1024):
       (Map[Int, Array[String]], Map[Int, Array[String]]) = {
-    import spark.implicits._
     require(maxExpansions > 0, s"maxExpansions must be positive: $maxExpansions")
     val parsed: Seq[(Int, Array[String], String)] = queries.map { q =>
       val ts = analyzerOf(snap).analyzeQuery(q.text)
@@ -4847,16 +4793,7 @@ object Wand {
           s"a single-word prefix): '${q.text}'")
       (q.query_id, ts.init, ts.last)
     }
-    val allPrefixes = parsed.map(_._3).distinct
-    val w = Window.partitionBy(col("prefix")).orderBy(col("term"))
-    val byPrefix: Map[String, Array[String]] =
-      spark.read.parquet(snap.termstatsDir).select("term")
-        .join(broadcast(allPrefixes.toDF("prefix")),
-          col("term").startsWith(col("prefix")))
-        .withColumn("r", row_number().over(w))
-        .filter(col("r") <= maxExpansions)
-        .select("prefix", "term").as[(String, String)].collect()
-        .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2).distinct.sorted }
+    val byPrefix = prefixTerms(spark, snap, parsed.map(_._3), maxExpansions)
     (parsed.map { case (qid, fixed, _) => qid -> fixed }.toMap,
      parsed.map { case (qid, _, p) =>
        qid -> byPrefix.getOrElse(p, Array.empty[String]) }.toMap)

@@ -199,7 +199,7 @@ class EngineSpec extends AnyFunSuite {
     assert(cmp.filter($"g_doc".isNull || $"f_doc".isNull ||
       $"g_doc" =!= $"f_doc" || $"g_score" =!= $"f_score").count() == 0)
     // sha invariant holds over the union
-    assert(graft.compare.Harness.shaViolations(spark, snapApp, all.toDF).count() == 0)
+    assert(graft.compare.Harness.shaViolations(spark, snapApp, all.toDF()).count() == 0)
     // at-least-once idempotency: re-appending the same batch is a no-op
     val again = IndexBuilder.append(spark, extra, dirA)
     assert(again.id == snapApp.id && again.stats.numDocs == 1200)
@@ -241,14 +241,14 @@ class EngineSpec extends AnyFunSuite {
     assert(snapD.stats.avgdl != snap0.stats.avgdl)
     // replay (which masks tombstones on the golden side): every rank row
     // identical, scores bit-identical — idf/avgdl updated consistently
-    val cmp = graft.compare.Harness.replay(spark, snapD, all.toDF, queries, k)
+    val cmp = graft.compare.Harness.replay(spark, snapD, all.toDF(), queries, k)
     assert(cmp.count() > 0 && cmp.filter(!$"identical").count() == 0)
     // no tombstoned doc surfaces in any result
     val deletedIds = all.filter(pred).select(IndexBuilder.docIdCol.as("doc_id"))
     val fast = Wand.searchSnapshot(spark, snapD, queries, k)
     assert(fast.join(deletedIds, Seq("doc_id"), "left_semi").count() == 0)
     // sha invariant holds with both sides tombstone-masked
-    assert(graft.compare.Harness.shaViolations(spark, snapD, all.toDF).count() == 0)
+    assert(graft.compare.Harness.shaViolations(spark, snapD, all.toDF()).count() == 0)
     // idempotent: re-deleting the same predicate is a no-op commit-wise
     val again = IndexBuilder.delete(spark, dirD, pred)
     assert(again.id == snapD.id && again.stats == snapD.stats)
@@ -302,9 +302,9 @@ class EngineSpec extends AnyFunSuite {
     assert(nDeleted > 500, s"churn too light to exercise the mask: $nDeleted")
     // golden vs WAND: rank-identical, scores bit-identical over the 40%
     // survivors; sha invariant holds
-    val cmp = graft.compare.Harness.replay(spark, snapD, all.toDF, queries, k)
+    val cmp = graft.compare.Harness.replay(spark, snapD, all.toDF(), queries, k)
     assert(cmp.count() > 0 && cmp.filter(!$"identical").count() == 0)
-    assert(graft.compare.Harness.shaViolations(spark, snapD, all.toDF).count() == 0)
+    assert(graft.compare.Harness.shaViolations(spark, snapD, all.toDF()).count() == 0)
     // indexStats counts the mask without materializing it
     val st = IndexBuilder.indexStats(spark, dirM).head()
     assert(st.getAs[Long]("deleted_docs") == nDeleted)
@@ -319,7 +319,7 @@ class EngineSpec extends AnyFunSuite {
     val sf = org.apache.spark.sql.Encoders.product[graft.corpus.SourceFile]
     // upsert 1/5 of the corpus with changed content: each changed identity
     // now has a dead and a live docmap row sharing its doc_id
-    val changed = all.toDF.filter(pmod(xxhash64($"path"), lit(5)) === 0)
+    val changed = all.toDF().filter(pmod(xxhash64($"path"), lit(5)) === 0)
       .withColumn("content", concat($"content", lit(" livemarker"))).as(sf)
     val nChanged = changed.count()
     assert(nChanged > 0)
@@ -361,7 +361,7 @@ class EngineSpec extends AnyFunSuite {
       Seq(graft.corpus.RefQuery(0, term)), k).count() == 0)
     // survivors stay rank- and bit-identical vs the exact scorer over the
     // survivor corpus (replay masks tombstones on the golden side)
-    val cmp = graft.compare.Harness.replay(spark, snapD, all.toDF, queries, k)
+    val cmp = graft.compare.Harness.replay(spark, snapD, all.toDF(), queries, k)
     assert(cmp.count() > 0 && cmp.filter(!$"identical").count() == 0)
     // idempotent: nothing left matches, so a re-delete is a no-op commit
     val again = Wand.deleteByQuery(spark, dirQ, Seq(graft.corpus.RefQuery(0, term)))
@@ -510,10 +510,10 @@ class EngineSpec extends AnyFunSuite {
     val sf = org.apache.spark.sql.Encoders.product[graft.corpus.SourceFile]
     // 1/10 of the corpus changed (a token no original doc contains),
     // 1/10 re-sent unchanged, plus brand-new identities
-    val changed = all.toDF.filter(bucket === 0)
+    val changed = all.toDF().filter(bucket === 0)
       .withColumn("content", concat($"content", lit(" upsertmarker"))).as(sf)
     val unchanged = all.filter(bucket === 1)
-    val fresh = CorpusGen.corpus(spark, 50L, seed = 83L).toDF
+    val fresh = CorpusGen.corpus(spark, 50L, seed = 83L).toDF()
       .withColumn("path", concat(lit("new/"), $"path")).as(sf)
     val batch = changed.unionAll(unchanged).unionAll(fresh)
     val (nChanged, nNew) = (changed.count(), fresh.count())
@@ -526,11 +526,11 @@ class EngineSpec extends AnyFunSuite {
     assert(Wand.searchSnapshot(spark, snapU,
       Seq(graft.corpus.RefQuery(0, "upsertmarker")), 1000).count() == nChanged)
     // identity + sha invariant vs the UPDATED corpus view
-    val updated = all.toDF.filter(bucket =!= 0).as(sf)
+    val updated = all.toDF().filter(bucket =!= 0).as(sf)
       .unionAll(changed).unionAll(fresh)
-    val cmp = graft.compare.Harness.replay(spark, snapU, updated.toDF, queries, k)
+    val cmp = graft.compare.Harness.replay(spark, snapU, updated.toDF(), queries, k)
     assert(cmp.count() > 0 && cmp.filter(!$"identical").count() == 0)
-    assert(graft.compare.Harness.shaViolations(spark, snapU, updated.toDF).count() == 0)
+    assert(graft.compare.Harness.shaViolations(spark, snapU, updated.toDF()).count() == 0)
     // idempotent: re-upserting the same batch is a no-op commit
     val again = IndexBuilder.upsert(spark, batch, dirU)
     assert(again.id == snapU.id && again.stats == snapU.stats)
@@ -543,9 +543,9 @@ class EngineSpec extends AnyFunSuite {
     assert(snapA.stats.numDocs == snapD.stats.numDocs) // append refuses
     val snapR = IndexBuilder.upsert(spark, fresh.filter($"path" === vic), dirU)
     assert(snapR.stats.numDocs == snapU.stats.numDocs)
-    val cmp2 = graft.compare.Harness.replay(spark, snapR, updated.toDF, queries, k)
+    val cmp2 = graft.compare.Harness.replay(spark, snapR, updated.toDF(), queries, k)
     assert(cmp2.filter(!$"identical").count() == 0)
-    assert(graft.compare.Harness.shaViolations(spark, snapR, updated.toDF).count() == 0)
+    assert(graft.compare.Harness.shaViolations(spark, snapR, updated.toDF()).count() == 0)
   }
 
   test("significant terms: JLH vs direct corpus recount, delete-exact") {
@@ -560,7 +560,7 @@ class EngineSpec extends AnyFunSuite {
 
     // independent recount straight off the tokenized corpus
     def direct(corpusDs: org.apache.spark.sql.Dataset[graft.corpus.SourceFile]) = {
-      val toks = corpusDs.toDF
+      val toks = corpusDs.toDF()
         .select(IndexBuilder.docIdCol.as("doc_id"),
           array_distinct(graft.analyze.Tokenizer.tokens($"content")).as("ts"))
         .cache()
@@ -594,7 +594,7 @@ class EngineSpec extends AnyFunSuite {
     // AND bg (delete-exact termstats) must both reflect survivors exactly
     val snapD = IndexBuilder.delete(spark, dirS, pmod($"dl", lit(7)) === 0)
     assert(snapD.stats.numDocs < 600)
-    val survivors = all.toDF
+    val survivors = all.toDF()
       .filter(pmod(size(graft.analyze.Tokenizer.tokens($"content")), lit(7)) =!= 0)
       .as(org.apache.spark.sql.Encoders.product[graft.corpus.SourceFile])
     assert(survivors.count() == snapD.stats.numDocs)
@@ -607,17 +607,17 @@ class EngineSpec extends AnyFunSuite {
     val all = CorpusGen.corpus(spark, 900L, seed = 61L).cache()
     IndexBuilder.build(spark, all, dirA, BuildConfig(numShards = 4, commitEvery = 4))
     // churn the source: append, upsert (replaces content), delete
-    val extra = CorpusGen.corpus(spark, 80L, seed = 62L).toDF
+    val extra = CorpusGen.corpus(spark, 80L, seed = 62L).toDF()
       .withColumn("path", concat(lit("x/"), $"path")).as(sf)
     IndexBuilder.append(spark, extra, dirA)
-    val changed = all.toDF.filter(pmod(xxhash64($"path"), lit(9)) === 3)
+    val changed = all.toDF().filter(pmod(xxhash64($"path"), lit(9)) === 3)
       .withColumn("content", concat($"content", lit(" reshardmarker"))).as(sf)
     IndexBuilder.upsert(spark, changed, dirA)
     val snapA = IndexBuilder.delete(spark, dirA, pmod($"dl", lit(5)) === 0)
     // the expected live corpus, derived independently of the index
-    val effective = all.toDF.filter(pmod(xxhash64($"path"), lit(9)) =!= 3).as(sf)
+    val effective = all.toDF().filter(pmod(xxhash64($"path"), lit(9)) =!= 3).as(sf)
       .unionAll(changed).unionAll(extra)
-    val expected = effective.toDF
+    val expected = effective.toDF()
       .filter(pmod(size(graft.analyze.Tokenizer.tokens($"content")), lit(5)) =!= 0)
       .as(sf).cache()
     assert(expected.count() == snapA.stats.numDocs)
@@ -631,15 +631,15 @@ class EngineSpec extends AnyFunSuite {
       Wand.searchSnapshot(spark, snap, queries, k).orderBy("query_id", "rank")
         .as[(Int, Int, String, Double)].collect().toSeq
     assert(hits(snapB) == hits(snapA) && hits(snapB).nonEmpty)
-    val cmp = graft.compare.Harness.replay(spark, snapB, expected.toDF, queries, k)
+    val cmp = graft.compare.Harness.replay(spark, snapB, expected.toDF(), queries, k)
     assert(cmp.count() > 0 && cmp.filter(!$"identical").count() == 0)
-    assert(graft.compare.Harness.shaViolations(spark, snapB, expected.toDF).count() == 0)
+    assert(graft.compare.Harness.shaViolations(spark, snapB, expected.toDF()).count() == 0)
     // the destination is phrase-searchable now (source was positionless)
     val phrase = Seq(graft.corpus.RefQuery(0,
       graft.analyze.Tokenizer.tokenize(CorpusGen.contentFor(2L, 61L))
         .slice(3, 6).mkString(" ")))
     val pg = Golden.phraseTopK(spark,
-      expected.toDF.select(IndexBuilder.docIdCol.as("doc_id"), $"content"), phrase, k)
+      expected.toDF().select(IndexBuilder.docIdCol.as("doc_id"), $"content"), phrase, k)
       .as[(Int, Int, String, Double)].collect().toSeq
     val pf = Wand.phraseSearchSnapshot(spark, snapB, phrase, k)
       .as[(Int, Int, String, Double)].collect().toSeq
@@ -697,7 +697,7 @@ class EngineSpec extends AnyFunSuite {
     val fresh = CorpusGen.corpus(spark, 200L, seed = 78L)
       .withColumn("repo", concat(lit("fresh-"), $"repo")).as[graft.corpus.SourceFile]
     val snapA = IndexBuilder.append(spark, fresh, dirK)
-    val union = survivorsDf.unionByName(fresh.toDF)
+    val union = survivorsDf.unionByName(fresh.toDF())
     val cmp2 = graft.compare.Harness.replay(spark, snapA, union, queries, k)
     assert(cmp2.count() > 0 && cmp2.filter(!$"identical").count() == 0)
   }
@@ -723,7 +723,7 @@ class EngineSpec extends AnyFunSuite {
     // hold the tombstoned postings, so it has to subtract their (df, cf)
     val repaired = IndexBuilder.append(spark, extra, dirT)
     assert(repaired.isComplete)
-    val cmp = graft.compare.Harness.replay(spark, repaired, all.toDF, queries, k)
+    val cmp = graft.compare.Harness.replay(spark, repaired, all.toDF(), queries, k)
     assert(cmp.count() > 0 && cmp.filter(!$"identical").count() == 0)
   }
 
@@ -747,7 +747,7 @@ class EngineSpec extends AnyFunSuite {
     val snapDel = IndexBuilder.delete(spark, dirD, delPred)
     assert(snapDel.isComplete)
     val live = all.filter(!(pmod(xxhash64($"path"), lit(5)) === 0))
-    val cmp = graft.compare.Harness.replay(spark, snapDel, live.toDF, queries, k)
+    val cmp = graft.compare.Harness.replay(spark, snapDel, live.toDF(), queries, k)
     assert(cmp.count() > 0 && cmp.filter(!$"identical").count() == 0)
   }
 
@@ -779,7 +779,7 @@ class EngineSpec extends AnyFunSuite {
     val p2 = pmod(xxhash64($"commit"), lit(5)) === 0
     val snapDel2 = IndexBuilder.delete(spark, dirO, p2)
     val live = all.filter((inA && !p1 && !p2) || (!inA && !p2))
-    val cmp = graft.compare.Harness.replay(spark, snapDel2, live.toDF, queries, k)
+    val cmp = graft.compare.Harness.replay(spark, snapDel2, live.toDF(), queries, k)
     assert(cmp.count() > 0 && cmp.filter(!$"identical").count() == 0)
   }
 
@@ -815,7 +815,7 @@ class EngineSpec extends AnyFunSuite {
     val pred = col("lang") === "scala" // 25% of the round-robin corpus
     val accepted = corpus.filter(pred).select(IndexBuilder.docIdCol.as("doc_id")).cache()
     // OR mode: golden (docFilter) vs WAND (filter runs) — rank + bit-identical
-    val golden = Golden.topK(spark, docs, queries, k, docFilter = Some(accepted.toDF))
+    val golden = Golden.topK(spark, docs, queries, k, docFilter = Some(accepted.toDF()))
       .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
     val fast = Wand.searchSnapshot(spark, snap, queries, k, filter = Some(pred)).cache()
     val fastR = fast
@@ -838,7 +838,7 @@ class EngineSpec extends AnyFunSuite {
       .join(fast, Seq("query_id", "doc_id"), "left_anti").count() > 0)
     // conjunctive + filter composes, identical vs golden
     val gAnd = Golden.topK(spark, docs, queries, k, conjunctive = true,
-        docFilter = Some(accepted.toDF))
+        docFilter = Some(accepted.toDF()))
       .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
     val fAnd = Wand.searchSnapshot(spark, snap, queries, k, conjunctive = true,
         filter = Some(pred))
@@ -1748,7 +1748,7 @@ class EngineSpec extends AnyFunSuite {
     def assertSame(got: org.apache.spark.sql.DataFrame,
                    exp: org.apache.spark.sql.DataFrame, tag: String): Unit = {
       val cols = got.columns
-      val cmp = exp.select(cols.map(c => col(c).as(s"g_$c")): _*)
+      val cmp = exp.select(cols.toIndexedSeq.map(c => col(c).as(s"g_$c")): _*)
         .withColumnRenamed("g_query_id", "query_id")
         .withColumnRenamed("g_rank", "rank")
         .join(got, Seq("query_id", "rank"), "full_outer")
@@ -2015,7 +2015,7 @@ class EngineSpec extends AnyFunSuite {
     // golden with the same doc filter agrees bit-identically
     val handDocs = hand.select(IndexBuilder.docIdCol.as("doc_id"), $"content")
     val acc = hand.filter($"lang" === "scala")
-      .select(IndexBuilder.docIdCol.as("doc_id")).toDF
+      .select(IndexBuilder.docIdCol.as("doc_id")).toDF()
     val g = Golden.phraseTopK(spark, handDocs, qs, 10, docFilter = Some(acc))
       .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
     val f = got.withColumnRenamed("doc_id", "f_doc").withColumnRenamed("score", "f_score")
@@ -2264,7 +2264,7 @@ class EngineSpec extends AnyFunSuite {
     val bqs = Seq(BoolQuery.parse(0, "+index query -merge"))
     val pred = col("lang") === "scala"
     val accepted = corpus.filter(pred).select(IndexBuilder.docIdCol.as("doc_id"))
-    val golden = Golden.booleanTopK(spark, docs, bqs, k, docFilter = Some(accepted.toDF))
+    val golden = Golden.booleanTopK(spark, docs, bqs, k, docFilter = Some(accepted.toDF()))
       .withColumnRenamed("doc_id", "g_doc").withColumnRenamed("score", "g_score")
     val fast = Wand.booleanSearchSnapshot(spark, snap, bqs, k, filter = Some(pred)).cache()
     val cmp = golden.join(
@@ -3960,6 +3960,13 @@ class EngineSpec extends AnyFunSuite {
     // a query that parses to nothing scoring returns no rows, not an error
     assert(SimpleQueryString.searchSnapshot(spark, snapQ,
       Seq(0 -> "-def", 1 -> "", 2 -> "zzqx*"), k).count() == 0)
+    // one word at two edit budgets in one text: each leaf is that
+    // budget's own fuzzy expansion and cap, not the other's
+    val fz = Seq(1, 2).map(e => Wand.fuzzyExpandQueries(spark, snapQ,
+      Seq(graft.corpus.RefQuery(0, "sor~")), maxEdits = e, maxExpansions = 16)(0))
+    assert(fz(0).nonEmpty && fz(1).length > fz(0).length)
+    assert(SimpleQueryString.parse(spark, snapQ, "sor~1 | sor~2", maxExpansions = 16) ==
+      Some(SpanOr(fz.map(e => SpanOr(e.toSeq.map(SpanTerm))))))
   }
 
   test("combined_fields: merged BM25F statistics match a two-field recount") {

@@ -68,7 +68,7 @@ class NestedSpec extends AnyFunSuite {
                          exp: org.apache.spark.sql.DataFrame,
                          keys: Seq[String], tag: String): Unit = {
     val cols = got.columns
-    val cmp = keys.foldLeft(exp.select(cols.map(c => col(c).as(s"g_$c")): _*)) {
+    val cmp = keys.foldLeft(exp.select(cols.toIndexedSeq.map(c => col(c).as(s"g_$c")): _*)) {
         (df, kc) => df.withColumnRenamed(s"g_$kc", kc)
       }.join(got, keys, "full_outer")
     val bad = cols.filterNot(keys.contains)
@@ -151,7 +151,7 @@ class NestedSpec extends AnyFunSuite {
     assert(nAfter == nBefore - 1, s"fold must shrink: $nBefore -> $nAfter")
     assert(mid.filter($"nested_id".isin(
       meta.filter($"path" === victimNested).select("doc_id")
-        .as[String].collect(): _*)).count() == 0)
+        .as[String].collect().toIndexedSeq: _*)).count() == 0)
     // delete the PARENT row: it must vanish from results entirely
     IndexBuilder.delete(spark, dirD, col("path") === victimParent)
     val snapD2 = graft.table.SnapshotCatalog.load(spark, dirD).get
