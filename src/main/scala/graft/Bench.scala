@@ -267,14 +267,16 @@ object Bench {
     try SparkEntry.prebuildSharedIndexes(spark1, sfDir)
     catch { case _: Throwable => () }
     val prebuildSec = secs(tPre)
-    val queryTimes: Seq[(String, Double)] =
+    // a failed query times as -1 and keeps its cause for the side file
+    val runs: Seq[(String, Double, Option[String])] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         val t0 = System.nanoTime()
-        val ok = try { fn(spark1, sfDir).count(); true }
-                 catch { case _: Throwable => false }
-        name -> (if (ok) secs(t0) else -1.0)
+        val err = try { fn(spark1, sfDir).count(); None }
+                  catch { case e: Throwable => Some(s"${e.getClass.getName}: ${e.getMessage}") }
+        (name, if (err.isEmpty) secs(t0) else -1.0, err)
       }
     spark1.stop()
+    val queryTimes = runs.map(r => r._1 -> r._2)
 
     val buildThrHi = nDocs / buildHi
     val buildThrLo = nDocs / buildLo
@@ -317,11 +319,14 @@ object Bench {
       } catch { case _: Throwable => Map.empty }
     val prevJson = prevTimes.toSeq.sorted
       .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val errorsJson = runs.collect { case (k, _, Some(e)) =>
+      s""""$k":${mapper.writeValueAsString(e)}""" }.mkString("{", ",", "}")
     val ratioJson = queryTimes
       .collect { case (k, v) if v >= 0 && prevTimes.getOrElse(k, -1.0) > 0 =>
         f""""$k":${v / prevTimes(k)}%.2f""" }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(qFile.toPath,
-      f"""{"sf":"$sfDir","battery_sec":$batterySec%.2f,"prebuild_sec":$prebuildSec%.2f,"queries":$qjson,"prev":$prevJson,"ratio":$ratioJson}""" + "\n")
+      f"""{"sf":"$sfDir","battery_sec":$batterySec%.2f,"prebuild_sec":$prebuildSec%.2f,"queries":$qjson,"prev":$prevJson,"ratio":$ratioJson,"errors":$errorsJson}""" + "\n")
     val failed = queryTimes.filter(_._2 < 0).map(_._1)
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val slow5 = queryTimes.filter(_._2 >= 0).sortBy(-_._2).take(5)

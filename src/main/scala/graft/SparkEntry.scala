@@ -1278,7 +1278,7 @@ object SparkEntry {
       stageEngineToks(s, d, engineCorpus(s, d), "q146", corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "join filter"))
-      graft.search.Wand.scriptedMetricAgg[(Long, Long, Long), (Long, Long, Long)](
+      graft.search.Aggs.scriptedMetricAgg[(Long, Long, Long), (Long, Long, Long)](
           s, sharedIndexDir(d, positions = false), qs,
           r => (1L, r.getAs[Long]("dl"), r.getAs[Long]("dl")),
           (a, b) => (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3)),
@@ -1385,7 +1385,7 @@ object SparkEntry {
       val idxDir = sharedIndexDir(d, false)
       val qs = Seq(graft.corpus.RefQuery(0, "spark"),
         graft.corpus.RefQuery(1, "filter group"))
-      graft.search.Wand.significantTerms(s, idxDir, qs, 10)
+      graft.search.Aggs.significantTerms(s, idxDir, qs, 10)
         .select(col("query_id"), col("rank"), col("term"), col("fg_df"),
           col("bg_df"), round(col("score"), 6).as("score"))
         .orderBy("query_id", "rank")
@@ -1687,7 +1687,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q97", corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter group sort"))
-      graft.search.Wand.percentilesAggSnapshot(s, snap, qs, "path",
+      graft.search.Aggs.percentilesAggSnapshot(s, snap, qs, "path",
           Seq(0.25, 0.5, 0.75, 0.95))
         .select(col("query_id"), col("pct"), col("doc_count"),
           round(col("value"), 4).as("value"))
@@ -1704,7 +1704,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q98", withLang = true, corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter group sort"))
-      graft.search.Wand.facetStatsAggSnapshot(s, snap, qs, "lang", "path", 3)
+      graft.search.Aggs.facetStatsAggSnapshot(s, snap, qs, "lang", "path", 3)
         .select(col("query_id"), col("rank"), col("facet"), col("doc_count"),
           round(col("min_v"), 4).as("min_v"), round(col("max_v"), 4).as("max_v"),
           round(col("sum_v"), 4).as("sum_v"), round(col("avg_v"), 4).as("avg_v"))
@@ -1738,7 +1738,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q100", corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter group sort"))
-      graft.search.Wand.extendedStatsAggSnapshot(s, snap, qs, "dl")
+      graft.search.Aggs.extendedStatsAggSnapshot(s, snap, qs, "dl")
         .select(col("query_id"), col("doc_count"),
           round(col("sum_v"), 4).as("sum_v"), round(col("sum_sq"), 4).as("sum_sq"),
           round(col("avg_v"), 4).as("avg_v"), round(col("var_v"), 4).as("var_v"),
@@ -1754,7 +1754,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q101", corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter group sort"))
-      graft.search.Wand.percentileRanksAggSnapshot(s, snap, qs, "dl",
+      graft.search.Aggs.percentileRanksAggSnapshot(s, snap, qs, "dl",
           Seq(100.0, 200.0, 300.0))
         .select(col("query_id"), col("value"), col("doc_count"),
           round(col("pct_rank"), 4).as("pct_rank"))
@@ -1768,7 +1768,7 @@ object SparkEntry {
       val corpus = engineCorpus(s, d)
       val snap = sharedIndex(s, d)
       stageEngineToks(s, d, corpus, "q102", corpusKey = "base")
-      graft.search.Wand.adjacencyMatrixAggSnapshot(s, snap,
+      graft.search.Aggs.adjacencyMatrixAggSnapshot(s, snap,
           Seq(("sq", "spark query"), ("fi", "filter"), ("gr", "group")))
         .orderBy("key")
     }),
@@ -1782,7 +1782,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q103", withLang = true, corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter group sort"))
-      graft.search.Wand.compositeAggSnapshot(s, snap, qs, "lang", 2,
+      graft.search.Aggs.compositeAggSnapshot(s, snap, qs, "lang", 2,
           afterKey = Some("go"))
         .orderBy("query_id", "facet")
     }),
@@ -1795,7 +1795,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q104", corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter group sort"))
-      graft.search.Wand.rareTermsAggSnapshot(s, snap, qs, "dl", 2L)
+      graft.search.Aggs.rareTermsAggSnapshot(s, snap, qs, "dl", 2L)
         .select(col("query_id"), col("facet").cast("long").as("facet"),
           col("doc_count"))
         .orderBy("query_id", "facet")
@@ -1809,7 +1809,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q105", withLang = true, withRepo = true, corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter group sort"))
-      graft.search.Wand.multiTermsAggSnapshot(s, snap, qs,
+      graft.search.Aggs.multiTermsAggSnapshot(s, snap, qs,
           Seq("lang", "repo"), 5)
         .orderBy("query_id", "rank")
     }),
@@ -1826,7 +1826,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      graft.search.Wand.derivativeAggSnapshot(s, snap, qs, "dl", 40.0)
+      graft.search.Aggs.derivativeAggSnapshot(s, snap, qs, "dl", 40.0)
         .orderBy("query_id", "key")
     }),
 
@@ -1841,7 +1841,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      graft.search.Wand.movingFnAggSnapshot(s, snap, qs, "dl", 40.0, 3)
+      graft.search.Aggs.movingFnAggSnapshot(s, snap, qs, "dl", 40.0, 3)
         .select(col("query_id"), col("key"), col("doc_count"),
           round(col("moving_avg"), 4).as("moving_avg"))
         .orderBy("query_id", "key")
@@ -1860,7 +1860,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      graft.search.Wand.movingPercentilesAggSnapshot(s, snap, qs, "dl", 40.0,
+      graft.search.Aggs.movingPercentilesAggSnapshot(s, snap, qs, "dl", 40.0,
           window = 4, percents = Seq(50.0, 90.0))
         .select(col("query_id"), col("key"), col("doc_count"),
           round(col("p50"), 4).as("p50"), round(col("p90"), 4).as("p90"))
@@ -1876,7 +1876,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      graft.search.Wand.serialDiffAggSnapshot(s, snap, qs, "dl", 40.0, 2)
+      graft.search.Aggs.serialDiffAggSnapshot(s, snap, qs, "dl", 40.0, 2)
         .orderBy("query_id", "key")
     }),
 
@@ -1911,9 +1911,9 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q120", withLang = true, corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "dup stream"))
-      val mx = graft.search.Wand.extremeBucketAggSnapshot(s, snap, qs, "lang",
+      val mx = graft.search.Aggs.extremeBucketAggSnapshot(s, snap, qs, "lang",
         conjunctive = false, isMax = true).withColumn("side", lit("max"))
-      val mn = graft.search.Wand.extremeBucketAggSnapshot(s, snap, qs, "lang",
+      val mn = graft.search.Aggs.extremeBucketAggSnapshot(s, snap, qs, "lang",
         conjunctive = false, isMax = false).withColumn("side", lit("min"))
       mx.unionByName(mn)
         .select(col("query_id"), col("side"), col("keys"), col("value"))
@@ -1979,7 +1979,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q123", corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"))
-      graft.search.Wand.autoHistogramAggSnapshot(s, snap, qs, "dl", 12)
+      graft.search.Aggs.autoHistogramAggSnapshot(s, snap, qs, "dl", 12)
         .orderBy("query_id", "key")
     }),
 
@@ -1991,7 +1991,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q124", corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter group"))
-      val res = graft.search.Wand.topMetricsAggSnapshot(s, snap, qs,
+      val res = graft.search.Aggs.topMetricsAggSnapshot(s, snap, qs,
         "dl", "cast(path as double)", 5)
       val dm = s.read.parquet(snap.docmapDirs: _*)
         .select(col("doc_id"), col("path"))
@@ -2061,7 +2061,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      graft.search.Wand.weightedAvgAggSnapshot(s, snap, qs,
+      graft.search.Aggs.weightedAvgAggSnapshot(s, snap, qs,
         "dl", "cast(path as double)")
         .select(col("query_id"), col("doc_count"),
           round(col("weighted_avg"), 4).as("weighted_avg"))
@@ -2077,7 +2077,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      graft.search.Wand.madAggSnapshot(s, snap, qs, "dl")
+      graft.search.Aggs.madAggSnapshot(s, snap, qs, "dl")
         .select(col("query_id"), col("doc_count"),
           round(col("mad"), 4).as("mad"))
         .orderBy("query_id")
@@ -2093,7 +2093,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q107", withLang = true, corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter group sort"))
-      graft.search.Wand.bucketSortAggSnapshot(s, snap, qs, "lang", "path",
+      graft.search.Aggs.bucketSortAggSnapshot(s, snap, qs, "lang", "path",
           minDocCount = 5L, size = 3)
         .select(col("query_id"), col("rank"), col("facet"), col("doc_count"),
           round(col("avg_v"), 4).as("avg_v"))
@@ -2110,7 +2110,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter group sort"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      graft.search.Wand.statsBucketAggSnapshot(s, snap, qs, "lang")
+      graft.search.Aggs.statsBucketAggSnapshot(s, snap, qs, "lang")
         .select(col("query_id"), col("bucket_count"), col("min_bucket"),
           col("max_bucket"), col("sum_bucket"),
           round(col("avg_bucket"), 4).as("avg_bucket"))
@@ -2129,7 +2129,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "filter group sort"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      graft.search.Wand.filtersAggSnapshot(s, snap, qs,
+      graft.search.Aggs.filtersAggSnapshot(s, snap, qs,
           Seq("has_dup" -> "dup", "has_stream" -> "stream"))
         .orderBy("query_id", "filter")
     }),
@@ -2144,7 +2144,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q110", corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter group sort"))
-      graft.search.Wand.matrixStatsAggSnapshot(s, snap, qs, "dl", "path")
+      graft.search.Aggs.matrixStatsAggSnapshot(s, snap, qs, "dl", "path")
         .select(col("query_id"), col("doc_count"),
           round(col("mean_x"), 4).as("mean_x"),
           round(col("mean_y"), 4).as("mean_y"),
@@ -2458,7 +2458,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q165", corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"))
-      graft.search.Wand.bucketScriptAggSnapshot(s, snap, qs, "dl", 40.0,
+      graft.search.Aggs.bucketScriptAggSnapshot(s, snap, qs, "dl", 40.0,
           "path", (n, m) => m / n)
         .select(col("query_id"), col("key"), col("doc_count"),
           round(col("metric"), 4).as("metric"),
@@ -2477,8 +2477,8 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q162", corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"))
-      graft.search.Wand.NormalizeMethods.toSeq.sorted.map { m =>
-        graft.search.Wand.normalizeAggSnapshot(s, snap, qs, "dl", 40.0, m)
+      graft.search.Aggs.NormalizeMethods.toSeq.sorted.map { m =>
+        graft.search.Aggs.normalizeAggSnapshot(s, snap, qs, "dl", 40.0, m)
           .withColumn("method", lit(m))
       }.reduce(_ unionByName _)
         .select(col("query_id"), col("method"), col("key"), col("doc_count"),
@@ -2496,7 +2496,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q163", withLang = true, corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"))
-      graft.search.Wand.cumulativeCardinalityAggSnapshot(s, snap, qs, "dl",
+      graft.search.Aggs.cumulativeCardinalityAggSnapshot(s, snap, qs, "dl",
           40.0, "lang")
         .orderBy("query_id", "key")
     }),
@@ -2677,7 +2677,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      graft.search.Wand.boxplotAggSnapshot(s, snap, qs, "dl")
+      graft.search.Aggs.boxplotAggSnapshot(s, snap, qs, "dl")
         .select(col("query_id"), col("doc_count"),
           col("min").cast("long").as("min_dl"),
           round(col("q1"), 4).as("q1"), round(col("q2"), 4).as("q2"),
@@ -2701,9 +2701,9 @@ object SparkEntry {
         graft.corpus.RefQuery(1, "dup stream"))
       val fA = col("lang") === "en"
       val fB = col("lang") =!= "en"
-      val welch = graft.search.Wand.tTestAggSnapshot(s, snap, qs, "dl", fA, fB)
+      val welch = graft.search.Aggs.tTestAggSnapshot(s, snap, qs, "dl", fA, fB)
         .withColumn("mode", lit("welch"))
-      val pooled = graft.search.Wand.tTestAggSnapshot(s, snap, qs.take(1), "dl",
+      val pooled = graft.search.Aggs.tTestAggSnapshot(s, snap, qs.take(1), "dl",
         fA, fB, homoscedastic = true)
         .withColumn("mode", lit("pooled"))
       welch.unionByName(pooled)
@@ -2724,7 +2724,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q112", withLang = true, corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter join group"))
-      graft.search.Wand.samplerAggSnapshot(s, snap, qs, "lang", 30)
+      graft.search.Aggs.samplerAggSnapshot(s, snap, qs, "lang", 30)
         .orderBy("query_id", "value")
     }),
 
@@ -2737,7 +2737,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q113", withLang = true, withRepo = true, corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter join group"))
-      graft.search.Wand.diversifiedSamplerAggSnapshot(s, snap, qs, "lang", 30,
+      graft.search.Aggs.diversifiedSamplerAggSnapshot(s, snap, qs, "lang", 30,
         "repo", 3)
         .orderBy("query_id", "value")
     }),
@@ -2870,7 +2870,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "filter group sort"),
         graft.corpus.RefQuery(2, "dup stream batch"))
-      graft.search.Wand.facetCountsSnapshot(s, snap, qs, "lang")
+      graft.search.Aggs.facetCountsSnapshot(s, snap, qs, "lang")
         .orderBy("query_id", "facet")
     }),
 
@@ -2932,9 +2932,9 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"),
         graft.corpus.RefQuery(2, "filter sort group"))
-      val or = graft.search.Wand.matchCountsSnapshot(s, snap, qs)
+      val or = graft.search.Aggs.matchCountsSnapshot(s, snap, qs)
         .withColumn("mode", lit("or"))
-      val and = graft.search.Wand.matchCountsSnapshot(s, snap, qs, conjunctive = true)
+      val and = graft.search.Aggs.matchCountsSnapshot(s, snap, qs, conjunctive = true)
         .withColumn("mode", lit("and"))
       or.unionByName(and).select("query_id", "mode", "doc_count")
         .orderBy("query_id", "mode")
@@ -3074,8 +3074,8 @@ object SparkEntry {
           col("content").as("text"))
       val qs = Seq(graft.corpus.RefQuery(0, "spark"),
         graft.corpus.RefQuery(1, "filter group"))
-      val raw = graft.search.Wand.significantTextSnapshot(s, snap, qs, 10, src)
-      val ded = graft.search.Wand.significantTextSnapshot(s, snap, qs, 10, src,
+      val raw = graft.search.Aggs.significantTextSnapshot(s, snap, qs, 10, src)
+      val ded = graft.search.Aggs.significantTextSnapshot(s, snap, qs, 10, src,
         filterDuplicateText = true)
       raw.withColumn("fn", lit("raw"))
         .unionByName(ded.withColumn("fn", lit("dedup")))
@@ -3154,8 +3154,8 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      val st = graft.search.Wand.statsAggSnapshot(s, snap, qs, "dl")
-      val cd = graft.search.Wand.cardinalityAggSnapshot(s, snap, qs, "lang")
+      val st = graft.search.Aggs.statsAggSnapshot(s, snap, qs, "dl")
+      val cd = graft.search.Aggs.cardinalityAggSnapshot(s, snap, qs, "lang")
       st.join(cd, Seq("query_id"))
         .select(col("query_id"), col("doc_count"),
           col("min_v").cast("long").as("min_dl"),
@@ -3178,7 +3178,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      graft.search.Wand.rangeCountsSnapshot(s, snap, qs, "dl",
+      graft.search.Aggs.rangeCountsSnapshot(s, snap, qs, "dl",
         Seq(40.0, 60.0, 80.0))
         .orderBy("query_id", "bucket")
     }),
@@ -3196,7 +3196,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "dup stream"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      graft.search.Wand.histogramAggSnapshot(s, snap, qs, "dl", 40.0)
+      graft.search.Aggs.histogramAggSnapshot(s, snap, qs, "dl", 40.0)
         .orderBy("query_id", "key")
     }),
 
@@ -3261,7 +3261,7 @@ object SparkEntry {
       stageEngineToks(s, d, corpus, "q83", withLang = true, corpusKey = "base")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),
         graft.corpus.RefQuery(1, "filter group sort"))
-      val res = graft.search.Wand.topHitsSnapshot(s, snap, qs, "lang", 2)
+      val res = graft.search.Aggs.topHitsSnapshot(s, snap, qs, "lang", 2)
       val dm = s.read.parquet(snap.docmapDirs: _*).select(col("doc_id"), col("path"))
       res.join(dm, "doc_id")
         .select(col("query_id"), col("facet"), col("rank"),
@@ -3534,7 +3534,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter group sort"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      graft.search.Wand.stringStatsAggSnapshot(s, snap, qs, "repo")
+      graft.search.Aggs.stringStatsAggSnapshot(s, snap, qs, "repo")
         .select(col("query_id"), col("doc_count"),
           col("min_length"), col("max_length"),
           round(col("avg_length"), 4).as("avg_length"),
@@ -3554,7 +3554,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"),
         graft.corpus.RefQuery(1, "filter group sort"),
         graft.corpus.RefQuery(2, "zzznosuchterm"))
-      graft.search.Wand.percentilesBucketAggSnapshot(s, snap, qs, "lang",
+      graft.search.Aggs.percentilesBucketAggSnapshot(s, snap, qs, "lang",
           Seq(0.25, 0.5, 0.75, 0.99))
         .select(col("query_id"), col("pct"), col("bucket_count"),
           round(col("value"), 4).as("value"))

@@ -35,21 +35,18 @@ object Harness {
       .withColumn("identical", col("kind") === "identical")
   }
 
-  /** Doc identities with NO live docmap row — tombstoned and never
-    * re-indexed. Both harness entry points mask THESE rather than raw
-    * tombstoned ids: after an [[graft.index.IndexBuilder.upsert]] the old
-    * row is tombstoned but the identity is live again under a new
-    * (shard, ord), and the golden side must keep scoring it (with the
-    * new content the caller's corpus carries). */
-  private def deadIds(spark: SparkSession, snap: Snapshot): Option[DataFrame] =
+  /** Doc identities with NO row in the `live` docmap (see
+    * [[Wand.liveRows]]) — tombstoned and never re-indexed. Both harness
+    * entry points mask THESE rather than raw tombstoned ids: after an
+    * [[graft.index.IndexBuilder.upsert]] the old row is tombstoned but the
+    * identity is live again under a new (shard, ord), and the golden side
+    * must keep scoring it (with the new content the caller's corpus
+    * carries). */
+  private def deadIds(spark: SparkSession, snap: Snapshot,
+                      live: => DataFrame): Option[DataFrame] =
     if (snap.tombstoneDirs.isEmpty) None
-    else {
-      val ts = spark.read.parquet(snap.tombstoneDirs: _*)
-      val live = spark.read.parquet(snap.docmapDirs: _*)
-        .join(ts.select("shard", "ord"), Seq("shard", "ord"), "left_anti")
-      Some(ts.select("doc_id").distinct()
-        .join(live.select("doc_id"), Seq("doc_id"), "left_anti"))
-    }
+    else Some(spark.read.parquet(snap.tombstoneDirs: _*).select("doc_id").distinct()
+      .join(live.select("doc_id"), Seq("doc_id"), "left_anti"))
 
   /** Run both engines over the same query set and compare. The golden side
     * applies the index builder's bad-row filter first — otherwise a corpus
@@ -61,7 +58,8 @@ object Harness {
              queries: Seq[RefQuery], k: Int, scoreEps: Double = 0.0): DataFrame = {
     val docs0 = corpus.filter(!graft.index.IndexBuilder.isBadRow)
       .select(graft.index.IndexBuilder.docIdCol.as("doc_id"), col("content"))
-    val docs = deadIds(spark, snap)
+    val docs = deadIds(spark, snap,
+        Wand.liveRows(spark, snap, spark.read.parquet(snap.docmapDirs: _*)))
       .map(t => docs0.join(t, Seq("doc_id"), "left_anti")).getOrElse(docs0)
     // golden analyzes with the SNAPSHOT's chain — the harness must not
     // diverge from the index on the first stopword/stem
@@ -100,8 +98,8 @@ object Harness {
     * stored sha256(content) must equal a fresh sha256 over the source
     * (north rule / input_hint). Returns the violating rows (expect 0). */
   def shaViolations(spark: SparkSession, snap: Snapshot, corpus: DataFrame): DataFrame = {
-    val docmap0 = spark.read.parquet(snap.docmapDirs: _*)
-      .select(col("shard"), col("ord"), col("doc_id"), col("sha256"))
+    val docmap = Wand.liveRows(spark, snap, spark.read.parquet(snap.docmapDirs: _*)
+      .select(col("shard"), col("ord"), col("doc_id"), col("sha256")))
     // same bad-row filter as replay(): dead-lettered rows have no docmap
     // entry BY DESIGN — without the filter they'd surface as full-outer
     // rows with a null sha and be miscounted as violations. The docmap
@@ -112,14 +110,8 @@ object Harness {
     val src0 = corpus.filter(!graft.index.IndexBuilder.isBadRow)
       .select(graft.index.IndexBuilder.docIdCol.as("doc_id"),
         sha2(col("content"), 256).as("expected_sha"))
-    val (docmap, src) =
-      if (snap.tombstoneDirs.isEmpty) (docmap0, src0)
-      else {
-        val ts = spark.read.parquet(snap.tombstoneDirs: _*).select("shard", "ord")
-        val live = docmap0.join(ts, Seq("shard", "ord"), "left_anti")
-        (live, deadIds(spark, snap)
-          .map(d => src0.join(d, Seq("doc_id"), "left_anti")).getOrElse(src0))
-      }
+    val src = deadIds(spark, snap, docmap)
+      .map(d => src0.join(d, Seq("doc_id"), "left_anti")).getOrElse(src0)
     docmap.join(src, Seq("doc_id"), "full_outer")
       .filter(col("sha256").isNull || col("expected_sha").isNull ||
         col("sha256") =!= col("expected_sha"))

@@ -662,7 +662,7 @@ object IndexBuilder {
 
   /** Every staged row of the index (full build + all appended batches)
     * under the explicit schema — the durable per-doc token record that
-    * term deltas and [[graft.search.Wand.significantTerms]] recompute
+    * term deltas and [[graft.search.Aggs.significantTerms]] recompute
     * from. One read per staging root, unioned: each root is independently
     * shard-partitioned, and multi-root partition discovery rejects
     * "conflicting directory structures". Includes tombstoned and

@@ -1,7 +1,6 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.corpus.RefQuery
 import graft.table.Snapshot
@@ -58,25 +57,16 @@ object Nested {
     require(Wand.HasChildScoreModes(scoreMode),
       s"unknown nested score_mode: $scoreMode " +
         s"(${Wand.HasChildScoreModes.mkString("|")})")
-    val scored = Wand.scoredMatchSet(spark, snap, queries, conjunctive)
-    val dmAll = spark.read.parquet(snap.docmapDirs: _*)
-    val nested = scored
-      .join(dmAll.select(col("shard"), col("ord"), col("doc_id"), col("repo"),
-        col("path"), col("commit"), col("lang")), Seq("shard", "ord"))
+    val nested = Wand.withDocmap(spark, snap, Wand.scoredMatchSet(spark, snap, queries,
+        conjunctive), col("doc_id"), col("repo"), col("path"), col("commit"), col("lang"))
       .filter(nestedFilter)
       .select(col("query_id"), nestedParentKey.cast("string").as("pkey"),
         col("doc_id").as("child_id"), col("score"))
     val perParent = Wand.hasChildCombined(nested, scoreMode, innerHitsK)
-    val parents = Wand.liveRows(spark, snap, dmAll.filter(parentFilter))
+    val parents = Wand.liveRows(spark, snap,
+        spark.read.parquet(snap.docmapDirs: _*).filter(parentFilter))
       .select(parentKey.cast("string").as("pkey"), col("doc_id"))
-    val joined = perParent.join(parents, Seq("pkey"))
-    val wB = Window.partitionBy(col("query_id"), col("pb"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    joined.withColumn("pb", pmod(xxhash64(col("doc_id")), lit(64)))
-      .withColumn("pr", row_number().over(wB)).filter(col("pr") <= k)
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Wand.topKByDocHash(perParent.join(parents, Seq("pkey")), k)
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"),
         col("n_children").as("n_nested"), posexplode(col("inner")))
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"),

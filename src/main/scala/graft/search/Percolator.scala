@@ -153,9 +153,8 @@ object Percolator {
     // inverted registration: term -> queries asking for it; query -> #terms
     // needed to match. Both are query-scale; broadcast (not closure-
     // captured) so a large registry ships once per executor, not per task.
-    val termQ: Map[String, Array[Int]] = queries.toSeq
-      .flatMap { case (qid, q) => q.terms.distinct.map(t => (t, qid)) }
-      .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).distinct.sorted.toArray }
+    val termQ: Map[String, Array[Int]] =
+      Wand.termQueries(queries.map { case (qid, q) => qid -> q.terms })
     val need: Map[Int, Int] = queries.map { case (q, r) =>
       q -> (if (r.terms.isEmpty) 0
             else if (conjunctive) r.terms.distinct.length else 1)
@@ -164,9 +163,8 @@ object Percolator {
     // only match when ALL its distinct words are present, so phrase
     // words register in their own word -> queries map and the O(dl)
     // positional scan runs only for fully-covered candidates
-    val phraseTermQ: Map[String, Array[Int]] = queries.toSeq
-      .flatMap { case (qid, q) => q.phrases.flatten.distinct.map(w => (w, qid)) }
-      .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).distinct.sorted.toArray }
+    val phraseTermQ: Map[String, Array[Int]] =
+      Wand.termQueries(queries.map { case (qid, q) => qid -> q.phrases.flatten.toArray })
     val pneed: Map[Int, Int] =
       queries.map { case (q, r) => q -> r.phrases.flatten.distinct.size }
     val phrasesByQ: Map[Int, Array[Array[String]]] =

@@ -495,7 +495,7 @@ class EngineSpec extends AnyFunSuite {
     val common = spark.read.parquet(snap0.termstatsDir)
       .orderBy($"df".desc, $"term".asc).select("term").as[String].head()
     val broad = Seq(graft.corpus.RefQuery(0, s"$common $term"))
-    val tm = Wand.topMetricsAggSnapshot(spark, snap2, broad, "sortv", "dl", 10,
+    val tm = Aggs.topMetricsAggSnapshot(spark, snap2, broad, "sortv", "dl", 10,
       ascending = true).cache()
     assert(tm.count() > 0 && tm.filter($"sort_value".isNull).count() == 0)
     assert(tm.filter($"sort_value" =!= 2.5).count() == 0)
@@ -583,7 +583,7 @@ class EngineSpec extends AnyFunSuite {
       out
     }
 
-    def engine() = Wand.significantTerms(spark, dirS, qs, 10)
+    def engine() = Aggs.significantTerms(spark, dirS, qs, 10)
       .orderBy("rank").select($"term", $"fg_df", $"bg_df", $"score")
       .as[(String, Long, Long, Double)].collect().toSeq
 
@@ -1244,7 +1244,7 @@ class EngineSpec extends AnyFunSuite {
   test("scripted_metric: map/combine/reduce over matched docmap rows") {
     assert(snap.isComplete)
     val fq = queries.take(2) :+ graft.corpus.RefQuery(995, "zzznosuchterm")
-    val got = Wand.scriptedMetricAgg[(Long, Long, Long), (Long, Long, Long)](
+    val got = Aggs.scriptedMetricAgg[(Long, Long, Long), (Long, Long, Long)](
         spark, indexDir, fq,
         r => (1L, r.getAs[Long]("dl"), r.getAs[Long]("dl")),
         (a, b) => (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3)),
@@ -1287,7 +1287,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("extended_stats: moments over the match set, golden-identical") {
     val eq = queries.take(2) :+ graft.corpus.RefQuery(993, "zzznosuchterm")
-    val got = Wand.extendedStatsAggSnapshot(spark, snap, eq, "dl").cache()
+    val got = Aggs.extendedStatsAggSnapshot(spark, snap, eq, "dl").cache()
     val full = Golden.topK(spark, docs, eq, numDocs.toInt)
     val meta = corpus.select(IndexBuilder.docIdCol.as("doc_id"),
       size(graft.analyze.Tokenizer.tokens($"content")).cast("double").as("v"))
@@ -1311,7 +1311,7 @@ class EngineSpec extends AnyFunSuite {
   test("percentile_ranks: exact CDF at each probe, golden-identical") {
     val rq = queries.take(2) :+ graft.corpus.RefQuery(993, "zzznosuchterm")
     val probes = Seq(120.0, 250.0)
-    val got = Wand.percentileRanksAggSnapshot(spark, snap, rq, "dl", probes)
+    val got = Aggs.percentileRanksAggSnapshot(spark, snap, rq, "dl", probes)
       .cache()
     val full = Golden.topK(spark, docs, rq, numDocs.toInt)
     val meta = corpus.select(IndexBuilder.docIdCol.as("doc_id"),
@@ -1333,14 +1333,14 @@ class EngineSpec extends AnyFunSuite {
     assert(zm.filter($"doc_count" =!= 0L || $"pct_rank".isNotNull).count() == 0)
     got.unpersist()
     intercept[IllegalArgumentException] {
-      Wand.percentileRanksAggSnapshot(spark, snap, rq, "dl", Seq.empty)
+      Aggs.percentileRanksAggSnapshot(spark, snap, rq, "dl", Seq.empty)
     }
   }
 
   test("adjacency_matrix: per-filter and pairwise intersection counts") {
     val filters = Seq(("a", queries(0).text), ("b", queries(1).text),
       ("z", "zzznosuchterm"))
-    val got = Wand.adjacencyMatrixAggSnapshot(spark, snap, filters).cache()
+    val got = Aggs.adjacencyMatrixAggSnapshot(spark, snap, filters).cache()
     // golden: match sets from the exact scorer, intersections by doc_id
     val fa = Golden.topK(spark, docs, Seq(graft.corpus.RefQuery(0, queries(0).text)),
       numDocs.toInt).select($"doc_id").as[String].collect().toSet
@@ -1355,10 +1355,10 @@ class EngineSpec extends AnyFunSuite {
       !gotMap.contains("b&z"))
     got.unpersist()
     intercept[IllegalArgumentException] {
-      Wand.adjacencyMatrixAggSnapshot(spark, snap, Seq(("a", "x"), ("a", "y")))
+      Aggs.adjacencyMatrixAggSnapshot(spark, snap, Seq(("a", "x"), ("a", "y")))
     }
     intercept[IllegalArgumentException] {
-      Wand.adjacencyMatrixAggSnapshot(spark, snap, Seq(("a&b", "x")))
+      Aggs.adjacencyMatrixAggSnapshot(spark, snap, Seq(("a&b", "x")))
     }
   }
 
@@ -1378,7 +1378,7 @@ class EngineSpec extends AnyFunSuite {
       var pages = 0
       var done = false
       while (!done) {
-        val page = Wand.compositeAggSnapshot(spark, snap, Seq(q), "lang", 2,
+        val page = Aggs.compositeAggSnapshot(spark, snap, Seq(q), "lang", 2,
           after).as[(Int, String, Long)].collect()
         if (page.isEmpty) done = true
         else {
@@ -1395,14 +1395,14 @@ class EngineSpec extends AnyFunSuite {
     }
     assert(seen == truth)
     intercept[IllegalArgumentException] {
-      Wand.compositeAggSnapshot(spark, snap, cq, "lang", 0)
+      Aggs.compositeAggSnapshot(spark, snap, cq, "lang", 0)
     }
   }
 
   test("rare_terms: long-tail buckets only, golden-identical") {
     val rq = queries.take(2)
     val maxDc = 3L
-    val got = Wand.rareTermsAggSnapshot(spark, snap, rq, "dl", maxDc)
+    val got = Aggs.rareTermsAggSnapshot(spark, snap, rq, "dl", maxDc)
       .select($"query_id", $"facet".cast("long").as("facet"), $"doc_count")
       .as[(Int, Long, Long)].collect().toSet
     val full = Golden.topK(spark, docs, rq, numDocs.toInt)
@@ -1418,7 +1418,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("multi_terms: tuple buckets ranked by count then key") {
     val mq = queries.take(2)
-    val got = Wand.multiTermsAggSnapshot(spark, snap, mq, Seq("lang", "repo"), 4)
+    val got = Aggs.multiTermsAggSnapshot(spark, snap, mq, Seq("lang", "repo"), 4)
     val full = Golden.topK(spark, docs, mq, numDocs.toInt)
     val meta = corpus.select(IndexBuilder.docIdCol.as("doc_id"), $"lang", $"repo")
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"query_id")
@@ -1433,14 +1433,14 @@ class EngineSpec extends AnyFunSuite {
     assert(cmp.filter($"g_l".isNull || $"lang".isNull || $"g_l" =!= $"lang" ||
       $"g_r" =!= $"repo" || $"g_n" =!= $"doc_count").count() == 0)
     intercept[IllegalArgumentException] {
-      Wand.multiTermsAggSnapshot(spark, snap, mq, Seq.empty, 4)
+      Aggs.multiTermsAggSnapshot(spark, snap, mq, Seq.empty, 4)
     }
   }
 
   test("facet stats: terms bucket + stats sub-agg, golden-identical") {
     val fq = queries.take(2) :+ graft.corpus.RefQuery(993, "zzznosuchterm")
     val topN = 3
-    val got = Wand.facetStatsAggSnapshot(spark, snap, fq, "lang", "dl", topN)
+    val got = Aggs.facetStatsAggSnapshot(spark, snap, fq, "lang", "dl", topN)
       .cache()
     val full = Golden.topK(spark, docs, fq, numDocs.toInt)
     val meta = corpus.select(IndexBuilder.docIdCol.as("doc_id"), $"lang",
@@ -1470,14 +1470,14 @@ class EngineSpec extends AnyFunSuite {
     assert(got.filter($"query_id" === 993).count() == 0)
     got.unpersist()
     intercept[IllegalArgumentException] {
-      Wand.facetStatsAggSnapshot(spark, snap, fq, "lang", "dl", 0)
+      Aggs.facetStatsAggSnapshot(spark, snap, fq, "lang", "dl", 0)
     }
   }
 
   test("percentiles agg: exact quantiles over the match set, golden-identical") {
     val pq = queries.take(2) :+ graft.corpus.RefQuery(993, "zzznosuchterm")
     val pcts = Seq(0.25, 0.5, 0.9)
-    val got = Wand.percentilesAggSnapshot(spark, snap, pq, "dl", pcts).cache()
+    val got = Aggs.percentilesAggSnapshot(spark, snap, pq, "dl", pcts).cache()
     // golden: the exact scorer's match set (score > 0 ⟺ any term matches),
     // the same `percentile` function over the same doubles
     val full = Golden.topK(spark, docs, pq, numDocs.toInt)
@@ -1506,10 +1506,10 @@ class EngineSpec extends AnyFunSuite {
     assert(zm.filter($"doc_count" =!= 0L || $"value".isNotNull).count() == 0)
     got.unpersist()
     intercept[IllegalArgumentException] {
-      Wand.percentilesAggSnapshot(spark, snap, pq, "dl", Seq(1.5))
+      Aggs.percentilesAggSnapshot(spark, snap, pq, "dl", Seq(1.5))
     }
     intercept[IllegalArgumentException] {
-      Wand.percentilesAggSnapshot(spark, snap, pq, "dl", Seq.empty)
+      Aggs.percentilesAggSnapshot(spark, snap, pq, "dl", Seq.empty)
     }
   }
 
@@ -1519,9 +1519,9 @@ class EngineSpec extends AnyFunSuite {
     // percentiles: Greenwald–Khanna at accuracy 10000 returns an actual
     // data value whose rank error is ≤ n/10000 — on this corpus that is
     // an adjacent element, so values stay within max(1, 5%) of exact
-    val ex = Wand.percentilesAggSnapshot(spark, snap, pq, "dl", pcts)
+    val ex = Aggs.percentilesAggSnapshot(spark, snap, pq, "dl", pcts)
       .withColumnRenamed("doc_count", "e_n").withColumnRenamed("value", "e_v")
-    val ap = Wand.percentilesAggSnapshot(spark, snap, pq, "dl", pcts,
+    val ap = Aggs.percentilesAggSnapshot(spark, snap, pq, "dl", pcts,
         approx = true)
       .withColumnRenamed("doc_count", "a_n").withColumnRenamed("value", "a_v")
     val cmp = ex.join(ap, Seq("query_id", "pct"), "full_outer").cache()
@@ -1531,9 +1531,9 @@ class EngineSpec extends AnyFunSuite {
       greatest(lit(1.0), lit(0.05) * abs($"e_v"))).count() == 0)
     cmp.unpersist()
     // cardinality: HLL++ at the default rsd is near-exact at small counts
-    val exC = Wand.cardinalityAggSnapshot(spark, snap, pq, "lang")
+    val exC = Aggs.cardinalityAggSnapshot(spark, snap, pq, "lang")
       .as[(Int, Long)].collect().toMap
-    val apC = Wand.cardinalityAggSnapshot(spark, snap, pq, "lang",
+    val apC = Aggs.cardinalityAggSnapshot(spark, snap, pq, "lang",
       approx = true).as[(Int, Long)].collect().toMap
     pq.foreach { q =>
       val e = exC(q.query_id); val a = apC(q.query_id)
@@ -1541,9 +1541,9 @@ class EngineSpec extends AnyFunSuite {
         s"cardinality q${q.query_id}: approx $a vs exact $e")
     }
     // MAD: both medians approximate; counts exact, value within max(1, 10%)
-    val exM = Wand.madAggSnapshot(spark, snap, pq, "dl")
+    val exM = Aggs.madAggSnapshot(spark, snap, pq, "dl")
       .as[(Int, Long, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    val apM = Wand.madAggSnapshot(spark, snap, pq, "dl", approx = true)
+    val apM = Aggs.madAggSnapshot(spark, snap, pq, "dl", approx = true)
       .as[(Int, Long, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     pq.foreach { q =>
       val (en, ev) = exM(q.query_id); val (an, av) = apM(q.query_id)
@@ -2310,7 +2310,7 @@ class EngineSpec extends AnyFunSuite {
     val docTerms = corpus.select($"lang", IndexBuilder.docIdCol.as("doc_id"),
       explode(array_distinct(graft.analyze.Tokenizer.tokens($"content"))).as("term"))
     // OR: docs containing ANY query term, counted per lang
-    val got = Wand.facetCountsSnapshot(spark, snap, fq, "lang")
+    val got = Aggs.facetCountsSnapshot(spark, snap, fq, "lang")
     val expOr = docTerms.join(qt, Seq("term"))
       .select("query_id", "doc_id", "lang").distinct()
       .groupBy("query_id", "lang").agg(count(lit(1)).as("exp_count"))
@@ -2321,7 +2321,7 @@ class EngineSpec extends AnyFunSuite {
     assert(cmp.filter($"doc_count".isNull || $"exp_count".isNull ||
       $"doc_count" =!= $"exp_count").count() == 0)
     // AND: docs containing ALL query terms
-    val gotAnd = Wand.facetCountsSnapshot(spark, snap, fq, "lang", conjunctive = true)
+    val gotAnd = Aggs.facetCountsSnapshot(spark, snap, fq, "lang", conjunctive = true)
     val qn = fq.map(q => (q.query_id, Golden.queryTerms(q.text).length))
       .toDF("query_id", "qt")
     val expAnd = docTerms.join(qt, Seq("term"))
@@ -2350,11 +2350,11 @@ class EngineSpec extends AnyFunSuite {
     val dirF = TestSpark.tempDir("graft-facet-del")
     IndexBuilder.build(spark, hand, dirF, BuildConfig(numShards = 2, commitEvery = 2))
     val qs = Seq(graft.corpus.RefQuery(0, "zebra"))
-    val before = Wand.facetCounts(spark, dirF, qs, "lang")
+    val before = Aggs.facetCounts(spark, dirF, qs, "lang")
       .as[(Int, String, Long)].collect().toSet
     assert(before == Set((0, "scala", 2L), (0, "py", 1L)))
     IndexBuilder.delete(spark, dirF, col("path") === "p0")
-    val after = Wand.facetCounts(spark, dirF, qs, "lang")
+    val after = Aggs.facetCounts(spark, dirF, qs, "lang")
       .as[(Int, String, Long)].collect().toSet
     assert(after == Set((0, "scala", 1L), (0, "py", 1L)))
   }
@@ -2415,7 +2415,7 @@ class EngineSpec extends AnyFunSuite {
       .toDF("query_id", "term")
     val docTerms = docs.select($"doc_id",
       explode(array_distinct(graft.analyze.Tokenizer.tokens($"content"))).as("term"))
-    val gotOr = Wand.matchCountsSnapshot(spark, snap, fq)
+    val gotOr = Aggs.matchCountsSnapshot(spark, snap, fq)
       .as[(Int, Long)].collect().toMap
     val expOr = docTerms.join(qt, Seq("term")).select("query_id", "doc_id").distinct()
       .groupBy("query_id").count().as[(Int, Long)].collect().toMap
@@ -2424,7 +2424,7 @@ class EngineSpec extends AnyFunSuite {
         s"OR count for query ${q.query_id}")
     }
     assert(gotOr(99) == 0L) // totality: the no-hit query reports 0
-    val gotAnd = Wand.matchCountsSnapshot(spark, snap, fq, conjunctive = true)
+    val gotAnd = Aggs.matchCountsSnapshot(spark, snap, fq, conjunctive = true)
       .as[(Int, Long)].collect().toMap
     val qn = fq.map(q => (q.query_id, Golden.queryTerms(q.text).length))
       .toDF("query_id", "qt")
@@ -2725,7 +2725,7 @@ class EngineSpec extends AnyFunSuite {
   test("top_hits: per-bucket top-n, scores bit-identical to golden") {
     val fq = queries.take(2) :+ graft.corpus.RefQuery(991, "zzznosuchterm")
     val n = 3
-    val got = Wand.topHitsSnapshot(spark, snap, fq, "lang", n).cache()
+    val got = Aggs.topHitsSnapshot(spark, snap, fq, "lang", n).cache()
     // golden FULL ranking (k = corpus size), bucketed independently here
     val full = Golden.topK(spark, docs, fq, numDocs.toInt)
     val meta = corpus.select(IndexBuilder.docIdCol.as("doc_id"), $"lang".as("facet"))
@@ -2745,7 +2745,7 @@ class EngineSpec extends AnyFunSuite {
     // every bucket with at least n matches reports exactly n hits
     assert(got.filter($"query_id" === 991).count() == 0)
     intercept[IllegalArgumentException] {
-      Wand.topHitsSnapshot(spark, snap, fq, "lang", 0)
+      Aggs.topHitsSnapshot(spark, snap, fq, "lang", 0)
     }
   }
 
@@ -2874,7 +2874,7 @@ class EngineSpec extends AnyFunSuite {
         sum($"dl".cast("double")).as("e_sum"), avg($"dl").as("e_avg"))
       .as[(Int, Long, Double, Double, Double, Double)].collect()
       .map(r => r._1 -> (r._2, r._3, r._4, r._5, r._6)).toMap
-    val got = Wand.statsAggSnapshot(spark, snap, fq, "dl").cache()
+    val got = Aggs.statsAggSnapshot(spark, snap, fq, "dl").cache()
     assert(got.count() == fq.size) // totality: every query has a row
     got.collect().foreach { r =>
       val qid = r.getInt(0)
@@ -2890,18 +2890,65 @@ class EngineSpec extends AnyFunSuite {
     // cardinality: distinct langs over the match set, 0 for no-hit queries
     val expCard = matchMeta.groupBy("query_id")
       .agg(count_distinct($"lang").as("c")).as[(Int, Long)].collect().toMap
-    val gotCard = Wand.cardinalityAggSnapshot(spark, snap, fq, "lang")
+    val gotCard = Aggs.cardinalityAggSnapshot(spark, snap, fq, "lang")
       .as[(Int, Long)].collect().toMap
     fq.foreach { q =>
       assert(gotCard(q.query_id) == expCard.getOrElse(q.query_id, 0L),
         s"cardinality for query ${q.query_id}")
     }
+    // string_stats over the non-null langs: count, lengths, char entropy
+    val langs: Map[Int, Seq[String]] = matchMeta.filter($"lang".isNotNull)
+      .select("query_id", "lang").as[(Int, String)].collect().toSeq
+      .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2) }
+    val gotStr = Aggs.stringStatsAggSnapshot(spark, snap, fq, "lang").collect()
+    assert(gotStr.length == fq.size)
+    gotStr.foreach { r =>
+      val qid = r.getInt(0)
+      langs.get(qid) match {
+        case Some(vs) =>
+          val chars = vs.flatMap(_.toSeq)
+          val ent = chars.groupBy(identity).values.map { cs =>
+            val p = cs.size.toDouble / chars.size
+            -p * math.log(p) / math.log(2.0)
+          }.sum
+          assert(r.getLong(1) == vs.size && r.getInt(2) == vs.map(_.length).min &&
+            r.getInt(3) == vs.map(_.length).max &&
+            math.abs(r.getDouble(4) - vs.map(_.length).sum.toDouble / vs.size) < 1e-9 &&
+            math.abs(r.getDouble(5) - ent) < 1e-9, s"string_stats for query $qid: $r")
+        case None =>
+          assert(r.getLong(1) == 0L && (2 to 5).forall(r.isNullAt),
+            s"zero-match query $qid must report count 0, null stats: $r")
+      }
+    }
+    // percentiles_bucket: linear-interpolation percentiles of the
+    // per-lang bucket counts; every (query, pct) row present
+    val pcts = Seq(0.0, 0.5, 0.9)
+    val bucketCounts: Map[Int, Seq[Long]] = matchMeta.groupBy("query_id", "lang").count()
+      .select("query_id", "count").as[(Int, Long)].collect().toSeq
+      .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).sorted }
+    val gotPb = Aggs.percentilesBucketAggSnapshot(spark, snap, fq, "lang", pcts).collect()
+    assert(gotPb.length == fq.size * pcts.size)
+    gotPb.foreach { r =>
+      val (qid, p) = (r.getInt(0), r.getDouble(1))
+      bucketCounts.get(qid) match {
+        case Some(xs) =>
+          val pos = p * (xs.size - 1)
+          val (lo, hi) = (xs(pos.toInt), xs(math.ceil(pos).toInt))
+          assert(r.getLong(2) == xs.size &&
+            math.abs(r.getDouble(3) - (lo + (pos - pos.toInt) * (hi - lo))) < 1e-9,
+            s"percentiles_bucket for query $qid at $p: $r")
+        case None =>
+          assert(r.getLong(2) == 0L && r.isNullAt(3),
+            s"zero-match query $qid must report bucket_count 0, null value: $r")
+      }
+    }
+    assert(gotPb.filter(_.getInt(0) == 99).map(_.getDouble(1)).toSeq.sorted == pcts)
   }
 
   test("range aggregation: half-open buckets, zero-filled, corpus-identical") {
     val fq = queries.take(2)
     val bounds = Seq(150.0, 250.0)
-    val got = Wand.rangeCountsSnapshot(spark, snap, fq, "dl", bounds).cache()
+    val got = Aggs.rangeCountsSnapshot(spark, snap, fq, "dl", bounds).cache()
     // totality: |queries| x (|bounds|+1) rows, every bucket present
     assert(got.count() == fq.size * (bounds.size + 1))
     // independent recount with explicit half-open predicates
@@ -2929,14 +2976,14 @@ class EngineSpec extends AnyFunSuite {
       (Some(250.0), None)))
     // non-ascending bounds are rejected
     intercept[IllegalArgumentException] {
-      Wand.rangeCountsSnapshot(spark, snap, fq, "dl", Seq(5.0, 5.0))
+      Aggs.rangeCountsSnapshot(spark, snap, fq, "dl", Seq(5.0, 5.0))
     }
   }
 
   test("histogram aggregation: floor-keyed, gap-filled, corpus-identical") {
     val fq = queries.take(2) :+ graft.corpus.RefQuery(990, "zzznosuchterm")
     val interval = 40.0
-    val got = Wand.histogramAggSnapshot(spark, snap, fq, "dl", interval).cache()
+    val got = Aggs.histogramAggSnapshot(spark, snap, fq, "dl", interval).cache()
     // independent recount: bucket key = floor(dl / interval) * interval
     val qt = fq.flatMap(q => Golden.queryTerms(q.text).map(t => (q.query_id, t)))
       .toDF("query_id", "term")
@@ -2971,11 +3018,11 @@ class EngineSpec extends AnyFunSuite {
     assert(!gotRows.exists(_._1 == 990))
     // bucket-explosion circuit breaker fails the job, not the driver
     intercept[Exception] {
-      Wand.histogramAggSnapshot(spark, snap, fq.take(1), "dl", 0.001,
+      Aggs.histogramAggSnapshot(spark, snap, fq.take(1), "dl", 0.001,
         maxBuckets = 4).collect()
     }
     intercept[IllegalArgumentException] {
-      Wand.histogramAggSnapshot(spark, snap, fq, "dl", 0.0)
+      Aggs.histogramAggSnapshot(spark, snap, fq, "dl", 0.0)
     }
   }
 
@@ -3291,11 +3338,11 @@ class EngineSpec extends AnyFunSuite {
   test("derivative + cumulative_sum ride the histogram buckets exactly") {
     val dq = queries.take(2) :+ graft.corpus.RefQuery(995, "zzznosuchterm")
     val interval = 20.0
-    val got = Wand.derivativeAggSnapshot(spark, snap, dq, "dl", interval)
+    val got = Aggs.derivativeAggSnapshot(spark, snap, dq, "dl", interval)
       .cache()
     try {
       // bucket columns are the histogram's, untouched
-      val hist = Wand.histogramAggSnapshot(spark, snap, dq, "dl", interval)
+      val hist = Aggs.histogramAggSnapshot(spark, snap, dq, "dl", interval)
         .withColumnRenamed("doc_count", "h_count")
       val joined = got.join(hist, Seq("query_id", "key"), "full_outer")
       assert(joined.filter($"doc_count".isNull || $"h_count".isNull ||
@@ -3329,7 +3376,7 @@ class EngineSpec extends AnyFunSuite {
     val bq = queries.take(2)
     val minDc = 2L
     val topN = 2
-    val got = Wand.bucketSortAggSnapshot(spark, snap, bq, "lang", "dl",
+    val got = Aggs.bucketSortAggSnapshot(spark, snap, bq, "lang", "dl",
       minDc, topN)
     val full = Golden.topK(spark, docs, bq, numDocs.toInt)
     val meta = corpus.select(IndexBuilder.docIdCol.as("doc_id"), $"lang",
@@ -3350,13 +3397,13 @@ class EngineSpec extends AnyFunSuite {
       bad.collect().take(10).mkString("\n"))
     assert(got.count() > 0)
     intercept[IllegalArgumentException] {
-      Wand.bucketSortAggSnapshot(spark, snap, bq, "lang", "dl", 1L, 0)
+      Aggs.bucketSortAggSnapshot(spark, snap, bq, "lang", "dl", 1L, 0)
     }
   }
 
   test("stats_bucket: sibling stats of the terms buckets, golden-identical") {
     val sq = queries.take(2) :+ graft.corpus.RefQuery(996, "zzznosuchterm")
-    val got = Wand.statsBucketAggSnapshot(spark, snap, sq, "lang")
+    val got = Aggs.statsBucketAggSnapshot(spark, snap, sq, "lang")
     val full = Golden.topK(spark, docs, sq, numDocs.toInt)
     val meta = corpus.select(IndexBuilder.docIdCol.as("doc_id"), $"lang")
     val exp = full.join(meta, "doc_id").groupBy($"query_id", $"lang")
@@ -3378,7 +3425,7 @@ class EngineSpec extends AnyFunSuite {
   test("filters agg: overlapping named buckets plus the other bucket") {
     val fq = queries.take(2) :+ graft.corpus.RefQuery(997, "zzznosuchterm")
     val filters = Seq("has_dup" -> "dup", "has_stream" -> "stream")
-    val got = Wand.filtersAggSnapshot(spark, snap, fq, filters).cache()
+    val got = Aggs.filtersAggSnapshot(spark, snap, fq, filters).cache()
     try {
       val full = Golden.topK(spark, docs, fq, numDocs.toInt)
         .select($"query_id", $"doc_id")
@@ -3407,20 +3454,20 @@ class EngineSpec extends AnyFunSuite {
       assert(gotMap.exists { case ((_, f), c) => f != "_other_" && c > 0 })
     } finally got.unpersist()
     intercept[IllegalArgumentException] {
-      Wand.filtersAggSnapshot(spark, snap, fq, Seq.empty)
+      Aggs.filtersAggSnapshot(spark, snap, fq, Seq.empty)
     }
     intercept[IllegalArgumentException] {
-      Wand.filtersAggSnapshot(spark, snap, fq,
+      Aggs.filtersAggSnapshot(spark, snap, fq,
         Seq("a" -> "dup", "a" -> "stream"))
     }
     intercept[IllegalArgumentException] {
-      Wand.filtersAggSnapshot(spark, snap, fq, Seq("_other_" -> "dup"))
+      Aggs.filtersAggSnapshot(spark, snap, fq, Seq("_other_" -> "dup"))
     }
   }
 
   test("matrix_stats: joint moments of two runtime fields over the match set") {
     val mq = queries.take(2) :+ graft.corpus.RefQuery(998, "zzznosuchterm")
-    val got = Wand.matrixStatsAggSnapshot(spark, snap, mq, "dl", "length(path)")
+    val got = Aggs.matrixStatsAggSnapshot(spark, snap, mq, "dl", "length(path)")
       .cache()
     try {
       val full = Golden.topK(spark, docs, mq, numDocs.toInt)
@@ -3525,7 +3572,7 @@ class EngineSpec extends AnyFunSuite {
     // order — Golden.topK's rank IS the sample cut order
     val full = Golden.topK(spark, docs, qs, numDocs.toInt).cache()
     try {
-      val got = Wand.samplerAggSnapshot(spark, snap, qs, "lang", n)
+      val got = Aggs.samplerAggSnapshot(spark, snap, qs, "lang", n)
       val exp = full.filter($"rank" <= n).join(meta, "doc_id")
         .groupBy($"query_id", $"lang".as("value")).agg(count(lit(1)).as("e_cnt"))
       val cmp = got.join(exp, Seq("query_id", "value"), "full_outer")
@@ -3538,7 +3585,7 @@ class EngineSpec extends AnyFunSuite {
 
       // diversified: at most 2 docs per repo survive BEFORE the cut
       val maxPer = 2
-      val gotD = Wand.diversifiedSamplerAggSnapshot(spark, snap, qs, "lang", n,
+      val gotD = Aggs.diversifiedSamplerAggSnapshot(spark, snap, qs, "lang", n,
         "repo", maxPer)
       val wDiv = org.apache.spark.sql.expressions.Window
         .partitionBy($"query_id", $"repo").orderBy($"score".desc, $"doc_id".asc)
@@ -3552,17 +3599,17 @@ class EngineSpec extends AnyFunSuite {
       assert(cmpD.filter($"doc_count".isNull || $"e_cnt".isNull ||
         $"doc_count" =!= $"e_cnt").count() == 0)
       intercept[IllegalArgumentException] {
-        Wand.diversifiedSamplerAggSnapshot(spark, snap, qs, "lang", n, "repo", 0)
+        Aggs.diversifiedSamplerAggSnapshot(spark, snap, qs, "lang", n, "repo", 0)
       }
       intercept[IllegalArgumentException] {
-        Wand.samplerAggSnapshot(spark, snap, qs, "lang", 0)
+        Aggs.samplerAggSnapshot(spark, snap, qs, "lang", 0)
       }
     } finally full.unpersist()
   }
 
   test("moving_fn / serial_diff: positional pipeline windows over the histogram") {
     val qs = queries.take(2)
-    val gotM = Wand.movingFnAggSnapshot(spark, snap, qs, "dl", 25.0, 3)
+    val gotM = Aggs.movingFnAggSnapshot(spark, snap, qs, "dl", 25.0, 3)
       .select($"query_id", $"key", $"doc_count", $"moving_avg")
       .as[(Int, Double, Long, Option[Double])].collect()
       .groupBy(_._1).map { case (q, xs) => q -> xs.sortBy(_._2) }
@@ -3574,7 +3621,7 @@ class EngineSpec extends AnyFunSuite {
         assert(xs(i)._4 == exp, s"bucket $i of ${xs.length}")
       }
     }
-    val gotS = Wand.serialDiffAggSnapshot(spark, snap, qs, "dl", 25.0, 2)
+    val gotS = Aggs.serialDiffAggSnapshot(spark, snap, qs, "dl", 25.0, 2)
       .select($"query_id", $"key", $"doc_count", $"serial_diff")
       .as[(Int, Double, Long, Option[Double])].collect()
       .groupBy(_._1).map { case (q, xs) => q -> xs.sortBy(_._2) }
@@ -3585,10 +3632,10 @@ class EngineSpec extends AnyFunSuite {
       }
     }
     intercept[IllegalArgumentException] {
-      Wand.movingFnAggSnapshot(spark, snap, qs, "dl", 25.0, 0)
+      Aggs.movingFnAggSnapshot(spark, snap, qs, "dl", 25.0, 0)
     }
     intercept[IllegalArgumentException] {
-      Wand.serialDiffAggSnapshot(spark, snap, qs, "dl", 25.0, 0)
+      Aggs.serialDiffAggSnapshot(spark, snap, qs, "dl", 25.0, 0)
     }
   }
 
@@ -3602,7 +3649,7 @@ class EngineSpec extends AnyFunSuite {
       .select($"query_id", $"v", $"w")
       .as[(Int, Double, Double)].collect().groupBy(_._1)
 
-    val gotW = Wand.weightedAvgAggSnapshot(spark, snap, qs, "dl", "length(path)")
+    val gotW = Aggs.weightedAvgAggSnapshot(spark, snap, qs, "dl", "length(path)")
       .select($"query_id", $"doc_count", $"weighted_avg")
       .as[(Int, Long, Option[Double])].collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(gotW(997) == ((0L, None))) // totality: zero-match row present
@@ -3618,7 +3665,7 @@ class EngineSpec extends AnyFunSuite {
       val lo = r.toInt
       if (lo == r) s(lo) else s(lo) + (r - lo) * (s(lo + 1) - s(lo))
     }
-    val gotM = Wand.madAggSnapshot(spark, snap, qs, "dl")
+    val gotM = Aggs.madAggSnapshot(spark, snap, qs, "dl")
       .select($"query_id", $"doc_count", $"mad")
       .as[(Int, Long, Option[Double])].collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(gotM(997) == ((0L, None)))
@@ -3832,6 +3879,10 @@ class EngineSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { Wand.spanMulti(spark, snapSp, "x") }
     intercept[IllegalArgumentException] {
       Wand.spanMulti(spark, snapSp, "nosuffix")
+    }
+    // one word only: an unmarked word must not join the expansion
+    intercept[IllegalArgumentException] {
+      Wand.spanMulti(spark, snapSp, "class pars*")
     }
     val none = Wand.spanMulti(spark, snapSp, "zzzqqqvv*")
     assert(none == SpanOr(Seq.empty))
@@ -4144,7 +4195,7 @@ class EngineSpec extends AnyFunSuite {
         $"dl" <= $"q3" + ($"q3" - $"q1") * 1.5)
       .groupBy("query_id").agg(min($"dl").as("lo"), max($"dl").as("hi"))
       .as[(Int, Double, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    val got = Wand.boxplotAggSnapshot(spark, snap, fq, "dl").cache()
+    val got = Aggs.boxplotAggSnapshot(spark, snap, fq, "dl").cache()
     try {
       assert(got.count() == fq.size) // totality
       got.collect().foreach { r =>
@@ -4164,7 +4215,7 @@ class EngineSpec extends AnyFunSuite {
       }
     } finally got.unpersist()
     // the approximate path runs and keeps min/max/count exact
-    val ap = Wand.boxplotAggSnapshot(spark, snap, fq.take(1), "dl", approx = true)
+    val ap = Aggs.boxplotAggSnapshot(spark, snap, fq.take(1), "dl", approx = true)
       .collect().head
     val (_, n0, mn0, mx0, _) = exp(fq.head.query_id)
     assert(ap.getLong(1) == n0 && ap.getDouble(2) == mn0 && ap.getDouble(6) == mx0)
@@ -4188,7 +4239,7 @@ class EngineSpec extends AnyFunSuite {
         var_samp(when(fA, $"dl")).as("va"), var_samp(when(fB, $"dl")).as("vb"))
       .as[(Int, Long, Long, Double, Double, Double, Double)].collect()
       .map(r => r._1 -> r).toMap
-    val welch = Wand.tTestAggSnapshot(spark, snap, fq, "dl", fA, fB).cache()
+    val welch = Aggs.tTestAggSnapshot(spark, snap, fq, "dl", fA, fB).cache()
     try {
       assert(welch.count() == fq.size)
       welch.collect().foreach { r =>
@@ -4207,7 +4258,7 @@ class EngineSpec extends AnyFunSuite {
         }
       }
     } finally welch.unpersist()
-    val pooled = Wand.tTestAggSnapshot(spark, snap, fq.take(1), "dl", fA, fB,
+    val pooled = Aggs.tTestAggSnapshot(spark, snap, fq.take(1), "dl", fA, fB,
       homoscedastic = true).collect().head
     val (_, na, nb, ma, mb, va, vb) = sides(fq.head.query_id)
     val sp2 = ((na - 1) * va + (nb - 1) * vb) / (na + nb - 2).toDouble
@@ -4292,7 +4343,7 @@ class EngineSpec extends AnyFunSuite {
         (lo to hi).map(b => (b * interval, counts.getOrElse((q, b), 0L)))
       }
       // percent_of_sum
-      val ps = Wand.normalizeAggSnapshot(spark, snap, fq, "dl", interval,
+      val ps = Aggs.normalizeAggSnapshot(spark, snap, fq, "dl", interval,
         "percent_of_sum").as[(Int, Double, Long, Option[Double])].collect()
         .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
       fq.foreach { q =>
@@ -4305,7 +4356,7 @@ class EngineSpec extends AnyFunSuite {
         }
       }
       // z_score with the population sigma
-      val zs = Wand.normalizeAggSnapshot(spark, snap, fq, "dl", interval,
+      val zs = Aggs.normalizeAggSnapshot(spark, snap, fq, "dl", interval,
         "z_score").as[(Int, Double, Long, Option[Double])].collect()
         .map(r => (r._1, r._2) -> r._4).toMap
       fq.foreach { q =>
@@ -4318,7 +4369,7 @@ class EngineSpec extends AnyFunSuite {
         }
       }
       intercept[IllegalArgumentException] {
-        Wand.normalizeAggSnapshot(spark, snap, fq, "dl", interval, "softmax")
+        Aggs.normalizeAggSnapshot(spark, snap, fq, "dl", interval, "softmax")
       }
       // cumulative_cardinality: distinct langs seen up to each bucket
       val firsts: Map[Int, Seq[(Long, Long)]] = mv
@@ -4326,7 +4377,7 @@ class EngineSpec extends AnyFunSuite {
         .groupBy("query_id", "b").agg(count(lit(1)).as("nv"))
         .as[(Int, Long, Long)].collect().groupBy(_._1)
         .map { case (q, xs) => q -> xs.map(r => (r._2, r._3)).toSeq }
-      val cc = Wand.cumulativeCardinalityAggSnapshot(spark, snap, fq, "dl",
+      val cc = Aggs.cumulativeCardinalityAggSnapshot(spark, snap, fq, "dl",
         interval, "lang").as[(Int, Double, Long, Long)].collect()
         .map(r => (r._1, r._2) -> r._4).toMap
       fq.foreach { q =>
@@ -4351,7 +4402,7 @@ class EngineSpec extends AnyFunSuite {
         .agg(count(lit(1)).as("n"), sum($"dlv".cast("double")).as("s"))
         .as[(Int, Long, Long, Double)].collect()
         .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
-      val gotBs = Wand.bucketScriptAggSnapshot(spark, snap, fq, "dl", interval,
+      val gotBs = Aggs.bucketScriptAggSnapshot(spark, snap, fq, "dl", interval,
         "dl", (n, m) => m / n)
         .as[(Int, Double, Long, Option[Double], Option[Double])].collect()
       gotBs.foreach { case (qid, key, n, m, s) =>
