@@ -263,36 +263,25 @@ object Bench {
     // battery times measure query work, not repeated identical SPIMI
     // builds (round-3 verdict: the builds were ~75% of battery wall-time
     // and masked query-path regressions)
+    // a failed prebuild or query keeps its cause for the side file; a
+    // failed query times as -1
+    def failure(e: Throwable): Option[String] = Some(s"${e.getClass.getName}: ${e.getMessage}")
     val tPre = System.nanoTime()
-    try SparkEntry.prebuildSharedIndexes(spark1, sfDir)
-    catch { case _: Throwable => () }
+    val prebuildErr = try { SparkEntry.prebuildSharedIndexes(spark1, sfDir); None }
+                      catch { case e: Throwable => failure(e) }
     val prebuildSec = secs(tPre)
-    // a failed query times as -1 and keeps its cause for the side file
     val runs: Seq[(String, Double, Option[String])] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         val t0 = System.nanoTime()
         val err = try { fn(spark1, sfDir).count(); None }
-                  catch { case e: Throwable => Some(s"${e.getClass.getName}: ${e.getMessage}") }
+                  catch { case e: Throwable => failure(e) }
         (name, if (err.isEmpty) secs(t0) else -1.0, err)
       }
     spark1.stop()
     val queryTimes = runs.map(r => r._1 -> r._2)
-
-    val buildThrHi = nDocs / buildHi
-    val buildThrLo = nDocs / buildLo
-    val qpsHi = nQueries / queryHi
-    val qpsLo = nQueries / queryLo
-    val factor = hi.toDouble / lo
-    val buildEff = (buildThrHi / buildThrLo) / factor
-    val queryEff = (qpsHi / qpsLo) / factor
-
-    val batterySec = queryTimes.filter(_._2 >= 0).map(_._2).sum
-    val total = batterySec + buildHi + queryHi
-    // full per-query map goes to a FILE: the 122-entry inline map outgrew
-    // the driver's tail-capture window in round 3 (BENCH_r03 parsed:null).
-    // The stdout line stays ~700 chars — short enough to always survive —
-    // and carries the battery summary, the 5 slowest queries, and the
-    // file path with the complete map.
+    val batterySec = batteryOf(queryTimes)
+    // the side file keeps the long names plus the previous run's times;
+    // the stdout line carries the per-query times by number (stdoutLine)
     val qjson = queryTimes.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     val qFile = new java.io.File("bench/bench_queries_latest.json").getAbsoluteFile
     qFile.getParentFile.mkdirs()
@@ -320,22 +309,51 @@ object Bench {
     val prevJson = prevTimes.toSeq.sorted
       .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val errorsJson = runs.collect { case (k, _, Some(e)) =>
-      s""""$k":${mapper.writeValueAsString(e)}""" }.mkString("{", ",", "}")
+    val errorsJson = (prebuildErr.map("prebuild" -> _).toSeq ++
+        runs.collect { case (k, _, Some(e)) => k -> e })
+      .map { case (k, e) => s""""$k":${mapper.writeValueAsString(e)}""" }
+      .mkString("{", ",", "}")
     val ratioJson = queryTimes
       .collect { case (k, v) if v >= 0 && prevTimes.getOrElse(k, -1.0) > 0 =>
         f""""$k":${v / prevTimes(k)}%.2f""" }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(qFile.toPath,
       f"""{"sf":"$sfDir","battery_sec":$batterySec%.2f,"prebuild_sec":$prebuildSec%.2f,"queries":$qjson,"prev":$prevJson,"ratio":$ratioJson,"errors":$errorsJson}""" + "\n")
-    val failed = queryTimes.filter(_._2 < 0).map(_._1)
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val slow5 = queryTimes.filter(_._2 >= 0).sortBy(-_._2).take(5)
-      .map { case (k, v) => f""""$k":$v%.2f""" }.mkString("{", ",", "}")
-    println(
-      f"""{"metric":"graft_bench","value":$total%.2f,"unit":"sec","sf":"$sfDir",""" +
+    println(stdoutLine(sfDir, queryTimes, prebuildSec, nDocs, nQueries, hi, lo,
+      buildHi, buildLo, queryHi, queryLo))
+  }
+
+  /** Summed seconds of the battery queries that succeeded (-1 = failed). */
+  private def batteryOf(queryTimes: Seq[(String, Double)]): Double =
+    queryTimes.filter(_._2 >= 0).map(_._2).sum
+
+  /** The ONE printed JSON line. The driver keeps a bounded tail of stdout
+    * (round 3's ~4 KB line with 122 long-named entries was lost), so the
+    * per-query leaves ride as `"q":{"<query number>":<ms>}` — integer
+    * milliseconds, -1 for a failed query — and the long names stay in
+    * the side file. BenchSpec pins the line's length for a full
+    * 175-query battery. */
+  private[graft] def stdoutLine(sfDir: String, queryTimes: Seq[(String, Double)],
+                                prebuildSec: Double, nDocs: Long, nQueries: Int,
+                                hi: Int, lo: Int, buildHi: Double, buildLo: Double,
+                                queryHi: Double, queryLo: Double): String = {
+    val buildThrHi = nDocs / buildHi
+    val buildThrLo = nDocs / buildLo
+    val qpsHi = nQueries / queryHi
+    val qpsLo = nQueries / queryLo
+    val factor = hi.toDouble / lo
+    val buildEff = (buildThrHi / buildThrLo) / factor
+    val queryEff = (qpsHi / qpsLo) / factor
+    val batterySec = batteryOf(queryTimes)
+    val total = batterySec + buildHi + queryHi
+    val failedJson = queryTimes.filter(_._2 < 0)
+      .map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    val qMs = queryTimes
+      .map { case (k, v) => (k.drop(1).takeWhile(_.isDigit).toInt,
+        if (v < 0) -1L else math.round(v * 1000)) }
+      .sortBy(_._1).map { case (n, ms) => s""""$n":$ms""" }.mkString("{", ",", "}")
+    f"""{"metric":"graft_bench","value":$total%.2f,"unit":"sec","sf":"$sfDir",""" +
       f""""battery_sec":$batterySec%.2f,"battery_n":${queryTimes.size},""" +
       f""""battery_failed":$failedJson,"battery_prebuild_sec":$prebuildSec%.2f,""" +
-      f""""slowest":$slow5,"queries_file":"${qFile.getPath}",""" +
       f""""engine":{"docs":$nDocs,"query_set":$nQueries,""" +
       f""""cores_hi":$hi,"cores_lo":$lo,""" +
       f""""build_sec_hi":$buildHi%.1f,"build_docs_per_sec_hi":$buildThrHi%.0f,""" +
@@ -343,6 +361,6 @@ object Bench {
       f""""build_scaling_efficiency":$buildEff%.3f,""" +
       f""""query_sec_hi":$queryHi%.2f,"qps_hi":$qpsHi%.1f,""" +
       f""""query_sec_lo":$queryLo%.2f,"qps_lo":$qpsLo%.1f,""" +
-      f""""query_scaling_efficiency":$queryEff%.3f}}""")
+      f""""query_scaling_efficiency":$queryEff%.3f},"q":$qMs}"""
   }
 }

@@ -641,7 +641,10 @@ object Aggs {
       s"unknown normalize method '$method' (have: ${NormalizeMethods.mkString(", ")})")
     val buckets = histogramAggSnapshot(spark, snap, queries, valueCol,
       interval, conjunctive, maxBuckets)
-    val w = Window.partitionBy(col("query_id"))
+    // ordered full frame: the window folds each query's buckets in key
+    // order, so avg / stddev_pop are bit-stable across shuffle layouts
+    val w = Window.partitionBy(col("query_id")).orderBy(col("key"))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val x = col("doc_count").cast("double")
     val normalized = method match {
       case "percent_of_sum" =>

@@ -17,6 +17,21 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
+  test("every fixture's index and oracle stage hold the same documents") {
+    SparkEntry.Fx.all.foreach { fx =>
+      val snap = SparkEntry.engineIndex(spark, sf, fx).snap
+      val q = s"fixture_${fx.tag}"
+      SparkEntry.stage(spark, sf, fx, q)
+      val staged = spark.read.parquet(s"${SparkEntry.stageDir(sf)}/${q}_docs.parquet")
+      assert(snap.stats.numDocs == staged.count(), s"${fx.tag}: doc counts differ")
+      // same count, same identities: a swapped half (multa vs multb) or a
+      // sibling corpus of equal size would pass the count alone
+      val indexed = spark.read.parquet(snap.docmapDirs: _*).select("doc_id")
+      assert(indexed.exceptAll(staged.select("sha_id")).isEmpty,
+        s"${fx.tag}: indexed docs missing from the stage")
+    }
+  }
+
   test("every query runs at sf0.001 and is deterministic across two runs") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val a = fn(spark, sf).collect().map(_.toString).toSeq

@@ -4368,6 +4368,17 @@ class EngineSpec extends AnyFunSuite {
             s"z_score q=${q.query_id} k=$k")
         }
       }
+      // ... and bit-identical whatever the shuffle layout: the window
+      // folds each query's buckets in key order, not arrival order
+      val partitions0 = spark.conf.get("spark.sql.shuffle.partitions")
+      def zBits(partitions: Int): Map[(Int, Double), Option[Long]] = {
+        spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+        Aggs.normalizeAggSnapshot(spark, snap, fq, "dl", interval, "z_score")
+          .as[(Int, Double, Long, Option[Double])].collect()
+          .map(r => (r._1, r._2) -> r._4.map(java.lang.Double.doubleToRawLongBits)).toMap
+      }
+      try assert(zBits(1) == zBits(7), "z_score bits depend on the shuffle layout")
+      finally spark.conf.set("spark.sql.shuffle.partitions", partitions0)
       intercept[IllegalArgumentException] {
         Aggs.normalizeAggSnapshot(spark, snap, fq, "dl", interval, "softmax")
       }
