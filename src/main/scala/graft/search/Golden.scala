@@ -177,10 +177,11 @@ object Golden {
 
   /** Exact phrase top-k — the golden counterpart of
     * [[Wand.phraseSearchSnapshot]]: each query text is one phrase; a hit
-    * must contain its exact consecutive token sequence (checked by a
-    * sliding scan over the full token array — the brute-force source of
-    * truth the positional index is compared against), scored as the BM25
-    * sum over the phrase's distinct terms. */
+    * must contain its tokens in order within `slop` (0 = consecutive),
+    * checked by [[chainMatch]] over the full token array — the
+    * brute-force source of truth the positional index is compared
+    * against, independent of the engine's [[Spans]] path — and is scored
+    * as the BM25 sum over the phrase's distinct terms. */
   def phraseTopK(spark: SparkSession, docs: DataFrame, queries: Seq[RefQuery],
                  k: Int, docFilter: Option[DataFrame] = None,
                  slop: Int = 0,
@@ -192,47 +193,8 @@ object Golden {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val slopL = slop
-      val containsSeq = udf((ts: Seq[String], phrase: Seq[String]) => {
-        if (ts == null || phrase == null || phrase.isEmpty) false
-        else if (slopL == 0) {
-          val n = ts.length
-          val m = phrase.length
-          var found = false
-          var i = 0
-          while (!found && i + m <= n) {
-            var j = 0
-            while (j < m && ts(i + j) == phrase(j)) j += 1
-            found = j == m
-            i += 1
-          }
-          found
-        } else {
-          // in-order span-near (see Wand.phraseSearch): greedy minimal
-          // chain from each occurrence of the first term — smallest next
-          // in-order position minimizes the final span, so greedy is
-          // exact against the (span − (m−1)) ≤ slop budget
-          val arr = ts.toArray
-          val m = phrase.length
-          var found = false
-          var i = 0
-          while (!found && i < arr.length) {
-            if (arr(i) == phrase(0)) {
-              var curP = i
-              var ok = true
-              var j = 1
-              while (ok && j < m) {
-                var q = curP + 1
-                while (q < arr.length && arr(q) != phrase(j)) q += 1
-                if (q >= arr.length) ok = false
-                else { curP = q; j += 1 }
-              }
-              found = ok && (curP - i) - (m - 1) <= slopL
-            }
-            i += 1
-          }
-          found
-        }
-      })
+      val containsSeq = udf((ts: Seq[String], phrase: Seq[String]) =>
+        chainMatch(ts, phrase, slopL))
       val qp = queries.map(q => (q.query_id, analyzer.analyzeQuery(q.text).toSeq))
         .toDF("query_id", "phrase")
       // |queries| is tiny: the broadcast product is one narrow pass over
@@ -267,9 +229,12 @@ object Golden {
           var ok = true
           var j = 1
           while (ok && j < m) {
+            // token j past i + j + slop already spends more than the
+            // budget, whatever follows
+            val limit = math.min(arr.length.toLong, i.toLong + j + slop + 1).toInt
             var q = curP + 1
-            while (q < arr.length && arr(q) != phrase(j)) q += 1
-            if (q >= arr.length) ok = false
+            while (q < limit && arr(q) != phrase(j)) q += 1
+            if (q >= limit) ok = false
             else { curP = q; j += 1 }
           }
           found = ok && (curP - i) - (m - 1) <= slop
@@ -335,9 +300,9 @@ object Golden {
       val statsRow = toks.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
       val n = statsRow.getLong(0)
       val avgdl = if (n == 0) 1.0 else statsRow.getLong(1).toDouble / n
-      val qPhrase: Map[Int, Seq[String]] =
+      val phrases: Map[Int, Seq[String]] =
         queries.map(q => q.query_id -> analyzer.analyzeQuery(q.text).toSeq).toMap
-      val allTerms = qPhrase.values.flatten.toArray.distinct
+      val allTerms = phrases.values.flatten.toArray.distinct
       val dfMap: Map[String, Long] = Wand.termPruned(
           toks.select(col("doc_id"), explode(col("tokens")).as("term")), allTerms)
         .groupBy("term").agg(count_distinct(col("doc_id")).as("df"))
@@ -345,7 +310,7 @@ object Golden {
       val idfMap: Map[String, Double] =
         allTerms.map(t => t -> Bm25.idf(dfMap.getOrElse(t, 0L), n)).toMap
       val idfB = spark.sparkContext.broadcast(idfMap)
-      val qpB = spark.sparkContext.broadcast(qPhrase)
+      val qpB = spark.sparkContext.broadcast(phrases)
       val slopL = slop
       val secU = udf((qid: Int, ts: Seq[String]) =>
         secondaryPhraseScore(ts, qpB.value(qid), idfB.value, avgdl, slopL))

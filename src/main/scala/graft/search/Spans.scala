@@ -39,7 +39,8 @@ case class SpanTerm(term: String) extends SpanQuery
   * clause i+1 must start at or after clause i's end, and the total gap
   * `(chainEnd - chainStart) - Σ chosen sub-span widths` must be ≤ `slop`.
   * For term clauses this is exactly the sloppy-phrase budget
-  * `(p_last - p_0) - (m - 1) ≤ slop` of [[Wand.phraseSearch]]. */
+  * `(p_last - p_0) - (m - 1) ≤ slop` of [[Wand.phraseSearch]], whose
+  * plan accepts through this node. */
 case class SpanNear(clauses: Seq[SpanQuery], slop: Int) extends SpanQuery
 
 /** Union of the clauses' spans (Lucene `span_or`). */
@@ -252,9 +253,74 @@ object Spans {
       }
   }
 
-  /** True iff `q` produces at least one span in the doc. */
-  def matches(q: SpanQuery, pos: String => Array[Long]): Boolean =
-    spans(q, pos).nonEmpty
+  /** True iff `q` produces at least one span in the doc. A `span_near`
+    * whose clauses are all width-1 spans (terms, or `span_or`s of them) —
+    * every phrase — is decided without enumerating its spans, by
+    * [[nearExists]]; anything else enumerates. */
+  def matches(q: SpanQuery, pos: String => Array[Long]): Boolean = q match {
+    case SpanNear(cs, slop) if cs.nonEmpty && cs.forall(unitWidth) =>
+      nearExists(cs.iterator.map(c => unitPositions(c, pos)).toArray, slop)
+    case _ => spans(q, pos).nonEmpty
+  }
+
+  private def unitWidth(q: SpanQuery): Boolean = q match {
+    case SpanTerm(_) => true
+    case SpanOr(cs)  => cs.forall(unitWidth)
+    case _           => false
+  }
+
+  /** A width-1 clause's position lists, one per term (each ascending). */
+  private def unitPositions(q: SpanQuery, pos: String => Array[Long]): Array[Array[Long]] =
+    q match {
+      case SpanTerm(t) => Array(pos(t))
+      case SpanOr(cs)  => cs.iterator.flatMap(c => unitPositions(c, pos).iterator).toArray
+      case _           => throw new IllegalArgumentException(s"not a width-1 span: $q")
+    }
+
+  /** Smallest position ≥ `from` over the lists, `Long.MaxValue` if none. */
+  private def firstAtOrAfter(lists: Array[Array[Long]], from: Long): Long = {
+    var best = Long.MaxValue
+    var li = 0
+    while (li < lists.length) {
+      val ps = lists(li)
+      var i = java.util.Arrays.binarySearch(ps, from)
+      if (i < 0) i = -i - 1
+      if (i < ps.length && ps(i) < best) best = ps(i)
+      li += 1
+    }
+    best
+  }
+
+  /** Existence test for an in-order `span_near` over width-1 clauses
+    * (`clauses(i)` = clause i's position lists): from each start of
+    * clause 0, a greedy minimal chain takes the smallest next position at
+    * or after the current end. With width-1 clauses that choice minimizes
+    * both the gap spent so far and the end every later clause must
+    * follow, so a start has a chain within `slop` iff its greedy chain is
+    * within `slop` — O(m log tf) per start instead of the enumeration. */
+  private[search] def nearExists(clauses: Array[Array[Array[Long]]], slop: Int): Boolean = {
+    val m = clauses.length
+    var found = false
+    var hi = 0
+    while (!found && hi < clauses(0).length) {
+      val heads = clauses(0)(hi)
+      var a = 0
+      while (!found && a < heads.length) {
+        var end = heads(a) + 1
+        var gap = 0L
+        var j = 1
+        while (j < m && gap <= slop) {
+          val nx = firstAtOrAfter(clauses(j), end)
+          if (nx == Long.MaxValue) gap = Long.MaxValue
+          else { gap += nx - end; end = nx + 1; j += 1 }
+        }
+        found = j == m && gap <= slop
+        a += 1
+      }
+      hi += 1
+    }
+    found
+  }
 
   private def canon(xs: Array[(Long, Long)]): Array[(Long, Long)] = {
     java.util.Arrays.sort(xs, (a: (Long, Long), b: (Long, Long)) => {

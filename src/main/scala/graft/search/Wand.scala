@@ -7,9 +7,6 @@ import graft.index.{Codec, SegBlock, SegRun}
 import graft.corpus.RefQuery
 import graft.table.{Snapshot, SnapshotCatalog}
 
-/** One per-shard candidate hit (shard-local doc ordinal). */
-case class ShardHit(query_id: Int, shard: Int, ord: Long, score: Double)
-
 /** Block-max WAND top-k retrieval over the compressed sharded index — the
   * "shadow cluster" of the comparison pair.
   *
@@ -56,481 +53,6 @@ object Wand {
       df.join(broadcast(terms.toSeq.toDF("term")), Seq("term"), "left_semi")
     }
 
-  /** The reserved pseudo-term carrying a FILTERED search's accept set
-    * through the segment shuffle (see [[filterRuns]]). NUL prefix — the
-    * tokenizer can never emit it, so it cannot collide with a real term. */
-  private[search] val FilterTerm = "\u0000accept"
-
-  /** Per-(group, term) shared decode slots: every query in a fan-out group
-    * that touches a term re-walks the same compressed blocks, and the
-    * Zipf head terms are touched by MOST queries — decoding each block
-    * once per GROUP instead of once per query removes the dominant
-    * remaining query-phase cost (readVarLongs sat in 43% of execution
-    * samples). Slots fill lazily under a per-group byte budget
-    * ([[DecodeBudget]]); once the budget is spent, later blocks decode
-    * per-cursor exactly as before — results are identical either way,
-    * the cache only removes re-decode work. */
-  private[search] final class TermDecoded(n: Int) {
-    val docs = new Array[Array[Long]](n)
-    val tfs = new Array[Array[Long]](n)
-    val dls = new Array[Array[Long]](n)
-  }
-
-  /** Remaining shared-decode bytes for one fan-out group (single-threaded
-    * within its task). Default 128 MB per group, `spark.graft.decodeCacheMb`
-    * overrides: concurrent groups per executor are bounded by its task
-    * slots, so the executor-level ceiling is slots × budget — size it with
-    * executor memory in production. A block's arrays are cached only while
-    * `remaining` still covers their bytes, so it never goes negative. */
-  private[search] final class DecodeBudget(var remaining: Long)
-
-  /** The per-group decode budget in bytes for a `spark.graft.decodeCacheMb`
-    * setting: 128 MB when unset, 0 turns the shared decode off. A value
-    * that is not a whole, non-negative number of MB (or overflows as
-    * bytes) is rejected, naming the key and the value. */
-  private[search] def decodeCacheMbBytes(setting: Option[String]): Long = {
-    val mb = setting.fold(Option(128L))(_.trim.toLongOption)
-      .filter(m => m >= 0L && m <= (Long.MaxValue >> 20))
-    mb.getOrElse(throw new IllegalArgumentException(
-      s"spark.graft.decodeCacheMb must be a non-negative whole number of MB, " +
-        s"got '${setting.getOrElse("")}'")) << 20
-  }
-
-  /** Per-term posting cursor with lazy block decoding: advancing across
-    * blocks never decodes skipped blocks (the compression win). Each block
-    * arrives paired with its pruning NORM BOUND — the exact stored maxNorm
-    * when the run was built at the snapshot's current avgdl, or the safe
-    * (maxTf, minDl) impact bound for runs whose build-time avgdl has been
-    * left behind by incremental appends (see [[graft.index.SegRun]]). */
-  private[search] final class Cursor(val term: String, val idf: Double,
-                             blocks: Array[SegBlock], bounds: Array[Double],
-                             avgdl: Double,
-                             td: TermDecoded = null,
-                             budget: DecodeBudget = null) {
-    /** Rank of this cursor's term in the ascending-term order of its query
-      * (ties by construction index) — set by the topK entry points so the
-      * evaluation can sum contributions in the bit-identical ascending-term
-      * order WITHOUT allocating and sorting a (term, contribution) tuple
-      * array per evaluated document. */
-    var termRank: Int = 0
-    private var bi = 0
-    private var i = 0
-    private var decoded = false
-    private var docs: Array[Long] = null
-    private var tfs: Array[Long] = null
-    private var dls: Array[Long] = null
-    private var posArr: Array[Array[Long]] = null // lazy, phrase mode only
-    var curDoc: Long = Long.MaxValue
-    val maxScore: Double = {
-      var m = 0.0
-      var bIdx = 0
-      while (bIdx < bounds.length) {
-        val v = idf * bounds(bIdx)
-        if (v > m) m = v
-        bIdx += 1
-      }
-      m
-    }
-    advanceInit()
-
-    private def loadBlock(): Unit = {
-      var d: Array[Long] = if (td != null) td.docs(bi) else null
-      if (d == null) {
-        d = Codec.decodeBlockDocs(blocks(bi))
-        val bytes = d.length.toLong << 3
-        if (td != null && budget.remaining >= bytes) {
-          td.docs(bi) = d
-          budget.remaining -= bytes
-        }
-      }
-      docs = d
-      // tfs/dls decode lazily on the first contribution from this block
-      // (ensureTfDl): navigation (advanceTo/next/alignment) touches only
-      // doc ords, and blocks entered for alignment but never scored skip
-      // 2 of 3 array decodes
-      tfs = null
-      dls = null
-      posArr = null
-      i = 0
-      decoded = true
-      curDoc = docs(0)
-    }
-
-    private def ensureTfDl(): Unit = if (tfs == null) {
-      var t: Array[Long] = if (td != null) td.tfs(bi) else null
-      var l: Array[Long] = if (td != null) td.dls(bi) else null
-      if (t == null || l == null) {
-        t = Codec.decodeBlockTfs(blocks(bi))
-        l = Codec.decodeBlockDls(blocks(bi))
-        val bytes = t.length.toLong << 4
-        if (td != null && budget.remaining >= bytes) {
-          td.tfs(bi) = t
-          td.dls(bi) = l
-          budget.remaining -= bytes
-        }
-      }
-      tfs = t
-      dls = l
-    }
-
-    /** In-doc token positions of the CURRENT posting (phrase mode).
-      * Decoded lazily per block — conjunctive pruning skips most blocks
-      * before any phrase check touches them. */
-    def positions: Array[Long] = {
-      if (posArr == null) {
-        ensureTfDl()
-        posArr = Codec.decodeBlockPositions(blocks(bi), tfs)
-      }
-      posArr(i)
-    }
-
-    private def advanceInit(): Unit =
-      if (blocks.nonEmpty) loadBlock() else curDoc = Long.MaxValue
-
-    def exhausted: Boolean = curDoc == Long.MaxValue
-    def blockMaxScore: Double = idf * bounds(bi)
-    def blockLast: Long = blocks(bi).last
-
-    def next(): Unit = {
-      i += 1
-      if (decoded && i < docs.length) curDoc = docs(i)
-      else {
-        bi += 1
-        if (bi < blocks.length) loadBlock() else curDoc = Long.MaxValue
-      }
-    }
-
-    /** Advance to the first doc ≥ target; skips whole blocks undecoded. */
-    def advanceTo(target: Long): Unit = {
-      if (curDoc >= target) return
-      if (!(decoded && blocks(bi).last >= target)) {
-        decoded = false
-        while (bi < blocks.length && blocks(bi).last < target) bi += 1
-        if (bi >= blocks.length) { curDoc = Long.MaxValue; return }
-        loadBlock()
-      }
-      // invariant here: current block decoded and block.last >= target,
-      // so a doc ≥ target exists within this block
-      while (curDoc < target) { i += 1; curDoc = docs(i) }
-    }
-
-    def contribution: Double = {
-      ensureTfDl()
-      idf * Bm25.tfNorm(tfs(i), dls(i), avgdl)
-    }
-  }
-
-  /** Assign ascending-term ranks (ties by array index) to a freshly built
-    * cursor array — the stable by-term order the per-pivot evaluation used
-    * to recreate by sorting a tuple array per document. */
-  private def assignTermRanks(cursors: Array[Cursor]): Unit = {
-    val idxs = cursors.indices.toArray
-    val sorted = idxs.sortBy(i => (cursors(i).term, i))
-    var r = 0
-    while (r < sorted.length) { cursors(sorted(r)).termRank = r; r += 1 }
-  }
-
-  /** Worst-first ordering for the top-k heap: lower score is worse; on
-    * ties the larger ord is worse (doc_id asc tie-break — ord order IS
-    * doc_id order within a shard). */
-  private val worstFirst: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
-    def compare(a: (Double, Long), b: (Double, Long)): Int = {
-      val c = java.lang.Double.compare(b._1, a._1)
-      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-    }
-  }
-
-  private val NotDeleted: Long => Boolean = _ => false
-
-  /** Block-max WAND over one shard's cursors; returns (ord, score) top-k.
-    * `deleted` is the shard's tombstone mask (Lucene live-docs style):
-    * masked ords are skipped at evaluation time — before the heap — so the
-    * top-k fills from surviving docs only. `accept` (null = all) is the
-    * FILTERED-search hook: evaluated once per pivot candidate, and pivots
-    * are non-decreasing (every cursor only moves forward and each
-    * iteration ends with all cursors ≥ the pivot), so a forward-only
-    * filter cursor can back it. Pruning stays lossless under both masks:
-    * block bounds are upper bounds over a superset of the accepted live
-    * docs.
-    *
-    * `after` (null = no cursor) is the search_after hook: a hit enters
-    * the heap only when `after(score, ord)` holds — i.e. it ranks
-    * strictly after the caller's page cursor. Pruning stays lossless:
-    * the predicate only further restricts heap entry, and the heap floor
-    * θ still lower-bounds every heap member's score, so any range
-    * skipped by `ub < θ` contains no doc that could have qualified. */
-  private[search] def wandTopK(cursorsIn: Array[Cursor], k: Int,
-                               deleted: Long => Boolean = NotDeleted,
-                               accept: Long => Boolean = null,
-                               after: (Double, Long) => Boolean = null,
-                               minMatch: Int = 1): Array[(Long, Double)] = {
-    val heap = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](worstFirst)
-    // ascending-term ranks drive the evaluation's summation order (see
-    // assignTermRanks) — the per-pivot tuple sort this replaces showed up
-    // as a top allocation+TimSort site in the query-phase profile
-    assignTermRanks(cursorsIn)
-    val n0 = cursorsIn.length
-    val rbuf = new Array[Int](n0)
-    val cbuf = new Array[Double](n0)
-    // live cursors kept in a compacted prefix cur[0, n): the old
-    // filterNot-per-iteration allocated a fresh array every loop, and the
-    // boxed Ordering sort TimSorted it — an unboxed insertion sort over
-    // the (nearly sorted after each step) prefix does the same work
-    // allocation-free
-    val cur = new Array[Cursor](n0)
-    var n = 0
-    var i0 = 0
-    while (i0 < n0) {
-      if (!cursorsIn(i0).exhausted) { cur(n) = cursorsIn(i0); n += 1 }
-      i0 += 1
-    }
-    def beatsWorst(score: Double, ord: Long): Boolean =
-      heap.size < k || worstFirst.compare((score, ord), heap.head) < 0
-    def drain(): Array[(Long, Double)] =
-      heap.dequeueAll.reverse.map((h: (Double, Long)) => (h._2, h._1)).toArray
-    // minimum_should_match quota: docs matching fewer than `needed`
-    // cursors score nothing, and once fewer than `needed` live cursors
-    // remain no future doc can qualify — the loop exit condition
-    val needed = math.max(1, minMatch)
-
-    while (n >= needed) {
-      // insertion sort the live prefix by curDoc (unboxed)
-      var a = 1
-      while (a < n) {
-        val c = cur(a)
-        val d0 = c.curDoc
-        var b = a - 1
-        while (b >= 0 && cur(b).curDoc > d0) { cur(b + 1) = cur(b); b -= 1 }
-        cur(b + 1) = c
-        a += 1
-      }
-      // find pivot: first prefix whose Σ maxScore could still enter top-k
-      val theta = if (heap.size < k) Double.NegativeInfinity else heap.head._1
-      var acc = 0.0
-      var p = -1
-      var i = 0
-      while (p < 0 && i < n) {
-        acc += cur(i).maxScore
-        if (acc >= theta) p = i
-        i += 1
-      }
-      if (p < 0) return drain()
-      val pivotDoc = cur(p).curDoc
-      if (cur(0).curDoc == pivotDoc) {
-        // cursors 0..j (j ≥ p) all sit on pivotDoc
-        var j = p
-        while (j + 1 < n && cur(j + 1).curDoc == pivotDoc) j += 1
-        // block-max refinement: exact in-block upper bound for [pivotDoc, d]
-        var ub = 0.0
-        var d = Long.MaxValue
-        var t = 0
-        while (t <= j) {
-          ub += cur(t).blockMaxScore
-          if (cur(t).blockLast < d) d = cur(t).blockLast
-          t += 1
-        }
-        if (j + 1 < n && cur(j + 1).curDoc - 1 < d)
-          d = cur(j + 1).curDoc - 1
-        if (heap.size == k && ub < theta) {
-          // whole range [pivotDoc, d] is dominated — skip it undecoded
-          var s = 0
-          while (s <= j) { cur(s).advanceTo(d + 1); s += 1 }
-        } else if (j + 1 < needed || deleted(pivotDoc) ||
-                   (accept != null && !accept(pivotDoc))) {
-          // short of the minimum_should_match quota, tombstoned, or
-          // filtered out: step every cursor off the pivot, score nothing
-          var s = 0
-          while (s <= j) { cur(s).next(); s += 1 }
-        } else {
-          // evaluate pivotDoc: sum contributions in ascending TERM order
-          // (bit-identical to the golden scorer's summation order) — ranks
-          // + two parallel buffers replace the per-doc tuple-array sort
-          var s = 0
-          while (s <= j) {
-            val rv = cur(s).termRank
-            val cv = cur(s).contribution
-            var b = s - 1
-            while (b >= 0 && rbuf(b) > rv) {
-              rbuf(b + 1) = rbuf(b); cbuf(b + 1) = cbuf(b); b -= 1
-            }
-            rbuf(b + 1) = rv; cbuf(b + 1) = cv
-            s += 1
-          }
-          var score = 0.0
-          s = 0
-          while (s <= j) { score += cbuf(s); s += 1 }
-          if ((after == null || after(score, pivotDoc)) && beatsWorst(score, pivotDoc)) {
-            if (heap.size == k) heap.dequeue()
-            heap.enqueue((score, pivotDoc))
-          }
-          s = 0
-          while (s <= j) { cur(s).next(); s += 1 }
-        }
-      } else {
-        // advance laggards to the pivot
-        var s = 0
-        while (s < n && cur(s).curDoc < pivotDoc) {
-          cur(s).advanceTo(pivotDoc); s += 1
-        }
-      }
-      // compact exhausted cursors out of the live prefix in place
-      var w = 0
-      var rIdx = 0
-      while (rIdx < n) {
-        if (!cur(rIdx).exhausted) { cur(w) = cur(rIdx); w += 1 }
-        rIdx += 1
-      }
-      n = w
-    }
-    drain()
-  }
-
-  /** Boolean (`must`/`should`/`must_not`) top-k over one shard — the
-    * Lucene bool-query scorer. The must cursors drive a leapfrog
-    * intersection (every hit contains all of them); should cursors are
-    * advanced lazily onto each surviving candidate and add their
-    * contribution when they sit on it; exclusion is handled by the caller
-    * through `accept` (a forward-only not-cursor probe — candidates
-    * arrive in strictly increasing ord order). Contributions of ALL
-    * scoring terms present are summed in ascending TERM order, keeping
-    * scores bit-identical to [[Golden.booleanTopK]].
-    *
-    * Block-max skip: when the heap is full and Σ must in-block bounds +
-    * Σ should GLOBAL max bounds cannot beat the heap floor, the range up
-    * to the nearest must-block boundary is skipped undecoded — lossless,
-    * because the bound dominates every candidate in the range whatever
-    * should terms it contains. The must-empty case is plain [[wandTopK]]
-    * over the should cursors (the caller dispatches).
-    *
-    * A should-empty call is the AND / phrase path of [[searchImpl]]: the
-    * must cursors are built from distinct, ascending query terms, so the
-    * rank-buffer summation runs in cursor-array order, and the skip bound
-    * is Σ must in-block bounds alone (`shouldMaxTotal` is 0.0). `accept`
-    * is then the phrase-adjacency and metadata-filter hook. */
-  private[search] def booleanTopK(must: Array[Cursor], should: Array[Cursor], k: Int,
-                                  deleted: Long => Boolean = NotDeleted,
-                                  accept: Long => Boolean = null,
-                                  after: (Double, Long) => Boolean = null,
-                                  minShould: Int = 0): Array[(Long, Double)] = {
-    val heap = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](worstFirst)
-    def drain(): Array[(Long, Double)] =
-      heap.dequeueAll.reverse.map((h: (Double, Long)) => (h._2, h._1)).toArray
-    if (must.isEmpty) return drain()
-    def beatsWorst(score: Double, ord: Long): Boolean =
-      heap.size < k || worstFirst.compare((score, ord), heap.head) < 0
-    val shouldMaxTotal = { var s = 0.0; should.foreach(s += _.maxScore); s }
-    // ascending-term ranks over must ++ should (ties keep must-first
-    // insertion order — exactly what the old stable by-term tuple sort
-    // produced); the evaluation below sums via the same rank-buffer
-    // insertion used in wandTopK instead of allocating + sorting a tuple
-    // array per candidate
-    assignTermRanks(must ++ should)
-    val nAll = must.length + should.length
-    val rbuf = new Array[Int](nAll)
-    val cbuf = new Array[Double](nAll)
-
-    var done = false
-    var target = 0L
-    var i = 0
-    while (i < must.length) {
-      if (must(i).exhausted) done = true
-      else if (must(i).curDoc > target) target = must(i).curDoc
-      i += 1
-    }
-    while (!done) {
-      // align every must cursor on target (advancing one can overshoot)
-      var aligned = false
-      while (!aligned && !done) {
-        aligned = true
-        var j = 0
-        while (j < must.length && !done) {
-          val c = must(j)
-          if (c.curDoc < target) c.advanceTo(target)
-          if (c.exhausted) done = true
-          else if (c.curDoc > target) { target = c.curDoc; aligned = false }
-          j += 1
-        }
-      }
-      if (!done) {
-        var skipped = false
-        if (heap.size == k) {
-          var ub = shouldMaxTotal
-          var d = Long.MaxValue
-          i = 0
-          while (i < must.length) {
-            ub += must(i).blockMaxScore
-            if (must(i).blockLast < d) d = must(i).blockLast
-            i += 1
-          }
-          if (ub < heap.head._1) {
-            skipped = true
-            i = 0
-            while (i < must.length && !done) {
-              must(i).advanceTo(d + 1)
-              if (must(i).exhausted) done = true
-              i += 1
-            }
-          }
-        }
-        if (!skipped) {
-          if (!deleted(target) && (accept == null || accept(target))) {
-            var nc = 0
-            def addContrib(c: Cursor): Unit = {
-              val rv = c.termRank
-              val cv = c.contribution
-              var b = nc - 1
-              while (b >= 0 && rbuf(b) > rv) {
-                rbuf(b + 1) = rbuf(b); cbuf(b + 1) = cbuf(b); b -= 1
-              }
-              rbuf(b + 1) = rv; cbuf(b + 1) = cv
-              nc += 1
-            }
-            i = 0
-            while (i < must.length) { addContrib(must(i)); i += 1 }
-            var shouldMatched = 0
-            i = 0
-            while (i < should.length) {
-              val c = should(i)
-              if (c.curDoc < target) c.advanceTo(target)
-              if (!c.exhausted && c.curDoc == target) {
-                addContrib(c)
-                shouldMatched += 1
-              }
-              i += 1
-            }
-            // minimum_should_match: a doc short of the quota scores
-            // nothing (pruning bounds stay lossless — dropping candidates
-            // only shrinks the true result set, never the upper bounds)
-            if (shouldMatched >= minShould) {
-              var score = 0.0
-              i = 0
-              while (i < nc) { score += cbuf(i); i += 1 }
-              if ((after == null || after(score, target)) && beatsWorst(score, target)) {
-                if (heap.size == k) heap.dequeue()
-                heap.enqueue((score, target))
-              }
-            }
-          }
-          i = 0
-          while (i < must.length && !done) {
-            must(i).next()
-            if (must(i).exhausted) done = true
-            i += 1
-          }
-        }
-        if (!done) {
-          target = 0L
-          i = 0
-          while (i < must.length) {
-            if (must(i).curDoc > target) target = must(i).curDoc
-            i += 1
-          }
-        }
-      }
-    }
-    drain()
-  }
-
   /** Run the query set against the CURRENT snapshot of the index at `dir`.
     * @param conjunctive require EVERY query term in a hit (AND semantics);
     *                    default is BM25's usual OR
@@ -560,9 +82,18 @@ object Wand {
                      k: Int, conjunctive: Boolean = false,
                      filter: Option[org.apache.spark.sql.Column] = None,
                      from: Int = 0): DataFrame =
-    searchImpl(spark, snap,
-      queries.map(q => q.query_id -> Golden.queryTerms(q.text, analyzerOf(snap))).toMap,
-      k, if (conjunctive) ModeAnd else ModeOr, filter, from = from)
+    searchImpl(spark, snap, textPlans(snap, queries, conjunctive), k, filter, from)
+
+  /** Each query text's analyzed terms as one OR plan (AND when
+    * `conjunctive`). */
+  private def textPlans(snap: Snapshot, queries: Seq[RefQuery],
+                        conjunctive: Boolean): Map[Int, QueryPlan] =
+    queries.map(q => q.query_id ->
+      QueryPlan.terms(Golden.queryTerms(q.text, analyzerOf(snap)), conjunctive)).toMap
+
+  /** OR plans over already-expanded per-query term sets. */
+  private def orPlans(qTerms: Map[Int, Array[String]]): Map[Int, QueryPlan] =
+    qTerms.map { case (q, ts) => q -> QueryPlan.terms(ts) }
 
   /** The OpenSearch `exists` query, in this engine's filter algebra: the
     * metadata `filter` Column evaluates against docmap columns, so field
@@ -594,11 +125,11 @@ object Wand {
                             conjunctive: Boolean = false,
                             filter: Option[org.apache.spark.sql.Column] = None,
                             from: Int = 0): DataFrame = {
-    val qb: Map[Int, Array[(String, Double)]] =
-      queries.map(q => q.query_id -> Golden.queryTermsBoosted(q.text, analyzerOf(snap))).toMap
-    searchImpl(spark, snap, qb.map { case (q, ts) => q -> ts.map(_._1) },
-      k, if (conjunctive) ModeAnd else ModeOr, filter, from = from,
-      qBoost = qb.map { case (q, ts) => q -> ts.toMap })
+    val plans = queries.map { q =>
+      val ts = Golden.queryTermsBoosted(q.text, analyzerOf(snap))
+      q.query_id -> QueryPlan.terms(ts.map(_._1), conjunctive, ts.toMap)
+    }.toMap
+    searchImpl(spark, snap, plans, k, filter, from)
   }
 
   /** Cursor-based deep pagination — the OpenSearch `search_after` (+ PIT
@@ -628,9 +159,8 @@ object Wand {
                           conjunctive: Boolean = false,
                           filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
     searchImpl(spark, snap,
-      queries.map(q => q.query_id -> Golden.queryTerms(q.text, analyzerOf(snap))).toMap,
-      k, if (conjunctive) ModeAnd else ModeOr, filter,
-      qAfter = after, shardDocOrder = true)
+      textPlans(snap, queries, conjunctive).map { case (q, p) => q -> p.copy(after = after.get(q)) },
+      k, filter, shardDocOrder = true)
 
   /** Field-sorted retrieval — the OpenSearch `sort` clause: top-k of each
     * query's FULL match set ordered by a docmap metadata column instead
@@ -738,10 +268,7 @@ object Wand {
   def booleanSearchSnapshot(spark: SparkSession, snap: Snapshot,
                             queries: Seq[BoolQuery], k: Int,
                             filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
-    searchImpl(spark, snap,
-      queries.map(q => q.query_id -> (q.scoring ++ q.mustNot).distinct.sorted).toMap,
-      k, ModeBool, filter,
-      qBool = queries.map(q => q.query_id -> q).toMap)
+    searchImpl(spark, snap, queries.map(q => q.query_id -> QueryPlan.bool(q)).toMap, k, filter)
 
   /** Prefix (wildcard) top-k: every `*`-suffixed word in a query's text
     * is expanded against the committed TERM DICTIONARY (termstats — the
@@ -761,8 +288,8 @@ object Wand {
                            queries: Seq[RefQuery], k: Int,
                            maxExpansions: Int = 1024,
                            filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
-    searchImpl(spark, snap, expandQueries(spark, snap, queries, maxExpansions),
-      k, ModeOr, filter)
+    searchImpl(spark, snap, orPlans(expandQueries(spark, snap, queries, maxExpansions)),
+      k, filter)
 
   /** match_bool_prefix (the OpenSearch query of the same name): the
     * analyzed text's LAST token matches as a prefix, every earlier
@@ -811,7 +338,7 @@ object Wand {
                            maxExpansions: Int = 1024,
                            filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
     searchImpl(spark, snap,
-      regexpExpandQueries(spark, snap, queries, maxExpansions), k, ModeOr, filter)
+      orPlans(regexpExpandQueries(spark, snap, queries, maxExpansions)), k, filter)
 
   /** Per-query anchored-regexp expansion against the snapshot's term
     * dictionary — the shared engine of [[regexpSearchSnapshot]] and its golden
@@ -913,9 +440,9 @@ object Wand {
                           filter: Option[org.apache.spark.sql.Column] = None,
                           transpositions: Boolean = false): DataFrame =
     searchImpl(spark, snap,
-      fuzzyExpandQueries(spark, snap, queries, maxEdits, prefixLength,
-        maxExpansions, transpositions),
-      k, ModeOr, filter)
+      orPlans(fuzzyExpandQueries(spark, snap, queries, maxEdits, prefixLength,
+        maxExpansions, transpositions)),
+      k, filter)
 
   /** Plain Levenshtein distance with an Ukkonen row-minimum cutoff:
     * returns the exact distance when ≤ `bound`, else `bound + 1`. Matches
@@ -1180,9 +707,9 @@ object Wand {
                                transpositions: Boolean = true,
                                filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
     searchImpl(spark, snap,
-      matchFuzzyExpandQueries(spark, snap, queries, fuzziness, prefixLength,
-        maxExpansions, transpositions),
-      k, ModeOr, filter)
+      orPlans(matchFuzzyExpandQueries(spark, snap, queries, fuzziness, prefixLength,
+        maxExpansions, transpositions)),
+      k, filter)
 
   /** Spell-correction suggester — the OpenSearch `term` suggester /
     * Lucene DirectSpellChecker analog: for each input word, the committed
@@ -1378,7 +905,7 @@ object Wand {
         srcRows.groupBy(_._1).filter(_._2.length > 1).keys.toSeq.sorted.mkString(", "))
     val srcDoc = srcRows.toDF("query_id", "src_doc")
     // k+1 covers the worst case (source doc occupies one of the top slots)
-    val hits = searchImpl(spark, snap, qTerms, k + 1, ModeOr)
+    val hits = searchImpl(spark, snap, orPlans(qTerms), k + 1)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id").asc)
     hits.drop("rank")
@@ -3106,12 +2633,6 @@ object Wand {
     searchSnapshot(spark, SnapshotCatalog.loadId(spark, dir, snapshotId),
       queries, k, conjunctive, filter)
 
-  /** Phrase top-k: each query's text is ONE phrase (its tokens, in order,
-    * via the same analyzer documents get). A hit must contain the exact
-    * consecutive token sequence; hits are BM25-scored over the phrase's
-    * distinct terms, so scores stay bit-identical to
-    * [[Golden.phraseTopK]]. Requires a positional index
-    * (`BuildConfig(positions = true)`). */
   /** Phrase top-k over the positional index. `slop = 0` (default) is the
     * exact consecutive-sequence `match_phrase`; `slop > 0` is the
     * IN-ORDER proximity contract (Lucene `span_near(in_order = true)` /
@@ -3120,10 +2641,12 @@ object Wand {
     * with (pₘ₋₁ − p₀) − (m − 1) ≤ slop — up to `slop` extra tokens
     * interleaved, no reordering (Lucene's transposed-phrase slop
     * accounting is the documented divergence; the in-order rule is what
-    * an ANSI-SQL oracle can replay). Matching is a greedy minimal chain
-    * per start position — picking the smallest next in-order position
-    * minimizes the final span, so greedy is exact. Scoring is unchanged
-    * (BM25 over the phrase's distinct terms, golden-bit-identical). */
+    * an ANSI-SQL oracle can replay). The plan is the phrase's distinct
+    * terms as must clauses plus a `SpanNear(tokens, slop)` acceptance,
+    * which [[Spans.matches]] decides by a greedy minimal chain per start
+    * position — picking the smallest next in-order position minimizes the
+    * final span, so greedy is exact. Scoring is BM25 over the phrase's
+    * distinct terms, golden-bit-identical. */
   def phraseSearch(spark: SparkSession, dir: String, queries: Seq[RefQuery],
                    k: Int,
                    filter: Option[org.apache.spark.sql.Column] = None,
@@ -3139,12 +2662,8 @@ object Wand {
       s"phrase search requires a positional index (snapshot ${snap.id} was " +
         "built without BuildConfig.positions)")
     require(slop >= 0, s"slop must be >= 0: $slop")
-    searchImpl(spark, snap,
-      queries.map(q => q.query_id -> Golden.queryTerms(q.text, analyzerOf(snap))).toMap,
-      k, ModePhrase, filter,
-      qPhrase = queries.map(q =>
-        q.query_id -> analyzerOf(snap).analyzeQuery(q.text)).toMap,
-      phraseSlop = slop)
+    searchImpl(spark, snap, queries.map(q => q.query_id ->
+      QueryPlan.phrase(analyzerOf(snap).analyzeQuery(q.text), slop)).toMap, k, filter)
   }
 
   /** Phrase-prefix top-k (the OpenSearch `match_phrase_prefix` query —
@@ -3180,12 +2699,8 @@ object Wand {
         "was built without BuildConfig.positions)")
     require(slop >= 0, s"slop must be >= 0: $slop")
     val (qFixed, qExp) = phrasePrefixExpand(spark, snap, queries, maxExpansions)
-    searchImpl(spark, snap,
-      qFixed.map { case (qid, ts) => qid -> ts.distinct.sorted },
-      k, ModePhrase, filter,
-      qPhrase = qFixed,
-      phraseSlop = slop,
-      qPrefix = qExp)
+    searchImpl(spark, snap, qFixed.map { case (qid, fixed) =>
+      qid -> QueryPlan.phrase(fixed, slop, Some(qExp(qid))) }, k, filter)
   }
 
   /** The shared expansion of [[phrasePrefixSearch]] and its golden twin:
@@ -3236,10 +2751,8 @@ object Wand {
     queries.foreach { case (qid, q) =>
       require(Spans.scoringTerms(q).nonEmpty,
         s"span query $qid has no scoring terms") }
-    searchImpl(spark, snap,
-      queries.map { case (qid, q) => qid -> Spans.allTerms(q) }.toMap,
-      k, ModeSpan, filter,
-      qSpan = queries.toMap)
+    searchImpl(spark, snap, queries.map { case (qid, q) => qid -> QueryPlan.span(q) }.toMap,
+      k, filter)
   }
 
   /** span_multi (the OpenSearch `span_multi` wrapper): rewrite a
@@ -3312,16 +2825,16 @@ object Wand {
     val snap = SnapshotCatalog.require(spark, dir)
     val base = searchSnapshot(spark, snap, queries, window, conjunctive)
       .withColumnRenamed("score", "base_score").drop("rank")
-    val qPhrase: Map[Int, Seq[String]] = queries.map(q =>
+    val phrases: Map[Int, Seq[String]] = queries.map(q =>
       q.query_id -> analyzerOf(snap).analyzeQuery(q.text).toSeq).toMap
-    val allTerms = qPhrase.values.flatten.toArray.distinct
+    val allTerms = phrases.values.flatten.toArray.distinct
     val n = snap.stats.numDocs
     val avgdl = snap.stats.avgdl
     val dfMap: Map[String, Long] = dfFor(spark, snap, allTerms)
     val idfMap: Map[String, Double] =
       allTerms.map(t => t -> Bm25.idf(dfMap.getOrElse(t, 0L), n)).toMap
     val idfB = spark.sparkContext.broadcast(idfMap)
-    val qpB = spark.sparkContext.broadcast(qPhrase)
+    val qpB = spark.sparkContext.broadcast(phrases)
     // live (shard, ord) of each window doc: base hits are live by
     // construction, but a superseded identity shares its doc_id with the
     // dead version's docmap row — anti-join those out before the token
@@ -3346,7 +2859,7 @@ object Wand {
   }
 
   /** Encode a filtered search's ACCEPT SET as synthetic posting runs —
-    * one [[FilterTerm]] run per shard whose "postings" are the sorted
+    * one [[Kernel.FilterTerm]] run per shard whose "postings" are the sorted
     * accepted ords (tf=1, dl=1, zero idf at query time, so it can never
     * contribute score). The runs then ride the SAME shuffle as real term
     * segments, which is the scale-honest transport: the accept set of an
@@ -3383,17 +2896,11 @@ object Wand {
             val o = ords.result()
             val ones = Array.fill(o.length)(1L)
             val blocks = Codec.buildBlocks(o, ones, ones, avgdl).toSeq
-            SegRun(shard, FilterTerm, o.length.toLong, o.length.toLong, avgdl, blocks)
+            SegRun(shard, Kernel.FilterTerm, o.length.toLong, o.length.toLong, avgdl, blocks)
           }
         }
       }
   }
-
-  private val ModeOr = 0
-  private val ModeAnd = 1
-  private val ModePhrase = 2
-  private val ModeBool = 3
-  private val ModeSpan = 4
 
   /** Per-JVM df memo, keyed by the termstats dir's FILE-STATUS fingerprint
     * (file names + lengths + mtimes). Termstats dirs are versioned and
@@ -3436,56 +2943,43 @@ object Wand {
     allTerms.map(t => t -> memo.get(t).longValue()).toMap
   }
 
-  /** Core fan-out shared by every retrieval mode. `qTerms` carries each
-    * query's ROUTING terms (every term whose posting runs the query's
-    * tasks need — for boolean queries that includes `must_not`);
-    * `qPhrase`/`qBool` carry the mode-specific per-query structure.
-    * `from` is the pagination offset: every shard fetches its local
-    * top-(from + k) — pruning bounds stay lossless because the heap just
-    * grew — and the global windows keep ranks (from, from + k]. */
+  /** Core fan-out shared by every WAND-served search: one [[QueryPlan]]
+    * per query id, evaluated per (shard, query block) group by
+    * [[Kernel.groupTopK]]. `from` is the pagination offset: every shard
+    * fetches its local top-(from + k) — pruning bounds stay lossless
+    * because the heap just grew — and the global windows keep ranks
+    * (from, from + k]. `shardDocOrder` breaks score ties by (shard, ord)
+    * instead of doc_id and returns those columns (search_after). */
   private def searchImpl(spark: SparkSession, snap: Snapshot,
-                         qTerms: Map[Int, Array[String]],
-                         k: Int, mode: Int,
+                         plans: Map[Int, QueryPlan], k: Int,
                          filter: Option[org.apache.spark.sql.Column] = None,
-                         qPhrase: Map[Int, Array[String]] = Map.empty,
-                         qBool: Map[Int, BoolQuery] = Map.empty,
                          from: Int = 0,
-                         qAfter: Map[Int, (Double, Int, Long)] = Map.empty,
-                         shardDocOrder: Boolean = false,
-                         qBoost: Map[Int, Map[String, Double]] = Map.empty,
-                         phraseSlop: Int = 0,
-                         qPrefix: Map[Int, Array[String]] = Map.empty,
-                         qSpan: Map[Int, SpanQuery] = Map.empty): DataFrame = {
+                         shardDocOrder: Boolean = false): DataFrame = {
     import spark.implicits._
     require(snap.isComplete, s"snapshot ${snap.id} is not a complete index")
     require(from >= 0, s"from must be >= 0: $from")
     val n = snap.stats.numDocs
     val avgdl = snap.stats.avgdl
-    // qPrefix (phrase-prefix mode): per-query MATCH-ONLY expansion terms —
-    // they must be scanned and routed like query terms (else their runs
-    // never reach the task), but they never score (no cursor idf, no
-    // entry in qTerms)
-    val allTerms =
-      (qTerms.values.flatten ++ qPrefix.values.flatten).toArray.distinct
+    // routing terms: every term whose posting runs a query's tasks need,
+    // match-only ones (must_not, span-only, phrase-prefix expansions)
+    // included — they are scanned and routed, but never score
+    val qRouting: Map[Int, Array[String]] = plans.map { case (q, p) => q -> p.routing }
+    val allTerms = qRouting.values.flatten.toArray.distinct
 
     // global idf from committed termstats (term-pruned scan, tiny collect,
-    // per-JVM memo — see dfFor). Defined for EVERY query term, not just
-    // those present in termstats: in append()'s documented two-commit
-    // window a term first introduced by the batch exists in segments while
+    // per-JVM memo — see dfFor), folded into the plans' weights before
+    // they are broadcast. Defined for EVERY scoring term, not just those
+    // present in termstats: in append()'s documented two-commit window a
+    // term first introduced by the batch exists in segments while
     // termstats still reflects the parent — df falls back to 0 (the
     // parent's df for a new term), which is exactly the docstring's
     // "scores new terms with the parent's df" instead of a
     // NoSuchElementException inside the executor.
-    val dfMap: Map[String, Long] = dfFor(spark, snap, allTerms)
-    val idfMap: Map[String, Double] =
-      allTerms.map(t => t -> Bm25.idf(dfMap.getOrElse(t, 0L), n)).toMap
-    val idfB = spark.sparkContext.broadcast(idfMap)
-    val qTermsB = spark.sparkContext.broadcast(qTerms)
-    // per-(query, term) caret weights: a cursor's idf is pre-multiplied
-    // by the boost, so contributions AND every WAND bound (maxScore,
-    // blockMaxScore) scale together — pruning stays lossless for any
-    // positive boost
-    val qBoostB = spark.sparkContext.broadcast(qBoost)
+    val scoring = plans.valuesIterator.flatMap(p => (p.must ++ p.should).map(_.term))
+      .toArray.distinct
+    val dfMap: Map[String, Long] = dfFor(spark, snap, scoring)
+    val plansB = spark.sparkContext.broadcast(
+      plans.map { case (q, p) => q -> p.weighted(t => Bm25.idf(dfMap.getOrElse(t, 0L), n)) })
 
     val segs = termPruned(spark.read.parquet(snap.segmentDirs: _*), allTerms)
 
@@ -3506,35 +3000,21 @@ object Wand {
     // cores·2 partitions leaves 2-3x stragglers in every wave).
     val S = snap.numShards
     val cores = math.max(1, spark.sparkContext.defaultParallelism)
-    val B = math.max(1, math.min(math.max(1, qTerms.size / 16),
+    val B = math.max(1, math.min(math.max(1, plans.size / 16),
       math.min(graft.plans.KeySpread.Mod / S, math.ceil(2.0 * cores / S).toInt)))
-    val termBlocks: Map[String, Array[Int]] = termQueries(qTerms.toSeq ++ qPrefix.toSeq)
+    val termBlocks: Map[String, Array[Int]] = termQueries(qRouting)
       .map { case (t, qs) => t -> qs.map(math.floorMod(_, B)).distinct.sorted }
     val termBlocksB = spark.sparkContext.broadcast(termBlocks)
     val keys = graft.plans.KeySpread.preimages(S * B)
     val keyToIdx: Map[Int, Int] = keys.zipWithIndex.toMap
     val keyToIdxB = spark.sparkContext.broadcast(keyToIdx)
     val bLocal = B
-    val modeLocal = mode
-    val phraseSlopLocal = phraseSlop
     val kFetch = from + k // per-shard fetch depth: page offset + page size
-    // phrase-order token sequences (NOT distinct/sorted — adjacency is
-    // checked against this order); non-empty only in phrase mode.
-    // qBool likewise carries clause structure only in boolean mode.
-    val qPhraseB = spark.sparkContext.broadcast(qPhrase)
-    val qPrefixB = spark.sparkContext.broadcast(qPrefix)
-    val qBoolB = spark.sparkContext.broadcast(qBool)
-    val qSpanB = spark.sparkContext.broadcast(qSpan)
-    // search_after cursors: (score, shard, ord) of the previous page's
-    // last hit under the global (score desc, shard asc, ord asc) order —
-    // each shard evaluates "ranks after the cursor" LOCALLY (the _shard_doc
-    // tiebreak is computable inside the shard, unlike a doc_id string),
-    // so per-shard state stays exactly k whatever the page depth.
-    val qAfterB = spark.sparkContext.broadcast(qAfter)
 
     val filteredLocal = filter.isDefined
-    // per-group shared-decode budget (see DecodeBudget)
-    val decodeCacheBytes = decodeCacheMbBytes(spark.conf.getOption("spark.graft.decodeCacheMb"))
+    // per-group shared-decode budget (see Kernel.DecodeBudget)
+    val decodeCacheBytes =
+      Kernel.decodeCacheMbBytes(spark.conf.getOption("spark.graft.decodeCacheMb"))
     // The fan-out key is attached NATIVELY (udf-lookup → explode →
     // element_at), never by round-tripping rows through SegRun objects:
     // the old typed flatMap deserialized every pruned run (one SegBlock
@@ -3583,286 +3063,9 @@ object Wand {
             val idx = keyToIdxB.value(key)
             val shard = idx / bLocal
             val block = idx % bLocal
-            // a term may arrive as several salted/appended runs —
-            // concatenate their disjoint-ord block lists (ordered by first
-            // ord) into one cursor, pairing each block with its pruning
-            // bound: the stored exact maxNorm while the run's build-time
-            // avgdl still equals the snapshot's, else the (maxTf, minDl)
-            // impact bound, safe at any avgdl
-            val (fRuns, tRuns) = runs.result().partition(_.term == FilterTerm)
-            // shared-decode budget for this group (all queries, all terms)
-            val budget = new DecodeBudget(decodeCacheBytes)
-            // per-term parallel (blocks, bounds) arrays: Cursor navigation
-            // indexes them constantly, and the old IndexedSeq-of-tuples
-            // (a Vector) charged an apply + tuple deref per access. The
-            // TermDecoded slots are shared by every cursor over the term
-            // in this group — each block decodes once per group, not once
-            // per query.
-            val byTerm: Map[String, (Array[SegBlock], Array[Double], TermDecoded)] =
-              tRuns.groupBy(_.term).map { case (t, rs) =>
-                val pairs = rs.flatMap { r =>
-                  val exact = r.avgdl == avgdl
-                  r.blocks.map(b => (b,
-                    if (exact) b.maxNorm
-                    else Bm25.tfNorm(b.maxTf.toLong, b.minDl, avgdl)))
-                }.sortBy(_._1.first)
-                t -> (pairs.map(_._1).toArray, pairs.map(_._2).toArray,
-                  new TermDecoded(pairs.length))
-              }
-            // the shard's accept set (filtered mode): bounds are never used
-            // for pruning (idf 0), so the bounds array is all-zero. A fresh
-            // forward-only cursor is built PER QUERY — each query's
-            // candidate stream restarts from ord 0 — but the decoded
-            // accept blocks are shared across all of them.
-            val fBlocks: Array[SegBlock] =
-              fRuns.flatMap(_.blocks).sortBy(_.first).toArray
-            val fBounds: Array[Double] = new Array[Double](fBlocks.length)
-            val fTd = new TermDecoded(fBlocks.length)
-            val mkFilterAccept: () => (Long => Boolean) =
-              if (!filteredLocal) () => null
-              else () => {
-                val fc = new Cursor(FilterTerm, 0.0, fBlocks, fBounds, avgdl,
-                  fTd, budget)
-                ord => { fc.advanceTo(ord); !fc.exhausted && fc.curDoc == ord }
-              }
-            val dels = delMask(shard)
-            val deleted: Long => Boolean =
-              if (dels.isEmpty) NotDeleted
-              else ord => java.util.Arrays.binarySearch(dels, ord) >= 0
-            // search_after: "ranks after (cs, csh, cord)" specialized to
-            // THIS shard — strictly-lower score always qualifies; a tied
-            // score qualifies by the (shard, ord) tiebreak, decided
-            // locally (csh/cord are globals of the query's cursor)
-            def mkAfter(qid: Int): (Double, Long) => Boolean =
-              qAfterB.value.get(qid) match {
-                case None => null
-                case Some((cs, csh, cord)) =>
-                  if (shard < csh) (sc: Double, _: Long) => sc < cs
-                  else if (shard == csh)
-                    (sc: Double, o: Long) => sc < cs || (sc == cs && o > cord)
-                  else (sc: Double, _: Long) => sc <= cs
-              }
-            // one cursor per present term, built from the parallel
-            // (blocks, bounds) arrays with the group-shared decode slots
-            def mkCursor(t: String, idf: Double): Option[Cursor] =
-              byTerm.get(t).map { case (bl, bo, td) =>
-                new Cursor(t, idf, bl, bo, avgdl, td, budget) }
-            if (filteredLocal && fBlocks.isEmpty) Iterator.empty
-            else {
-              // flat buffer loop instead of a filter→flatMap→map iterator
-              // chain: the old nesting charged 3-4 iterator hops per
-              // emitted hit and a fresh closure/iterator per query — the
-              // second-hottest site in the query-phase profile after
-              // wandTopK itself
-              val out = new scala.collection.mutable.ArrayBuffer[ShardHit]()
-              def emit(qid: Int, res: Array[(Long, Double)]): Unit = {
-                var i = 0
-                while (i < res.length) {
-                  out += ShardHit(qid, shard, res(i)._1, res(i)._2)
-                  i += 1
-                }
-              }
-              val qit = qTermsB.value.iterator
-              while (qit.hasNext) {
-                val (qid, terms) = qit.next()
-                if (math.floorMod(qid, bLocal) == block) {
-                // terms are distinct+sorted (Golden.queryTerms), so the
-                // cursor array is term-ascending — the summation order
-                // wandTopK and booleanTopK keep (a should-empty booleanTopK
-                // call is the AND / phrase path)
-                if (modeLocal == ModeBool) {
-                  val bq = qBoolB.value(qid)
-                  // forward-only exclusion cursors over the must_not
-                  // terms present in this shard (absent = excludes
-                  // nothing); idf 0 — they never score
-                  val notCursors = bq.mustNot.flatMap(t => mkCursor(t, 0.0))
-                  val filterAcc = mkFilterAccept()
-                  val notAccept: Long => Boolean =
-                    if (notCursors.isEmpty) null
-                    else ord => {
-                      var ok = true
-                      var ci = 0
-                      while (ok && ci < notCursors.length) {
-                        val c = notCursors(ci)
-                        c.advanceTo(ord)
-                        ok = c.exhausted || c.curDoc != ord
-                        ci += 1
-                      }
-                      ok
-                    }
-                  val accept: Long => Boolean =
-                    if (filterAcc == null) notAccept
-                    else if (notAccept == null) filterAcc
-                    else ord => filterAcc(ord) && notAccept(ord)
-                  if (bq.must.nonEmpty) {
-                    // a must term with no postings in THIS shard means no
-                    // doc in the shard can qualify
-                    if (bq.must.forall(byTerm.contains)) {
-                      val mustCursors = bq.must.map(t => mkCursor(t, idfB.value(t)).get)
-                      val shouldCursors = bq.should.flatMap(t =>
-                        mkCursor(t, idfB.value(t)))
-                      emit(qid, booleanTopK(mustCursors, shouldCursors, kFetch,
-                        deleted, accept, mkAfter(qid), bq.effectiveMinShould))
-                    }
-                  } else {
-                    val cursors = bq.should.flatMap(t => mkCursor(t, idfB.value(t)))
-                    if (cursors.nonEmpty)
-                      emit(qid, wandTopK(cursors, kFetch, deleted, accept,
-                        mkAfter(qid), bq.effectiveMinShould))
-                  }
-                } else if (modeLocal == ModeSpan) {
-                  // span mode: disjunctive WAND over the tree's SCORING
-                  // terms (qTerms carries the routing superset — every
-                  // tree term's runs reach this task); the span predicate
-                  // gates acceptance via match-only forward probes, the
-                  // same discipline as boolean mode's must_not cursors
-                  val sq = qSpanB.value(qid)
-                  val cursors = Spans.scoringTerms(sq).flatMap(t =>
-                    mkCursor(t, idfB.value(t)))
-                  if (cursors.nonEmpty) {
-                    // fresh idf-0 cursors over ALL tree terms, independent
-                    // of the scoring cursors' states: accept ords are
-                    // non-decreasing under WAND, so forward-only is safe
-                    val mCursors: Map[String, Cursor] =
-                      Spans.allTerms(sq).flatMap(t =>
-                        mkCursor(t, 0.0).map(c => t -> c)).toMap
-                    val filterAcc = mkFilterAccept()
-                    val spanOk: Long => Boolean = ord => {
-                      val pos: String => Array[Long] = t => mCursors.get(t) match {
-                        case Some(c) =>
-                          c.advanceTo(ord)
-                          if (!c.exhausted && c.curDoc == ord) c.positions
-                          else Array.emptyLongArray
-                        case None => Array.emptyLongArray
-                      }
-                      Spans.matches(sq, pos)
-                    }
-                    val accept: Long => Boolean =
-                      if (filterAcc == null) spanOk
-                      else ord => filterAcc(ord) && spanOk(ord)
-                    emit(qid, wandTopK(cursors, kFetch, deleted, accept, mkAfter(qid)))
-                  }
-                } else if (modeLocal != ModeOr) {
-                  // a query term with no postings in THIS shard means no
-                  // doc in the shard can match all terms
-                  // phrase-prefix mode: match-only cursors (idf 0 — they
-                  // never score) over the last position's dictionary
-                  // expansion; a query whose expansion has no postings in
-                  // THIS shard can match nothing here (an empty expansion
-                  // is Lucene's MatchNoDocsQuery rewrite)
-                  val expCursors: Array[Cursor] =
-                    qPrefixB.value.get(qid) match {
-                      case None => null
-                      case Some(exps) => exps.flatMap(t => mkCursor(t, 0.0))
-                    }
-                  if (terms.forall(byTerm.contains) &&
-                      !(expCursors != null && expCursors.isEmpty)) {
-                    val bs = qBoostB.value.getOrElse(qid, null)
-                    val cursors = terms.map(t =>
-                      mkCursor(t, idfB.value(t) *
-                        (if (bs == null) 1.0 else bs.getOrElse(t, 1.0))).get)
-                    val filterAcc = mkFilterAccept()
-                    val accept: Long => Boolean =
-                      if (modeLocal != ModePhrase) filterAcc
-                      else {
-                        val cur = terms.zip(cursors).toMap
-                        val slots = qPhraseB.value(qid).map(cur)
-                        val phraseOk: Long => Boolean = ord => {
-                          // expansion slot (phrase-prefix mode): position
-                          // arrays of the expanded terms present AT this
-                          // doc — none present means no match whatever the
-                          // fixed chain does
-                          var expPos: Array[Array[Long]] = null
-                          var expOk = true
-                          if (expCursors != null) {
-                            val b = Array.newBuilder[Array[Long]]
-                            var ci = 0
-                            while (ci < expCursors.length) {
-                              val c = expCursors(ci)
-                              c.advanceTo(ord)
-                              if (!c.exhausted && c.curDoc == ord) b += c.positions
-                              ci += 1
-                            }
-                            expPos = b.result()
-                            expOk = expPos.nonEmpty
-                          }
-                          // any start position in slot 0 whose successors
-                          // appear at +1, +2, ... in the later slots
-                          // (slop = 0), or — slop > 0 — whose greedy
-                          // minimal in-order chain spans within the slop
-                          // budget (smallest next position minimizes the
-                          // final span, so greedy is exact); with an
-                          // expansion slot the phrase has fLen+1 positions,
-                          // the last being the SMALLEST occurrence of any
-                          // expanded term after the fixed chain's end
-                          val fLen = slots.length
-                          val p0 = slots(0).positions
-                          var found = false
-                          var a = 0
-                          while (expOk && !found && a < p0.length) {
-                            val start = p0(a)
-                            var curP = start
-                            var ok = true
-                            if (phraseSlopLocal == 0) {
-                              var j = 1
-                              while (ok && j < fLen) {
-                                ok = java.util.Arrays.binarySearch(
-                                  slots(j).positions, start + j) >= 0
-                                j += 1
-                              }
-                              if (ok) curP = start + fLen - 1
-                            } else {
-                              var j = 1
-                              while (ok && j < fLen) {
-                                val ps = slots(j).positions
-                                var idx = java.util.Arrays.binarySearch(ps, curP + 1)
-                                if (idx < 0) idx = -idx - 1
-                                if (idx >= ps.length) ok = false
-                                else { curP = ps(idx); j += 1 }
-                              }
-                            }
-                            if (ok && expCursors != null) {
-                              // budget: (expansion pos − start) − fLen ≤ slop
-                              var best = Long.MaxValue
-                              var ei = 0
-                              while (ei < expPos.length) {
-                                val ps = expPos(ei)
-                                var idx = java.util.Arrays.binarySearch(ps, curP + 1)
-                                if (idx < 0) idx = -idx - 1
-                                if (idx < ps.length && ps(idx) < best) best = ps(idx)
-                                ei += 1
-                              }
-                              ok = best != Long.MaxValue &&
-                                (best - start) - fLen <= phraseSlopLocal
-                            } else if (ok && phraseSlopLocal > 0) {
-                              ok = (curP - start) - (fLen - 1) <= phraseSlopLocal
-                            }
-                            found = ok
-                            a += 1
-                          }
-                          expOk && found
-                        }
-                        // filter check first: cheaper than position decode
-                        if (filterAcc == null) ord => phraseOk(ord)
-                        else ord => filterAcc(ord) && phraseOk(ord)
-                      }
-                    emit(qid, booleanTopK(cursors, Array.empty, kFetch, deleted,
-                      accept, mkAfter(qid)))
-                  }
-                } else {
-                  val bs = qBoostB.value.getOrElse(qid, null)
-                  val cursors = terms.flatMap { t =>
-                    mkCursor(t, idfB.value(t) *
-                      (if (bs == null) 1.0 else bs.getOrElse(t, 1.0)))
-                  }
-                  if (cursors.nonEmpty)
-                    emit(qid, wandTopK(cursors, kFetch, deleted, mkFilterAccept(),
-                      mkAfter(qid)))
-                }
-                }
-              }
-              out.iterator
-            }
+            Kernel.groupTopK(shard, runs.result(), delMask(shard),
+              plansB.value.iterator.filter { case (qid, _) => math.floorMod(qid, bLocal) == block },
+              kFetch, avgdl, filteredLocal, decodeCacheBytes)
           }
         }.flatten
       }

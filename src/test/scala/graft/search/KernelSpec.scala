@@ -1,7 +1,7 @@
 package graft.search
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.index.{Codec, SegBlock}
+import graft.index.{Codec, SegBlock, SegRun}
 
 /** Seeded property pins for the per-shard top-k kernels — no Spark.
   * Cursors are built straight from [[Codec.buildBlocks]] output and every
@@ -146,38 +146,38 @@ class KernelSpec extends AnyFunSuite {
       if (orWant.nonEmpty || andWant.nonEmpty || boolWant.nonEmpty) nonEmpty += 1
 
       for (budgetBytes <- Seq(0L, OneBlock, Long.MaxValue)) {
-        val budget = new Wand.DecodeBudget(budgetBytes)
+        val budget = new Kernel.DecodeBudget(budgetBytes)
         // decode slots shared by every cursor over a term, as in one
         // fan-out group of the search path
-        val tds = sh.blocks.map(b => new Wand.TermDecoded(b.length))
+        val tds = sh.blocks.map(b => new Kernel.TermDecoded(b.length))
         val acceptTd = {
           val ones = Array.fill(acceptSet.length)(1L)
           val bl = Codec.buildBlocks(acceptSet, ones, ones, sh.avgdl)
-          (bl, new Wand.TermDecoded(bl.length))
+          (bl, new Kernel.TermDecoded(bl.length))
         }
-        def cursor(t: Int): Wand.Cursor =
-          new Wand.Cursor(sh.terms(t), sh.idf(t), sh.blocks(t), sh.bounds(t),
+        def cursor(t: Int): Kernel.Cursor =
+          new Kernel.Cursor(sh.terms(t), sh.idf(t), sh.blocks(t), sh.bounds(t),
             sh.avgdl, tds(t), budget)
         def accept(): Long => Boolean =
           if (acceptKind < 2) acceptPure
           else {
             val (bl, td) = acceptTd
-            val fc = new Wand.Cursor(Wand.FilterTerm, 0.0, bl, new Array[Double](bl.length),
+            val fc = new Kernel.Cursor(Kernel.FilterTerm, 0.0, bl, new Array[Double](bl.length),
               sh.avgdl, td, budget)
             o => { fc.advanceTo(o); !fc.exhausted && fc.curDoc == o }
           }
         val ctx = s"case $c budget $budgetBytes"
 
-        val orGot = Wand.wandTopK(orTerms.map(cursor), k, deleted, accept(), orAfter, minMatch)
+        val orGot = Kernel.wandTopK(orTerms.map(cursor), k, deleted, accept(), orAfter, minMatch)
         assert(orGot.toSeq == orWant, s"OR $ctx")
         assert(budget.remaining >= 0, s"OR $ctx overshot: ${budget.remaining}")
 
-        val andGot = Wand.booleanTopK(andTerms.map(cursor), Array.empty, k, deleted,
+        val andGot = Kernel.booleanTopK(andTerms.map(cursor), Array.empty, k, deleted,
           accept(), andAfter)
         assert(andGot.toSeq == andWant, s"AND $ctx")
         assert(budget.remaining >= 0, s"AND $ctx overshot: ${budget.remaining}")
 
-        val boolGot = Wand.booleanTopK(must.map(cursor), should.map(cursor), k, deleted,
+        val boolGot = Kernel.booleanTopK(must.map(cursor), should.map(cursor), k, deleted,
           accept(), boolAfter, minShould)
         assert(boolGot.toSeq == boolWant, s"bool $ctx")
         assert(budget.remaining >= 0, s"bool $ctx overshot: ${budget.remaining}")
@@ -186,5 +186,165 @@ class KernelSpec extends AnyFunSuite {
     // the generator must actually produce hits, or the equalities above
     // pin nothing
     assert(nonEmpty > 250, s"only $nonEmpty of 300 cases had any hit")
+  }
+
+  /** One random positional shard: docs are token sequences over a small
+    * vocabulary (so phrases and spans match often), and every posting
+    * carries its positions, encoded through [[Codec.buildBlocks]]. A term
+    * may arrive as two runs, one of them built at a stale avgdl, as after
+    * an incremental append. */
+  private final class PosShard(rnd: java.util.SplittableRandom) {
+    val numDocs: Int = 60 + rnd.nextInt(340)
+    val terms: Array[String] = Array.tabulate(3 + rnd.nextInt(4))(i => s"t$i")
+    val docs: Array[Array[String]] = Array.fill(numDocs) {
+      // Zipf-like token draw: low term indexes are frequent
+      Array.fill(3 + rnd.nextInt(30)) {
+        terms(math.min(terms.length - 1, (rnd.nextDouble() * rnd.nextDouble() * terms.length).toInt))
+      }
+    }
+    val avgdl: Double = docs.map(_.length.toLong).sum.toDouble / numDocs
+    val df: Map[String, Int] = terms.map(t => t -> docs.count(_.contains(t))).toMap
+    def idf(t: String): Double = Bm25.idf(df(t).toLong, numDocs.toLong)
+    def positions(d: Int, t: String): Array[Long] =
+      docs(d).indices.filter(docs(d)(_) == t).map(_.toLong).toArray
+    def tfNorm(d: Int, t: String): Double =
+      Bm25.tfNorm(positions(d, t).length.toLong, docs(d).length.toLong, avgdl)
+
+    val runs: Seq[SegRun] = terms.toSeq.flatMap { t =>
+      val ords = (0 until numDocs).filter(d => docs(d).contains(t)).map(_.toLong).toArray
+      val cut = if (ords.length > 1 && rnd.nextInt(3) == 0) 1 + rnd.nextInt(ords.length - 1)
+                else ords.length
+      Seq(ords.take(cut), ords.drop(cut)).filter(_.nonEmpty).map { os =>
+        val runAvgdl = if (rnd.nextInt(3) == 0) avgdl * (0.5 + rnd.nextDouble()) else avgdl
+        val ps = os.map(o => positions(o.toInt, t))
+        val blocks = Codec.buildBlocks(os, ps.map(_.length.toLong),
+          os.map(o => docs(o.toInt).length.toLong), runAvgdl, ps.map(Codec.encodePositions))
+        SegRun(0, t, os.length.toLong, ps.map(_.length.toLong).sum, runAvgdl, blocks.toSeq)
+      }
+    }
+  }
+
+  test("groupTopK runs boosted, phrase, phrase-prefix, must_not and span plans " +
+       "bit-identical to the brute-force scorer (seeded, 200 cases)") {
+    val rnd = new java.util.SplittableRandom(20261019L)
+    val boosts = Array(0.5, 1.0, 2.5, 3.0)
+    val shard = 3
+    var hits = 0
+    var phraseHits = 0
+    var spanHits = 0
+    for (c <- 0 until 200) {
+      val sh = new PosShard(rnd)
+      val ts = sh.terms
+      def pick(): String = ts(rnd.nextInt(ts.length))
+      def subset(): Array[String] = ts.filter(_ => rnd.nextBoolean())
+      val k = 1 + rnd.nextInt(12)
+      val dels = (0 until sh.numDocs).filter(_ => rnd.nextInt(10) == 0).map(_.toLong).toArray
+      val filtered = rnd.nextInt(3) == 0
+      val acceptSet = (0 until sh.numDocs).filter(_ => rnd.nextInt(4) != 0).map(_.toLong).toArray
+      val filterRun = if (!filtered || acceptSet.isEmpty) Seq.empty else {
+        val ones = Array.fill(acceptSet.length)(1L)
+        Seq(SegRun(0, Kernel.FilterTerm, acceptSet.length.toLong, acceptSet.length.toLong,
+          sh.avgdl, Codec.buildBlocks(acceptSet, ones, ones, sh.avgdl).toSeq))
+      }
+      // a phrase of 2-4 tokens: a window of some doc (so it often
+      // matches), sometimes one repeated term ("a a")
+      def phraseTokens(): Array[String] =
+        if (rnd.nextInt(4) == 0) { val t = pick(); Array.fill(2 + rnd.nextInt(2))(t) }
+        else {
+          val d = sh.docs(rnd.nextInt(sh.numDocs))
+          val m = math.min(d.length, 2 + rnd.nextInt(3))
+          d.slice(rnd.nextInt(d.length - m + 1), d.length).take(m)
+        }
+      // span trees whose excluded or context subtree routes but never scores
+      def spanTree(): SpanQuery = {
+        val near = SpanNear(Seq(SpanTerm(pick()), SpanOr(Seq(SpanTerm(pick()), SpanTerm(pick())))),
+          rnd.nextInt(4))
+        rnd.nextInt(3) match {
+          case 0 => SpanNot(near, SpanTerm(pick()), rnd.nextInt(2), rnd.nextInt(2))
+          case 1 => SpanContaining(near, SpanTerm(pick()))
+          case _ => SpanWithin(near, SpanTerm(pick()))
+        }
+      }
+      val boolMust = subset()
+      val boolShould = ts.filterNot(boolMust.contains).filter(_ => rnd.nextBoolean())
+      val boolNot = ts.filterNot(t => boolMust.contains(t) || boolShould.contains(t))
+        .filter(_ => rnd.nextBoolean())
+      val prefixFixed = phraseTokens().take(1 + rnd.nextInt(2))
+      val prefixExp = if (rnd.nextInt(4) == 0) Array.empty[String] else subset()
+      val orBoost = ts.map(t => t -> boosts(rnd.nextInt(boosts.length))).toMap
+      val orTerms = subset()
+      val andTerms = subset()
+      val phrase = phraseTokens()
+      val phraseSlop = rnd.nextInt(4)
+      val tree = spanTree()
+      // plans, and each one's independent match predicate over a doc's tokens
+      val cases: Seq[(QueryPlan, Int => Boolean)] = Seq(
+        QueryPlan.terms(orTerms, conjunctive = false, orBoost) -> (_ => true),
+        QueryPlan.terms(andTerms, conjunctive = true, orBoost) -> (_ => true),
+        QueryPlan.phrase(phrase, phraseSlop) ->
+          (d => Golden.chainMatch(sh.docs(d).toSeq, phrase.toSeq, phraseSlop)),
+        QueryPlan.phrase(prefixFixed, phraseSlop, Some(prefixExp)) ->
+          (d => prefixExp.exists(e =>
+            Golden.chainMatch(sh.docs(d).toSeq, (prefixFixed :+ e).toSeq, phraseSlop))),
+        (if (boolMust.isEmpty && boolShould.isEmpty) QueryPlan.terms(Array(pick()))
+         else QueryPlan.bool(BoolQuery(0, boolMust, boolShould, boolNot,
+           rnd.nextInt(boolShould.length + 1)))) -> (_ => true),
+        QueryPlan.span(tree) ->
+          (d => Spans.spans(tree, t => sh.positions(d, t)).nonEmpty)
+      )
+      // search_after on some plans: a cursor on a neighbouring shard, so
+      // all three of the tie rules are exercised
+      val plans = cases.map { case (p, _) =>
+        val w = p.weighted(sh.idf)
+        if (rnd.nextInt(3) != 0) w
+        else w.copy(after = Some((rnd.nextInt(40) / 10.0, shard - 1 + rnd.nextInt(3),
+          rnd.nextInt(sh.numDocs).toLong)))
+      }
+
+      val want: Seq[Seq[(Long, Double)]] = cases.zip(plans).map { case ((_, matches), p) =>
+        val scoring = (p.must ++ p.should).sortBy(_.term)
+        (0 until sh.numDocs).filter { d =>
+          val has = (t: String) => sh.docs(d).contains(t)
+          p.must.forall(w => has(w.term)) &&
+            p.should.count(w => has(w.term)) >= math.max(p.minShould,
+              if (p.must.isEmpty) 1 else 0) &&
+            !p.mustNot.exists(has) && matches(d) &&
+            java.util.Arrays.binarySearch(dels, d.toLong) < 0 &&
+            (!filtered || java.util.Arrays.binarySearch(acceptSet, d.toLong) >= 0)
+        }.map { d =>
+          var s = 0.0
+          scoring.foreach(w => if (sh.docs(d).contains(w.term)) s += w.weight * sh.tfNorm(d, w.term))
+          (d.toLong, s)
+        }.filter { case (o, s) => p.after.forall { case (cs, csh, cord) =>
+          s < cs || (s == cs && (shard > csh || (shard == csh && o > cord))) }
+        }.sortBy { case (o, s) => (-s, o) }.take(k)
+      }
+      hits += want.count(_.nonEmpty)
+      if (want(2).nonEmpty || want(3).nonEmpty) phraseHits += 1
+      if (want(5).nonEmpty) spanHits += 1
+
+      for (budgetBytes <- Seq(0L, OneBlock, Long.MaxValue)) {
+        val got = Kernel.groupTopK(shard, sh.runs ++ filterRun, dels,
+            plans.indices.iterator.map(i => i -> plans(i)), k, sh.avgdl, filtered, budgetBytes)
+          .toSeq.groupBy(_.query_id)
+        plans.indices.foreach { i =>
+          val g = got.getOrElse(i, Seq.empty)
+          assert(g.forall(_.shard == shard))
+          assert(g.map(h => (h.ord, h.score)) == want(i),
+            s"case $c plan $i budget $budgetBytes: ${plans(i)}")
+        }
+      }
+    }
+    // the generator must produce hits for the accept paths, or the
+    // equalities above pin nothing
+    assert(hits > 600, s"only $hits of 1200 plans had any hit")
+    assert(phraseHits > 100, s"only $phraseHits of 200 cases had a phrase hit")
+    assert(spanHits > 40, s"only $spanHits of 200 cases had a span hit")
+  }
+
+  test("the kernel source has no Spark import") {
+    val src = scala.io.Source.fromFile("src/main/scala/graft/search/Kernel.scala", "UTF-8")
+    try assert(!src.mkString.contains("org.apache.spark"))
+    finally src.close()
   }
 }

@@ -124,4 +124,27 @@ class SpansSpec extends AnyFunSuite {
     assert(Spans.allTerms(q).toSeq == Seq("a", "z"))
     assert(Spans.scoringTerms(q).toSeq == Seq("a"))
   }
+
+  test("span_near over terms and term-ORs: the greedy existence test equals the enumeration (seeded)") {
+    val rnd = new java.util.SplittableRandom(20261019L)
+    var matched = 0
+    for (c <- 0 until 3000) {
+      val vocab = Array.tabulate(2 + rnd.nextInt(4))(i => s"w$i")
+      val doc = Array.fill(1 + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.length)))
+      val pos = posOf(doc.mkString(" "))
+      // 1-5 clauses, each a term or an OR of terms; terms repeat freely,
+      // within a clause and across clauses
+      val clauses = Seq.fill(1 + rnd.nextInt(5)) {
+        if (rnd.nextInt(3) == 0)
+          SpanOr(Seq.fill(rnd.nextInt(4))(SpanTerm(vocab(rnd.nextInt(vocab.length)))))
+        else SpanTerm(vocab(rnd.nextInt(vocab.length)))
+      }
+      val q = SpanNear(clauses, rnd.nextInt(5))
+      val want = Spans.spans(q, pos).nonEmpty
+      assert(Spans.matches(q, pos) == want, s"case $c: $q over '${doc.mkString(" ")}'")
+      if (want) matched += 1
+    }
+    // both outcomes must be common, or the equality pins little
+    assert(matched > 600 && matched < 2400, s"$matched of 3000 matched")
+  }
 }
