@@ -1,20 +1,30 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
 import graft.analyze.AnalyzerConfig
 import graft.corpus.RefQuery
+import DocScan.DocQuery
 
 /** The exact BM25 scorer — the "primary cluster" of the comparison pair
   * (reference discipline: primary = source of truth,
-  * response_comparison.py:32-46). Pure declarative DataFrame plan over the
-  * raw corpus: tokenize → per-(doc,term) tf → early semi-filter on the
-  * (broadcast) query-term set → score → per-query top-k window.
+  * response_comparison.py:32-46). A brute-force pass over the raw corpus,
+  * one document at a time ([[DocScan]]): analyze it, take `dl`, count its
+  * (term, tf) pairs over the queries' sorted term dictionary and decide
+  * which queries it is a hit of (phrase and phrase-prefix adjacency by
+  * [[chainMatch]], spans by [[Spans.matches]], both on the token array);
+  * one reduce of the per-partition sums gives N, Σdl and every df; each
+  * partition then scores its hits and keeps its own top-k per query, and
+  * one window over those cuts ranks the global top-k. tf is
+  * document-local, so nothing shuffles before that window.
   *
   * Determinism contract shared with [[Wand]]: per-term contributions are
-  * `Bm25.idf * Bm25.tfNorm` (the same JVM functions), summed in ascending
-  * term order — so golden and fast scores are bit-identical doubles.
+  * `(Bm25.idf × boost) × Bm25.tfNorm` (the same JVM functions; boost 1.0
+  * unless caret-weighted), summed from 0.0 in ascending term order — so
+  * golden and fast scores are bit-identical doubles. Equal scores rank by
+  * doc_id ascending.
   */
 object Golden {
 
@@ -57,10 +67,7 @@ object Golden {
   /** Exact top-k for every query.
     *
     * Eager: the (tiny, |queries|·k-row) result is materialized before
-    * returning. The method runs three actions over the tokenized corpus
-    * (stats, df, score) and the tokenizer is the dominant cost — `toks`
-    * is persisted across them and unpersisted before return, which needs
-    * the final plan forced while the cache is alive.
+    * returning, and nothing stays cached (see [[ranks]]).
     *
     * @param docs (doc_id: string, content: string)
     * @param conjunctive require EVERY query term in a hit (AND semantics);
@@ -125,14 +132,10 @@ object Golden {
                 qTerms: Map[Int, Array[String]], k: Int,
                 conjunctive: Boolean = false,
                 docFilter: Option[DataFrame] = None, from: Int = 0,
-                analyzer: AnalyzerConfig = AnalyzerConfig.default): DataFrame = {
-    val toks = docs.select(col("doc_id"), analyzer.tokens(col("content")).as("tokens"))
-      .withColumn("dl", size(col("tokens")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try topKOverToks(spark, toks, qTerms, k, conjunctive, docFilter = docFilter,
-      from = from)
-    finally toks.unpersist(false)
-  }
+                analyzer: AnalyzerConfig = AnalyzerConfig.default): DataFrame =
+    byQuery(spark, docs,
+      qTerms.toSeq.map { case (qid, ts) => qid -> DocQuery(QueryPlan.terms(ts, conjunctive)) },
+      k, from, docFilter, analyzer)
 
   /** Exact boosted top-k — the golden counterpart of
     * [[Wand.boostedSearchSnapshot]]: per-(query, term) weights multiply the
@@ -144,36 +147,10 @@ object Golden {
                   conjunctive: Boolean = false,
                   docFilter: Option[DataFrame] = None,
                   from: Int = 0,
-                  analyzer: AnalyzerConfig = AnalyzerConfig.default): DataFrame = {
-    import spark.implicits._
-    val toks = docs.select(col("doc_id"), analyzer.tokens(col("content")).as("tokens"))
-      .withColumn("dl", size(col("tokens")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ctx = scoreCtx(spark, toks,
-        qBoost.values.flatten.map(_._1).toArray.distinct)
-      val qdf = qBoost.toSeq
-        .flatMap { case (qid, ts) => ts.map { case (t, w) => (qid, t, w) } }
-        .toDF("query_id", "term", "boost")
-      val scored0 = ctx.tfq.join(broadcast(qdf), Seq("term"))
-        .withColumn("c",
-          ctx.contribBoost(col("term"), col("boost"), col("tf"), col("dl")))
-        .groupBy("query_id", "doc_id")
-        .agg(sumSorted(collect_list(struct(col("term"), col("c")))).as("score"),
-          count(lit(1)).as("nt"))
-      val scored1 =
-        if (!conjunctive) scored0.drop("nt")
-        else {
-          val qn = qBoost.toSeq.map { case (qid, ts) => (qid, ts.length) }
-            .toDF("query_id", "qt")
-          scored0.join(broadcast(qn), Seq("query_id"))
-            .filter(col("nt") === col("qt")).drop("nt", "qt")
-        }
-      val scored = docFilter.fold(scored1)(f =>
-        scored1.join(f.select("doc_id"), Seq("doc_id"), "left_semi"))
-      finishTopK(spark, scored, k, from)
-    } finally toks.unpersist(false)
-  }
+                  analyzer: AnalyzerConfig = AnalyzerConfig.default): DataFrame =
+    byQuery(spark, docs, qBoost.toSeq.map { case (qid, ts) =>
+      qid -> DocQuery(QueryPlan.terms(ts.map(_._1), conjunctive, ts.toMap))
+    }, k, from, docFilter, analyzer)
 
   /** Exact phrase top-k — the golden counterpart of
     * [[Wand.phraseSearchSnapshot]]: each query text is one phrase; a hit
@@ -186,54 +163,44 @@ object Golden {
                  k: Int, docFilter: Option[DataFrame] = None,
                  slop: Int = 0,
                  analyzer: AnalyzerConfig = AnalyzerConfig.default): DataFrame = {
-    import spark.implicits._
     require(slop >= 0, s"slop must be >= 0: $slop")
-    val toks = docs.select(col("doc_id"), analyzer.tokens(col("content")).as("tokens"))
-      .withColumn("dl", size(col("tokens")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val slopL = slop
-      val containsSeq = udf((ts: Seq[String], phrase: Seq[String]) =>
-        chainMatch(ts, phrase, slopL))
-      val qp = queries.map(q => (q.query_id, analyzer.analyzeQuery(q.text).toSeq))
-        .toDF("query_id", "phrase")
-      // |queries| is tiny: the broadcast product is one narrow pass over
-      // the tokenized corpus per query, the honest exact baseline
-      val matches = toks.crossJoin(broadcast(qp))
-        .filter(containsSeq(col("tokens"), col("phrase")))
-        .select("query_id", "doc_id")
-      topKOverToks(spark, toks,
-        queries.map(q => q.query_id -> queryTerms(q.text, analyzer)).toMap,
-        k, conjunctive = false,
-        matchFilter = Some(matches), docFilter = docFilter)
-    } finally toks.unpersist(false)
+    byQuery(spark, docs, queries.map { q =>
+      val phrase = analyzer.analyzeQuery(q.text)
+      q.query_id -> DocQuery(QueryPlan.terms(phrase.distinct.sorted), Some(chainTest(phrase, slop)))
+    }, k, 0, docFilter, analyzer)
   }
 
   /** Greedy minimal in-order chain containment — the ONE phrase-match
-    * predicate both engines' rescorers share: positions p₀ < … < pₘ₋₁ of
-    * the phrase tokens in order with (pₘ₋₁ − p₀) − (m − 1) ≤ slop. From
-    * each start, picking the smallest next in-order occurrence minimizes
-    * the final span, so greedy is exact (budget 0 forces consecutive —
-    * the plain match_phrase). */
-  private[search] def chainMatch(ts: Seq[String], phrase: Seq[String],
-                                 slop: Int): Boolean = {
+    * predicate of the golden scorer, the percolator and the WAND
+    * rescorer: positions p₀ < … < pₘ₋₁ of the slots in order with
+    * (pₘ₋₁ − p₀) − (m − 1) ≤ slop. The slots are the phrase tokens, then,
+    * when `last` is set (phrase-prefix), one more slot matched by any
+    * term of `last`. From each start, picking the smallest next in-order
+    * occurrence minimizes the final span, so greedy is exact (budget 0
+    * forces consecutive — the plain match_phrase); the scan for slot j
+    * stops at p₀ + j + slop, past which the budget is already spent, so a
+    * start costs at most (slop + 1) probes per slot. */
+  private[search] def chainMatch(ts: scala.collection.IndexedSeq[String],
+                                 phrase: scala.collection.IndexedSeq[String],
+                                 slop: Int, last: Option[Set[String]] = None): Boolean = {
     if (ts == null || phrase == null || phrase.isEmpty) false
     else {
-      val arr = ts.toArray
-      val m = phrase.length
+      val m = phrase.length + (if (last.isDefined) 1 else 0)
+      def fits(j: Int, t: String): Boolean =
+        if (j < phrase.length) t == phrase(j) else last.get.contains(t)
       var found = false
       var i = 0
-      while (!found && i < arr.length) {
-        if (arr(i) == phrase(0)) {
+      while (!found && i < ts.length) {
+        if (ts(i) == phrase(0)) {
           var curP = i
           var ok = true
           var j = 1
           while (ok && j < m) {
             // token j past i + j + slop already spends more than the
             // budget, whatever follows
-            val limit = math.min(arr.length.toLong, i.toLong + j + slop + 1).toInt
+            val limit = math.min(ts.length.toLong, i.toLong + j + slop + 1).toInt
             var q = curP + 1
-            while (q < limit && arr(q) != phrase(j)) q += 1
+            while (q < limit && !fits(j, ts(q))) q += 1
             if (q >= limit) ok = false
             else { curP = q; j += 1 }
           }
@@ -245,40 +212,27 @@ object Golden {
     }
   }
 
-  /** The shared secondary scorer of [[rescorePhraseTopK]] and
-    * [[Wand.rescorePhrase]] — ONE definition so the two engines are
-    * bit-identical by construction: 0.0 when the doc does not contain the
-    * phrase (within `slop`), else the BM25 sum over the phrase's DISTINCT
-    * terms in ascending term order (the engine-wide summation contract),
-    * tf/dl taken from the doc's analyzed tokens, idf supplied by the
-    * caller (termstats on the engine side, exact toks-df on the golden
-    * side — equal doubles on a committed index). */
-  private[search] def secondaryPhraseScore(ts: Seq[String],
-                                           phrase: Seq[String],
-                                           idf: String => Double,
-                                           avgdl: Double, slop: Int): Double = {
-    if (!chainMatch(ts, phrase, slop)) 0.0
-    else {
-      val dl = ts.length.toLong
-      var acc = 0.0
-      phrase.distinct.sorted.foreach { t =>
-        var tf = 0L
-        ts.foreach(x => if (x == t) tf += 1)
-        if (tf > 0) acc += idf(t) * Bm25.tfNorm(tf, dl, avgdl)
-      }
-      acc
-    }
+  /** [[chainMatch]] of `phrase` as a [[DocScan]] token test. */
+  private def chainTest(phrase: Array[String], slop: Int,
+                        last: Option[Set[String]] = None): Array[String] => Boolean = {
+    val ph = phrase.toIndexedSeq
+    ts => chainMatch(ts, ph, slop, last)
   }
 
   /** Exact rescore — the golden counterpart of [[Wand.rescorePhrase]]
     * (the OpenSearch `rescore` clause with a `match_phrase` rescorer,
     * `score_mode: total`): the base BM25 top-`window` hits are re-ranked
     * by `queryWeight × base + rescoreWeight × secondary`, where the
-    * secondary is the [[secondaryPhraseScore]] of the query's own
-    * analyzed token sequence (0 for window docs that don't contain the
-    * phrase — they keep their weighted base score, the OpenSearch
-    * behavior). Hits below the window are never promoted — the defining
-    * property of rescoring vs re-querying.
+    * secondary is the BM25 sum over the distinct terms of the query's own
+    * analyzed token sequence for window docs that contain it as a phrase
+    * (within `slop`), else 0 — they keep their weighted base score, the
+    * OpenSearch behavior. Hits below the window are never promoted — the
+    * defining property of rescoring vs re-querying.
+    *
+    * One scan runs both query sets: the base queries and, per query, its
+    * phrase query. A phrase hit holds every base term, so it is a base
+    * hit with the same score, and its phrase rank is at most its base
+    * rank: the phrase top-`window` holds every window doc that matches.
     * @return (query_id int, rank int, doc_id string, score double) */
   def rescorePhraseTopK(spark: SparkSession, docs: DataFrame,
                         queries: Seq[RefQuery], k: Int, window: Int,
@@ -290,36 +244,18 @@ object Golden {
     require(k > 0, s"k must be positive: $k")
     require(window >= k, s"window ($window) must be >= k ($k)")
     require(slop >= 0, s"slop must be >= 0: $slop")
-    val base = topK(spark, docs, queries, window, conjunctive,
-        analyzer = analyzer)
-      .withColumnRenamed("score", "base_score").drop("rank")
-    val toks = docs.select(col("doc_id"), analyzer.tokens(col("content")).as("tokens"))
-      .withColumn("dl", size(col("tokens")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val statsRow = toks.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-      val n = statsRow.getLong(0)
-      val avgdl = if (n == 0) 1.0 else statsRow.getLong(1).toDouble / n
-      val phrases: Map[Int, Seq[String]] =
-        queries.map(q => q.query_id -> analyzer.analyzeQuery(q.text).toSeq).toMap
-      val allTerms = phrases.values.flatten.toArray.distinct
-      val dfMap: Map[String, Long] = Wand.termPruned(
-          toks.select(col("doc_id"), explode(col("tokens")).as("term")), allTerms)
-        .groupBy("term").agg(count_distinct(col("doc_id")).as("df"))
-        .as[(String, Long)].collect().toMap
-      val idfMap: Map[String, Double] =
-        allTerms.map(t => t -> Bm25.idf(dfMap.getOrElse(t, 0L), n)).toMap
-      val idfB = spark.sparkContext.broadcast(idfMap)
-      val qpB = spark.sparkContext.broadcast(phrases)
-      val slopL = slop
-      val secU = udf((qid: Int, ts: Seq[String]) =>
-        secondaryPhraseScore(ts, qpB.value(qid), idfB.value, avgdl, slopL))
-      val scored = toks.join(broadcast(base), Seq("doc_id"))
-        .withColumn("score",
-          lit(queryWeight) * col("base_score") +
-            lit(rescoreWeight) * secU(col("query_id"), col("tokens")))
-      finishTopK(spark, scored.select("query_id", "doc_id", "score"), k)
-    } finally toks.unpersist(false)
+    val qs = queries.toIndexedSeq
+    val phrases = qs.map(q => analyzer.analyzeQuery(q.text))
+    val base = phrases.map(ph => DocQuery(QueryPlan.terms(ph.distinct.sorted, conjunctive)))
+    val phrase = phrases.map(ph =>
+      DocQuery(QueryPlan.terms(ph.distinct.sorted), Some(chainTest(ph, slop))))
+    val rows = ranks(spark, docs, base ++ phrase, window, 0, None, analyzer)
+    val secondary: Map[(Int, String), Double] =
+      rows.collect { case (j, _, d, s) if j >= qs.length => (j - qs.length, d) -> s }.toMap
+    val rescored = rows.toSeq.collect { case (j, _, d, s) if j < qs.length =>
+      (qs(j).query_id, d, queryWeight * s + rescoreWeight * secondary.getOrElse((j, d), 0.0))
+    }
+    frame(spark, finishTopK(rescored.toDF("query_id", "doc_id", "score"), k))
   }
 
   /** Exact phrase-prefix top-k — the golden counterpart of
@@ -327,8 +263,7 @@ object Golden {
     * ([[Wand.phrasePrefixExpand]] is shared by both engines): a hit must
     * contain the fixed token sequence as an in-order phrase within the
     * `slop` budget, followed by ANY expanded term in the next slot
-    * (checked by a brute-force greedy scan over the full token array —
-    * greedy minimal chains are exact, see [[phraseTopK]]); scored as the
+    * ([[chainMatch]] with the expansion as its last slot); scored as the
     * BM25 sum over the distinct FIXED terms only.
     * @param qFixed per-query fixed token sequence (phrase order)
     * @param qExp   per-query expansion of the last (prefix) token */
@@ -337,78 +272,18 @@ object Golden {
                        qExp: Map[Int, Array[String]], k: Int,
                        slop: Int = 0,
                        analyzer: AnalyzerConfig = AnalyzerConfig.default): DataFrame = {
-    import spark.implicits._
     require(slop >= 0, s"slop must be >= 0: $slop")
     require(qFixed.values.forall(_.nonEmpty),
       "phrase-prefix needs at least one fixed token per query")
-    val toks = docs.select(col("doc_id"), analyzer.tokens(col("content")).as("tokens"))
-      .withColumn("dl", size(col("tokens")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val slopL = slop
-      val containsPp = udf((ts: Seq[String], phrase: Seq[String], exps: Seq[String]) => {
-        if (ts == null || phrase == null || phrase.isEmpty ||
-            exps == null || exps.isEmpty) false
-        else {
-          // greedy minimal in-order chain per start (exact for any slop —
-          // budget 0 forces consecutive), then the smallest expansion
-          // occurrence after the chain end pays the same budget:
-          // (expansion pos − start) − |fixed| ≤ slop
-          val arr = ts.toArray
-          val expSet = exps.toSet
-          val m = phrase.length
-          var found = false
-          var i = 0
-          while (!found && i < arr.length) {
-            if (arr(i) == phrase(0)) {
-              var curP = i
-              var ok = true
-              var j = 1
-              while (ok && j < m) {
-                var q = curP + 1
-                while (q < arr.length && arr(q) != phrase(j)) q += 1
-                if (q >= arr.length) ok = false
-                else { curP = q; j += 1 }
-              }
-              if (ok) {
-                var q = curP + 1
-                while (q < arr.length && !expSet.contains(arr(q))) q += 1
-                found = q < arr.length && (q - i) - m <= slopL
-              }
-            }
-            i += 1
-          }
-          found
-        }
-      })
-      val qp = qFixed.toSeq.map { case (qid, ph) =>
-        (qid, ph.toSeq, qExp.getOrElse(qid, Array.empty[String]).toSeq)
-      }.toDF("query_id", "phrase", "exps")
-      val matches = toks.crossJoin(broadcast(qp))
-        .filter(containsPp(col("tokens"), col("phrase"), col("exps")))
-        .select("query_id", "doc_id")
-      topKOverToks(spark, toks,
-        qFixed.map { case (qid, ph) => qid -> ph.distinct.sorted },
-        k, conjunctive = false, matchFilter = Some(matches))
-    } finally toks.unpersist(false)
+    byQuery(spark, docs, qFixed.toSeq.map { case (qid, ph) =>
+      val exps = qExp.getOrElse(qid, Array.empty[String]).toSet
+      qid -> DocQuery(QueryPlan.terms(ph.distinct.sorted), Some(chainTest(ph, slop, Some(exps))))
+    }, k, 0, None, analyzer)
   }
 
-  /** The shared scoring core every golden scorer composes — ONE
-    * definition of the bit-identity-critical pieces: the per-(doc, term)
-    * pruned tf table, the idf-broadcast per-term contribution, and the
-    * ascending-term summation ([[sumSorted]]). */
-  private case class ScoreCtx(n: Long, avgdl: Double, tfq: DataFrame,
-                              contrib: org.apache.spark.sql.expressions.UserDefinedFunction,
-                              /** boosted contribution — (idf × boost) ×
-                                * tfNorm, the SAME association order the
-                                * WAND engine uses (cursor idf is
-                                * pre-multiplied by the boost), so boosted
-                                * scores stay bit-identical too */
-                              contribBoost: org.apache.spark.sql.expressions.UserDefinedFunction)
-
   /** Ascending-term summation — bit-identical to the WAND engine's
-    * summation order (the contract both engines share; [[Wand]]'s
-    * full-match-set scorer reuses it for the same reason). */
+    * summation order (the contract both engines share); [[Wand]]'s
+    * full-match-set scorers use it for the same reason. */
   private[search] val sumSorted = udf((xs: Seq[org.apache.spark.sql.Row]) => {
     val sorted = xs.map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1)
     var acc = 0.0
@@ -416,85 +291,10 @@ object Golden {
     acc
   })
 
-  private def scoreCtx(spark: SparkSession, toks: DataFrame,
-                       allTerms: Array[String],
-                       persistTfq: Boolean = false): ScoreCtx = {
-    import spark.implicits._
-    // global stats — tiny agg, the two scalars every scorer needs
-    val statsRow = toks.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-    val n = statsRow.getLong(0)
-    val avgdl = if (n == 0) 1.0 else statsRow.getLong(1).toDouble / n
-    // filter BEFORE the tf aggregation: only query terms survive the
-    // explode (isin below Wand.IsinMaxTerms, broadcast semi-join above it)
-    val tfq0 = Wand.termPruned(
-        toks.select(col("doc_id"), col("dl"), explode(col("tokens")).as("term")), allTerms)
-      .groupBy("doc_id", "dl", "term")
-      .agg(count(lit(1)).as("tf"))
-    // persist BEFORE the df collect below so that action populates the
-    // cache (multi-reference callers own the unpersist)
-    val tfq = if (persistTfq)
-      tfq0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else tfq0
-    // exact global df per query term → driver-side idf map (|terms| is tiny)
-    val dfMap: Map[String, Long] = tfq.groupBy("term").agg(count(lit(1)).as("df"))
-      .as[(String, Long)].collect().toMap
-    val idfMap: Map[String, Double] = dfMap.map { case (t, df) => t -> Bm25.idf(df, n) }
-    val idfB = spark.sparkContext.broadcast(idfMap)
-    val contrib = udf((term: String, tf: Long, dl: Long) =>
-      idfB.value(term) * Bm25.tfNorm(tf, dl, avgdl))
-    val contribBoost = udf((term: String, boost: Double, tf: Long, dl: Long) =>
-      (idfB.value(term) * boost) * Bm25.tfNorm(tf, dl, avgdl))
-    ScoreCtx(n, avgdl, tfq, contrib, contribBoost)
-  }
-
-  /** Per-(query, doc) BM25 sums over the scoring pairs `qdf`, plus the
-    * matched-term count `nt` (tfq is unique per (doc, term) and qdf per
-    * (query, term), so count(*) per group = matched distinct terms). */
-  private def scoredOver(ctx: ScoreCtx, qdf: DataFrame): DataFrame =
-    ctx.tfq.join(broadcast(qdf), Seq("term"))
-      .withColumn("c", ctx.contrib(col("term"), col("tf"), col("dl")))
-      .groupBy("query_id", "doc_id")
-      .agg(sumSorted(collect_list(struct(col("term"), col("c")))).as("score"),
-        count(lit(1)).as("nt"))
-
-  private def topKOverToks(spark: SparkSession, toks: DataFrame,
-                           qTerms: Map[Int, Array[String]], k: Int,
-                           conjunctive: Boolean,
-                           matchFilter: Option[DataFrame] = None,
-                           docFilter: Option[DataFrame] = None,
-                           from: Int = 0): DataFrame = {
-    import spark.implicits._
-    val ctx = scoreCtx(spark, toks, qTerms.values.flatten.toArray.distinct)
-    val qdf = qTerms.toSeq.flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
-      .toDF("query_id", "term")
-    // conjunctive keeps only docs matching the query's FULL term set
-    // (a term with df=0 therefore empties its query, by construction)
-    val scored0 = scoredOver(ctx, qdf)
-    val scored1 =
-      if (!conjunctive) scored0.drop("nt")
-      else {
-        val qn = qTerms.toSeq.map { case (qid, ts) => (qid, ts.length) }
-          .toDF("query_id", "qt")
-        scored0.join(broadcast(qn), Seq("query_id"))
-          .filter(col("nt") === col("qt")).drop("nt", "qt")
-      }
-    // phrase (or any external) match set: a hit must also be in it. A
-    // phrase match implies every term matches, so the scores are the full
-    // per-term sums either way.
-    val scored2 = matchFilter.fold(scored1)(m =>
-      scored1.join(m, Seq("query_id", "doc_id"), "left_semi"))
-    // doc-level filter: restrict candidates AFTER scoring, so stats and
-    // per-doc scores are untouched (the filter never changes scores)
-    val scored = docFilter.fold(scored2)(f =>
-      scored2.join(f.select("doc_id"), Seq("doc_id"), "left_semi"))
-
-    finishTopK(spark, scored, k, from)
-  }
-
   /** Exact span-query top-k — the golden counterpart of
     * [[Wand.spanSearch]]: each query is a [[SpanQuery]] AST evaluated by
-    * [[Spans.spans]] over per-term position lists built directly from the
-    * document's token array (the brute-force source of truth the
+    * [[Spans.matches]] over per-term position lists built directly from
+    * the document's token array (the brute-force source of truth the
     * positional index is compared against). A hit must produce at least
     * one span; it scores the BM25 sum over the tree's distinct scoring
     * terms PRESENT in the doc ([[Spans.scoringTerms]]), ascending term
@@ -503,64 +303,25 @@ object Golden {
                queries: Seq[(Int, SpanQuery)], k: Int,
                docFilter: Option[DataFrame] = None,
                analyzer: AnalyzerConfig = AnalyzerConfig.default): DataFrame = {
-    import spark.implicits._
     require(queries.nonEmpty, "spanTopK needs at least one query")
     queries.foreach { case (qid, q) =>
       require(Spans.scoringTerms(q).nonEmpty,
         s"span query $qid has no scoring terms") }
-    val toks = docs.select(col("doc_id"), analyzer.tokens(col("content")).as("tokens"))
-      .withColumn("dl", size(col("tokens")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val qMapB = spark.sparkContext.broadcast(queries.toMap)
-      val spanOk = udf((ts: Seq[String], qid: Int) => {
-        val q = qMapB.value(qid)
-        val need = Spans.allTerms(q).toSet
-        val posMap = new scala.collection.mutable.HashMap[
-          String, scala.collection.mutable.ArrayBuffer[Long]]()
-        if (ts != null) {
-          var i = 0
-          while (i < ts.length) {
-            val t = ts(i)
-            if (need(t))
-              posMap.getOrElseUpdate(t,
-                new scala.collection.mutable.ArrayBuffer[Long]()) += i.toLong
-            i += 1
-          }
+    byQuery(spark, docs, queries.map { case (qid, q) =>
+      val need = Spans.allTerms(q).toSet
+      qid -> DocQuery(QueryPlan.terms(Spans.scoringTerms(q)), Some { (ts: Array[String]) =>
+        val pos = scala.collection.mutable.HashMap.empty[
+          String, scala.collection.mutable.ArrayBuilder.ofLong]
+        var i = 0
+        while (i < ts.length) {
+          if (need(ts(i)))
+            pos.getOrElseUpdate(ts(i), new scala.collection.mutable.ArrayBuilder.ofLong) += i.toLong
+          i += 1
         }
-        Spans.matches(q, t =>
-          posMap.get(t).map(_.toArray).getOrElse(Array.emptyLongArray))
+        val lists = pos.view.mapValues(_.result()).toMap
+        Spans.matches(q, t => lists.getOrElse(t, Array.emptyLongArray))
       })
-      val qdf = queries.map(_._1).toDF("query_id")
-      // |queries| is tiny: one narrow pass over the tokenized corpus per
-      // query, the honest exact baseline (same shape as phraseTopK)
-      val matches = toks.crossJoin(broadcast(qdf))
-        .filter(spanOk(col("tokens"), col("query_id")))
-        .select("query_id", "doc_id")
-      topKOverToks(spark, toks,
-        queries.map { case (qid, q) => qid -> Spans.scoringTerms(q) }.toMap,
-        k, conjunctive = false,
-        matchFilter = Some(matches), docFilter = docFilter)
-    } finally toks.unpersist(false)
-  }
-
-  /** Shared tail of every golden scorer: per-query rank window, top-k cut,
-    * then eager driver-side materialization. The (|queries|·k-row) result
-    * is collected while the tokenized corpus is still cached and rebuilt
-    * as a local DataFrame: nothing stays persisted after return (a
-    * persisted result would leak one cache entry per call with no
-    * unpersist path). */
-  private def finishTopK(spark: SparkSession, scored: DataFrame, k: Int,
-                         from: Int = 0): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    val out = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") > from && col("rank") <= from + k)
-      .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
-    val rows = out.collect()
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, math.max(1, rows.length / 5000 + 1)),
-      out.schema)
+    }, k, 0, docFilter, analyzer)
   }
 
   /** Exact boolean (`must`/`should`/`must_not`) top-k — the golden
@@ -572,83 +333,92 @@ object Golden {
     * `docFilter` keeps the Lucene filter-clause contract of [[topK]]. */
   def booleanTopK(spark: SparkSession, docs: DataFrame, queries: Seq[BoolQuery],
                   k: Int, docFilter: Option[DataFrame] = None,
-                  analyzer: AnalyzerConfig = AnalyzerConfig.default): DataFrame = {
-    import spark.implicits._
-    val toks = docs.select(col("doc_id"), analyzer.tokens(col("content")).as("tokens"))
-      .withColumn("dl", size(col("tokens")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // mustNot terms ride the same pruned tf pass — they never score, but
-      // the exclusion set is derived from the same (doc, term) rows.
-      // tfq is persisted: the boolean path references it three times
-      // (scoring, must-count, exclusion set)
-      val ctx = scoreCtx(spark, toks,
-        queries.flatMap(q => q.scoring ++ q.mustNot).distinct.toArray,
-        persistTfq = true)
-      val tfq = ctx.tfq
-      try {
-        val qdf = queries.flatMap(q => q.scoring.map(t => (q.query_id, t)))
-          .toDF("query_id", "term")
-        val scored0 = scoredOver(ctx, qdf).drop("nt")
+                  analyzer: AnalyzerConfig = AnalyzerConfig.default): DataFrame =
+    byQuery(spark, docs, queries.map(q => q.query_id -> DocQuery(QueryPlan.bool(q))),
+      k, 0, docFilter, analyzer)
 
-        // must: matched-required-term count == |must| (queries with no
-        // must clause require 0 and pass vacuously)
-        val mustPairs = queries.flatMap(q => q.must.map(t => (q.query_id, t)))
-        val scoredM =
-          if (mustPairs.isEmpty) scored0
-          else {
-            val mm = tfq.join(broadcast(mustPairs.toDF("query_id", "term")), Seq("term"))
-              .groupBy("query_id", "doc_id").agg(count(lit(1)).as("mm"))
-            val nm = queries.map(q => (q.query_id, q.must.length)).toDF("query_id", "nm")
-            scored0.join(broadcast(nm), Seq("query_id"))
-              .join(mm, Seq("query_id", "doc_id"), "left")
-              .filter(coalesce(col("mm"), lit(0L)) === col("nm"))
-              .drop("mm", "nm")
-          }
-
-        // must_not: anti-join the per-query excluded-doc set
-        val notPairs = queries.flatMap(q => q.mustNot.map(t => (q.query_id, t)))
-        val scoredN =
-          if (notPairs.isEmpty) scoredM
-          else {
-            val excl = tfq.join(broadcast(notPairs.toDF("query_id", "term")), Seq("term"))
-              .select("query_id", "doc_id").distinct()
-            scoredM.join(excl, Seq("query_id", "doc_id"), "left_anti")
-          }
-
-        // minimum_should_match: hits short of the per-query should-term
-        // quota are dropped (scores untouched — the quota is a filter,
-        // like OpenSearch's). Only queries with an EXPLICIT msm need the
-        // recount: the pure-should default of 1 is structural (a doc with
-        // zero scoring matches never enters tfq's join).
-        val msmQueries = queries.filter(_.minShouldMatch > 0)
-        val scoredQ =
-          if (msmQueries.isEmpty) scoredN
-          else {
-            val shouldPairs = msmQueries.flatMap(q =>
-              q.should.map(t => (q.query_id, t)))
-            // quota rows exist ONLY for msm queries (left join): any
-            // other query's hits pass untouched via the null-qmsm arm
-            val qm = msmQueries.map(q => (q.query_id, q.effectiveMinShould))
-              .toDF("query_id", "qmsm")
-            val withQuota = scoredN.join(broadcast(qm), Seq("query_id"), "left")
-            if (shouldPairs.isEmpty)
-              withQuota.filter(col("qmsm").isNull || col("qmsm") <= 0).drop("qmsm")
-            else {
-              val sm = tfq
-                .join(broadcast(shouldPairs.toDF("query_id", "term")), Seq("term"))
-                .groupBy("query_id", "doc_id").agg(count(lit(1)).as("sm"))
-              withQuota.join(sm, Seq("query_id", "doc_id"), "left")
-                .filter(col("qmsm").isNull ||
-                  coalesce(col("sm"), lit(0L)) >= col("qmsm"))
-                .drop("sm", "qmsm")
-            }
-          }
-
-        val scored = docFilter.fold(scoredQ)(f =>
-          scoredQ.join(f.select("doc_id"), Seq("doc_id"), "left_semi"))
-        finishTopK(spark, scored, k)
-      } finally tfq.unpersist(false)
-    } finally toks.unpersist(false)
+  /** [[ranks]] of `queries`, as a (query_id, rank, doc_id, score) frame. */
+  private def byQuery(spark: SparkSession, docs: DataFrame, queries: Seq[(Int, DocQuery)],
+                      k: Int, from: Int, docFilter: Option[DataFrame],
+                      analyzer: AnalyzerConfig): DataFrame = {
+    val qs = queries.toIndexedSeq
+    frame(spark, ranks(spark, docs, qs.map(_._2), k, from, docFilter, analyzer)
+      .map { case (j, r, d, s) => (qs(j)._1, r, d, s) })
   }
+
+  /** The one golden pipeline. One narrow pass per partition analyzes
+    * each document and runs [[DocScan.Scanner]] over it, keeping the
+    * partition's [[DocScan.Stats]] and its hit documents (term counts
+    * only, no tokens) cached; a fold of the statistics — no shuffle —
+    * gives N, avgdl and every idf; each partition then keeps its own
+    * top-(from + k) per query ([[DocScan.topScores]]) and [[finishTopK]]
+    * ranks them. `docFilter` marks the accepted docs with a join on
+    * `doc_id`; every doc still counts in the statistics.
+    * @return per query index, its ranks (from, from + k] as
+    *         (query index, rank, doc_id, score) */
+  private def ranks(spark: SparkSession, docs: DataFrame, queries: IndexedSeq[DocQuery],
+                    k: Int, from: Int, docFilter: Option[DataFrame],
+                    analyzer: AnalyzerConfig): Array[(Int, Int, String, Double)] = {
+    val compiled = spark.sparkContext.broadcast(new DocScan.Compiled(queries))
+    val dictSize = compiled.value.dict.length
+    val rows = docFilter.fold(
+      docs.select(col("doc_id"), col("content"), lit(true).as("accepted"))) { f =>
+      docs.select(col("doc_id"), col("content")).join(
+        f.select(col("doc_id")).distinct().withColumn("accepted", lit(true)),
+        Seq("doc_id"), "left")
+    }
+    val parts = rows.rdd.mapPartitions { it =>
+      val scanner = new DocScan.Scanner(compiled.value)
+      val stats = DocScan.Stats.empty(dictSize)
+      val hits = Array.newBuilder[DocScan.Doc]
+      it.foreach { r =>
+        val content = r.getString(1)
+        val d = scanner.scan(r.getString(0),
+          if (content == null) Array.empty[String] else analyzer.analyze(content),
+          !r.isNullAt(2))
+        stats.add(d)
+        if (d.hits.nonEmpty) hits += d
+      }
+      Iterator.single((stats, hits.result()))
+    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val stats = parts.map(_._1).fold(DocScan.Stats.empty(dictSize))(_ merge _)
+      val idf = stats.idf
+      val avgdl = stats.avgdl
+      val n = math.min(from.toLong + k, Int.MaxValue.toLong).toInt
+      val scored = parts.flatMap { case (_, ds) =>
+        DocScan.topScores(compiled.value, ds.iterator, idf, avgdl, n)
+          .map { case (j, d, s) => Row(j, d, s) }
+      }
+      finishTopK(spark.createDataFrame(scored, ScoredSchema), k, from)
+    } finally {
+      parts.unpersist(false)
+      compiled.destroy()
+    }
+  }
+
+  private val ScoredSchema = StructType(Seq(StructField("query_id", IntegerType, false),
+    StructField("doc_id", StringType, true), StructField("score", DoubleType, false)))
+
+  /** The window every golden result ends in: per query, ranks
+    * (from, from + k] by (score desc, doc_id asc), collected. */
+  private def finishTopK(scored: DataFrame, k: Int,
+                         from: Int = 0): Array[(Int, Int, String, Double)] = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("doc_id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") > from && col("rank") <= from + k)
+      .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getDouble(3)))
+  }
+
+  /** Collected ranks as a local DataFrame, ordered by (query_id, rank):
+    * nothing stays persisted after a golden call returns. */
+  private def frame(spark: SparkSession, rows: Array[(Int, Int, String, Double)]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.sortBy(r => (r._1, r._2)).toIndexedSeq
+        .map(r => Row(r._1, r._2, r._3, r._4)), math.max(1, rows.length / 5000 + 1)),
+      StructType(Seq(StructField("query_id", IntegerType, false),
+        StructField("rank", IntegerType, false), StructField("doc_id", StringType, true),
+        StructField("score", DoubleType, false))))
 }

@@ -5,6 +5,49 @@ import graft.index.{Codec, SegBlock, SegRun}
 /** One per-shard candidate hit (shard-local doc ordinal). */
 case class ShardHit(query_id: Int, shard: Int, ord: Long, score: Double)
 
+/** The top `k` entries by score, plus every entry tied with the k-th
+  * score: the per-shard cut of [[Kernel]] and the per-partition cut of
+  * [[Golden]]. Ties at the boundary are not broken here, because the key
+  * both engines rank ties by (doc_id) is not the key the cut sees: ords
+  * follow doc_id order only within one build generation (an append
+  * numbers its docs after the shard's existing ords), and a golden
+  * partition holds only part of the corpus. The global window after the
+  * cut chooses among them. `floor` is the k-th best score so far (−∞
+  * while fewer than `k` entries; +∞ for `k <= 0`, which keeps nothing) —
+  * the θ of WAND pruning, which stays lossless because an entry tied
+  * with it is still kept. */
+private[search] final class TopScores[A](k: Int) {
+  // lowest score at the head
+  private val heap = scala.collection.mutable.PriorityQueue.empty[(Double, A)](
+    new Ordering[(Double, A)] {
+      def compare(a: (Double, A), b: (Double, A)): Int = java.lang.Double.compare(b._1, a._1)
+    })
+  // entries scored exactly `floor` that the heap has no room for
+  private val ties = scala.collection.mutable.ArrayBuffer.empty[(Double, A)]
+
+  def full: Boolean = heap.size >= k
+  def floor: Double =
+    if (k <= 0) Double.PositiveInfinity
+    else if (heap.size < k) Double.NegativeInfinity
+    else heap.head._1
+
+  def offer(score: Double, a: A): Unit =
+    if (heap.size < k) heap.enqueue((score, a))
+    else if (k > 0) {
+      val f = heap.head._1
+      if (score > f) {
+        val out = heap.dequeue()
+        heap.enqueue((score, a))
+        val f2 = heap.head._1
+        if (ties.nonEmpty && ties(0)._1 < f2) ties.clear()
+        if (out._1 == f2) ties += out
+      } else if (score == f) ties += ((score, a))
+    }
+
+  /** Every kept entry, unordered. */
+  def result: Array[(Double, A)] = (heap.iterator ++ ties.iterator).toArray[(Double, A)]
+}
+
 /** One scoring clause of a [[QueryPlan]]: a term and its weight. */
 private[search] final case class Weighted(term: String, weight: Double)
 
@@ -26,6 +69,9 @@ private[search] final case class Weighted(term: String, weight: Double)
   *     span in it ([[Spans.matches]]). Their terms route but never score.
   *   - `after` is the search_after cursor (score, shard, ord) of the
   *     previous page's last hit.
+  *
+  * The golden scorer reads the term clauses of the same shape
+  * ([[DocScan.DocQuery]]) and decides adjacency on its own.
   */
 private[search] final case class QueryPlan(should: Array[Weighted] = Array.empty,
                                            must: Array[Weighted] = Array.empty,
@@ -263,19 +309,17 @@ private[search] object Kernel {
     while (r < sorted.length) { cursors(sorted(r)).termRank = r; r += 1 }
   }
 
-  /** Worst-first ordering for the top-k heap: lower score is worse; on
-    * ties the larger ord is worse (doc_id asc tie-break — ord order IS
-    * doc_id order within a shard). */
-  private val worstFirst: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
-    def compare(a: (Double, Long), b: (Double, Long)): Int = {
-      val c = java.lang.Double.compare(b._1, a._1)
-      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-    }
-  }
+  /** A shard's hits, best first: score desc, then ord asc (a stable
+    * order for equal scores; which of them survive the cut is the global
+    * window's call, by doc_id). */
+  private def bestFirst(top: TopScores[Long]): Array[(Long, Double)] =
+    top.result.sortWith((a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2))
+      .map(h => (h._2, h._1))
 
   private val NotDeleted: Long => Boolean = _ => false
 
-  /** Block-max WAND over one shard's cursors; returns (ord, score) top-k.
+  /** Block-max WAND over one shard's cursors; returns the (ord, score)
+    * top-k and every hit tied with the k-th score ([[TopScores]]).
     * `deleted` is the shard's tombstone mask (Lucene live-docs style):
     * masked ords are skipped at evaluation time — before the heap — so the
     * top-k fills from surviving docs only. `accept` (null = all) is the
@@ -297,7 +341,7 @@ private[search] object Kernel {
                                accept: Long => Boolean = null,
                                after: (Double, Long) => Boolean = null,
                                minMatch: Int = 1): Array[(Long, Double)] = {
-    val heap = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](worstFirst)
+    val top = new TopScores[Long](k)
     // ascending-term ranks drive the evaluation's summation order (see
     // assignTermRanks) — the per-pivot tuple sort this replaces showed up
     // as a top allocation+TimSort site in the query-phase profile
@@ -317,10 +361,6 @@ private[search] object Kernel {
       if (!cursorsIn(i0).exhausted) { cur(n) = cursorsIn(i0); n += 1 }
       i0 += 1
     }
-    def beatsWorst(score: Double, ord: Long): Boolean =
-      heap.size < k || worstFirst.compare((score, ord), heap.head) < 0
-    def drain(): Array[(Long, Double)] =
-      heap.dequeueAll.reverse.map((h: (Double, Long)) => (h._2, h._1)).toArray
     // minimum_should_match quota: docs matching fewer than `needed`
     // cursors score nothing, and once fewer than `needed` live cursors
     // remain no future doc can qualify — the loop exit condition
@@ -338,7 +378,7 @@ private[search] object Kernel {
         a += 1
       }
       // find pivot: first prefix whose Σ maxScore could still enter top-k
-      val theta = if (heap.size < k) Double.NegativeInfinity else heap.head._1
+      val theta = top.floor
       var acc = 0.0
       var p = -1
       var i = 0
@@ -347,7 +387,7 @@ private[search] object Kernel {
         if (acc >= theta) p = i
         i += 1
       }
-      if (p < 0) return drain()
+      if (p < 0) return bestFirst(top)
       val pivotDoc = cur(p).curDoc
       if (cur(0).curDoc == pivotDoc) {
         // cursors 0..j (j ≥ p) all sit on pivotDoc
@@ -364,7 +404,7 @@ private[search] object Kernel {
         }
         if (j + 1 < n && cur(j + 1).curDoc - 1 < d)
           d = cur(j + 1).curDoc - 1
-        if (heap.size == k && ub < theta) {
+        if (top.full && ub < theta) {
           // whole range [pivotDoc, d] is dominated — skip it undecoded
           var s = 0
           while (s <= j) { cur(s).advanceTo(d + 1); s += 1 }
@@ -392,10 +432,7 @@ private[search] object Kernel {
           var score = 0.0
           s = 0
           while (s <= j) { score += cbuf(s); s += 1 }
-          if ((after == null || after(score, pivotDoc)) && beatsWorst(score, pivotDoc)) {
-            if (heap.size == k) heap.dequeue()
-            heap.enqueue((score, pivotDoc))
-          }
+          if (after == null || after(score, pivotDoc)) top.offer(score, pivotDoc)
           s = 0
           while (s <= j) { cur(s).next(); s += 1 }
         }
@@ -415,11 +452,12 @@ private[search] object Kernel {
       }
       n = w
     }
-    drain()
+    bestFirst(top)
   }
 
   /** Boolean (`must`/`should`/`must_not`) top-k over one shard — the
-    * Lucene bool-query scorer. The must cursors drive a leapfrog
+    * Lucene bool-query scorer; like [[wandTopK]] it keeps every hit tied
+    * with the k-th score. The must cursors drive a leapfrog
     * intersection (every hit contains all of them); should cursors are
     * advanced lazily onto each surviving candidate and add their
     * contribution when they sit on it; exclusion is handled by the caller
@@ -445,12 +483,8 @@ private[search] object Kernel {
                                   accept: Long => Boolean = null,
                                   after: (Double, Long) => Boolean = null,
                                   minShould: Int = 0): Array[(Long, Double)] = {
-    val heap = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](worstFirst)
-    def drain(): Array[(Long, Double)] =
-      heap.dequeueAll.reverse.map((h: (Double, Long)) => (h._2, h._1)).toArray
-    if (must.isEmpty) return drain()
-    def beatsWorst(score: Double, ord: Long): Boolean =
-      heap.size < k || worstFirst.compare((score, ord), heap.head) < 0
+    val top = new TopScores[Long](k)
+    if (must.isEmpty) return bestFirst(top)
     val shouldMaxTotal = { var s = 0.0; should.foreach(s += _.maxScore); s }
     // ascending-term ranks over must ++ should (ties keep must-first
     // insertion order — exactly what the old stable by-term tuple sort
@@ -486,7 +520,7 @@ private[search] object Kernel {
       }
       if (!done) {
         var skipped = false
-        if (heap.size == k) {
+        if (top.full) {
           var ub = shouldMaxTotal
           var d = Long.MaxValue
           i = 0
@@ -495,7 +529,7 @@ private[search] object Kernel {
             if (must(i).blockLast < d) d = must(i).blockLast
             i += 1
           }
-          if (ub < heap.head._1) {
+          if (ub < top.floor) {
             skipped = true
             i = 0
             while (i < must.length && !done) {
@@ -538,10 +572,7 @@ private[search] object Kernel {
               var score = 0.0
               i = 0
               while (i < nc) { score += cbuf(i); i += 1 }
-              if ((after == null || after(score, target)) && beatsWorst(score, target)) {
-                if (heap.size == k) heap.dequeue()
-                heap.enqueue((score, target))
-              }
+              if (after == null || after(score, target)) top.offer(score, target)
             }
           }
           i = 0
@@ -561,7 +592,7 @@ private[search] object Kernel {
         }
       }
     }
-    drain()
+    bestFirst(top)
   }
 
   private val NoHits = new Array[(Long, Double)](0)

@@ -193,25 +193,12 @@ object Percolator {
           val v = fv(fi)
           v != null && clause.contains(v.doubleValue())
       })
-      // slop-0 contiguous in-order scan; runs only for candidates whose
-      // phrase words are ALL present, so the O(dl) cost is rare
-      def containsSeq(p: Array[String]): Boolean = {
-        if (toks == null || toks.size < p.length) false
-        else {
-          var i = 0
-          val last = toks.size - p.length
-          var found = false
-          while (!found && i <= last) {
-            var j = 0
-            while (j < p.length && toks(i + j) == p(j)) j += 1
-            found = j == p.length
-            i += 1
-          }
-          found
-        }
-      }
+      // slop-0 phrase match ([[Golden.chainMatch]]); runs only for
+      // candidates whose phrase words are ALL present, so the O(dl) cost
+      // is rare
+      lazy val toksI = if (toks == null) null else toks.toIndexedSeq
       def phrasesOk(q: Int): Boolean =
-        phrasesL.get(q).forall(_.forall(containsSeq))
+        phrasesL.get(q).forall(_.forall(p => Golden.chainMatch(toksI, p, 0)))
       val counts = scala.collection.mutable.HashMap.empty[Int, Int]
       val pcounts = scala.collection.mutable.HashMap.empty[Int, Int]
       val seen = scala.collection.mutable.HashSet.empty[String]

@@ -2795,15 +2795,36 @@ object Wand {
     SpanOr(expanded.distinct.sorted.toSeq.map(SpanTerm))
   }
 
+  /** The secondary score of [[rescorePhrase]]: 0.0 when the doc does not
+    * contain the phrase (within `slop`, [[Golden.chainMatch]]), else the
+    * BM25 sum over the phrase's DISTINCT terms in ascending term order
+    * (the engine-wide summation contract), tf/dl taken from the doc's
+    * analyzed tokens, idf from termstats. */
+  private def secondaryPhraseScore(ts: Seq[String], phrase: Seq[String],
+                                   idf: String => Double, avgdl: Double,
+                                   slop: Int): Double = {
+    if (!Golden.chainMatch(ts.toIndexedSeq, phrase.toIndexedSeq, slop)) 0.0
+    else {
+      val dl = ts.length.toLong
+      var acc = 0.0
+      phrase.distinct.sorted.foreach { t =>
+        var tf = 0L
+        ts.foreach(x => if (x == t) tf += 1)
+        if (tf > 0) acc += idf(t) * Bm25.tfNorm(tf, dl, avgdl)
+      }
+      acc
+    }
+  }
+
   /** Rescore (the OpenSearch `rescore` clause with a `match_phrase`
     * rescorer, `score_mode: total`): run the base BM25 query to depth
     * `window`, then re-rank ONLY those hits by
     * `queryWeight × base + rescoreWeight × secondary`, where the
     * secondary is the phrase score of the query's own analyzed token
-    * sequence ([[Golden.secondaryPhraseScore]], shared with the golden
-    * twin so the combined scores are bit-identical by construction) — 0
-    * for window docs that don't contain the phrase within `slop`, so
-    * they keep their weighted base score (the OpenSearch behavior). Hits
+    * sequence ([[secondaryPhraseScore]]; [[Golden.rescorePhraseTopK]]
+    * computes the same sum independently) — 0 for window docs that don't
+    * contain the phrase within `slop`, so they keep their weighted base
+    * score (the OpenSearch behavior). Hits
     * below the window are never promoted — the defining property of
     * rescoring vs re-querying, and the reason it's cheap: proximity is
     * evaluated for |queries| × window docs, not the match set.
@@ -2844,7 +2865,7 @@ object Wand {
       .join(broadcast(base), Seq("doc_id")))
     val slopL = slop
     val secU = udf((qid: Int, ts: Seq[String]) =>
-      Golden.secondaryPhraseScore(ts, qpB.value(qid), idfB.value, avgdl, slopL))
+      secondaryPhraseScore(ts, qpB.value(qid), idfB.value, avgdl, slopL))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id").asc)
     graft.index.IndexBuilder.stagedRows(spark, dir)

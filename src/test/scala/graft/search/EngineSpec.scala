@@ -226,6 +226,29 @@ class EngineSpec extends AnyFunSuite {
       $"g_doc" =!= $"f_doc" || $"g_score" =!= $"f_score").count() == 0)
   }
 
+  test("score ties across an append: WAND returns golden's doc_id tie-break") {
+    // 60 docs with identical content all score the same; an append numbers
+    // its docs after each shard's existing ords, so ord order is doc_id
+    // order only within each generation, and the per-shard cut must not
+    // break the tie by ord
+    def files(from: Int, until: Int) = (from until until).map(i =>
+      graft.corpus.SourceFile("ties", f"f$i%03d.txt", "main", "txt", "alpha beta gamma")).toDS()
+    val qs = Seq(graft.corpus.RefQuery(0, "alpha"))
+    val golden = Golden.topK(spark,
+        files(0, 60).select(IndexBuilder.docIdCol.as("doc_id"), $"content"), qs, k)
+      .select("rank", "doc_id", "score").as[(Int, String, Double)].collect().sortBy(_._1)
+    assert(golden.length == k && golden.map(_._3).distinct.length == 1)
+    for (shards <- Seq(1, 4)) {
+      val dir = TestSpark.tempDir("graft-ties")
+      IndexBuilder.build(spark, files(0, 30), dir,
+        BuildConfig(numShards = shards, commitEvery = 4, heavyThreshold = 200, saltBuckets = 4))
+      val snapT = IndexBuilder.append(spark, files(30, 60), dir)
+      val fast = Wand.searchSnapshot(spark, snapT, qs, k)
+        .select("rank", "doc_id", "score").as[(Int, String, Double)].collect().sortBy(_._1)
+      assert(fast.toSeq == golden.toSeq, s"$shards shard(s)")
+    }
+  }
+
   test("delete: tombstoned docs vanish, survivors stay rank- and bit-identical") {
     val dirD = TestSpark.tempDir("graft-delete")
     val all = CorpusGen.corpus(spark, 1000L, seed = 55L).cache()

@@ -3,13 +3,14 @@ package graft.search
 import org.scalatest.funsuite.AnyFunSuite
 import graft.index.{Codec, SegBlock, SegRun}
 
-/** Seeded property pins for the per-shard top-k kernels — no Spark.
-  * Cursors are built straight from [[Codec.buildBlocks]] output and every
-  * kernel call is checked against a brute-force exact scorer that sums
-  * `idf * tfNorm` in ascending term order and ranks by (score desc, ord
-  * asc): `(ord, score)` arrays must be equal, scores bit for bit. Each case
-  * runs under three shared-decode budgets (0, one block, unlimited), and
-  * the budget must never go negative. */
+/** Seeded property pins for the per-shard top-k kernels and the golden
+  * per-document scorer — no Spark. Cursors are built straight from
+  * [[Codec.buildBlocks]] output and every kernel call is checked against a
+  * brute-force exact scorer that sums `idf * tfNorm` in ascending term
+  * order, ranks by (score desc, ord asc) and cuts at the k-th score,
+  * keeping every hit tied with it: `(ord, score)` arrays must be equal,
+  * scores bit for bit. Each case runs under three shared-decode budgets
+  * (0, one block, unlimited), and the budget must never go negative. */
 class KernelSpec extends AnyFunSuite {
 
   private val OneBlock = 24L * Codec.BlockSize // docs + tfs + dls of a full block
@@ -77,17 +78,23 @@ class KernelSpec extends AnyFunSuite {
     a
   }
 
+  /** The first `k` of `ranked` (best first) and every entry tied with the
+    * k-th score — the kernels' per-shard cut. */
+  private def cutWithTies[A](ranked: Seq[(A, Double)], k: Int): Seq[(A, Double)] =
+    if (ranked.length <= k) ranked
+    else { val floor = ranked(k - 1)._2; ranked.takeWhile(_._2 >= floor) }
+
   /** Brute-force top-k over the docs `qualifies` admits. */
   private def bruteTopK(sh: Shard, k: Int, qualifies: Int => Boolean,
                         scoreTerms: Seq[Int], deleted: Long => Boolean,
                         accept: Long => Boolean,
                         after: (Double, Long) => Boolean): Seq[(Long, Double)] =
-    (0 until sh.numDocs).iterator
+    cutWithTies((0 until sh.numDocs).iterator
       .filter(d => qualifies(d) && !deleted(d.toLong) &&
         (accept == null || accept(d.toLong)))
       .map(d => (d.toLong, sh.score(d, scoreTerms)))
       .filter { case (o, s) => after == null || after(s, o) }
-      .toSeq.sortBy { case (o, s) => (-s, o) }.take(k)
+      .toSeq.sortBy { case (o, s) => (-s, o) }, k)
 
   test("wandTopK and booleanTopK equal the brute-force exact scorer (seeded, 300 cases)") {
     val rnd = new java.util.SplittableRandom(20261018L)
@@ -282,10 +289,10 @@ class KernelSpec extends AnyFunSuite {
         QueryPlan.terms(orTerms, conjunctive = false, orBoost) -> (_ => true),
         QueryPlan.terms(andTerms, conjunctive = true, orBoost) -> (_ => true),
         QueryPlan.phrase(phrase, phraseSlop) ->
-          (d => Golden.chainMatch(sh.docs(d).toSeq, phrase.toSeq, phraseSlop)),
+          (d => Golden.chainMatch(sh.docs(d), phrase, phraseSlop)),
         QueryPlan.phrase(prefixFixed, phraseSlop, Some(prefixExp)) ->
           (d => prefixExp.exists(e =>
-            Golden.chainMatch(sh.docs(d).toSeq, (prefixFixed :+ e).toSeq, phraseSlop))),
+            Golden.chainMatch(sh.docs(d), prefixFixed :+ e, phraseSlop))),
         (if (boolMust.isEmpty && boolShould.isEmpty) QueryPlan.terms(Array(pick()))
          else QueryPlan.bool(BoolQuery(0, boolMust, boolShould, boolNot,
            rnd.nextInt(boolShould.length + 1)))) -> (_ => true),
@@ -303,7 +310,7 @@ class KernelSpec extends AnyFunSuite {
 
       val want: Seq[Seq[(Long, Double)]] = cases.zip(plans).map { case ((_, matches), p) =>
         val scoring = (p.must ++ p.should).sortBy(_.term)
-        (0 until sh.numDocs).filter { d =>
+        val ranked = (0 until sh.numDocs).filter { d =>
           val has = (t: String) => sh.docs(d).contains(t)
           p.must.forall(w => has(w.term)) &&
             p.should.count(w => has(w.term)) >= math.max(p.minShould,
@@ -317,7 +324,8 @@ class KernelSpec extends AnyFunSuite {
           (d.toLong, s)
         }.filter { case (o, s) => p.after.forall { case (cs, csh, cord) =>
           s < cs || (s == cs && (shard > csh || (shard == csh && o > cord))) }
-        }.sortBy { case (o, s) => (-s, o) }.take(k)
+        }.sortBy { case (o, s) => (-s, o) }
+        cutWithTies(ranked, k)
       }
       hits += want.count(_.nonEmpty)
       if (want(2).nonEmpty || want(3).nonEmpty) phraseHits += 1
@@ -342,9 +350,106 @@ class KernelSpec extends AnyFunSuite {
     assert(spanHits > 40, s"only $spanHits of 200 cases had a span hit")
   }
 
+  test("the tie-keeping cut equals the brute-force cut (seeded, 2000 cases)") {
+    val rnd = new java.util.SplittableRandom(20261022L)
+    for (c <- 0 until 2000) {
+      val k = rnd.nextInt(8)
+      // few distinct scores, so ties at the k-th score are common
+      val entries = Seq.fill(rnd.nextInt(40))((rnd.nextInt(6) / 2.0, rnd.nextLong()))
+      val top = new TopScores[Long](k)
+      entries.foreach { case (s, a) => top.offer(s, a) }
+      val want = if (k == 0) Seq.empty else cutWithTies(entries.map(_.swap).sortBy(-_._2), k)
+      assert(top.result.map(_.swap).toSet == want.toSet, s"case $c k $k")
+      assert(top.floor == (if (k == 0) Double.PositiveInfinity
+        else if (entries.length < k) Double.NegativeInfinity else want(k - 1)._2), s"case $c")
+    }
+  }
+
+  test("chainMatch equals brute-force enumeration of in-order position chains, " +
+       "with and without a last any-of slot (seeded, 3000 cases)") {
+    val rnd = new java.util.SplittableRandom(20261021L)
+    val vocab = Array("a", "b", "c", "d")
+    var matched = 0
+    for (c <- 0 until 3000) {
+      val doc = Array.fill(rnd.nextInt(15))(vocab(rnd.nextInt(vocab.length)))
+      val phrase = Array.fill(1 + rnd.nextInt(3))(vocab(rnd.nextInt(vocab.length)))
+      val last = if (rnd.nextBoolean()) None else Some(vocab.filter(_ => rnd.nextInt(3) == 0).toSet)
+      val slop = rnd.nextInt(4)
+      val slots: Seq[String => Boolean] =
+        phrase.toSeq.map(p => (t: String) => t == p) ++ last.map(set => (t: String) => set(t))
+      // every increasing position tuple whose tokens fill the slots in order
+      def chain(j: Int, start: Int, prev: Int): Boolean =
+        if (j == slots.length) (prev - start) - (slots.length - 1) <= slop
+        else (prev + 1 until doc.length).exists(p =>
+          slots(j)(doc(p)) && chain(j + 1, if (j == 0) p else start, p))
+      val want = chain(0, -1, -1)
+      assert(Golden.chainMatch(doc, phrase, slop, last) == want,
+        s"case $c: ${doc.mkString(" ")} / ${phrase.mkString(" ")} + $last slop $slop")
+      if (want) matched += 1
+    }
+    assert(matched > 500, s"only $matched of 3000 cases matched")
+  }
+
+  test("the golden per-document scorer equals the brute-force scorer bit for bit " +
+       "on OR, AND and boosted queries (seeded, 200 cases)") {
+    val rnd = new java.util.SplittableRandom(20261020L)
+    val boosts = Array(0.5, 1.0, 2.5, 3.0)
+    var hits = 0
+    for (c <- 0 until 200) {
+      val sh = new PosShard(rnd)
+      def subset(): Array[String] = sh.terms.filter(_ => rnd.nextBoolean())
+      val boost = sh.terms.map(t => t -> boosts(rnd.nextInt(boosts.length))).toMap
+      val k = 1 + rnd.nextInt(12)
+      val plans = IndexedSeq(QueryPlan.terms(subset()),
+        QueryPlan.terms(subset(), conjunctive = true),
+        QueryPlan.terms(subset(), conjunctive = rnd.nextBoolean(), boost))
+      val compiled = new DocScan.Compiled(plans.map(DocScan.DocQuery(_)))
+      // the corpus split over 1-3 partitions, as the golden pass sees it
+      val docId = (d: Int) => f"d$d%04d"
+      val parts = (0 until sh.numDocs).groupBy(_ % (1 + rnd.nextInt(3))).values.toSeq.map { ds =>
+        val scanner = new DocScan.Scanner(compiled)
+        ds.map(d => scanner.scan(docId(d), sh.docs(d), accepted = true))
+      }
+      val stats = parts.map { ds =>
+        val st = DocScan.Stats.empty(compiled.dict.length)
+        ds.foreach(st.add)
+        st
+      }.reduce(_ merge _)
+      assert(stats.n == sh.numDocs && stats.avgdl == sh.avgdl, s"case $c")
+      val idf = stats.idf
+      compiled.dict.indices.foreach(i => assert(idf(i) == sh.idf(compiled.dict(i))))
+      val cut = parts.flatMap(ds => DocScan.topScores(compiled, ds.iterator, idf, stats.avgdl, k))
+      plans.indices.foreach { j =>
+        val p = plans(j).weighted(sh.idf)
+        val scoring = (p.must ++ p.should).sortBy(_.term)
+        val want: Map[String, Double] = (0 until sh.numDocs).filter { d =>
+          val has = (t: String) => sh.docs(d).contains(t)
+          scoring.exists(w => has(w.term)) && p.must.forall(w => has(w.term)) &&
+            p.should.count(w => has(w.term)) >= p.minShould
+        }.map { d =>
+          var s = 0.0
+          scoring.foreach(w => if (sh.docs(d).contains(w.term)) s += w.weight * sh.tfNorm(d, w.term))
+          docId(d) -> s
+        }.toMap
+        val got = parts.flatten.filter(_.hits.contains(j))
+          .map(d => d.docId -> DocScan.score(compiled, j, d, idf, stats.avgdl)).toMap
+        assert(got == want, s"case $c plan $j: ${plans(j)}")
+        // per-partition cuts, then the global (score desc, doc_id asc) window
+        def top(xs: Seq[(String, Double)]) = xs.sortBy { case (d, s) => (-s, d) }.take(k)
+        assert(top(cut.filter(_._1 == j).map(h => (h._2, h._3))) == top(want.toSeq),
+          s"case $c plan $j top-$k")
+        if (want.nonEmpty) hits += 1
+      }
+    }
+    assert(hits > 300, s"only $hits of 600 plans had any hit")
+  }
+
   test("the kernel source has no Spark import") {
-    val src = scala.io.Source.fromFile("src/main/scala/graft/search/Kernel.scala", "UTF-8")
-    try assert(!src.mkString.contains("org.apache.spark"))
-    finally src.close()
+    // the WAND kernel and the golden per-document scorer alike
+    Seq("Kernel.scala", "DocScan.scala").foreach { f =>
+      val src = scala.io.Source.fromFile(s"src/main/scala/graft/search/$f", "UTF-8")
+      try assert(!src.mkString.contains("org.apache.spark"), f)
+      finally src.close()
+    }
   }
 }
