@@ -337,7 +337,7 @@ object IndexBuilder {
       completedShards = Nil, segmentDirs = Nil, docmapDirs = Nil,
       lineageDirs = Nil, termstatsDir = "", stagingDone = true, stats = stats,
       timestampMs = System.currentTimeMillis(), positions = cfg.positions,
-      analyzer = analyzerSpec)
+      analyzer = analyzerSpec, generationStarts = Some(Nil))
     // skip-and-log lineage for the staging phase itself: shard -1 = dead-
     // lettered rows, shard -2 = duplicate identities dropped (stageBatch's
     // convention)
@@ -823,11 +823,12 @@ object IndexBuilder {
     * and (b) per-shard ord OFFSETS so appended ordinals extend each
     * shard's existing contiguous range — the disjointness the query side's
     * concat-of-runs merge depends on.
-    * @return (stagingPath, batch stats over staged rows, staging lineage dirs) */
+    * @return (stagingPath, batch stats over staged rows, staging lineage
+    *         dirs, the batch's first ord in each shard) */
   private def stageBatch(spark: SparkSession, corpus: Dataset[SourceFile],
                          dir: String, batchTag: String, parent: Snapshot,
                          cfg: BuildConfig,
-                         liveOnly: Boolean): (String, CorpusStats, Seq[String]) = {
+                         liveOnly: Boolean): (String, CorpusStats, Seq[String], Seq[Long]) = {
     import spark.implicits._
     val stagingPath = s"$dir/staging_$batchTag"
     // anti-join key set: plain append dedupes against EVERY identity ever
@@ -931,7 +932,8 @@ object IndexBuilder {
           0L, 0L, skipped),
         LineageRow(parent.id + 1, -2, Seq(stagingPath), "", 0L, 0L, 0L, dupRows))
       .toDS().write.mode(SaveMode.Overwrite).parquet(lin)
-    (stagingPath, batchStats, Seq(lin))
+    (stagingPath, batchStats, Seq(lin),
+      (0 until cfg.numShards).map(s => offsets.getOrElse(s, 0L) + 1L))
   }
 
   /** Incrementally append a document batch to a complete index — the
@@ -968,7 +970,7 @@ object IndexBuilder {
       s"append requires a complete base index (snapshot ${parent.id} is not)")
     val cfg = cfgIn.copy(numShards = parent.numShards)
     val batchTag = s"a${parent.id + 1}"
-    val (stagingPath, batchStats, stageLin) =
+    val (stagingPath, batchStats, stageLin, starts) =
       stageBatch(spark, batch, dir, batchTag, parent, cfg, liveOnly)
     if (batchStats.numDocs == 0) {
       // All dupes / dead-lettered. Before returning, repair a TORN append:
@@ -990,7 +992,8 @@ object IndexBuilder {
     // group re-marks every shard; updated stats so the batch's block
     // maxima are computed at the NEW global avgdl
     val synthetic = parent.copy(completedShards = Nil, stats = newStats,
-      lineageDirs = parent.lineageDirs ++ stageLin)
+      lineageDirs = parent.lineageDirs ++ stageLin,
+      generationStarts = parent.generationStarts.map(_ :+ starts))
     val built = buildGroup(spark, dir, synthetic, 0 until cfg.numShards, cfg,
       stagingPath)
     if (cfg.failBeforeFinalize)

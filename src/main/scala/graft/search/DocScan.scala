@@ -13,12 +13,13 @@ package graft.search
   */
 private[search] object DocScan {
 
-  /** One golden query: the term clauses of `plan` (`must`, `should`,
-    * `minShould`, `mustNot` and the weights; its `span` and `after` are
-    * not read) and an optional match test over the document's analyzed
-    * tokens (phrase, phrase-prefix and span adjacency). A hit contains at
+  /** One golden query: `plan` (its `after` is not read) and an optional
+    * match test over the document's analyzed tokens (the phrase and
+    * phrase-prefix reference, [[Golden.chainMatch]]). A hit contains at
     * least one scoring term, every `must` term, at least `minShould` of
-    * the `should` terms and no `mustNot` term, and passes `test`. */
+    * the `should` terms and no `mustNot` term, produces a span of `span`
+    * ([[Spans.matches]] over the token positions) when set, and passes
+    * `test`. */
   final case class DocQuery(plan: QueryPlan, test: Option[Array[String] => Boolean] = None)
 
   /** `queries` compiled against their term dictionary: every clause term,
@@ -46,6 +47,9 @@ private[search] object DocScan {
       val cs = (q.plan.must ++ q.plan.should).map(c => (indexOf(c.term), c.weight)).sortBy(_._1)
       (cs.map(_._1), cs.map(_._2))
     }.toArray
+    /** Every term of every `span` tree. */
+    val spanTerms: Set[String] = queries.iterator.flatMap(_.plan.span.iterator)
+      .flatMap(Spans.allTerms).toSet
     /** Per dictionary index: the queries it is a scoring term of. */
     val scoredBy: Array[Array[Int]] = {
       val b = Array.fill(dict.length)(Array.newBuilder[Int])
@@ -87,6 +91,9 @@ private[search] object DocScan {
     private val tf = new Array[Int](c.dict.length)
     private val seen = new Array[Int](c.queries.length)
     private var stamp = 0
+    // the positions of `c.spanTerms` in the document `posOf` was built for
+    private var posOf: Array[String] = null
+    private var pos = Map.empty[String, Array[Long]]
 
     /** `accepted = false` (outside the caller's doc filter) still counts
       * the document's terms, for the statistics, but makes it no hit. */
@@ -123,7 +130,24 @@ private[search] object DocScan {
       c.must(j).forall(tf(_) > 0) &&
         c.should(j).count(tf(_) > 0) >= c.queries(j).plan.minShould &&
         !c.mustNot(j).exists(tf(_) > 0) &&
+        c.queries(j).plan.span.forall(Spans.matches(_, positions(tokens))) &&
         c.queries(j).test.forall(_(tokens))
+
+    private def positions(tokens: Array[String]): String => Array[Long] = {
+      if (posOf ne tokens) {
+        val b = scala.collection.mutable.HashMap.empty[
+          String, scala.collection.mutable.ArrayBuilder.ofLong]
+        var i = 0
+        while (i < tokens.length) {
+          if (c.spanTerms(tokens(i)))
+            b.getOrElseUpdate(tokens(i), new scala.collection.mutable.ArrayBuilder.ofLong) += i
+          i += 1
+        }
+        pos = b.view.mapValues(_.result()).toMap
+        posOf = tokens
+      }
+      t => pos.getOrElse(t, Array.emptyLongArray)
+    }
   }
 
   /** Query `j`'s BM25 score of `d`: `(idf × weight) × tfNorm` per scoring
@@ -140,13 +164,31 @@ private[search] object DocScan {
     acc
   }
 
-  /** Per query, the top-`n` of `docs`' hits by score with every hit tied
-    * at the n-th score ([[TopScores]]), as (query index, doc_id, score). */
+  /** The order of the golden ranking window among equal scores: doc_id
+    * ascending, null first, in code point order — the UTF-8 byte order
+    * Spark sorts strings in. */
+  val DocIdTies: Ties[String] = Ties[String](_ => 0L, new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null)
+      else {
+        var i = 0
+        var r = 0
+        while (r == 0 && i < a.length && i < b.length) {
+          val x = a.codePointAt(i)
+          r = Integer.compare(x, b.codePointAt(i))
+          i += Character.charCount(x)
+        }
+        if (r != 0) r else Integer.compare(a.length - i, b.length - i)
+      }
+  })
+
+  /** Per query, the top-`n` of `docs`' hits by (score desc, doc_id asc)
+    * ([[TopScores]] under [[DocIdTies]]), as (query index, doc_id, score). */
   def topScores(c: Compiled, docs: Iterator[Doc], idf: Array[Double], avgdl: Double,
                 n: Int): Iterator[(Int, String, Double)] = {
     val tops = new Array[TopScores[String]](c.queries.length)
     docs.foreach(d => d.hits.foreach { j =>
-      if (tops(j) == null) tops(j) = new TopScores[String](n)
+      if (tops(j) == null) tops(j) = new TopScores[String](n, Some(DocIdTies))
       tops(j).offer(score(c, j, d, idf, avgdl), d.docId)
     })
     tops.indices.iterator.filter(tops(_) != null)

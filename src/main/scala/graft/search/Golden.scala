@@ -307,21 +307,8 @@ object Golden {
     queries.foreach { case (qid, q) =>
       require(Spans.scoringTerms(q).nonEmpty,
         s"span query $qid has no scoring terms") }
-    byQuery(spark, docs, queries.map { case (qid, q) =>
-      val need = Spans.allTerms(q).toSet
-      qid -> DocQuery(QueryPlan.terms(Spans.scoringTerms(q)), Some { (ts: Array[String]) =>
-        val pos = scala.collection.mutable.HashMap.empty[
-          String, scala.collection.mutable.ArrayBuilder.ofLong]
-        var i = 0
-        while (i < ts.length) {
-          if (need(ts(i)))
-            pos.getOrElseUpdate(ts(i), new scala.collection.mutable.ArrayBuilder.ofLong) += i.toLong
-          i += 1
-        }
-        val lists = pos.view.mapValues(_.result()).toMap
-        Spans.matches(q, t => lists.getOrElse(t, Array.emptyLongArray))
-      })
-    }, k, 0, docFilter, analyzer)
+    byQuery(spark, docs, queries.map { case (qid, q) => qid -> DocQuery(QueryPlan.span(q)) },
+      k, 0, docFilter, analyzer)
   }
 
   /** Exact boolean (`must`/`should`/`must_not`) top-k — the golden
@@ -352,8 +339,9 @@ object Golden {
     * only, no tokens) cached; a fold of the statistics — no shuffle —
     * gives N, avgdl and every idf; each partition then keeps its own
     * top-(from + k) per query ([[DocScan.topScores]]) and [[finishTopK]]
-    * ranks them. `docFilter` marks the accepted docs with a join on
-    * `doc_id`; every doc still counts in the statistics.
+    * ranks them. `docFilter`'s doc_ids are collected and broadcast as a
+    * set, so no document moves to apply it; every doc still counts in
+    * the statistics.
     * @return per query index, its ranks (from, from + k] as
     *         (query index, rank, doc_id, score) */
   private def ranks(spark: SparkSession, docs: DataFrame, queries: IndexedSeq[DocQuery],
@@ -361,21 +349,19 @@ object Golden {
                     analyzer: AnalyzerConfig): Array[(Int, Int, String, Double)] = {
     val compiled = spark.sparkContext.broadcast(new DocScan.Compiled(queries))
     val dictSize = compiled.value.dict.length
-    val rows = docFilter.fold(
-      docs.select(col("doc_id"), col("content"), lit(true).as("accepted"))) { f =>
-      docs.select(col("doc_id"), col("content")).join(
-        f.select(col("doc_id")).distinct().withColumn("accepted", lit(true)),
-        Seq("doc_id"), "left")
-    }
-    val parts = rows.rdd.mapPartitions { it =>
+    val accepted = docFilter.map(f => spark.sparkContext.broadcast(
+      f.select(col("doc_id")).filter(col("doc_id").isNotNull).collect()
+        .iterator.map(_.getString(0)).toSet))
+    val parts = docs.select(col("doc_id"), col("content")).rdd.mapPartitions { it =>
       val scanner = new DocScan.Scanner(compiled.value)
       val stats = DocScan.Stats.empty(dictSize)
       val hits = Array.newBuilder[DocScan.Doc]
       it.foreach { r =>
+        val docId = r.getString(0)
         val content = r.getString(1)
-        val d = scanner.scan(r.getString(0),
+        val d = scanner.scan(docId,
           if (content == null) Array.empty[String] else analyzer.analyze(content),
-          !r.isNullAt(2))
+          accepted.forall(_.value.contains(docId)))
         stats.add(d)
         if (d.hits.nonEmpty) hits += d
       }
@@ -394,6 +380,7 @@ object Golden {
     } finally {
       parts.unpersist(false)
       compiled.destroy()
+      accepted.foreach(_.destroy())
     }
   }
 

@@ -5,25 +5,35 @@ import graft.index.{Codec, SegBlock, SegRun}
 /** One per-shard candidate hit (shard-local doc ordinal). */
 case class ShardHit(query_id: Int, shard: Int, ord: Long, score: Double)
 
-/** The top `k` entries by score, plus every entry tied with the k-th
-  * score: the per-shard cut of [[Kernel]] and the per-partition cut of
-  * [[Golden]]. Ties at the boundary are not broken here, because the key
-  * both engines rank ties by (doc_id) is not the key the cut sees: ords
-  * follow doc_id order only within one build generation (an append
-  * numbers its docs after the shard's existing ords), and a golden
-  * partition holds only part of the corpus. The global window after the
-  * cut chooses among them. `floor` is the k-th best score so far (−∞
-  * while fewer than `k` entries; +∞ for `k <= 0`, which keeps nothing) —
-  * the θ of WAND pruning, which stays lossless because an entry tied
-  * with it is still kept. */
-private[search] final class TopScores[A](k: Int) {
+/** A known order among entries of equal score: entries of one `cls`
+  * rank in `order`; entries of different classes are not comparable. */
+private[search] final case class Ties[A](cls: A => Long, order: Ordering[A])
+
+/** The per-shard cut of [[Kernel]] and the per-partition cut of
+  * [[Golden]]: every entry that fewer than `k` others are known to rank
+  * before. One entry ranks before another when its score is higher or,
+  * at an equal score, when `ties` puts both in one class and orders it
+  * first. So the cut is the top `k` plus, at the k-th score, per class
+  * the first entries in `ties` order — at most `k` per class — and with
+  * no `ties` every entry tied with the k-th score. A tie the cut keeps is
+  * broken by the global window after it, which ranks by doc_id: golden
+  * orders a partition's ties by doc_id itself (one class), while a
+  * shard's ords follow doc_id only within one build generation (an
+  * append numbers its docs after the shard's existing ords), so the
+  * kernel's classes are generations. `floor` is the k-th best score so
+  * far (−∞ while fewer than `k` entries; +∞ for `k <= 0`, which keeps
+  * nothing) — the θ of WAND pruning, which stays lossless because an
+  * entry tied with it can still be kept. */
+private[search] final class TopScores[A](k: Int, ties: Option[Ties[A]] = None) {
   // lowest score at the head
   private val heap = scala.collection.mutable.PriorityQueue.empty[(Double, A)](
     new Ordering[(Double, A)] {
       def compare(a: (Double, A), b: (Double, A)): Int = java.lang.Double.compare(b._1, a._1)
     })
   // entries scored exactly `floor` that the heap has no room for
-  private val ties = scala.collection.mutable.ArrayBuffer.empty[(Double, A)]
+  private var tied = scala.collection.mutable.ArrayBuffer.empty[(Double, A)]
+  // `tied` is thinned to the first `k` of each class past this size
+  private var thinAt = math.min(Int.MaxValue.toLong, 2L * k + 16).toInt
 
   def full: Boolean = heap.size >= k
   def floor: Double =
@@ -39,13 +49,38 @@ private[search] final class TopScores[A](k: Int) {
         val out = heap.dequeue()
         heap.enqueue((score, a))
         val f2 = heap.head._1
-        if (ties.nonEmpty && ties(0)._1 < f2) ties.clear()
-        if (out._1 == f2) ties += out
-      } else if (score == f) ties += ((score, a))
+        if (tied.nonEmpty && tied(0)._1 < f2) tied.clear()
+        if (out._1 == f2) tied += out
+      } else if (score == f) {
+        tied += ((score, a))
+        // an entry past the k-th of its class among `tied` alone is
+        // already out, and later entries only add to those before it
+        if (ties.isDefined && tied.length > thinAt) {
+          tied = firstOfEachClass(tied, k)
+          thinAt = math.max(thinAt, 2 * tied.length)
+        }
+      }
     }
 
+  private def firstOfEachClass(es: scala.collection.mutable.ArrayBuffer[(Double, A)],
+                               n: Int): scala.collection.mutable.ArrayBuffer[(Double, A)] = {
+    val t = ties.get
+    val order = Ordering.by[(Double, A), A](_._2)(t.order)
+    es.groupBy(e => t.cls(e._2)).valuesIterator
+      .flatMap(_.sorted(order).iterator.take(n))
+      .to(scala.collection.mutable.ArrayBuffer)
+  }
+
   /** Every kept entry, unordered. */
-  def result: Array[(Double, A)] = (heap.iterator ++ ties.iterator).toArray[(Double, A)]
+  def result: Array[(Double, A)] =
+    if (tied.isEmpty || ties.isEmpty) (heap.iterator ++ tied.iterator).toArray[(Double, A)]
+    else {
+      // the heap holds the k best scores: entries above the floor are
+      // kept, and the floor's entries share the room they leave
+      val f = heap.head._1
+      val (above, at) = (heap.iterator ++ tied.iterator).toArray[(Double, A)].partition(_._1 > f)
+      above ++ firstOfEachClass(at.to(scala.collection.mutable.ArrayBuffer), k - above.length)
+    }
 }
 
 /** One scoring clause of a [[QueryPlan]]: a term and its weight. */
@@ -319,7 +354,8 @@ private[search] object Kernel {
   private val NotDeleted: Long => Boolean = _ => false
 
   /** Block-max WAND over one shard's cursors; returns the (ord, score)
-    * top-k and every hit tied with the k-th score ([[TopScores]]).
+    * top-k and the hits tied with the k-th score that `ties` cannot rule
+    * out ([[TopScores]]).
     * `deleted` is the shard's tombstone mask (Lucene live-docs style):
     * masked ords are skipped at evaluation time — before the heap — so the
     * top-k fills from surviving docs only. `accept` (null = all) is the
@@ -340,8 +376,9 @@ private[search] object Kernel {
                                deleted: Long => Boolean = NotDeleted,
                                accept: Long => Boolean = null,
                                after: (Double, Long) => Boolean = null,
-                               minMatch: Int = 1): Array[(Long, Double)] = {
-    val top = new TopScores[Long](k)
+                               minMatch: Int = 1,
+                               ties: Option[Ties[Long]] = None): Array[(Long, Double)] = {
+    val top = new TopScores[Long](k, ties)
     // ascending-term ranks drive the evaluation's summation order (see
     // assignTermRanks) — the per-pivot tuple sort this replaces showed up
     // as a top allocation+TimSort site in the query-phase profile
@@ -456,8 +493,8 @@ private[search] object Kernel {
   }
 
   /** Boolean (`must`/`should`/`must_not`) top-k over one shard — the
-    * Lucene bool-query scorer; like [[wandTopK]] it keeps every hit tied
-    * with the k-th score. The must cursors drive a leapfrog
+    * Lucene bool-query scorer; it cuts at the k-th score like
+    * [[wandTopK]]. The must cursors drive a leapfrog
     * intersection (every hit contains all of them); should cursors are
     * advanced lazily onto each surviving candidate and add their
     * contribution when they sit on it; exclusion is handled by the caller
@@ -482,8 +519,9 @@ private[search] object Kernel {
                                   deleted: Long => Boolean = NotDeleted,
                                   accept: Long => Boolean = null,
                                   after: (Double, Long) => Boolean = null,
-                                  minShould: Int = 0): Array[(Long, Double)] = {
-    val top = new TopScores[Long](k)
+                                  minShould: Int = 0,
+                                  ties: Option[Ties[Long]] = None): Array[(Long, Double)] = {
+    val top = new TopScores[Long](k, ties)
     if (must.isEmpty) return bestFirst(top)
     val shouldMaxTotal = { var s = 0.0; should.foreach(s += _.maxScore); s }
     // ascending-term ranks over must ++ should (ties keep must-first
@@ -608,9 +646,23 @@ private[search] object Kernel {
     else (sc: Double, _: Long) => sc <= cs
   }
 
+  /** The tie order of one shard's ords: within one build generation ord
+    * order is doc_id order, so the classes are the generations. `starts`
+    * holds the first ord of each generation after the first, ascending;
+    * `None` when they are unknown, which keeps every boundary tie. */
+  private[search] def ordTies(starts: Option[Array[Long]]): Option[Ties[Long]] =
+    starts.map { s =>
+      Ties[Long](ord => {
+        var g = 0
+        while (g < s.length && s(g) <= ord) g += 1
+        g.toLong
+      }, Ordering.Long)
+    }
+
   /** Top-`k` of every plan in one fan-out group: `runs` are the group's
     * posting runs of `shard` (a filtered search's accept set arrives as
-    * [[FilterTerm]] runs), `dels` the shard's sorted tombstoned ords.
+    * [[FilterTerm]] runs), `dels` the shard's sorted tombstoned ords,
+    * `starts` its generation starts ([[ordTies]]).
     *
     * Per plan, `must` cursors run [[booleanTopK]] (a must term with no
     * postings in this shard means no doc here qualifies), else the
@@ -620,7 +672,9 @@ private[search] object Kernel {
     * for it. */
   def groupTopK(shard: Int, runs: Seq[SegRun], dels: Array[Long],
                 plans: Iterator[(Int, QueryPlan)], k: Int, avgdl: Double,
-                filtered: Boolean, decodeCacheBytes: Long): Iterator[ShardHit] = {
+                filtered: Boolean, decodeCacheBytes: Long,
+                starts: Option[Array[Long]]): Iterator[ShardHit] = {
+    val ties = ordTies(starts)
     // a term may arrive as several salted/appended runs — concatenate
     // their disjoint-ord block lists (ordered by first ord) into one
     // cursor, pairing each block with its pruning bound: the stored exact
@@ -709,11 +763,11 @@ private[search] object Kernel {
       if (p.must.nonEmpty) {
         if (!p.must.forall(c => byTerm.contains(c.term))) NoHits
         else booleanTopK(present(p.must), present(p.should), k, deleted, accept(p), after,
-          p.minShould)
+          p.minShould, ties)
       } else {
         val should = present(p.should)
         if (should.isEmpty) NoHits
-        else wandTopK(should, k, deleted, accept(p), after, p.minShould)
+        else wandTopK(should, k, deleted, accept(p), after, p.minShould, ties)
       }
     }
 

@@ -3033,6 +3033,12 @@ object Wand {
     val kFetch = from + k // per-shard fetch depth: page offset + page size
 
     val filteredLocal = filter.isDefined
+    // per shard, its generation starts (Kernel.ordTies): in the
+    // search_after order (shard, ord) every shard is one generation
+    val starts: Option[Array[Array[Long]]] =
+      if (shardDocOrder) Some(Array.fill(S)(Array.emptyLongArray))
+      else snap.generationStarts.filter(_.forall(_.length == S))
+        .map(gs => Array.tabulate(S)(s => gs.map(_(s)).toArray))
     // per-group shared-decode budget (see Kernel.DecodeBudget)
     val decodeCacheBytes =
       Kernel.decodeCacheMbBytes(spark.conf.getOption("spark.graft.decodeCacheMb"))
@@ -3086,7 +3092,7 @@ object Wand {
             val block = idx % bLocal
             Kernel.groupTopK(shard, runs.result(), delMask(shard),
               plansB.value.iterator.filter { case (qid, _) => math.floorMod(qid, bLocal) == block },
-              kFetch, avgdl, filteredLocal, decodeCacheBytes)
+              kFetch, avgdl, filteredLocal, decodeCacheBytes, starts.map(_(shard)))
           }
         }.flatten
       }
@@ -3094,8 +3100,9 @@ object Wand {
     // prune to the global top-(from + k) per query BEFORE touching the
     // docmap: rank() (not row_number) keeps every boundary tie, so the
     // later doc_id tie-break cannot lose a rightful winner; only then are
-    // the few surviving (shard, ord) pairs resolved to doc ids (broadcast
-    // of Q×(from+k) rows against the docmap — never S×Q×k)
+    // the few surviving (shard, ord) pairs resolved to doc ids (a
+    // broadcast of Q×(from+k) rows against the docmap, plus the ties at
+    // each query's last score: at most from+k per shard and generation)
     val w1 = Window.partitionBy(col("query_id")).orderBy(col("score").desc)
     val pruned = hits.toDF()
       .withColumn("r", rank().over(w1)).filter(col("r") <= kFetch).drop("r")

@@ -46,7 +46,14 @@ case class Snapshot(id: Long,
                       * `positions`: set at stage time, followed by every
                       * append/compact/reindex generation, applied to query
                       * text by both engines. */
-                    analyzer: String = "") {
+                    analyzer: String = "",
+                    /** per generation after the first (each append), the
+                      * first ord it numbered in each shard: ords follow
+                      * doc_id order within a generation, which bounds the
+                      * score ties a shard ships ([[graft.search.Kernel.ordTies]]).
+                      * Kept by compaction and deletes (ords never change).
+                      * `None` on manifests written before this field. */
+                    generationStarts: Option[Seq[Seq[Long]]] = None) {
   def isComplete: Boolean = completedShards.size == numShards && termstatsDir.nonEmpty
 }
 
@@ -85,6 +92,10 @@ object SnapshotCatalog {
     val st = o.putObject("stats")
     st.put("numDocs", s.stats.numDocs); st.put("totalTokens", s.stats.totalTokens)
     o.put("timestampMs", s.timestampMs)
+    s.generationStarts.foreach { gs =>
+      val ga = o.putArray("generationStarts")
+      gs.foreach { g => val a = ga.addArray(); g.foreach(x => a.add(x)) }
+    }
     o.toPrettyString
   }
 
@@ -110,7 +121,9 @@ object SnapshotCatalog {
       tombstoneDirs = arr("tombstoneDirs"),
       positions = Option(n.get("positions")).exists(_.asBoolean()),
       delmaskDir = Option(n.get("delmaskDir")).map(_.asText()).getOrElse(""),
-      analyzer = Option(n.get("analyzer")).map(_.asText()).getOrElse(""))
+      analyzer = Option(n.get("analyzer")).map(_.asText()).getOrElse(""),
+      generationStarts = Option(n.get("generationStarts")).map(_.elements().asScala
+        .map(_.elements().asScala.map(_.asLong()).toSeq).toSeq))
   }
 
   /** Read the CURRENT snapshot. If the CURRENT pointer is absent but

@@ -249,6 +249,37 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("thousands of score ties over two appends and a compaction: " +
+       "WAND returns golden's pages") {
+    def files(from: Int, until: Int) = (from until until).map(i =>
+      graft.corpus.SourceFile("ties", f"g$i%04d.txt", "main", "txt", "alpha beta gamma")).toDS()
+    val qs = Seq(graft.corpus.RefQuery(0, "alpha"), graft.corpus.RefQuery(1, "alpha gamma"))
+    val all = files(0, 3000).select(IndexBuilder.docIdCol.as("doc_id"), $"content")
+    val dir = TestSpark.tempDir("graft-ties-gen")
+    val cfg = BuildConfig(numShards = 4, commitEvery = 4, heavyThreshold = 200, saltBuckets = 4)
+    assert(IndexBuilder.build(spark, files(0, 1500), dir, cfg).generationStarts == Some(Nil))
+    IndexBuilder.append(spark, files(1500, 2500), dir)
+    val snapA = IndexBuilder.append(spark, files(2500, 3000), dir)
+    // each append starts every shard's ords after the ones before it
+    val starts = graft.table.SnapshotCatalog.require(spark, dir).generationStarts.get
+    assert(starts.length == 2 && starts.forall(_.length == 4))
+    assert((0 until 4).forall(s => starts(0)(s) > 1L && starts(1)(s) > starts(0)(s)))
+    val snapC = IndexBuilder.compact(spark, dir)
+    assert(snapC.generationStarts == Some(starts))
+    for (from <- Seq(0, 10)) {
+      val golden = Golden.topK(spark, all, qs, k, from = from)
+        .select("query_id", "rank", "doc_id", "score").as[(Int, Int, String, Double)]
+        .collect().sorted.toSeq
+      assert(golden.length == 2 * k)
+      for (s <- Seq(snapA, snapC)) {
+        val fast = Wand.searchSnapshot(spark, s, qs, k, from = from)
+          .select("query_id", "rank", "doc_id", "score").as[(Int, Int, String, Double)]
+          .collect().sorted.toSeq
+        assert(fast == golden, s"snapshot ${s.id} from $from")
+      }
+    }
+  }
+
   test("delete: tombstoned docs vanish, survivors stay rank- and bit-identical") {
     val dirD = TestSpark.tempDir("graft-delete")
     val all = CorpusGen.corpus(spark, 1000L, seed = 55L).cache()

@@ -9,8 +9,9 @@ import graft.corpus.CorpusGen
 import graft.index.IndexBuilder
 
 /** Pins the plan shape of the golden scorer: the document pass and the
-  * statistics reduce are narrow, so the only shuffle of a plain
-  * [[Golden.topK]] call is the window that ranks the per-partition cuts. */
+  * statistics reduce are narrow and a doc filter is a broadcast set, so
+  * the only shuffle of a [[Golden.topK]] call is the window that ranks the
+  * per-partition cuts. */
 class GoldenPlanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -43,21 +44,35 @@ class GoldenPlanSpec extends AnyFunSuite {
     }
   }
 
-  test("a plain Golden.topK call runs exactly one shuffle stage, the ranking window") {
+  /** The shuffle-writing stages of one `Golden.topK` call over a small
+    * corpus, with its row count. */
+  private def shuffleStages(filtered: Boolean): (Int, Int) = {
     val docs = CorpusGen.corpus(spark, 400L, seed = 7L)
       .select(IndexBuilder.docIdCol.as("doc_id"), col("content"))
     val queries = CorpusGen.queries(8, seed = 7L)
-    val group = "golden-plan-shape"
+    val docFilter = if (filtered) Some(docs.sample(0.5, 7L).select("doc_id")) else None
+    val group = s"golden-plan-shape-$filtered"
     val l = new ShuffleStages(group)
     spark.sparkContext.addSparkListener(l)
     try {
       spark.sparkContext.setJobGroup(group, "one Golden.topK call")
-      val rows = try Golden.topK(spark, docs, queries, 10).collect()
+      val rows = try Golden.topK(spark, docs, queries, 10, docFilter = docFilter).collect()
         finally spark.sparkContext.clearJobGroup()
       l.drain()
-      assert(rows.length > 10, "the queries must have hits, or no stage shuffles")
       assert(l.started > 0 && l.ended == l.started)
-      assert(l.writers.size == 1, s"shuffle-writing stages: ${l.writers.toSeq.sorted}")
+      (l.writers.size, rows.length)
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("a plain Golden.topK call runs exactly one shuffle stage, the ranking window") {
+    val (stages, rows) = shuffleStages(filtered = false)
+    assert(rows > 10, "the queries must have hits, or no stage shuffles")
+    assert(stages == 1)
+  }
+
+  test("a filtered Golden.topK call shuffles no document: one shuffle stage, the window") {
+    val (stages, rows) = shuffleStages(filtered = true)
+    assert(rows > 10, "the queries must have hits, or no stage shuffles")
+    assert(stages == 1)
   }
 }

@@ -333,7 +333,8 @@ class KernelSpec extends AnyFunSuite {
 
       for (budgetBytes <- Seq(0L, OneBlock, Long.MaxValue)) {
         val got = Kernel.groupTopK(shard, sh.runs ++ filterRun, dels,
-            plans.indices.iterator.map(i => i -> plans(i)), k, sh.avgdl, filtered, budgetBytes)
+            plans.indices.iterator.map(i => i -> plans(i)), k, sh.avgdl, filtered, budgetBytes,
+            None)
           .toSeq.groupBy(_.query_id)
         plans.indices.foreach { i =>
           val g = got.getOrElse(i, Seq.empty)
@@ -365,6 +366,72 @@ class KernelSpec extends AnyFunSuite {
     }
   }
 
+  test("the generation-bounded cut equals the brute-force cut (seeded, 2000 cases)") {
+    val rnd = new java.util.SplittableRandom(20261023L)
+    for (c <- 0 until 2000) {
+      val k = rnd.nextInt(8)
+      val n = rnd.nextInt(120)
+      // distinct ords in random arrival order, few distinct scores, and
+      // 0-3 generation starts among them
+      val ords = shuffled(rnd, Array.tabulate(n)(_.toLong))
+      val entries = ords.map(o => (rnd.nextInt(6) / 2.0, o))
+      val starts = Array.fill(rnd.nextInt(4))(rnd.nextInt(120).toLong).sorted
+      val ties = Kernel.ordTies(Some(starts)).get
+      val top = new TopScores[Long](k, Some(ties))
+      entries.foreach { case (s, o) => top.offer(s, o) }
+      // kept: fewer than k entries score higher or tie it earlier in its generation
+      val want = if (k == 0) Set.empty[(Double, Long)] else entries.filter { case (s, o) =>
+        entries.count { case (s2, o2) =>
+          s2 > s || (s2 == s && ties.cls(o2) == ties.cls(o) && o2 < o) } < k
+      }.toSet
+      assert(top.result.toSet == want, s"case $c k $k starts ${starts.toSeq}")
+    }
+  }
+
+  test("a shard with thousands of tied docs in three generations ships at most k " +
+       "per generation: the first k of each") {
+    val n = 3000
+    val ords = Array.tabulate(n)(i => i + 1L)
+    val ones = Array.fill(n)(1L)
+    val dls = Array.fill(n)(8L)
+    val runs = Seq("t", "u").map(t =>
+      SegRun(0, t, n.toLong, n.toLong, 8.0, Codec.buildBlocks(ords, ones, dls, 8.0).toSeq))
+    val idf = Bm25.idf(n.toLong, n.toLong)
+    val plans = Seq(QueryPlan.terms(Array("t")), QueryPlan.terms(Array("t", "u"), conjunctive = true))
+      .map(_.weighted(_ => idf))
+    val k = 10
+    def shipped(starts: Option[Array[Long]]): Map[Int, Seq[Long]] =
+      Kernel.groupTopK(0, runs, Array.emptyLongArray, plans.indices.iterator.map(i => i -> plans(i)),
+          k, 8.0, filtered = false, decodeCacheBytes = Long.MaxValue, starts)
+        .toSeq.groupBy(_.query_id).map { case (q, hs) =>
+          assert(hs.map(_.score).distinct.length == 1)
+          q -> hs.map(_.ord).sorted
+        }
+    val firsts = Seq(1L, 1001L, 2001L).flatMap(s => s until s + k)
+    assert(shipped(Some(Array(1001L, 2001L))) == Map(0 -> firsts, 1 -> firsts))
+    assert(shipped(Some(Array.emptyLongArray)) == Map(0 -> (1L to k), 1 -> (1L to k)))
+    // unknown generations: every tie ships
+    assert(shipped(None).values.map(_.length).toSeq == Seq(n, n))
+  }
+
+  test("the golden tie order is Spark's string order: UTF-8 bytes, null first " +
+       "(seeded, 5000 pairs)") {
+    val rnd = new java.util.SplittableRandom(20261024L)
+    // ASCII, a BMP character above the surrogates, and a supplementary one
+    val alphabet = Array("a", "b", "é", "～", "😀")
+    def str(): String =
+      if (rnd.nextInt(20) == 0) null
+      else Seq.fill(rnd.nextInt(4))(alphabet(rnd.nextInt(alphabet.length))).mkString
+    def utf8(a: String, b: String): Int =
+      if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null)
+      else java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+    for (c <- 0 until 5000) {
+      val (a, b) = (str(), str())
+      assert(Integer.signum(DocScan.DocIdTies.order.compare(a, b)) == Integer.signum(utf8(a, b)),
+        s"case $c: '$a' vs '$b'")
+    }
+  }
+
   test("chainMatch equals brute-force enumeration of in-order position chains, " +
        "with and without a last any-of slot (seeded, 3000 cases)") {
     val rnd = new java.util.SplittableRandom(20261021L)
@@ -391,18 +458,23 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("the golden per-document scorer equals the brute-force scorer bit for bit " +
-       "on OR, AND and boosted queries (seeded, 200 cases)") {
+       "on OR, AND, boosted and span queries (seeded, 200 cases)") {
     val rnd = new java.util.SplittableRandom(20261020L)
     val boosts = Array(0.5, 1.0, 2.5, 3.0)
     var hits = 0
+    var spanHits = 0
     for (c <- 0 until 200) {
       val sh = new PosShard(rnd)
       def subset(): Array[String] = sh.terms.filter(_ => rnd.nextBoolean())
       val boost = sh.terms.map(t => t -> boosts(rnd.nextInt(boosts.length))).toMap
       val k = 1 + rnd.nextInt(12)
+      def pick(): String = sh.terms(rnd.nextInt(sh.terms.length))
       val plans = IndexedSeq(QueryPlan.terms(subset()),
         QueryPlan.terms(subset(), conjunctive = true),
-        QueryPlan.terms(subset(), conjunctive = rnd.nextBoolean(), boost))
+        QueryPlan.terms(subset(), conjunctive = rnd.nextBoolean(), boost),
+        QueryPlan.span(SpanNot(SpanNear(Seq(SpanTerm(pick()),
+          SpanOr(Seq(SpanTerm(pick()), SpanTerm(pick())))), rnd.nextInt(4)),
+          SpanTerm(pick()), rnd.nextInt(2), rnd.nextInt(2))))
       val compiled = new DocScan.Compiled(plans.map(DocScan.DocQuery(_)))
       // the corpus split over 1-3 partitions, as the golden pass sees it
       val docId = (d: Int) => f"d$d%04d"
@@ -425,7 +497,8 @@ class KernelSpec extends AnyFunSuite {
         val want: Map[String, Double] = (0 until sh.numDocs).filter { d =>
           val has = (t: String) => sh.docs(d).contains(t)
           scoring.exists(w => has(w.term)) && p.must.forall(w => has(w.term)) &&
-            p.should.count(w => has(w.term)) >= p.minShould
+            p.should.count(w => has(w.term)) >= p.minShould &&
+            p.span.forall(q => Spans.spans(q, t => sh.positions(d, t)).nonEmpty)
         }.map { d =>
           var s = 0.0
           scoring.foreach(w => if (sh.docs(d).contains(w.term)) s += w.weight * sh.tfNorm(d, w.term))
@@ -439,9 +512,11 @@ class KernelSpec extends AnyFunSuite {
         assert(top(cut.filter(_._1 == j).map(h => (h._2, h._3))) == top(want.toSeq),
           s"case $c plan $j top-$k")
         if (want.nonEmpty) hits += 1
+        if (want.nonEmpty && plans(j).span.isDefined) spanHits += 1
       }
     }
-    assert(hits > 300, s"only $hits of 600 plans had any hit")
+    assert(hits > 400, s"only $hits of 800 plans had any hit")
+    assert(spanHits > 0, s"only $spanHits of 200 span plans had any hit")
   }
 
   test("the kernel source has no Spark import") {
