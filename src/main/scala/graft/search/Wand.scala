@@ -3108,7 +3108,8 @@ object Wand {
       .withColumn("r", rank().over(w1)).filter(col("r") <= kFetch).drop("r")
     val docmap = spark.read.parquet(snap.docmapDirs: _*)
       .select(col("shard"), col("ord"), col("doc_id"))
-    val resolved = docmap.join(broadcast(pruned), Seq("shard", "ord"))
+    val resolved = withAddr(docmap)
+      .join(broadcast(withAddr(pruned).drop("shard", "ord")), Seq("addr")).drop("addr")
     if (shardDocOrder) {
       // search_after mode: ties order by the internal (shard, ord) key —
       // OpenSearch's recommended `_shard_doc` PIT tiebreaker — so the
@@ -3128,4 +3129,19 @@ object Wand {
         .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
     }
   }
+
+  /** Ords per shard in one [[withAddr]] key. */
+  private val OrdsPerShard = 1L << 32
+
+  /** `df` with `addr` = shard × 2^32 + ord: one long key for the
+    * (shard, ord) hit resolve. A broadcast hash join on one long key
+    * builds a map sized by its rows; on the two columns it builds a
+    * byte map on a whole memory page (32 MB at a 4 GB heap), which the
+    * executor keeps until the broadcast is cleaned, after every search.
+    * An ord past 2^32 fails the search rather than alias another
+    * shard's address. */
+  private def withAddr(df: DataFrame): DataFrame =
+    df.withColumn("addr",
+      when(col("ord") < OrdsPerShard, col("shard").cast("long") * OrdsPerShard + col("ord"))
+        .otherwise(raise_error(lit(s"ord past $OrdsPerShard in one shard"))))
 }

@@ -127,6 +127,22 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("hit resolve: the docmap join broadcasts one long key, not (shard, ord)") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val fast = Wand.searchSnapshot(spark, snap, queries, k)
+    assert(fast.count() == queries.length * k)
+    val joins = Plans.collect(fast.queryExecution.executedPlan) {
+      case j: BroadcastHashJoinExec => j
+    }
+    assert(joins.nonEmpty)
+    joins.foreach { j =>
+      assert((j.leftKeys ++ j.rightKeys).map(_.dataType) ==
+        Seq(org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.LongType), j.toString)
+    }
+  }
+
   test("query-block fan-out (B > 1) stays rank- and score-identical") {
     // S=2 shards on a local[4] session forces B = ceil(2*4/2) = 4 query
     // blocks — queries split across tasks, segments replicated per block —
