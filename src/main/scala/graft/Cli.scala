@@ -114,7 +114,7 @@ object Cli {
   private def resolveHits(spark: SparkSession, indexDir: String,
                           hits: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val snap = graft.table.SnapshotCatalog.require(spark, indexDir)
-    val dm = spark.read.parquet(snap.docmapDirs: _*)
+    val dm = graft.table.Tables.docmap(spark, snap)
       .select(col("doc_id"), col("repo"), col("path"))
     hits.join(dm, "doc_id")
       .select(col("rank"), col("score"), col("repo"), col("path"), col("doc_id"))

@@ -329,7 +329,7 @@ object SparkEntry {
 
   /** A snapshot's docmap as the engine `doc_id` → table id (`path`) map. */
   private def paths(s: SparkSession, snap: graft.table.Snapshot): DataFrame =
-    s.read.parquet(snap.docmapDirs: _*).select(col("doc_id"), col("path"))
+    graft.table.Tables.docmap(s, snap).select(col("doc_id"), col("path"))
 
   private val HitCols: Seq[org.apache.spark.sql.Column] =
     Seq(col("query_id"), col("rank"), col("doc_id"), col("score"))
@@ -2309,7 +2309,7 @@ object SparkEntry {
     "q158_engine_scroll" -> ((s, d) => {
       val snap = engineIndex(s, d, Fx.Base).snap
       stage(s, d, Fx.Base, "q158")
-      s.read.parquet(snap.docmapDirs: _*)
+      graft.table.Tables.docmap(s, snap)
         .select(col("doc_id").as("sha_id"), col("shard"), col("ord"))
         .write.mode("overwrite").parquet(s"${stageDir(d)}/q158_addr.parquet")
       val qs = Seq(graft.corpus.RefQuery(0, "dup stream"),
@@ -2864,7 +2864,7 @@ object SparkEntry {
       val qs = Seq(graft.corpus.RefQuery(0, "spark query"))
       val snapU = graft.search.Wand.updateByQuery(s, idxDir, qs,
         Map("lang" -> lit("retagged"), "tag" -> lit("hit")))
-      s.read.parquet(snapU.docmapDirs: _*)
+      graft.table.Tables.docmap(s, snapU)
         .select(col("path").cast("long").as("doc_id"), col("lang"), col("tag"))
         .orderBy("doc_id")
     }),
@@ -2892,7 +2892,7 @@ object SparkEntry {
     "q71_engine_search_after" -> ((s, d) => {
       val snap = engineIndex(s, d, Fx.Base).snap
       stage(s, d, Fx.Base, "q71")
-      s.read.parquet(snap.docmapDirs: _*)
+      graft.table.Tables.docmap(s, snap)
         .select(col("doc_id").as("sha_id"), col("shard"), col("ord"))
         .write.mode("overwrite").parquet(s"${stageDir(d)}/q71_docmap.parquet")
       val qs = Seq(graft.corpus.RefQuery(0, "spark query join"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.RefQuery
 import graft.search.{Golden, Wand}
-import graft.table.Snapshot
+import graft.table.{Snapshot, Tables}
 
 /** The engine-vs-engine comparison harness — the reference's pairwise
   * response-diff discipline transplanted: golden exact scorer = "primary
@@ -36,7 +36,7 @@ object Harness {
   }
 
   /** Doc identities with NO row in the `live` docmap (see
-    * [[Wand.liveRows]]) — tombstoned and never re-indexed. Both harness
+    * [[Tables.live]]) — tombstoned and never re-indexed. Both harness
     * entry points mask THESE rather than raw tombstoned ids: after an
     * [[graft.index.IndexBuilder.upsert]] the old row is tombstoned but the
     * identity is live again under a new (shard, ord), and the golden side
@@ -45,7 +45,7 @@ object Harness {
   private def deadIds(spark: SparkSession, snap: Snapshot,
                       live: => DataFrame): Option[DataFrame] =
     if (snap.tombstoneDirs.isEmpty) None
-    else Some(spark.read.parquet(snap.tombstoneDirs: _*).select("doc_id").distinct()
+    else Some(Tables.tombstones(spark, snap.tombstoneDirs).select("doc_id").distinct()
       .join(live.select("doc_id"), Seq("doc_id"), "left_anti"))
 
   /** Run both engines over the same query set and compare. The golden side
@@ -59,7 +59,7 @@ object Harness {
     val docs0 = corpus.filter(!graft.index.IndexBuilder.isBadRow)
       .select(graft.index.IndexBuilder.docIdCol.as("doc_id"), col("content"))
     val docs = deadIds(spark, snap,
-        Wand.liveRows(spark, snap, spark.read.parquet(snap.docmapDirs: _*)))
+        Tables.live(spark, snap, Tables.docmap(spark, snap)))
       .map(t => docs0.join(t, Seq("doc_id"), "left_anti")).getOrElse(docs0)
     // golden analyzes with the SNAPSHOT's chain — the harness must not
     // diverge from the index on the first stopword/stem
@@ -98,7 +98,7 @@ object Harness {
     * stored sha256(content) must equal a fresh sha256 over the source
     * (north rule / input_hint). Returns the violating rows (expect 0). */
   def shaViolations(spark: SparkSession, snap: Snapshot, corpus: DataFrame): DataFrame = {
-    val docmap = Wand.liveRows(spark, snap, spark.read.parquet(snap.docmapDirs: _*)
+    val docmap = Tables.live(spark, snap, Tables.docmap(spark, snap)
       .select(col("shard"), col("ord"), col("doc_id"), col("sha256")))
     // same bad-row filter as replay(): dead-lettered rows have no docmap
     // entry BY DESIGN — without the filter they'd surface as full-outer

@@ -124,7 +124,7 @@ object DeleteMask {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(root, true)
     fs.mkdirs(root)
-    spark.read.parquet(tombstoneDirs: _*)
+    graft.table.Tables.tombstones(spark, tombstoneDirs)
       .select(col("shard"), col("ord"))
       .withColumn("hkey", element_at(typedLit(keys.toSeq), col("shard") + 1))
       .repartition(numShards, col("hkey"))

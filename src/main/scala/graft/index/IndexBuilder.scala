@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.corpus.SourceFile
-import graft.table.{CorpusStats, Snapshot, SnapshotCatalog}
+import graft.table.{CorpusStats, Snapshot, SnapshotCatalog, Tables}
 
 /** One aggregated term-frequency row (post doc-ordinal assignment). `pos`
   * is the posting's delta-varbyte-encoded in-doc positions — encoded at
@@ -238,7 +238,7 @@ object IndexBuilder {
       timed(spark, "stage:deadletter") {
         bad.write.mode(SaveMode.Overwrite).parquet(deadletterDir(dir))
       }
-      spark.read.parquet(deadletterDir(dir)).count()
+      Tables.deadletter(spark, deadletterDir(dir)).count()
     }
     stageRows(spark, good, dir, cfg, skipped, cfg.analyzer.spec,
       checkDups = true,
@@ -308,7 +308,7 @@ object IndexBuilder {
     // each launched their own job over the same staged columns. Only a
     // rewrite (rare) re-runs the stats agg over the deduped staging.
     val firstAgg = timed(spark, "stage:stats") {
-      spark.read.parquet(stagingDir(dir)).agg(count(lit(1)),
+      Tables.staging(spark, stagingDir(dir)).agg(count(lit(1)),
         (if (checkDups) count_distinct(col("doc_id")) else count(lit(1))),
         coalesce(sum(col("dl")), lit(0L))).head()
     }
@@ -322,7 +322,7 @@ object IndexBuilder {
             .filter(col("rn") === 1).drop("rn")
           writeStaging(deduped)
         }
-        spark.read.parquet(stagingDir(dir))
+        Tables.staging(spark, stagingDir(dir))
           .agg(count(lit(1)), count(lit(1)),
             coalesce(sum(col("dl")), lit(0L))).head()
       }
@@ -337,7 +337,7 @@ object IndexBuilder {
       completedShards = Nil, segmentDirs = Nil, docmapDirs = Nil,
       lineageDirs = Nil, termstatsDir = "", stagingDone = true, stats = stats,
       timestampMs = System.currentTimeMillis(), positions = cfg.positions,
-      analyzer = analyzerSpec, generationStarts = Some(Nil))
+      analyzer = analyzerSpec, generationStarts = Some(Nil), docmapAdded = Some(Nil))
     // skip-and-log lineage for the staging phase itself: shard -1 = dead-
     // lettered rows, shard -2 = duplicate identities dropped (stageBatch's
     // convention)
@@ -364,7 +364,7 @@ object IndexBuilder {
     val avgdl = parent.stats.avgdl
     val stagingPath = if (stagingPathIn.isEmpty) stagingDir(dir) else stagingPathIn
 
-    val staged = spark.read.parquet(stagingPath)
+    val staged = Tables.staging(spark, stagingPath)
       .filter(col("shard").isin(group.map(Integer.valueOf): _*)) // partition-pruned scan
     // The docmap is a pure COLUMN PROJECTION of staging (ord was assigned
     // at stage time): no window, no join, no exchange — parquet column
@@ -375,7 +375,7 @@ object IndexBuilder {
     val docmapDir = s"$dir/docmap/$gTag"
     val docmapFut = scala.concurrent.Future {
       timed(spark, "group:docmap") {
-        staged.select("shard", "ord", "doc_id", "repo", "path", "commit", "lang", "sha256", "dl")
+        staged.select(Tables.DocmapSchema.fieldNames.toIndexedSeq.map(col): _*)
           .write.mode(SaveMode.Overwrite).parquet(docmapDir)
       }
     }(scala.concurrent.ExecutionContext.global)
@@ -514,7 +514,7 @@ object IndexBuilder {
     // lineage per shard: input files, order-independent sha256 rollup,
     // postings count, build time. postings_count reads only the (shard,
     // count) columns of the segments just written (blobs pruned).
-    val segStats = spark.read.parquet(segDir).select("shard", "count")
+    val segStats = Tables.segments(spark, Seq(segDir)).select("shard", "count")
       .groupBy("shard").agg(sum(col("count")).as("postings_count"))
     val buildMs = (System.nanoTime() - t0) / 1000000
     val files = staged.inputFiles
@@ -522,7 +522,7 @@ object IndexBuilder {
     val filesUdf = udf((s: Int) => filesByShard.getOrElse(s, Nil))
     // order-independent content fingerprint: bit_xor of 60-bit sha prefixes
     // (distributed partial agg — never materializes a shard's shas)
-    val lineage = spark.read.parquet(docmapDir)
+    val lineage = Tables.docmap(spark, Seq(docmapDir), Some(Nil))
       .withColumn("sha_long", expr("cast(conv(substring(sha256, 1, 15), 16, 10) as bigint)"))
       .groupBy("shard")
       .agg(count(lit(1)).as("doc_count"), expr("bit_xor(sha_long)").as("sha_xor"))
@@ -601,13 +601,12 @@ object IndexBuilder {
     // termstats while readers may still be scanning the previous dir
     val tsDir = s"$dir/termstats/g${parent.id + 1}"
     timed(spark, "finalize:termstats") {
-      val fromSegs = spark.read.parquet(parent.segmentDirs: _*)
+      val fromSegs = Tables.segments(spark, parent.segmentDirs)
         .groupBy("term").agg(sum(col("count")).as("df"), sum(col("cf")).as("cf"))
       val stats =
         if (parent.tombstoneDirs.isEmpty) fromSegs
         else {
-          val victims = spark.read.parquet(parent.tombstoneDirs: _*)
-          val d = termDeltas(spark, dir, victims)
+          val d = termDeltas(spark, dir, Tables.tombstones(spark, parent.tombstoneDirs))
           fromSegs.join(d, Seq("term"), "left")
             .select(col("term"),
               (col("df") - coalesce(col("df_d"), lit(0L))).as("df"),
@@ -628,18 +627,6 @@ object IndexBuilder {
     snap
   }
 
-  /** The staged-row schema, explicit so empty staging dirs (a batch that
-    * dedupes to nothing) stay readable where inference fails. */
-  private val stagedSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("doc_id", StringType), StructField("repo", StringType),
-      StructField("path", StringType), StructField("commit", StringType),
-      StructField("lang", StringType), StructField("sha256", StringType),
-      StructField("dl", LongType), StructField("tokens", ArrayType(StringType)),
-      StructField("ord", LongType), StructField("shard", IntegerType)))
-  }
-
   /** True when `snap`'s termstats were committed by its own finalizing
     * commit (full-build/append finalize `g{id}`, delete `d{id}`, compact
     * `c{id}`) — false in the documented torn-append window, where a
@@ -654,38 +641,11 @@ object IndexBuilder {
     * staging after a delete + compact cycle. */
   private def termDeltas(spark: SparkSession, dir: String,
                          victims: DataFrame): DataFrame =
-    stagedRows(spark, dir).select(col("shard"), col("ord"), col("tokens"))
+    Tables.staged(spark, dir).select(col("shard"), col("ord"), col("tokens"))
       .join(victims.select("shard", "ord"), Seq("shard", "ord"), "left_semi")
       .select(col("shard"), col("ord"), explode(col("tokens")).as("term"))
       .groupBy("term", "shard", "ord").agg(count(lit(1)).as("tf"))
       .groupBy("term").agg(count(lit(1)).as("df_d"), sum(col("tf")).as("cf_d"))
-
-  /** Every staged row of the index (full build + all appended batches)
-    * under the explicit schema — the durable per-doc token record that
-    * term deltas and [[graft.search.Aggs.significantTerms]] recompute
-    * from. One read per staging root, unioned: each root is independently
-    * shard-partitioned, and multi-root partition discovery rejects
-    * "conflicting directory structures". Includes tombstoned and
-    * superseded rows — callers mask by (shard, ord). */
-  private[graft] def stagedRows(spark: SparkSession, dir: String): DataFrame =
-    stagingDirs(spark, dir)
-      .map(p => spark.read.schema(stagedSchema).parquet(p))
-      .reduceOption(_ unionByName _)
-      .getOrElse(throw new IllegalStateException(s"no staging dirs under $dir"))
-
-  /** All staging dirs under the index: the full-build staging plus one per
-    * appended batch. Staged token arrays are the durable record delete and
-    * finalize recompute term deltas from — never GC'd by compaction. */
-  private def stagingDirs(spark: SparkSession, dir: String): Seq[String] = {
-    val f = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = new org.apache.hadoop.fs.Path(dir)
-    if (!f.exists(base)) Nil
-    else f.listStatus(base).map(_.getPath).collect {
-      case p if p.getName == "staging" || p.getName.startsWith("staging_") =>
-        p.toString
-    }.toSeq
-  }
 
   /** Build (or resume) the index at `dir`. Idempotent: completed shards
     * recorded in the CURRENT snapshot are never rebuilt; a build killed
@@ -792,14 +752,9 @@ object IndexBuilder {
         // CLEARS the tombstones, while the staging archive keeps every
         // row ever staged, so an anti-join against tombstones alone
         // would resurrect pre-compaction deletes.
-        val liveMap0 = spark.read.parquet(src.docmapDirs: _*)
-          .select("shard", "ord")
-        val liveMap =
-          if (src.tombstoneDirs.isEmpty) liveMap0
-          else liveMap0.join(
-            spark.read.parquet(src.tombstoneDirs: _*).select("shard", "ord"),
-            Seq("shard", "ord"), "left_anti")
-        val live = stagedRows(spark, srcDir)
+        val liveMap = Tables.live(spark, src,
+          Tables.docmap(spark, src).select("shard", "ord"))
+        val live = Tables.staged(spark, srcDir)
           .join(liveMap, Seq("shard", "ord"), "left_semi")
         // the destination inherits the SOURCE's analyzer chain: reindex
         // lifts already-analyzed tokens (content is never re-read), so
@@ -835,12 +790,9 @@ object IndexBuilder {
     // committed (tombstoned or not — at-least-once idempotency); the
     // upsert path dedupes against LIVE identities only, so a tombstoned
     // identity can be re-indexed under a fresh (shard, ord)
-    val docmapAll = spark.read.parquet(parent.docmapDirs: _*)
+    val docmapAll = Tables.docmap(spark, parent)
     val existingIds =
-      if (!liveOnly || parent.tombstoneDirs.isEmpty) docmapAll.select("doc_id")
-      else docmapAll.join(
-        spark.read.parquet(parent.tombstoneDirs: _*).select("shard", "ord"),
-        Seq("shard", "ord"), "left_anti").select("doc_id")
+      (if (liveOnly) Tables.live(spark, parent, docmapAll) else docmapAll).select("doc_id")
     val withId = corpus.filter(!isBadRow).withColumn("doc_id", docIdCol)
     // WITHIN-batch dedup: the docmap anti-join only drops identities that
     // are already COMMITTED — an at-least-once redelivery landing inside
@@ -883,14 +835,13 @@ object IndexBuilder {
     // and break the (shard, ord)-unique-across-history invariant that
     // termDeltas' semi-join and the tombstone masks key on. The staging
     // dirs are the durable record of every assignment (never GC'd — see
-    // stagingDirs); the agg is column-pruned to (shard, ord). A crashed
-    // attempt of THIS batch may already have staged rows — including them
-    // just leaves a harmless ord gap.
-    val offsets: Map[Int, Long] = stagingDirs(spark, dir)
-      .map(p => spark.read.schema(stagedSchema).parquet(p)
-        .select(col("shard"), col("ord")))
+    // Tables.stagingDirs); the agg is column-pruned to (shard, ord). A
+    // crashed attempt of THIS batch may already have staged rows —
+    // including them just leaves a harmless ord gap.
+    val offsets: Map[Int, Long] = Tables.stagingDirs(spark, dir)
+      .map(p => Tables.staging(spark, p).select(col("shard"), col("ord")))
       .reduceOption(_ unionByName _)
-      .getOrElse(spark.read.parquet(parent.docmapDirs: _*))
+      .getOrElse(docmapAll)
       .groupBy("shard").agg(max("ord").as("m")).as[(Int, Long)].collect().toMap
     val offB = spark.sparkContext.broadcast(offsets)
     val offUdf = udf((s: Int) => offB.value.getOrElse(s, 0L))
@@ -917,12 +868,11 @@ object IndexBuilder {
       timed(spark, "append:deadletter") {
         bad.write.mode(SaveMode.Overwrite).parquet(dl)
       }
-      spark.read.schema(org.apache.spark.sql.Encoders.product[SourceFile].schema)
-        .parquet(dl).count()
+      Tables.deadletter(spark, dl).count()
     }
-    // explicit schema: a batch that dedupes to NOTHING (at-least-once
-    // re-delivery) writes an empty dir, where schema inference fails
-    val staged = spark.read.schema(stagedSchema).parquet(stagingPath)
+    // a batch that dedupes to NOTHING (at-least-once re-delivery) writes
+    // an empty dir, which the declared schema reads as zero rows
+    val staged = Tables.staging(spark, stagingPath)
     val st = staged.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
     val batchStats = CorpusStats(st.getLong(0), st.getLong(1))
     val lin = s"$dir/lineage/$batchTag-stage"
@@ -1094,21 +1044,16 @@ object IndexBuilder {
       if (termstatsFresh(dir, parent0)) parent0
       else finalize(spark, dir, parent0, cfg)
     val newId = parent.id + 1
-    val docmap = spark.read.parquet(parent.docmapDirs: _*)
-    val victims0 = selectVictims(parent, docmap)
-      .select("shard", "ord", "doc_id", "dl")
-    val victims =
-      if (parent.tombstoneDirs.isEmpty) victims0
-      else victims0.join(
-        spark.read.parquet(parent.tombstoneDirs: _*).select("shard", "ord"),
-        Seq("shard", "ord"), "left_anti")
+    val victims = Tables.live(spark, parent,
+      selectVictims(parent, Tables.docmap(spark, parent))
+        .select(Tables.TombstoneSchema.fieldNames.toIndexedSeq.map(col): _*))
     // one pass decides emptiness AND the stats delta (dl rides in docmap,
     // so no staging scan is needed for the global stats)
     val tsDir = s"$dir/tombstones/d$newId"
     timed(spark, "delete:tombstones") {
       victims.write.mode(SaveMode.Overwrite).parquet(tsDir)
     }
-    val written = spark.read.parquet(tsDir)
+    val written = Tables.tombstones(spark, Seq(tsDir))
     val aggRow = written.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
     val (nVictims, dlVictims) = (aggRow.getLong(0), aggRow.getLong(1))
     if (nVictims == 0) {
@@ -1126,7 +1071,7 @@ object IndexBuilder {
     val statsDir = s"$dir/termstats/d$newId"
     timed(spark, "delete:termstats") {
       val d = termDeltas(spark, dir, written)
-      spark.read.parquet(parent.termstatsDir)
+      Tables.termstats(spark, parent.termstatsDir)
         .join(d, Seq("term"), "left")
         .select(col("term"),
           (col("df") - coalesce(col("df_d"), lit(0L))).as("df"),
@@ -1174,12 +1119,16 @@ object IndexBuilder {
     require(docIds.nonEmpty, "mget needs at least one doc id")
     val snap = SnapshotCatalog.require(spark, dir)
     val ids = docIds.distinct
-    val dead = deadAddrs(spark, snap, ids)
-    val rows = spark.read.parquet(snap.docmapDirs: _*)
+    val rows = Tables.docmap(spark, snap)
       .filter(col("doc_id").isin(ids: _*))
       .select("doc_id", "shard", "ord", "repo", "path", "commit", "lang",
         "sha256", "dl")
       .collect()
+    // the request-scale rows go back as a local relation: no job at all
+    // when nothing is tombstoned
+    val liveAddrs = Tables.live(spark, snap,
+        rows.toSeq.map(r => (r.getInt(1), r.getLong(2))).toDF("shard", "ord"))
+      .as[(Int, Long)].collect().toSet
     val byId = rows.groupBy(_.getString(0))
     val none9 = (None: Option[Boolean], None: Option[String],
       None: Option[String], None: Option[String], None: Option[String],
@@ -1190,7 +1139,7 @@ object IndexBuilder {
           (id, false, none9._1, none9._2, none9._3, none9._4, none9._5,
             none9._6, none9._7)
         case Some(rs) =>
-          val live = rs.filter(r => !dead((r.getInt(1), r.getLong(2))))
+          val live = rs.filter(r => liveAddrs((r.getInt(1), r.getLong(2))))
           val r = (if (live.nonEmpty) live else rs)
             .maxBy(x => (x.getInt(1), x.getLong(2)))
           (id, true, Some(live.nonEmpty), Option(r.getString(3)),
@@ -1244,13 +1193,8 @@ object IndexBuilder {
     require(bad.isEmpty,
       s"update: identity/scoring columns are immutable: ${bad.mkString(", ")}")
     val newId = parent.id + 1
-    val docmapAll = spark.read.parquet(parent.docmapDirs: _*)
-    val live =
-      if (parent.tombstoneDirs.isEmpty) docmapAll
-      else docmapAll.join(
-        spark.read.parquet(parent.tombstoneDirs: _*).select("shard", "ord"),
-        Seq("shard", "ord"), "left_anti")
-    val targets = selectTargets(parent, live)
+    val docmapAll = Tables.docmap(spark, parent)
+    val targets = selectTargets(parent, Tables.live(spark, parent, docmapAll))
       .select(col("shard"), col("ord")).distinct()
     val nTargets = targets.count()
     if (nTargets == 0) return parent
@@ -1263,10 +1207,10 @@ object IndexBuilder {
     }
     val added = set.keys.filterNot(docmapAll.columns.contains).toSeq.sorted
       .map(c => when(col("upd"), set(c)).otherwise(lit(null)).as(c))
+    val updated = marked.select((existing ++ added).toIndexedSeq: _*)
     val dmDir = s"$dir/docmap/u$newId"
     timed(spark, "update:docmap") {
-      marked.select((existing ++ added).toIndexedSeq: _*)
-        .write.mode(SaveMode.Overwrite).parquet(dmDir)
+      updated.write.mode(SaveMode.Overwrite).parquet(dmDir)
     }
     // skip-and-log lineage: shard -5 records the update batch size
     import spark.implicits._
@@ -1274,7 +1218,7 @@ object IndexBuilder {
     Seq(LineageRow(newId, -5, Seq(dmDir), "", nTargets, 0L, 0L, 0L))
       .toDS().write.mode(SaveMode.Overwrite).parquet(linDir)
     val snap = parent.copy(id = newId, parentId = parent.id,
-      docmapDirs = Seq(dmDir),
+      docmapDirs = Seq(dmDir), docmapAdded = Some(Tables.addedColumns(updated)),
       lineageDirs = parent.lineageDirs :+ linDir,
       timestampMs = System.currentTimeMillis())
     SnapshotCatalog.commit(spark, dir, snap)
@@ -1297,14 +1241,14 @@ object IndexBuilder {
     import spark.implicits._
     val snap = SnapshotCatalog.require(spark, dir)
     require(snap.isComplete, s"snapshot ${snap.id} is not a complete index")
-    val docs = spark.read.parquet(snap.docmapDirs: _*).count()
+    val docs = Tables.docmap(spark, snap).count()
     // tombstone generations are disjoint by construction (deleteVictims
     // anti-joins already-dead rows), so the distributed count IS the mask
     // size — no driver-side materialization
     val deleted =
       if (snap.tombstoneDirs.isEmpty) 0L
-      else spark.read.parquet(snap.tombstoneDirs: _*).count()
-    val ts = spark.read.parquet(snap.termstatsDir)
+      else Tables.tombstones(spark, snap.tombstoneDirs).count()
+    val ts = Tables.termstats(spark, snap.termstatsDir)
       .agg(count(lit(1)).as("terms"), sum(col("df")).as("postings"))
       .as[(Long, Long)].head()
     Seq((snap.id, snap.numShards, snap.docmapDirs.size, docs, docs - deleted,
@@ -1312,23 +1256,6 @@ object IndexBuilder {
       .toDF("snapshot_id", "num_shards", "generations", "docs", "live_docs",
         "deleted_docs", "terms", "postings", "avgdl", "positional")
   }
-
-  /** Tombstoned (shard, ord) addresses among the given doc ids only — the
-    * REQUEST-SCALE liveness probe for the handful-of-ids APIs (mget,
-    * termVectors, pinned): the doc_id `isin` filter pushes to the
-    * tombstone parquet scan, so the collect is bounded by the request,
-    * never by total delete volume. Data-scale consumers use
-    * [[DeleteMask.forSnapshot]] (per-shard sidecars read inside tasks)
-    * or an anti-join on the tombstone rows instead. */
-  private[graft] def deadAddrs(spark: SparkSession, snap: Snapshot,
-                               ids: Seq[String]): Set[(Int, Long)] =
-    if (snap.tombstoneDirs.isEmpty) Set.empty
-    else {
-      import spark.implicits._
-      spark.read.parquet(snap.tombstoneDirs: _*)
-        .filter(col("doc_id").isin(ids: _*))
-        .select(col("shard"), col("ord")).as[(Int, Long)].collect().toSet
-    }
 
   /** Compact the CURRENT snapshot: merge every segment generation (full
     * build + appends, salted and unsalted runs) into ONE segment dir whose
@@ -1360,7 +1287,7 @@ object IndexBuilder {
     // salting hint from committed termstats (exact df, slim scan); the
     // ord-range salt formula matches buildGroup's so sub-runs stay
     // contiguous, disjoint ord ranges
-    val heavy: Set[String] = spark.read.parquet(parent.termstatsDir)
+    val heavy: Set[String] = Tables.termstats(spark, parent.termstatsDir)
       .filter(col("df") > cfg.heavyThreshold).select("term").as[String]
       .collect().toSet
     val heavyB = spark.sparkContext.broadcast(heavy)
@@ -1370,7 +1297,7 @@ object IndexBuilder {
     // decode committed runs → live tf rows (tombstones dropped here — the
     // only pass that touches posting data)
     val keepPositions = parent.positions
-    val tf: Dataset[TfRow] = spark.read.parquet(parent.segmentDirs: _*)
+    val tf: Dataset[TfRow] = Tables.segments(spark, parent.segmentDirs)
       .as[SegRun].mapPartitions { runs =>
         runs.flatMap { r =>
           val dels = delMask(r.shard)
@@ -1398,7 +1325,7 @@ object IndexBuilder {
 
     // assembly sized by total postings (slim termstats agg), same
     // memory-bounded-sort rule as the build
-    val postings = spark.read.parquet(parent.termstatsDir)
+    val postings = Tables.termstats(spark, parent.termstatsDir)
       .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0)
     val parts = math.min(32768L, math.max(
       spark.sessionState.conf.numShufflePartitions.toLong,
@@ -1417,12 +1344,8 @@ object IndexBuilder {
     // live docmap: tombstoned rows purged, ords preserved
     val dmDir = s"$dir/docmap/$tag"
     timed(spark, "compact:docmap") {
-      val dm = spark.read.parquet(parent.docmapDirs: _*)
-      val live =
-        if (parent.tombstoneDirs.isEmpty) dm
-        else dm.join(spark.read.parquet(parent.tombstoneDirs: _*)
-          .select("shard", "ord"), Seq("shard", "ord"), "left_anti")
-      live.write.mode(SaveMode.Overwrite).parquet(dmDir)
+      Tables.live(spark, parent, Tables.docmap(spark, parent))
+        .write.mode(SaveMode.Overwrite).parquet(dmDir)
     }
 
     // termstats re-derived from the compacted segments (tombstones are
@@ -1430,7 +1353,7 @@ object IndexBuilder {
     // delete-updated stats, a cross-check the spec pins)
     val tsDir = s"$dir/termstats/$tag"
     timed(spark, "compact:termstats") {
-      spark.read.parquet(segDir)
+      Tables.segments(spark, Seq(segDir))
         .groupBy("term").agg(sum(col("count")).as("df"), sum(col("cf")).as("cf"))
         .repartition(math.max(1, cfg.numShards / 8), col("term"))
         .sortWithinPartitions("term")
@@ -1439,11 +1362,11 @@ object IndexBuilder {
 
     // per-shard lineage over the compacted layout
     val buildMs = (System.nanoTime() - t0) / 1000000
-    val segStats = spark.read.parquet(segDir).select("shard", "count")
+    val segStats = Tables.segments(spark, Seq(segDir)).select("shard", "count")
       .groupBy("shard").agg(sum(col("count")).as("postings_count"))
     val linDir = s"$dir/lineage/$tag"
     timed(spark, "compact:lineage") {
-      spark.read.parquet(dmDir)
+      Tables.docmap(spark, Seq(dmDir), parent.docmapAdded)
         .withColumn("sha_long", expr("cast(conv(substring(sha256, 1, 15), 16, 10) as bigint)"))
         .groupBy("shard")
         .agg(count(lit(1)).as("doc_count"), expr("bit_xor(sha_long)").as("sha_xor"))

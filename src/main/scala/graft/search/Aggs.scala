@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.corpus.RefQuery
-import graft.table.{Snapshot, SnapshotCatalog}
+import graft.table.{Snapshot, SnapshotCatalog, Tables}
 import Wand.{analyzerOf, matchedOrds, matchedValues, perQuery, scoredMatchSet, topKPerQuery,
   withDocmap}
 
@@ -1285,7 +1285,7 @@ object Aggs {
     require(size > 0 && minDocCount >= 1, "need size > 0 and minDocCount >= 1")
     val matched = matchedOrds(spark, snap, queries, conjunctive)
     val fgSizes = matched.groupBy("query_id").agg(count(lit(1)).as("fg_n"))
-    val staged = graft.index.IndexBuilder.stagedRows(spark, dir)
+    val staged = Tables.staged(spark, dir)
       .select(col("shard"), col("ord"), col("tokens"))
     val fg = staged.join(matched, Seq("shard", "ord"))
       .select(col("query_id"), explode(array_distinct(col("tokens"))).as("term"))
@@ -1299,7 +1299,7 @@ object Aggs {
     * per-query foreground sizes `(query_id, fg_n)`. */
   private def jlhRanked(spark: SparkSession, snap: Snapshot, fg: DataFrame,
                         fgSizes: DataFrame, size: Int): DataFrame = {
-    val bg = spark.read.parquet(snap.termstatsDir).select(col("term"), col("df"))
+    val bg = Tables.termstats(spark, snap.termstatsDir).select(col("term"), col("df"))
     val fgPct = col("fg_df").cast("double") / col("fg_n")
     val bgPct = col("df").cast("double") / lit(snap.stats.numDocs.toDouble)
     val w = Window.partitionBy(col("query_id"))

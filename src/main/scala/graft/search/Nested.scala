@@ -3,7 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.RefQuery
-import graft.table.Snapshot
+import graft.table.{Snapshot, Tables}
 
 /** The OpenSearch `nested` query + `inner_hits` — the nested-DOCUMENT
   * model (arrays of objects scored per nested object), the other half
@@ -63,8 +63,7 @@ object Nested {
       .select(col("query_id"), nestedParentKey.cast("string").as("pkey"),
         col("doc_id").as("child_id"), col("score"))
     val perParent = Wand.hasChildCombined(nested, scoreMode, innerHitsK)
-    val parents = Wand.liveRows(spark, snap,
-        spark.read.parquet(snap.docmapDirs: _*).filter(parentFilter))
+    val parents = Tables.live(spark, snap, Tables.docmap(spark, snap).filter(parentFilter))
       .select(parentKey.cast("string").as("pkey"), col("doc_id"))
     Wand.topKByDocHash(perParent.join(parents, Seq("pkey")), k)
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"),

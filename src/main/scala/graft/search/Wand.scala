@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.index.{Codec, SegBlock, SegRun}
 import graft.corpus.RefQuery
-import graft.table.{Snapshot, SnapshotCatalog}
+import graft.table.{Snapshot, SnapshotCatalog, Tables}
 
 /** Block-max WAND top-k retrieval over the compressed sharded index — the
   * "shadow cluster" of the comparison pair.
@@ -556,7 +556,7 @@ object Wand {
                           by: Seq[String], matches: Column, order: Seq[Column], cap: Int,
                           survivors: DataFrame => DataFrame = identity): DataFrame = {
     val w = Window.partitionBy(by.map(col): _*).orderBy(order: _*)
-    survivors(spark.read.parquet(snap.termstatsDir).select("term", "df")
+    survivors(Tables.termstats(spark, snap.termstatsDir).select("term", "df")
         .join(broadcast(keys), matches))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= cap)
@@ -751,8 +751,8 @@ object Wand {
     * relevance score; a null is the honest rendering), organic hits keep
     * their exact scores; ranks run 1..(pinned + k).
     *
-    * Scale shape: the pinned id set is request-scale — one docmap lookup
-    * with a driver-side liveness mask (the [[termVectors]] discipline);
+    * Scale shape: the pinned id set is request-scale — one id-pruned
+    * live docmap lookup ([[Tables.live]]);
     * organic hits fetch k + |pinned| so the page stays full after
     * removal.
     * @return (query_id int, rank int, doc_id string, score double,
@@ -766,13 +766,9 @@ object Wand {
     require(pinnedIds.distinct.size == pinnedIds.size,
       s"pinned ids must be distinct: ${pinnedIds.mkString(",")}")
     val snap = SnapshotCatalog.require(spark, dir)
-    val dead = graft.index.IndexBuilder.deadAddrs(spark, snap, pinnedIds)
-    val live: Set[String] = spark.read.parquet(snap.docmapDirs: _*)
-      .filter(col("doc_id").isin(pinnedIds: _*))
-      .select(col("shard"), col("ord"), col("doc_id"))
-      .as[(Int, Long, String)].collect()
-      .filter { case (sh, o, _) => !dead((sh, o)) }
-      .map(_._3).toSet
+    val live: Set[String] = Tables.live(spark, snap, Tables.docmap(spark, snap)
+        .filter(col("doc_id").isin(pinnedIds: _*)).select(col("shard"), col("ord"), col("doc_id")))
+      .select("doc_id").as[String].collect().toSet
     val pinnedLive = pinnedIds.filter(live) // given order, dead ids dropped
     // organic depth covers the worst case: every pinned doc also ranks
     val organic = searchSnapshot(spark, snap, queries, k + pinnedLive.size,
@@ -824,7 +820,7 @@ object Wand {
     val allWords = qToks.flatMap(_._2).distinct.toArray
     val known: Set[String] =
       if (allWords.isEmpty) Set.empty
-      else termPruned(spark.read.parquet(snap.termstatsDir), allWords)
+      else termPruned(Tables.termstats(spark, snap.termstatsDir), allWords)
         .select("term").as[String].collect().toSet
     val unknown = allWords.filterNot(known)
     val best: Map[String, String] =
@@ -982,7 +978,7 @@ object Wand {
     * the [[constantScoreSearchSnapshot]] contract). Unknown or tombstoned ids
     * simply don't match — never an error, per the API. An upserted
     * identity matches once, as its live generation (the
-    * [[liveRows]]/termVectors liveness discipline over the docmap).
+    * [[Tables.live]] rule over the docmap).
     *
     * Scale shape: the requested id set is request-scale by contract, so
     * it broadcasts and prunes the docmap scan; nothing collects
@@ -1005,7 +1001,7 @@ object Wand {
       s"empty id list for query_ids ${queries.filter(_._2.isEmpty).map(_._1)}")
     val req = queries.flatMap { case (qid, ids) => ids.distinct.map(qid -> _) }
       .toDF("query_id", "doc_id")
-    val dm = liveRows(spark, snap, spark.read.parquet(snap.docmapDirs: _*)
+    val dm = Tables.live(spark, snap, Tables.docmap(spark, snap)
       .select(col("shard"), col("ord"), col("doc_id")))
     docOrderTopK(dm.join(broadcast(req), Seq("doc_id")), k, boost)
   }
@@ -1038,15 +1034,14 @@ object Wand {
     require(k > 0, s"k must be positive: $k")
     require(maxTerms > 0, s"max_terms_count must be positive: $maxTerms")
     val snap = SnapshotCatalog.require(spark, dir)
-    val addrs = liveRows(spark, snap,
-      spark.read.parquet(snap.docmapDirs: _*)
+    val addrs = Tables.live(spark, snap, Tables.docmap(spark, snap)
         .filter(col("doc_id") === lookupDocId)
         .select(col("shard"), col("ord")))
       .as[(Int, Long)].collect()
     require(addrs.nonEmpty,
       s"terms lookup doc not found or deleted: $lookupDocId")
     val (sh, o) = addrs.maxBy(identity) // live row unique; newest defensively
-    val toks = graft.index.IndexBuilder.stagedRows(spark, dir)
+    val toks = Tables.staged(spark, dir)
       .filter(col("shard") === sh && col("ord") === o)
       .select(explode(col("tokens")).as("t")).distinct()
       .as[String].collect().sorted
@@ -1668,7 +1663,7 @@ object Wand {
       if (keepDeleted) graft.index.DeleteMask.EmptyMask
       else graft.index.DeleteMask.forSnapshot(spark, snap)
     val fanParts = math.max(1, 2 * math.max(1, spark.sparkContext.defaultParallelism))
-    termPruned(spark.read.parquet(snap.segmentDirs: _*), terms)
+    termPruned(Tables.segments(spark, snap.segmentDirs), terms)
       .repartition(fanParts, col("term"), col("shard"), col("blocks")(0)("first"))
       .as[SegRun]
       .flatMap { run =>
@@ -1818,7 +1813,7 @@ object Wand {
       }
     readStaged().getOrElse {
       val cdl = fields.map { case (snap, wf) =>
-        liveRows(spark, snap, spark.read.parquet(snap.docmapDirs: _*)
+        Tables.live(spark, snap, Tables.docmap(spark, snap)
           .select(col("shard"), col("ord"), col("doc_id"), col("dl")))
           .select(col("doc_id"), (col("dl") * lit(wf)).as("wdl"))
       }.reduce(_ unionByName _)
@@ -1886,7 +1881,7 @@ object Wand {
     * partial-aggregable groupBy; the parent resolve is an equi-join of
     * the per-parent aggregate (≤ |parents| × |queries| rows) against the
     * live parent docmap slice (bare docmap scans need the tombstone
-    * anti-join — the termVectors liveness discipline); and a
+    * anti-join, [[Tables.live]]); and a
     * per-(query, parent-hash-bucket) pre-cut bounds the global rank
     * window to ≤ 64k rows. No document-sized shuffle anywhere.
     * @return (query_id int, rank int, doc_id string [parent],
@@ -1912,8 +1907,7 @@ object Wand {
         col("doc_id").as("child_id"), col("score"))
     val perParent = hasChildCombined(children, scoreMode)
       .filter(col("n_children").between(minChildren, maxChildren))
-    val parents = liveRows(spark, snap,
-        spark.read.parquet(snap.docmapDirs: _*).filter(parentFilter))
+    val parents = Tables.live(spark, snap, Tables.docmap(spark, snap).filter(parentFilter))
       .select(parentKey.cast("string").as("pkey"), col("doc_id"))
     topKByDocHash(perParent.join(parents, Seq("pkey")), k)
       .select("query_id", "rank", "doc_id", "score", "n_children")
@@ -2000,23 +1994,12 @@ object Wand {
       .filter(parentFilter)
       .select(col("query_id"), parentKey.cast("string").as("pkey"),
         col("doc_id").as("parent_id"), col("score").as("pscore"))
-    val children = liveRows(spark, snap,
-        spark.read.parquet(snap.docmapDirs: _*).filter(childFilter))
+    val children = Tables.live(spark, snap, Tables.docmap(spark, snap).filter(childFilter))
       .select(childParentKey.cast("string").as("pkey"), col("doc_id"))
     val joined = parents.join(children, Seq("pkey"))
       .withColumn("score", if (score) col("pscore") else lit(1.0))
     topKByDocHash(joined, k).select("query_id", "rank", "doc_id", "score", "parent_id")
   }
-
-  /** Live rows of a bare docmap scan: subtract tombstones by physical
-    * (shard, ord) address — the termVectors liveness discipline, shared
-    * by every path that reads the docmap WITHOUT going through posting
-    * decode (which masks deletes itself). */
-  private[graft] def liveRows(spark: SparkSession, snap: Snapshot,
-                              dm: DataFrame): DataFrame =
-    if (snap.tombstoneDirs.isEmpty) dm
-    else dm.join(spark.read.parquet(snap.tombstoneDirs: _*)
-      .select("shard", "ord"), Seq("shard", "ord"), "left_anti")
 
   /** A query of synonym groups (the query-time side of an OpenSearch
     * `synonym`/`synonym_graph` token filter, scored with Lucene
@@ -2261,7 +2244,7 @@ object Wand {
     // resolve the (query-scale) doc set to broadcast (shard, ord) -> id;
     // tombstoned docs resolve like live ones — explaining a deleted doc
     // is explicitly useful (why DID this match yesterday?)
-    val target: Map[(Int, Long), String] = spark.read.parquet(snap.docmapDirs: _*)
+    val target: Map[(Int, Long), String] = Tables.docmap(spark, snap)
       .filter(col("doc_id").isin(docIds: _*))
       .select(col("shard"), col("ord"), col("doc_id"))
       .as[(Int, Long, String)].collect()
@@ -2321,14 +2304,11 @@ object Wand {
     val hits = searchSnapshot(spark, snap, queries, k, conjunctive)
     val qTermsB = spark.sparkContext.broadcast(
       queries.map(q => q.query_id -> Golden.queryTerms(q.text, analyzerOf(snap)).toSet).toMap)
-    val dm = spark.read.parquet(snap.docmapDirs: _*)
-      .select(col("shard"), col("ord"), col("doc_id"))
     // hits are live by construction, but after an upsert (or delete +
     // re-append) a hit doc_id matches the DEAD docmap row too — without
     // the mask each such hit duplicates with a stale-token fragment
-    // (the termVectors liveness discipline, as an anti-join)
-    val addr = liveRows(spark, snap, dm.join(broadcast(hits), Seq("doc_id")))
-    val staged = graft.index.IndexBuilder.stagedRows(spark, dir)
+    val hitAddrs = liveHits(spark, snap, hits)
+    val staged = Tables.staged(spark, dir)
       .select(col("shard"), col("ord"), col("tokens"))
     val fragSizeL = fragSize
     val preL = preTag
@@ -2368,7 +2348,7 @@ object Wand {
         }
       }
     })
-    staged.join(broadcast(addr), Seq("shard", "ord"))
+    Tables.onAddr(staged, broadcast(hitAddrs))
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"),
         hl(col("tokens"), col("query_id")).as("highlight"))
   }
@@ -2395,12 +2375,10 @@ object Wand {
     val clauses: Seq[(String, Set[String])] = named.toSeq.sortBy(_._1)
       .map { case (n, text) => (n, Golden.queryTerms(text, analyzerOf(snap)).toSet) }
     val clausesB = spark.sparkContext.broadcast(clauses)
-    val dm = spark.read.parquet(snap.docmapDirs: _*)
-      .select(col("shard"), col("ord"), col("doc_id"))
     // mask dead docmap rows sharing a hit's doc_id (upsert / delete +
     // re-append) — the highlightSearch discipline
-    val addr = liveRows(spark, snap, dm.join(broadcast(hits), Seq("doc_id")))
-    val staged = graft.index.IndexBuilder.stagedRows(spark, dir)
+    val hitAddrs = liveHits(spark, snap, hits)
+    val staged = Tables.staged(spark, dir)
       .select(col("shard"), col("ord"), col("tokens"))
     val mq = udf((ts: Seq[String]) => {
       val present = if (ts == null) Set.empty[String] else ts.toSet
@@ -2408,7 +2386,7 @@ object Wand {
         .filter { case (_, terms) => terms.exists(present) }
         .map(_._1).mkString(",")
     })
-    staged.join(broadcast(addr), Seq("shard", "ord"))
+    Tables.onAddr(staged, broadcast(hitAddrs))
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"),
         mq(col("tokens")).as("matched_queries"))
   }
@@ -2428,8 +2406,8 @@ object Wand {
     * term vectors), and an upserted identity reports its LIVE version.
     *
     * Scale shape: docs are request-scale (you inspect a handful), so
-    * their resolved (shard, ord) addresses broadcast after a driver-side
-    * liveness filter against the tombstone mask; the only data-sized
+    * their live (shard, ord) addresses ([[Tables.live]]) broadcast on
+    * the one long key; the only data-sized
     * scan is the staged-token join, pruned by that broadcast before the
     * explode. A term present in the doc but missing from termstats (the
     * documented torn-append window) reports df/ttf 0 rather than
@@ -2438,29 +2416,23 @@ object Wand {
     *          df long, ttf long) */
   def termVectors(spark: SparkSession, dir: String,
                   docIds: Seq[String]): DataFrame = {
-    import spark.implicits._
     require(docIds.nonEmpty, "termVectors needs at least one doc id")
     val snap = SnapshotCatalog.require(spark, dir)
     require(snap.isComplete, s"snapshot ${snap.id} is not a complete index")
     val ids = docIds.distinct
-    val dead = graft.index.IndexBuilder.deadAddrs(spark, snap, ids)
-    val target = spark.read.parquet(snap.docmapDirs: _*)
+    val target = Tables.live(spark, snap, Tables.docmap(spark, snap)
       .filter(col("doc_id").isin(ids: _*))
-      .select(col("shard"), col("ord"), col("doc_id"))
-      .as[(Int, Long, String)].collect()
-      .filter { case (sh, o, _) => !dead((sh, o)) }
-    val tgt = target.toSeq.toDF("shard", "ord", "doc_id")
-    val staged = graft.index.IndexBuilder.stagedRows(spark, dir)
+      .select(col("shard"), col("ord"), col("doc_id")))
+    val staged = Tables.staged(spark, dir)
       .select(col("shard"), col("ord"), col("tokens"))
-    val tv = staged.join(broadcast(tgt), Seq("shard", "ord"))
+    val tv = Tables.onAddr(staged, broadcast(target))
       .select(col("doc_id"), posexplode(col("tokens")))
       .withColumnRenamed("col", "term")
       .groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"),
         concat_ws(",",
           sort_array(collect_list(col("pos"))).cast("array<string>")).as("positions"))
-    val ts = spark.read.parquet(snap.termstatsDir)
-      .select(col("term"), col("df"), col("cf"))
+    val ts = Tables.termstats(spark, snap.termstatsDir)
     tv.join(ts, Seq("term"), "left")
       .select(col("doc_id"), col("term"), col("tf"), col("positions"),
         coalesce(col("df"), lit(0L)).as("df"),
@@ -2562,14 +2534,21 @@ object Wand {
       .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).distinct.sorted.toArray }
 
   /** The docmap attach of the exact match-set paths: `frame` joined to
-    * the docmap on its native (shard, ord) key, carrying `cols` (the
-    * whole docmap row when none are named). */
+    * the docmap on its (shard, ord) address, carrying `cols` (the whole
+    * docmap row when none are named). */
   private[search] def withDocmap(spark: SparkSession, snap: Snapshot, frame: DataFrame,
                                  cols: Column*): DataFrame = {
-    val dm = spark.read.parquet(snap.docmapDirs: _*)
-    frame.join(if (cols.isEmpty) dm else dm.select(col("shard") +: col("ord") +: cols: _*),
-      Seq("shard", "ord"))
+    val dm = Tables.docmap(spark, snap)
+    Tables.onAddr(frame, if (cols.isEmpty) dm else dm.select(col("shard") +: col("ord") +: cols: _*))
   }
+
+  /** The live (shard, ord) docmap rows of `hits`' doc ids, with the hit
+    * columns: a hit's doc id also names the dead row an upsert or a delete
+    * + re-append left behind. */
+  private def liveHits(spark: SparkSession, snap: Snapshot, hits: DataFrame): DataFrame =
+    Tables.live(spark, snap, Tables.docmap(spark, snap)
+      .select(col("shard"), col("ord"), col("doc_id"))
+      .join(broadcast(hits), Seq("doc_id")))
 
   /** [[matchedOrds]] with docmap `cols` attached. */
   private[search] def matchedValues(spark: SparkSession, snap: Snapshot,
@@ -2860,17 +2839,14 @@ object Wand {
     // construction, but a superseded identity shares its doc_id with the
     // dead version's docmap row — anti-join those out before the token
     // join (slim distributed tombstone scan; nothing driver-resident)
-    val win = liveRows(spark, snap, spark.read.parquet(snap.docmapDirs: _*)
-      .select(col("doc_id"), col("shard"), col("ord"))
-      .join(broadcast(base), Seq("doc_id")))
+    val win = liveHits(spark, snap, base)
     val slopL = slop
     val secU = udf((qid: Int, ts: Seq[String]) =>
       secondaryPhraseScore(ts, qpB.value(qid), idfB.value, avgdl, slopL))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id").asc)
-    graft.index.IndexBuilder.stagedRows(spark, dir)
-      .select(col("shard"), col("ord"), col("tokens"))
-      .join(broadcast(win), Seq("shard", "ord"))
+    Tables.onAddr(Tables.staged(spark, dir).select(col("shard"), col("ord"), col("tokens")),
+        broadcast(win))
       .withColumn("score",
         lit(queryWeight) * col("base_score") +
           lit(rescoreWeight) * secU(col("query_id"), col("tokens")))
@@ -2899,7 +2875,7 @@ object Wand {
     import spark.implicits._
     val avgdl = snap.stats.avgdl
     val keys = graft.plans.KeySpread.preimages(snap.numShards)
-    spark.read.parquet(snap.docmapDirs: _*)
+    Tables.docmap(spark, snap)
       .filter(pred)
       .select(col("shard"), col("ord"))
       .withColumn("hkey", element_at(typedLit(keys.toSeq), col("shard") + 1))
@@ -2957,7 +2933,7 @@ object Wand {
     val missing = allTerms.filterNot(memo.containsKey)
     if (missing.nonEmpty) {
       val got: Map[String, Long] = termPruned(
-          spark.read.parquet(snap.termstatsDir), missing)
+          Tables.termstats(spark, snap.termstatsDir), missing)
         .select("term", "df").as[(String, Long)].collect().toMap
       missing.foreach(t => memo.put(t, Long.box(got.getOrElse(t, 0L))))
     }
@@ -3002,7 +2978,7 @@ object Wand {
     val plansB = spark.sparkContext.broadcast(
       plans.map { case (q, p) => q -> p.weighted(t => Bm25.idf(dfMap.getOrElse(t, 0L), n)) })
 
-    val segs = termPruned(spark.read.parquet(snap.segmentDirs: _*), allTerms)
+    val segs = termPruned(Tables.segments(spark, snap.segmentDirs), allTerms)
 
     // delete tombstones (if any) via per-shard sidecar files read INSIDE
     // the decode task (never driver-collected or broadcast); the per-JVM
@@ -3106,10 +3082,9 @@ object Wand {
     val w1 = Window.partitionBy(col("query_id")).orderBy(col("score").desc)
     val pruned = hits.toDF()
       .withColumn("r", rank().over(w1)).filter(col("r") <= kFetch).drop("r")
-    val docmap = spark.read.parquet(snap.docmapDirs: _*)
-      .select(col("shard"), col("ord"), col("doc_id"))
-    val resolved = withAddr(docmap)
-      .join(broadcast(withAddr(pruned).drop("shard", "ord")), Seq("addr")).drop("addr")
+    val resolved = Tables.onAddr(
+      Tables.docmap(spark, snap).select(col("shard"), col("ord"), col("doc_id")),
+      broadcast(pruned))
     if (shardDocOrder) {
       // search_after mode: ties order by the internal (shard, ord) key —
       // OpenSearch's recommended `_shard_doc` PIT tiebreaker — so the
@@ -3129,19 +3104,4 @@ object Wand {
         .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
     }
   }
-
-  /** Ords per shard in one [[withAddr]] key. */
-  private val OrdsPerShard = 1L << 32
-
-  /** `df` with `addr` = shard × 2^32 + ord: one long key for the
-    * (shard, ord) hit resolve. A broadcast hash join on one long key
-    * builds a map sized by its rows; on the two columns it builds a
-    * byte map on a whole memory page (32 MB at a 4 GB heap), which the
-    * executor keeps until the broadcast is cleaned, after every search.
-    * An ord past 2^32 fails the search rather than alias another
-    * shard's address. */
-  private def withAddr(df: DataFrame): DataFrame =
-    df.withColumn("addr",
-      when(col("ord") < OrdsPerShard, col("shard").cast("long") * OrdsPerShard + col("ord"))
-        .otherwise(raise_error(lit(s"ord past $OrdsPerShard in one shard"))))
 }

@@ -53,7 +53,13 @@ case class Snapshot(id: Long,
                       * score ties a shard ships ([[graft.search.Kernel.ordTies]]).
                       * Kept by compaction and deletes (ords never change).
                       * `None` on manifests written before this field. */
-                    generationStarts: Option[Seq[Seq[Long]]] = None) {
+                    generationStarts: Option[Seq[Seq[Long]]] = None,
+                    /** (name, DDL type) of the docmap columns updates added
+                      * beyond [[Tables.DocmapSchema]], in write order; every
+                      * later generation carries them on, so the docmap
+                      * reader declares its whole schema. `None` on manifests
+                      * written before this field (the docmap read infers). */
+                    docmapAdded: Option[Seq[(String, String)]] = None) {
   def isComplete: Boolean = completedShards.size == numShards && termstatsDir.nonEmpty
 }
 
@@ -96,6 +102,10 @@ object SnapshotCatalog {
       val ga = o.putArray("generationStarts")
       gs.foreach { g => val a = ga.addArray(); g.foreach(x => a.add(x)) }
     }
+    s.docmapAdded.foreach { cs =>
+      val ca = o.putArray("docmapAdded")
+      cs.foreach { case (name, ddl) => ca.addObject().put("name", name).put("type", ddl) }
+    }
     o.toPrettyString
   }
 
@@ -123,7 +133,9 @@ object SnapshotCatalog {
       delmaskDir = Option(n.get("delmaskDir")).map(_.asText()).getOrElse(""),
       analyzer = Option(n.get("analyzer")).map(_.asText()).getOrElse(""),
       generationStarts = Option(n.get("generationStarts")).map(_.elements().asScala
-        .map(_.elements().asScala.map(_.asLong()).toSeq).toSeq))
+        .map(_.elements().asScala.map(_.asLong()).toSeq).toSeq),
+      docmapAdded = Option(n.get("docmapAdded")).map(_.elements().asScala
+        .map(c => c.get("name").asText() -> c.get("type").asText()).toSeq))
   }
 
   /** Read the CURRENT snapshot. If the CURRENT pointer is absent but
@@ -224,12 +236,12 @@ object SnapshotCatalog {
     val s =
       if (snapshotId < 0) require(spark, dir) else loadId(spark, dir, snapshotId)
     Predef.require(s.isComplete, s"snapshot ${s.id} is not a complete index")
-    val tsRow = spark.read.parquet(s.termstatsDir)
+    val tsRow = Tables.termstats(spark, s.termstatsDir)
       .agg(count(lit(1)), coalesce(sum(col("df")), lit(0L)),
         coalesce(sum(col("cf")), lit(0L))).head()
     val tomb =
       if (s.tombstoneDirs.isEmpty) 0L
-      else spark.read.parquet(s.tombstoneDirs: _*).count()
+      else Tables.tombstones(spark, s.tombstoneDirs).count()
     // stats are already net of deletes (delete commits shrunk N/avgdl);
     // tombstones only report the masked rows compaction would purge
     Seq((s.id, s.timestampMs, s.stats.numDocs, tomb, s.numShards,
@@ -265,14 +277,9 @@ object SnapshotCatalog {
     def live(id: Long): org.apache.spark.sql.DataFrame = {
       val s = loadId(spark, dir, id)
       Predef.require(s.isComplete, s"snapshot $id is not a complete index")
-      val dm = spark.read.parquet(s.docmapDirs: _*)
-        .select(Seq(col("shard"), col("ord")) ++ metaCols.map(col): _*)
-      val alive =
-        if (s.tombstoneDirs.isEmpty) dm
-        else dm.join(
-          spark.read.parquet(s.tombstoneDirs: _*).select("shard", "ord").distinct(),
-          Seq("shard", "ord"), "left_anti")
-      alive.select(metaCols.map(col): _*)
+      Tables.live(spark, s, Tables.docmap(spark, s)
+        .select(Seq(col("shard"), col("ord")) ++ metaCols.map(col): _*))
+        .select(metaCols.map(col): _*)
     }
     val a = live(fromId)
     val b = live(toId)

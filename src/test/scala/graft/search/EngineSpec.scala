@@ -130,16 +130,24 @@ class EngineSpec extends AnyFunSuite {
   test("hit resolve: the docmap join broadcasts one long key, not (shard, ord)") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.types.LongType
     object Plans extends AdaptiveSparkPlanHelper
     val fast = Wand.searchSnapshot(spark, snap, queries, k)
     assert(fast.count() == queries.length * k)
-    val joins = Plans.collect(fast.queryExecution.executedPlan) {
-      case j: BroadcastHashJoinExec => j
-    }
-    assert(joins.nonEmpty)
-    joins.foreach { j =>
-      assert((j.leftKeys ++ j.rightKeys).map(_.dataType) ==
-        Seq(org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.LongType), j.toString)
+    val ids = fast.select("doc_id").as[String].collect().distinct.take(3).toSeq
+    // the search, and two ops that resolve hits or ids against the staged
+    // tokens: every (shard, ord) join is on `addr`; other joins (doc_id,
+    // term) have one key of their own
+    Seq("search" -> fast,
+        "highlightSearch" -> Wand.highlightSearch(spark, indexDir, queries, k),
+        "termVectors" -> Wand.termVectors(spark, indexDir, ids)).foreach { case (op, df) =>
+      assert(df.count() > 0, op)
+      val keys = Plans.collect(df.queryExecution.executedPlan) {
+        case j: BroadcastHashJoinExec => (j.leftKeys ++ j.rightKeys).map(_.dataType)
+      }
+      assert(keys.contains(Seq(LongType, LongType)), s"$op: $keys")
+      assert(keys.forall(_.size == 2), s"$op: $keys")
+      if (op == "search") assert(keys.forall(_ == Seq(LongType, LongType)), keys)
     }
   }
 

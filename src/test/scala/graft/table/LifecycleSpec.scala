@@ -175,6 +175,66 @@ class LifecycleSpec extends AnyFunSuite {
     assert(metas.filter($"repo".isNull || $"path".isNull).count() == 0)
   }
 
+  test("an update's tag column: set on updated docs, null on appended ones, " +
+    "through append, compact and delete; a manifest without the column list still opens") {
+    val dir = TestSpark.tempDir("graft-tag-schema")
+    val all = CorpusGen.corpus(spark, 600L, seed = 53L).cache()
+    val base = all.filter(pmod(xxhash64($"path"), lit(2)) === 0)
+    val extra = all.filter(pmod(xxhash64($"path"), lit(2)) === 1)
+    val toks = graft.analyze.Tokenizer.tokens($"content")
+    val term = all.toDF().select(explode(array_distinct(toks)).as("t"))
+      .groupBy("t").agg(count(lit(1)).as("df"))
+      .filter($"df" > 20 && $"df" < 200).orderBy("t").select("t").as[String].head()
+    val qs = Seq(graft.corpus.RefQuery(0, term))
+    def matching(ds: org.apache.spark.sql.Dataset[graft.corpus.SourceFile]): Set[String] =
+      ds.toDF().filter(array_contains(toks, term))
+        .select(IndexBuilder.docIdCol).as[String].collect().toSet
+    val tagged = matching(base)
+    val appended = matching(extra)
+    assert(tagged.nonEmpty && appended.nonEmpty)
+
+    IndexBuilder.build(spark, base, dir, BuildConfig(numShards = 4, commitEvery = 2))
+    // the docmap filter and the tag facet both read the tag column
+    def check(snap: Snapshot, step: String): Unit = {
+      val liveIds = Tables.live(spark, snap, Tables.docmap(spark, snap))
+        .select("doc_id").as[String].collect().toSet
+      val hit = Wand.searchSnapshot(spark, snap, qs, 1000, filter = Some($"tag" === "hit"))
+        .select("doc_id").as[String].collect().toSet
+      assert(hit == (tagged & liveIds), step)
+      val facet = graft.search.Aggs.facetCountsSnapshot(spark, snap, qs, "tag")
+        .select("facet", "doc_count").as[(Option[String], Long)].collect().toMap
+      assert(facet == Map(Some("hit") -> (tagged & liveIds).size.toLong,
+        None -> (appended & liveIds).size.toLong).filter(_._2 > 0), step)
+    }
+    val sUpd = Wand.updateByQuery(spark, dir, qs, Map("tag" -> lit("hit")))
+    assert(sUpd.docmapAdded.contains(Seq("tag" -> "STRING")))
+    check(sUpd, "update")
+    val sApp = IndexBuilder.append(spark, extra, dir)
+    assert(sApp.docmapAdded == sUpd.docmapAdded && sApp.docmapDirs.size == 2)
+    check(sApp, "append")
+    check(IndexBuilder.compact(spark, dir), "compact")
+    val sDel = IndexBuilder.delete(spark, dir, pmod(xxhash64($"commit"), lit(3)) === 0)
+    assert(sDel.tombstoneDirs.nonEmpty)
+    check(sDel, "delete")
+
+    // a manifest written before the field: loads with None, the docmap
+    // read infers the schema, and search and the tag filter still work
+    val before = Wand.searchSnapshot(spark, sDel, qs, 20).collect().toSeq
+    val manifest = new org.apache.hadoop.fs.Path(
+      f"${SnapshotCatalog.snapshotsDir(dir)}/v${sDel.id}%05d.json")
+    val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val json = { val in = fs.open(manifest)
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in) finally in.close() }
+    json.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove("docmapAdded")
+    val out = fs.create(manifest, true) // rewrites the checksum file too
+    try out.write(json.toPrettyString.getBytes("UTF-8")) finally out.close()
+    val old = SnapshotCatalog.require(spark, dir)
+    assert(old.id == sDel.id && old.docmapAdded.isEmpty)
+    assert(Wand.searchSnapshot(spark, old, qs, 20).collect().toSeq == before)
+    check(old, "manifest without docmapAdded")
+    all.unpersist()
+  }
+
   test("aliases: atomic repoint, multi-target reads, the blue/green reindex swap") {
     val root = TestSpark.tempDir("graft-alias-root")
     val dirBlue = s"$root/idx-blue"
